@@ -114,10 +114,8 @@ def _crawl_cfg(wave: int):
         unique_hosts_round0=False,
         default_host_budget=max(wave // 40, 4),
         n_salts=CPUS,
-        n_shards=CPUS,
         total_bloom_bits=1 << 24,
         n_hosts=200,
-        lineage_counts=False,
     )
 
 

@@ -5,12 +5,12 @@ The reference keeps an in-process `Set` of seen URLs/hosts
  /root/reference/scripts/fetch-curated-urls.js:262-277). At a 10^10-URL
 frontier that set is ~12 GB of bloom bits — too big to broadcast, so it
 is SHARDED by url-hash: shard_id = pmod(xxhash64(url), P). A probe (or
-test-and-set) shuffles candidate links once, on shard_id, and each task
-touches only its own shard's bitmap, read directly from the checkpoint
-store. State versions are tracked by an Iceberg-style manifest (a JSON
-snapshot mapping shard → data file), so untouched shards are carried
-forward by reference, never rewritten — the same trick Iceberg
-manifests use to avoid rewriting unchanged data files.
+test-and-set) shuffles candidate links once, on shard_id, into one task
+per core; each task touches only the bitmaps of the shards it owns, read
+directly from the checkpoint store. State versions are tracked by an
+Iceberg-style manifest (a JSON snapshot mapping shard → data file), so
+untouched shards are carried forward by reference, never rewritten — the
+same trick Iceberg manifests use to avoid rewriting unchanged data files.
 
 Two modes:
 - exact  — append-only parquet of seen URLs; probe = left-anti join.
@@ -46,6 +46,18 @@ def with_seen_hashes(df: DataFrame, url_col: str, n_shards: int) -> DataFrame:
         .withColumn(_H2, F.xxhash64(u, F.lit(0x9E3779B9)))
         .withColumn(_SHARD, F.pmod(F.col(_H1), F.lit(n_shards)).cast("int"))
     )
+
+
+def _shard_tasks(hashed: DataFrame, n_shards: int) -> DataFrame:
+    """Shuffle hashed rows so each shard lands in exactly one task, with
+    one task per core: min(n_shards, defaultParallelism) partitions.
+
+    The shard count fixes the on-disk state layout (one bitmap or table
+    per shard); it does not set the task count. A task loops over the
+    shards it receives, so a Python task's fixed start-up cost is paid
+    once per core rather than once per shard."""
+    cores = hashed.sparkSession.sparkContext.defaultParallelism
+    return hashed.repartition(min(n_shards, cores), F.col(_SHARD))
 
 
 def _bit_positions(h1: np.ndarray, h2: np.ndarray, k: int, n_bits: int) -> np.ndarray:
@@ -129,8 +141,8 @@ class BloomSeenFilter:
         """Atomic test-and-set: returns rows whose URL was not seen, and
         commits a new state version with those URLs inserted.
 
-        One shuffle (on shard_id); each task loads, probes, updates and
-        writes only its own shards.
+        One shuffle (on shard_id) into min(n_shards, cores) tasks; each
+        task loads, probes, updates and writes only the shards it owns.
 
         `dedup_first`: column names forming the 'first discovery'
         ordering. When given, duplicate urls within the batch are
@@ -189,7 +201,7 @@ class BloomSeenFilter:
                     yield unseen
 
         result = (
-            hashed.repartition(self.n_shards, F.col(_SHARD))
+            _shard_tasks(hashed, self.n_shards)
             .mapInPandas(tas, schema=out_schema)
             .select(*in_cols)
         )
@@ -426,9 +438,11 @@ class CuckooSeenFilter:
             if not parts:
                 return
             pdf = pd.concat(parts, ignore_index=True)
-            rng = np.random.RandomState(filt.seed ^ new_version)
             for shard_id, grp in pdf.groupby(_SHARD, sort=True):
                 shard_key = str(int(shard_id))
+                # seeded per shard, so a shard's table does not depend on
+                # which other shards share its task
+                rng = np.random.RandomState(filt.seed ^ new_version ^ int(shard_id))
                 path = manifest.get(shard_key)
                 if path is not None and os.path.exists(path):
                     table = np.load(path).copy()
@@ -472,7 +486,7 @@ class CuckooSeenFilter:
                     yield emit
 
         result = (
-            hashed.repartition(self.n_shards, F.col(_SHARD))
+            _shard_tasks(hashed, self.n_shards)
             .mapInPandas(run, schema=out_schema)
             .select(*in_cols)
         )

@@ -18,10 +18,15 @@ Scale shape of one round (what the plan compiles to):
   top-k wave (orderBy+limit = TakeOrdered)         — per-partition top-k
   fetch + extract (mapInPandas)                    — 1 Arrow crossing
   link canonicalize + skip filter (codegen + UDF)  — narrow
-  in-batch dedup groupBy(target)                   — 1 shuffle
-  seen-filter test-and-set (shard shuffle)         — 1 shuffle
-  seq assignment (range-partitioned rank)          — 1 range shuffle
-  pending' = pending ⟕̸ wave ∪ new                  — anti-join shuffle
+  seen-filter test-and-set (shard shuffle into     — 1 shuffle
+    min(n_shards, cores) tasks; in-batch dedup
+    runs inside each shard task, no groupBy)
+  seq: arithmetic encode of (parent, link) pos     — narrow, no rank
+  pending' = pending ⟕̸ wave ∪ new                  — broadcast anti-join
+
+The round's link and new-URL counts are DataFrame observations filled by
+the claim and pending-write jobs; the only extra job is the wave count.
+(Exact mode dedups with a groupBy(url) before its anti-join claim.)
 
 Every per-row computation is a vectorized pandas/Arrow UDF; all
 predicates/windows/joins are JVM-side (BASELINE.json input_hint).
@@ -31,11 +36,13 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.window import Window
 
 from ..datagen.synthweb import fetch_page
 from ..functions.urls import canonicalize_url_udf, skip_col
@@ -68,6 +75,9 @@ class CrawlConfig:
     default_host_budget: int = 4
     n_salts: int = 16
     seen_mode: str = "bloom"  # "bloom" | "exact"
+    # bloom/cuckoo state layout: the number of per-shard bitmaps (tables)
+    # on disk. It does not set the claim's task count, which is
+    # min(n_shards, cores).
     n_shards: int = 32
     total_bloom_bits: int = 1 << 24
     max_depth: int = 8
@@ -81,10 +91,6 @@ class CrawlConfig:
     # fetches are latency-bound (the reference budgets 20-40 s/URL,
     # /root/reference/helpers.js:7); 0 disables.
     fetch_rtt_ms: float = 0.0
-    # driver-side lineage counts (links extracted / new URLs) cost one
-    # extra Spark job each per round; the per-host metrics TABLE is
-    # always written regardless — this only gates the console numbers.
-    lineage_counts: bool = True
     # T5 retry ladder: re-queue non-200 fetches with attempt+1 and a
     # linear round backoff (not_before = round + 1 + attempt), up to
     # max_attempts total tries. Off by default: retries extend the
@@ -297,8 +303,6 @@ class CrawlScheduler:
         concurrency = max(1, self.config.fetch_concurrency)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from concurrent.futures import ThreadPoolExecutor
-
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -408,8 +412,6 @@ class CrawlScheduler:
         # top-k never materializes more than wave_size rows per task.
         # pos is then a window over the ALREADY-LIMITED rows — bounded
         # by wave_size (a config constant), never by frontier size.
-        from pyspark.sql.window import Window
-
         top = polite.orderBy("priority", "seq").limit(cfg.wave_size)
         w_pos = Window.orderBy("priority", "seq")
         wave = top.withColumn("pos", F.row_number().over(w_pos) - 1)
@@ -420,7 +422,6 @@ class CrawlScheduler:
         # other's stragglers; both only read the cached wave). The wave
         # write costs ~0.4 s/round that was previously serial.
         wave_count = wave.count()
-        from concurrent.futures import ThreadPoolExecutor
 
         def _write_wave() -> None:
             # sortWithinPartitions, not orderBy — the wave is a single
@@ -432,131 +433,135 @@ class CrawlScheduler:
             if cfg.token_buckets:
                 self._write_host_state(budget_df, wave, round_no)
 
-        pool = ThreadPoolExecutor(max_workers=1)
-        fut_wave = pool.submit(_write_wave)
-        t = _mark("wave_select", t0)
+        # the round's counts arrive with the jobs that already run:
+        # each Observation is filled when its DataFrame's job finishes
+        links_obs, new_obs = Observation(), Observation()
+        # leaving the with-block joins the pool, so a failed write cannot
+        # leave a background write running after the round has raised
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut_wave = pool.submit(_write_wave)
+            t = _mark("wave_select", t0)
 
-        # --- fetch + extract (ONE fused Arrow crossing)
-        articles = self._fetch_extract(wave).persist()
-        self.store.write(articles, "results", round_no)
-        fut_wave.result()
-        t = _mark("fetch_extract", t)
+            # --- fetch + extract (ONE fused Arrow crossing)
+            articles = self._fetch_extract(wave).persist()
+            self.store.write(articles, "results", round_no)
+            fut_wave.result()
+            t = _mark("fetch_extract", t)
 
-        # --- link expansion → canonicalize → filter → dedup → claim
-        links = articles.filter(F.col("status") == 200).select(
-            F.col("pos").alias("parent_pos"),
-            F.col("depth").alias("parent_depth"),
-            F.posexplode_outer("article.links").alias("pos", "link"),
-        )
-        links = links.withColumn("target", canonicalize_url_udf(F.col("link.href")))
-        links = links.filter(
-            F.col("target").isNotNull()
-            & ~skip_col(F.col("target"))
-            & (F.col("parent_depth") < cfg.max_depth)
-        )
-        n_extracted = links.count() if cfg.lineage_counts else -1
-        t = _mark("link_expand", t)
-        # in-batch first-occurrence dedup: keep the earliest discovery in
-        # crawl-schedule order (parent's wave pos, then link pos).
-        # r6: for the sharded filters the dedup runs INSIDE the claim's
-        # shard task (shard = f(url) already co-locates every copy), so
-        # the separate groupBy(target) exchange disappears — one shuffle
-        # where the old plan paid two; identical min-struct semantics.
-        renamed = links.select(
-            F.col("target").alias("url"), "parent_pos", "pos", "parent_depth"
-        )
-        if isinstance(self.seen, BloomSeenFilter):
-            claimed = self.seen.claim_unseen(
-                renamed, dedup_first=["parent_pos", "pos", "parent_depth"]
+            # --- link expansion → canonicalize → filter → dedup → claim
+            links = articles.filter(F.col("status") == 200).select(
+                F.col("pos").alias("parent_pos"),
+                F.col("depth").alias("parent_depth"),
+                F.posexplode_outer("article.links").alias("pos", "link"),
             )
-        else:
-            dedup = renamed.groupBy("url").agg(
-                F.min(
-                    F.struct("parent_pos", "pos", "parent_depth")
-                ).alias("first")
+            links = links.withColumn(
+                "target", canonicalize_url_udf(F.col("link.href")))
+            links = links.filter(
+                F.col("target").isNotNull()
+                & ~skip_col(F.col("target"))
+                & (F.col("parent_depth") < cfg.max_depth)
+            ).observe(links_obs, F.count(F.lit(1)).alias("n"))
+            t = _mark("link_expand", t)
+            # in-batch first-occurrence dedup: keep the earliest discovery
+            # in crawl-schedule order (parent's wave pos, then link pos).
+            # The bloom filter dedups INSIDE the claim's shard task
+            # (shard = f(url) co-locates every copy of a url), so it needs
+            # no groupBy(url) exchange of its own; same min-struct
+            # semantics as the groupBy the other filters use.
+            renamed = links.select(
+                F.col("target").alias("url"), "parent_pos", "pos", "parent_depth"
             )
-            claimed = self.seen.claim_unseen(
-                dedup.select(
-                    "url",
-                    F.col("first.parent_pos").alias("parent_pos"),
-                    F.col("first.pos").alias("pos"),
-                    F.col("first.parent_depth").alias("parent_depth"),
+            if isinstance(self.seen, BloomSeenFilter):
+                claimed = self.seen.claim_unseen(
+                    renamed, dedup_first=["parent_pos", "pos", "parent_depth"]
                 )
+            else:
+                dedup = renamed.groupBy("url").agg(
+                    F.min(
+                        F.struct("parent_pos", "pos", "parent_depth")
+                    ).alias("first")
+                )
+                claimed = self.seen.claim_unseen(
+                    dedup.select(
+                        "url",
+                        F.col("first.parent_pos").alias("parent_pos"),
+                        F.col("first.pos").alias("pos"),
+                        F.col("first.parent_depth").alias("parent_depth"),
+                    )
+                )
+            new_rows = claimed.select(
+                "url", "parent_pos", "pos",
+                (F.col("parent_depth") + 1).alias("depth"),
             )
-        new_rows = claimed.select(
-            "url", "parent_pos", "pos",
-            (F.col("parent_depth") + 1).alias("depth"),
-        )
-        t = _mark("seen_claim", t)
-        # deterministic seq for the next generation: an order-preserving
-        # ARITHMETIC encode of the (unique) discovery position — no
-        # ranking job, no extra shuffle. parent_pos < wave_size and
-        # link pos < 1024 (extract caps links at 1000, reference W7), so
-        # the encode is injective and ordered exactly like a dense rank.
-        new_frontier = with_host(
-            new_rows.select(
-                "url",
-                (
-                    F.lit((round_no + 1) * SEQ_STRIDE)
-                    + F.col("parent_pos") * LINK_POS_STRIDE
-                    + F.col("pos")
-                ).alias("seq"),
-                F.col("depth").cast("int"),
-                # north rule: priority = link_depth + in-article link score
-                (
-                    F.col("depth")
-                    + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0
-                ).alias("priority"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).cast("long").alias("not_before"),
-            )
-        ).select(*FRONTIER_COLS)
+            t = _mark("seen_claim", t)
+            # deterministic seq for the next generation: an
+            # order-preserving ARITHMETIC encode of the (unique) discovery
+            # position — no ranking job, no extra shuffle. parent_pos <
+            # wave_size and link pos < 1024 (extract caps links at 1000,
+            # reference W7), so the encode is injective and ordered
+            # exactly like a dense rank.
+            new_frontier = with_host(
+                new_rows.select(
+                    "url",
+                    (
+                        F.lit((round_no + 1) * SEQ_STRIDE)
+                        + F.col("parent_pos") * LINK_POS_STRIDE
+                        + F.col("pos")
+                    ).alias("seq"),
+                    F.col("depth").cast("int"),
+                    # north rule: priority = link_depth + in-article link score
+                    (
+                        F.col("depth")
+                        + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0
+                    ).alias("priority"),
+                    F.lit(0).alias("attempt"),
+                    F.lit(0).cast("long").alias("not_before"),
+                )
+            ).select(*FRONTIER_COLS).observe(new_obs, F.count(F.lit(1)).alias("n"))
 
-        # --- next pending = (pending − wave) ∪ new [∪ retries]
-        # wave is <= wave_size rows (a config constant): broadcasting the
-        # anti-join build side means the 10^10-row pending frontier is
-        # NEVER shuffled to subtract one wave
-        remaining = pending.join(
-            F.broadcast(wave.select("url")), on="url", how="left_anti"
-        )
-        next_pending = remaining.select(*FRONTIER_COLS).unionByName(new_frontier)
-        if cfg.retry_failed:
-            # T5: failed rows re-enter with attempt+1; linear backoff in
-            # rounds mirrors the reference's 1000·attempt ms sleep
-            retries = articles.filter(
-                (F.col("status") != 200)
-                & (F.col("attempt") + 1 < cfg.max_attempts)
-            ).select(
-                "url", "seq", "host", "depth", "priority",
-                (F.col("attempt") + 1).alias("attempt"),
-                (F.lit(round_no + 1) + F.col("attempt")).cast("long").alias("not_before"),
+            # --- next pending = (pending − wave) ∪ new [∪ retries]
+            # wave is <= wave_size rows (a config constant): broadcasting
+            # the anti-join build side means the 10^10-row pending
+            # frontier is NEVER shuffled to subtract one wave
+            remaining = pending.join(
+                F.broadcast(wave.select("url")), on="url", how="left_anti"
             )
-            next_pending = next_pending.unionByName(retries)
-        # pending and metrics read only cached inputs (claimed is
-        # checkpointed, articles persisted) and write disjoint paths —
-        # run them concurrently too (guide §2.6)
-        fut_pending = pool.submit(
-            self.store.write, next_pending, "pending", round_no)
-        t = _mark("pending_submit", t)
+            next_pending = remaining.select(*FRONTIER_COLS).unionByName(new_frontier)
+            if cfg.retry_failed:
+                # T5: failed rows re-enter with attempt+1; linear backoff
+                # in rounds mirrors the reference's 1000·attempt ms sleep
+                retries = articles.filter(
+                    (F.col("status") != 200)
+                    & (F.col("attempt") + 1 < cfg.max_attempts)
+                ).select(
+                    "url", "seq", "host", "depth", "priority",
+                    (F.col("attempt") + 1).alias("attempt"),
+                    (F.lit(round_no + 1) + F.col("attempt")).cast("long").alias("not_before"),
+                )
+                next_pending = next_pending.unionByName(retries)
+            # pending and metrics read only cached inputs (claimed is
+            # checkpointed, articles persisted) and write disjoint paths —
+            # run them concurrently too
+            fut_pending = pool.submit(
+                self.store.write, next_pending, "pending", round_no)
+            t = _mark("pending_submit", t)
 
-        # --- metrics: per-host aggregate (A1) + lineage counts
-        n_new = new_frontier.count() if cfg.lineage_counts else -1
-        metrics = (
-            articles.groupBy("host")
-            .agg(
-                F.count("*").alias("scheduled"),
-                F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
-                F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("err"),
-                # A2 per-source rollup (amp vs dynamic,
-                # /root/reference/scripts/batch-sample-run.js:376-377)
-                F.sum(F.when(F.col("source") == "amp", 1).otherwise(0)).alias("amp"),
-                F.sum(F.when(F.col("source") == "dynamic", 1).otherwise(0)).alias("dynamic"),
+            # --- metrics: per-host aggregate (A1)
+            metrics = (
+                articles.groupBy("host")
+                .agg(
+                    F.count("*").alias("scheduled"),
+                    F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
+                    F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("err"),
+                    # A2 per-source rollup (amp vs dynamic), as the
+                    # reference's batch-sample-run.js reports it
+                    F.sum(F.when(F.col("source") == "amp", 1).otherwise(0)).alias("amp"),
+                    F.sum(F.when(F.col("source") == "dynamic", 1).otherwise(0)).alias("dynamic"),
+                )
+                .withColumn("round", F.lit(round_no))
             )
-            .withColumn("round", F.lit(round_no))
-        )
-        self.store.write(metrics, "metrics", round_no)
-        fut_pending.result()
-        pool.shutdown(wait=True)
+            self.store.write(metrics, "metrics", round_no)
+            fut_pending.result()
         # the commit marker lands only after EVERY table of the round is
         # on disk (the happens-before edge resume depends on)
         self.store.commit_round(round_no)
@@ -567,8 +572,8 @@ class CrawlScheduler:
         return {
             "round": round_no,
             "scheduled": wave_count,
-            "links_extracted": n_extracted,
-            "new_urls": n_new,
+            "links_extracted": links_obs.get["n"],
+            "new_urls": new_obs.get["n"],
             "seconds": time.monotonic() - t0,
             "timings": timings,
         }

@@ -67,7 +67,7 @@ cfg = CrawlConfig(wave_size={wave}, round0_limit={wave},
                   unique_hosts_round0=False,
                   default_host_budget=max({wave} // 40, 4),
                   n_salts=32, n_shards=32, total_bloom_bits=1 << 25,
-                  n_hosts=200, lineage_counts=False,
+                  n_hosts=200,
                   fetch_rtt_ms={rtt_ms})
 bench._run_crawl(spark, 600, 400, 1, cfg=None)  # warm-up (untimed)
 out = bench._run_crawl(spark, {seeds}, {wave}, {rounds}, cfg=cfg)

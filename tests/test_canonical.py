@@ -81,7 +81,7 @@ def test_crawl_round_with_canonical_rescue(spark, tmp_path):
                      '<body><p>meh.</p></body></html>')
 
     cfg = CrawlConfig(wave_size=10, round0_limit=10, canonical_rescue=True,
-                      n_shards=2, lineage_counts=False)
+                      n_shards=2)
     sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, fetch_fn=fetch)
     sched.init_from_seeds(build_seed_frontier(spark, 10))
     sched.run_round(0)

@@ -3,9 +3,15 @@ scheduled order must EXACTLY match the pure-Python reference simulator
 under the same seed list + politeness budget (north rule), and resume
 from checkpoint must continue identically."""
 
+import threading
+import time
+
 import pyspark.sql.functions as F
+import pytest
 
 from horseman_article_parser_spark.datagen.frontier import build_seed_frontier, seed_urls
+from horseman_article_parser_spark.functions.urls import canonicalize_url, skip_col
+from horseman_article_parser_spark.plans.checkpoint import CrawlStore
 from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
 from horseman_article_parser_spark.plans.reference_sim import sim_crawl
 
@@ -102,6 +108,80 @@ def test_metrics_and_results_written(spark, tmp_store):
     assert ok.count() > 0
     # extracted structs are populated for 200s
     assert ok.filter(F.col("article.title").isNotNull()).count() == ok.count()
+
+
+def _kept_links(spark, store, round_no, max_depth):
+    """Links of the round's 200-status results that survive
+    canonicalization, the skip rules and the depth cap."""
+    rows = store.read(spark, "results", round_no).filter(
+        F.col("status") == 200).select("depth", "article.links").collect()
+    raw = [(r["depth"], link["href"]) for r in rows for link in (r["links"] or [])]
+    targets = [canonicalize_url(href) for depth, href in raw if depth < max_depth]
+    targets = [(t,) for t in targets if t is not None]
+    kept = spark.createDataFrame(targets, "t string").filter(~skip_col(F.col("t"))).count()
+    return kept, len(raw)
+
+
+@pytest.mark.parametrize("seen_mode", ["bloom", "exact"])
+def test_round_record_counts_match_the_checkpoint(spark, tmp_store, seen_mode):
+    """links_extracted and new_urls, which come from observations, agree
+    with the round's results and pending tables."""
+    # round 1 schedules seeds and depth-1 links, so the depth cap bites
+    cfg = CrawlConfig(wave_size=WAVE, round0_limit=ROUND0, default_host_budget=BUDGET,
+                      seen_mode=seen_mode, max_depth=1)
+    sched = CrawlScheduler(spark, tmp_store, cfg)
+    stats = sched.run(2, seeds=build_seed_frontier(spark, N_SEEDS))
+    store = sched.store
+    for st in stats:
+        r = st["round"]
+        pending = store.read(spark, "pending", r).count()
+        before = store.read(spark, "pending", r - 1).count()
+        assert st["new_urls"] == pending - (before - st["scheduled"])
+        kept, raw = _kept_links(spark, store, r, cfg.max_depth)
+        assert st["links_extracted"] == kept and 0 < kept < raw
+    depths = {r["depth"] for r in store.read(spark, "results", 1).filter(
+        F.col("status") == 200).collect()}
+    assert depths == {0, 1}
+
+
+def test_round_with_an_empty_wave(spark, tmp_store):
+    """A round with nothing to schedule still commits, and its
+    observations still report (zero) counts."""
+    seeds = spark.createDataFrame([(f"https://h{i}.x/p-{i}", i) for i in range(3)],
+                                  "url string, seq long")
+    cfg = CrawlConfig(wave_size=10, round0_limit=10, unique_hosts_round0=False)
+    page = "<html><body><article><p>a page without links</p></article></body></html>"
+    sched = CrawlScheduler(spark, tmp_store, cfg, fetch_fn=lambda u: (200, page))
+    stats = sched.run(2, seeds=seeds)
+    assert [(s["scheduled"], s["links_extracted"], s["new_urls"]) for s in stats] == [
+        (3, 0, 0), (0, 0, 0)]
+    assert sched.store.last_round() == 1
+    assert sched.store.read(spark, "pending", 1).count() == 0
+
+
+class _FailingResultsStore(CrawlStore):
+    def write(self, df, kind, round_no):
+        if kind == "results":
+            raise OSError("results write failed")
+        if kind == "waves":
+            time.sleep(1.0)  # still writing when the results write fails
+        super().write(df, kind, round_no)
+
+
+def test_failed_write_leaves_no_round_thread_running(spark, tmp_store):
+    cfg = CrawlConfig(wave_size=WAVE, round0_limit=ROUND0, default_host_budget=BUDGET,
+                      seen_mode="exact")
+    sched = CrawlScheduler(spark, tmp_store, cfg)
+    sched.init_from_seeds(build_seed_frontier(spark, N_SEEDS))
+    sched.store = _FailingResultsStore(tmp_store)
+    before = set(threading.enumerate())
+    with pytest.raises(OSError, match="results write failed"):
+        sched.run_round(0)
+    leaked = [t for t in threading.enumerate()
+              if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    assert leaked == []
+    assert sched.store.exists("waves", 0)
+    assert sched.store.last_round() == -1
 
 
 def test_retry_ladder_requeues_failed(spark, tmp_path):

@@ -210,8 +210,15 @@ def test_simhash_kernel_matches_declarative(spark):
          (5, "The quick-brown FOX! jumps\nover 42 lazy dogs.")],
         "doc_id long, text string",
     )
+    # one partition, so an empty and a whitespace-only doc are the LAST
+    # rows of a kernel batch, right after docs with tokens
+    trailing = spark.createDataFrame(
+        [(6, "a b c d e f g"), (7, "lazy dogs"), (8, "   "),
+         (9, "")],
+        "doc_id long, text string",
+    ).coalesce(1)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for d in (edge, docs.select("doc_id", "text")):
+    for d in (edge, trailing, docs.select("doc_id", "text")):
         a = sorted(map(tuple, simhash(d, bits=16).collect()))
         b = sorted(map(tuple, simhash_batch(d, bits=16).collect()))
         assert a == b, next((x, y) for x, y in zip(a, b) if x != y)

@@ -32,7 +32,7 @@ def test_crawl_probe_first_skips_failing_pages(spark, tmp_path):
         return 404 if url.endswith(("0", "2", "4", "6", "8")) else 200
 
     cfg = CrawlConfig(wave_size=10, round0_limit=10, probe_first=True,
-                      n_shards=2, lineage_counts=False)
+                      n_shards=2)
     sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, probe_fn=probe)
     sched.init_from_seeds(build_seed_frontier(spark, 10))
     sched.run_round(0)

@@ -2,9 +2,17 @@
 semantics, version/resume behavior, measured false-positive rate
 (SURVEY §2.3 J1, §4 custom component #1)."""
 
+import json
+import os
+
+import numpy as np
+import pyspark.sql.functions as F
+
 from horseman_article_parser_spark.operators.seen_filter import (
     BloomSeenFilter,
+    CuckooSeenFilter,
     ExactSeenFilter,
+    _bit_positions,
 )
 
 
@@ -53,9 +61,84 @@ def test_bloom_resume_and_fp_rate(spark, tmp_store):
     assert fp_rate < 0.01, f"bloom FP rate too high: {fp_rate}"
 
 
-def test_cuckoo_claim_release_resume(spark, tmp_store):
-    from horseman_article_parser_spark.operators.seen_filter import CuckooSeenFilter
+def test_bloom_more_shards_than_tasks_matches_numpy_reference(spark, tmp_store):
+    """32 shards on fewer cores: every task owns several shards. The
+    claimed rows, each shard bitmap and each manifest must equal a numpy
+    reference built from Spark's xxhash64 values."""
+    n_shards, k = 32, 7
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < n_shards
+    f = BloomSeenFilter(tmp_store, n_shards=n_shards, total_bits=1 << 18, k=k)
+    bits = f.bits_per_shard
+    urls = [f"https://h{i % 40}.x/s-{i}" for i in range(1000)]
+    hashes = {
+        r["url"]: (r["h1"], r["h2"])
+        for r in _df(spark, urls + [f"https://n.x/{i}" for i in range(12)]).select(
+            "url",
+            F.xxhash64("url").alias("h1"),
+            F.xxhash64("url", F.lit(0x9E3779B9)).alias("h2"),
+        ).collect()
+    }
+    ref = {s: np.zeros(bits // 8 + 1, dtype=np.uint8) for s in range(n_shards)}
+    files: dict[str, str] = {}
+    data_dir = os.path.join(tmp_store, "bloom", "data")
+    # second claim: 100 seen urls and 12 new ones, so most shards go
+    # untouched and must be carried forward by reference
+    batches = [urls, urls[-100:] + [f"https://n.x/{i}" for i in range(12)]]
+    for version, batch in enumerate(batches):
+        claimed = f.claim_unseen(_df(spark, batch))
+        assert claimed.rdd.getNumPartitions() == min(n_shards, cores)
+        want, touched = set(), set()
+        for u in batch:
+            h1, h2 = hashes[u]
+            shard = h1 % n_shards
+            pos = _bit_positions(np.array([h1]), np.array([h2]), k, bits)[0]
+            bitmap = ref[shard]
+            if not all(bitmap[p >> 3] >> (p & 7) & 1 for p in pos):
+                want.add(u)
+                touched.add(shard)
+        for u in want:  # set bits only after probing the whole batch
+            h1, h2 = hashes[u]
+            for p in _bit_positions(np.array([h1]), np.array([h2]), k, bits)[0]:
+                ref[h1 % n_shards][p >> 3] |= 1 << (p & 7)
+        assert {r["url"] for r in claimed.collect()} == want
+        with open(os.path.join(tmp_store, "bloom", f"manifest_v{version}.json")) as fh:
+            shards = json.load(fh)["shards"]
+        written = {name for name in os.listdir(data_dir)
+                   if name.startswith(f"v{version}_")}
+        assert written == {f"v{version}_shard_{s}.bin" for s in touched}
+        files.update({str(s): os.path.join(data_dir, f"v{version}_shard_{s}.bin")
+                      for s in touched})
+        assert shards == files
+        for key, path in shards.items():
+            assert (np.fromfile(path, dtype=np.uint8) == ref[int(key)]).all(), key
+    assert 0 < len(touched) < n_shards
 
+
+def test_cuckoo_shard_state_does_not_depend_on_task_sharing(spark, tmp_path):
+    """The eviction RNG is seeded per shard: a shard's table is the same
+    whether or not other shards' rows share its task."""
+    n_shards = 16
+    assert spark.sparkContext.defaultParallelism < n_shards
+    # ~28 fingerprints per 8-bucket x 4-slot shard: evictions happen
+    urls = [f"https://h{i % 30}.x/q-{i}" for i in range(450)]
+    shard_of = {r["url"]: r["s"] for r in _df(spark, urls).select(
+        "url", F.pmod(F.xxhash64("url"), F.lit(n_shards)).alias("s")).collect()}
+    upper = [u for u in urls if shard_of[u] >= n_shards // 2]
+    tables = []
+    for name, batch in (("all", urls), ("upper", upper)):
+        f = CuckooSeenFilter(str(tmp_path / name), n_shards=n_shards,
+                             buckets_per_shard=8)
+        f.claim_unseen(_df(spark, batch))
+        with open(os.path.join(f.store_dir, "cuckoo", "manifest_v0.json")) as fh:
+            tables.append({int(s): np.load(p) for s, p in json.load(fh)["shards"].items()})
+    full, alone = tables
+    assert set(alone) == set(range(n_shards // 2, n_shards))
+    for s, table in alone.items():
+        assert (full[s] == table).all(), s
+
+
+def test_cuckoo_claim_release_resume(spark, tmp_store):
     f = CuckooSeenFilter(tmp_store, n_shards=8, buckets_per_shard=1 << 10)
     urls1 = [f"https://h{i % 20}.x/c-{i}" for i in range(500)]
     got1 = {r["url"] for r in f.claim_unseen(_df(spark, urls1)).collect()}
@@ -77,8 +160,6 @@ def test_cuckoo_claim_release_resume(spark, tmp_store):
 
 
 def test_cuckoo_fp_rate_bounded(spark, tmp_store):
-    from horseman_article_parser_spark.operators.seen_filter import CuckooSeenFilter
-
     f = CuckooSeenFilter(tmp_store, n_shards=8, buckets_per_shard=1 << 10)
     ins = [f"https://h{i % 50}.x/i-{i}" for i in range(3000)]
     f.claim_unseen(_df(spark, ins))
@@ -106,14 +187,11 @@ def test_crawl_scheduler_with_cuckoo(spark, tmp_store):
 
 
 def test_cuckoo_buckets_rounded_to_power_of_two(tmp_store):
-    from horseman_article_parser_spark.operators.seen_filter import CuckooSeenFilter
-
     # non-power-of-two request (e.g. total_bits/(n_shards*64) = 21845)
     f = CuckooSeenFilter(str(tmp_store), n_shards=2, buckets_per_shard=21845)
     assert f.buckets == 32768  # next power of two
     assert f.buckets & (f.buckets - 1) == 0
     # the alternate-bucket map must be an involution: alt(alt(b)) == b
-    import numpy as np
     b = np.arange(f.buckets, dtype=np.int64)
     fp = np.full(f.buckets, 12345, dtype=np.uint16)
     alt = f._alt_bucket(b, fp)
@@ -123,9 +201,6 @@ def test_cuckoo_buckets_rounded_to_power_of_two(tmp_store):
 def test_cuckoo_full_table_undo_preserves_claims(tmp_store):
     """MAX_KICKS exhaustion must not evict a previously-inserted
     fingerprint (the old code dropped the kicked victim)."""
-    import numpy as np
-    from horseman_article_parser_spark.operators.seen_filter import CuckooSeenFilter
-
     f = CuckooSeenFilter(str(tmp_store), n_shards=1, buckets_per_shard=2)
     rng = np.random.RandomState(0)
     table = np.zeros((f.buckets, f.SLOTS), dtype=np.uint16)
