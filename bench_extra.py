@@ -22,20 +22,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("BENCH_EXTRA_RUNS", "2"))
 PLANS_DIR = os.environ.get("BENCH_EXTRA_PLANS", "")
 SUFFIX = os.environ.get("BENCH_EXTRA_SUFFIX", "plan")
-
-HEADLINE = [
-    "frontier_wave0", "seen_antijoin", "politeness_budget", "robots_filter",
-    "url_transforms", "round_robin_interleave", "extract_title",
-    "extract_links", "extract_images", "minhash_lsh", "simhash",
-    "ngram_jaccard", "knn_bruteforce", "langid", "text_quality", "sentiment",
-    "keywords_topk", "sessionize", "pricing_summary",
-    "top_orders_per_customer",
-]
 
 
 def main():

@@ -56,22 +56,3 @@ def build_seed_frontier(
     """
     rows = [(u, i) for i, u in enumerate(seed_urls(n, n_hosts, seed))]
     return spark.createDataFrame(rows, SEED_SCHEMA)
-
-
-def read_url_list(spark: SparkSession, path: str) -> DataFrame:
-    """S1 URL-list scan: newline URLs → (url, seq) preserving file order.
-
-    Parity with readUrls (/root/reference/scripts/batch-sample-run.js:59-64):
-    trim, drop blanks. File order is recovered scalably from
-    (file, byte offset) ordering rather than a single-threaded read.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window
-
-    df = (
-        spark.read.text(path)
-        .select(F.trim("value").alias("url"))
-        .filter(F.length("url") > 0)
-    )
-    w = Window.orderBy(F.monotonically_increasing_id())
-    return df.select("url", (F.row_number().over(w) - 1).cast("long").alias("seq"))

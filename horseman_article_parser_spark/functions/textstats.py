@@ -1087,63 +1087,21 @@ def readability_cols(text: Column | str,
 # ------------------------------------------------------------ quality
 
 
-def quality_cols(text: Column | str,
-                 tokens: Column | None = None) -> dict[str, Column]:
-    """Training-data quality signals: length, mean word length, stopword
-    ratio, alpha ratio. Score = additive, clamped [0,100], rounded to an
-    integer so the value is hash-stable across engines.
-
-    `tokens` = optional pre-materialized tokens_col column; without it
-    every stopword count re-splits the text (|STOPWORDS_MINI|+1 splits
-    per row)."""
-    t = _c(text)
-    n_chars = F.length(t)
-    n_words = F.size(tokens) if tokens is not None else token_count_col(t)
-    stop_hits = None
-    for w in STOPWORDS_MINI:
-        o = occurrences_col(t, w, tokens=tokens)
-        stop_hits = o if stop_hits is None else stop_hits + o
-    alpha_chars = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
-    mean_word_len = F.when(n_words > 0, n_chars.cast("double") / n_words).otherwise(
-        F.lit(0.0)
-    )
-    stop_ratio = F.when(n_words > 0, stop_hits.cast("double") / n_words).otherwise(
-        F.lit(0.0)
-    )
-    alpha_ratio = F.when(n_chars > 0, alpha_chars.cast("double") / n_chars).otherwise(
-        F.lit(0.0)
-    )
-    score = (
-        F.least(n_chars.cast("double") / F.lit(20.0), F.lit(40.0))
-        + F.lit(30.0) * alpha_ratio
-        + F.lit(20.0) * F.least(stop_ratio * F.lit(4.0), F.lit(1.0))
-        + F.lit(10.0)
-        * F.when((mean_word_len >= 3.0) & (mean_word_len <= 8.0), F.lit(1.0)).otherwise(
-            F.lit(0.0)
-        )
-    )
-    return {
-        "n_chars": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
-        "stopword_hits": stop_hits.cast("long"),
-        "alpha_ratio_x1e4": F.round(alpha_ratio * 10000).cast("long"),
-        "quality_score": F.round(F.least(score, F.lit(100.0))).cast("long"),
-    }
-
-
 def with_quality(df: DataFrame, text_col: str = "text",
                  tokens: Column | None = None) -> DataFrame:
-    """Staged-projection form of :func:`quality_cols` — identical
-    values, different physical shape (the with_sentiment pattern).
+    """Training-data quality signals as staged projections (the
+    with_sentiment pattern): `stopword_hits`, `alpha_ratio_x1e4` and
+    `quality_score` (additive over length, mean word length, stopword
+    ratio and alpha ratio, clamped to [0,100] and rounded to an integer
+    so the value is hash-stable across engines).
 
-    quality_cols returns independent Column trees: `quality_score`
-    re-embeds the stopword occurrence sum and the alpha regexp that
-    `stopword_hits` / `alpha_ratio_x1e4` also carry, so selecting the
-    three together evaluates the heavy subtrees ~2× per row (measured
-    2.3 s for the combined projection vs ~0.5 s per staged piece at
-    sf1). Here each shared scalar is materialized once behind a Project
-    boundary (CollapseProject keeps non-cheap exprs referenced >1×
-    un-inlined) and the outputs are cheap derivations."""
+    `quality_score` shares the stopword occurrence sum and the alpha
+    regexp with the other two; as independent Column trees, selecting
+    the three together evaluates the heavy subtrees ~2× per row
+    (measured 2.3 s for the combined projection vs ~0.5 s per staged
+    piece at sf1). Here each shared scalar is materialized once behind a
+    Project boundary (CollapseProject keeps non-cheap exprs referenced
+    >1× un-inlined) and the outputs are cheap derivations."""
     t = _c(text_col)
     toks = tokens if tokens is not None else tokens_col(text_col)
     df = df.withColumn("_q_nchars", F.length(t))

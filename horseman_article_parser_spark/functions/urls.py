@@ -12,7 +12,6 @@ handling (NOT code ports):
 - keep_likely_article ≈ keepLikelyArticles
   (/root/reference/scripts/fetch-curated-urls.js:47-74).
 - amp_candidates    ≈ ampCandidates (/root/reference/scripts/batch-sample-run.js:85-98).
-- absolutify        ≈ absolutifyUrl (/root/reference/index.js:1033-1042) via urljoin.
 
 Each exists in two forms:
  1. a plain-Python scalar function (used by the parity simulator and
@@ -26,7 +25,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-from urllib.parse import urljoin, urlsplit, urlunsplit
+from urllib.parse import urlsplit, urlunsplit
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -83,17 +82,6 @@ def canonicalize_url(u: str | None) -> str | None:
         netloc = f"{host}:{port}"
     path = parts.path or "/"
     return urlunsplit((scheme, netloc, path, parts.query, ""))
-
-
-def url_host(u: str | None) -> str | None:
-    if not u:
-        return None
-    try:
-        parts = urlsplit(u)
-    except ValueError:
-        return None
-    host = parts.hostname
-    return host.lower().rstrip(".") if host else None
 
 
 def skip_reason(u: str | None) -> str | None:
@@ -167,18 +155,6 @@ def amp_candidates(raw: str | None) -> list[str]:
         origin + parts.path + "?" + q_amp,
         origin + parts.path + "?" + q_out,
     ]
-
-
-def absolutify(base: str, href: str | None) -> str | None:
-    if href is None:
-        return None
-    href = href.strip()
-    if not href or href.startswith(("javascript:", "mailto:", "#")):
-        return None
-    try:
-        return urljoin(base, href)
-    except ValueError:
-        return None
 
 
 # ------------------------------------------------------------- columns

@@ -151,50 +151,6 @@ def lsh_band_buckets(signatures: DataFrame, bands: int, rows_per_band: int,
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, bands: int, rows_per_band: int,
-                        id_col: str = "doc_id", max_bucket: int = 1000) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) from shared LSH buckets.
-
-    Self-join on (band, bucket) — both sides shuffle on the bucket key.
-    Buckets larger than `max_bucket` are dropped (boilerplate clusters;
-    at 10^10 docs a single mega-bucket would otherwise quadratically
-    dominate the join). Callers should report the dropped-bucket count."""
-    buckets = lsh_band_buckets(signatures, bands, rows_per_band, id_col)
-    sized = buckets.withColumn(
-        "_n", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("_n") <= max_bucket).drop("_n")
-    a = sized.select("band", "bucket", F.col(id_col).alias("id_a"))
-    b = sized.select("band", "bucket", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def minhash_similarity(signatures: DataFrame, pairs: DataFrame,
-                       id_col: str = "doc_id") -> DataFrame:
-    """Estimated Jaccard = fraction of agreeing signature slots, for the
-    candidate pairs only (signatures are narrow; text never joins)."""
-    mh_cols = [c for c in signatures.columns if c.startswith("mh")]
-    sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), *[F.col(c).alias(f"a_{c}") for c in mh_cols]
-    )
-    sig_b = signatures.select(
-        F.col(id_col).alias("id_b"), *[F.col(c).alias(f"b_{c}") for c in mh_cols]
-    )
-    joined = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
-    agree = None
-    for c in mh_cols:
-        t = F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0)
-        agree = t if agree is None else agree + t
-    return joined.select(
-        "id_a", "id_b",
-        (agree.cast("double") / F.lit(len(mh_cols))).alias("est_jaccard"),
-    )
-
-
 # ------------------------------------------------------ exact jaccard
 
 
@@ -309,7 +265,7 @@ def blocked_hamming_pairs(sig_df: DataFrame, sig_col: str, id_col: str,
        expansion is output-proportional, distributed by the high-
        cardinality signature key.
     2. chunk buckets holding > max_bucket DISTINCT signatures are
-       dropped (same cap as `lsh_candidate_pairs`), and identical-
+       dropped, and identical-
        signature groups larger than max_bucket are not expanded —
        degenerate clusters are a dedup-cluster report's job, not a
        pair list's.

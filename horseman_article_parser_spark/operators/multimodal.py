@@ -39,25 +39,13 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..codecs.images import decode_image, phash64, psnr
+from ..codecs.images import decode_image, phash64
 
 IMAGE_FEATURE_SCHEMA = (
     "`image_id` string, `w` int, `h` int, `fmt` string, "
     "`mean_r` double, `mean_g` double, `mean_b` double, "
     "`std_luma` double, `phash_check` bigint, `decode_ok` boolean"
 )
-
-THUMB_SCHEMA = "`image_id` string, `tw` int, `th` int, `thumb` binary"
-
-PSNR_SCHEMA = "`image_id` string, `psnr_db` double, `caption` string"
-
-
-def _resize_nearest(pixels: np.ndarray, tw: int, th: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure numpy (real, not stubbed)."""
-    h, w = pixels.shape[:2]
-    ys = (np.arange(th) * h) // th
-    xs = (np.arange(tw) * w) // tw
-    return pixels[ys][:, xs]
 
 
 def image_features(images: DataFrame) -> DataFrame:
@@ -93,52 +81,6 @@ def image_features(images: DataFrame) -> DataFrame:
             )
 
     return src.mapInPandas(kernel, schema=IMAGE_FEATURE_SCHEMA)
-
-
-def thumbnails(images: DataFrame, tw: int = 16, th: int = 16) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode PNG thumbnails."""
-    from ..codecs.images import encode_png
-
-    src = images.select("image_id", "bytes")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, out = [], []
-            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    px = decode_image(bytes(data))
-                except Exception:  # corrupt payloads: struct/zlib/Index errors too
-                    continue
-                ids.append(image_id)
-                out.append(encode_png(_resize_nearest(px, tw, th)))
-            yield pd.DataFrame(
-                {"image_id": ids, "tw": tw, "th": th, "thumb": out}
-            )
-
-    return src.mapInPandas(kernel, schema=THUMB_SCHEMA)
-
-
-def psnr_vs_reference(images: DataFrame, reference_pixels) -> DataFrame:
-    """Per-row decoded-pixel PSNR against a caller-supplied reference
-    generator `reference_pixels(image_id) -> np.ndarray` (the north-rule
-    invariant: PSNR ≥ 40 dB for lossy + caption equality)."""
-    src = images.select("image_id", "bytes", "caption")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for image_id, data, caption in zip(
-                pdf["image_id"], pdf["bytes"], pdf["caption"]
-            ):
-                try:
-                    px = decode_image(bytes(data))
-                    ref = reference_pixels(image_id)
-                    rows.append((image_id, psnr(ref, px), caption))
-                except Exception:  # corrupt payloads: struct/zlib/Index errors too
-                    rows.append((image_id, None, caption))
-            yield pd.DataFrame(rows, columns=["image_id", "psnr_db", "caption"])
-
-    return src.mapInPandas(kernel, schema=PSNR_SCHEMA)
 
 
 def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 6,

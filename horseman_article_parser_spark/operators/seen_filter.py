@@ -6,29 +6,40 @@ The reference keeps an in-process `Set` of seen URLs/hosts
 frontier that set is ~12 GB of bloom bits — too big to broadcast, so it
 is SHARDED by url-hash: shard_id = pmod(xxhash64(url), P). A probe (or
 test-and-set) shuffles candidate links once, on shard_id, into one task
-per core; each task touches only the bitmaps of the shards it owns, read
+per core; each task touches only the state of the shards it owns, read
 directly from the checkpoint store. State versions are tracked by an
 Iceberg-style manifest (a JSON snapshot mapping shard → data file), so
 untouched shards are carried forward by reference, never rewritten — the
 same trick Iceberg manifests use to avoid rewriting unchanged data files.
 
-Two modes:
+Three modes, one call: `claim_unseen(df, url_col, dedup_first)` and
+`resume(version)` mean the same thing on each.
 - exact  — append-only parquet of seen URLs; probe = left-anti join.
            Used by correctness fixtures (zero false positives).
 - bloom  — numpy bitmaps, k hash probes derived from two JVM-computed
            xxhash64 values (Kirsch-Mitzenmacher double hashing). A
            false positive drops a genuinely-new URL (never crawled);
            the FP rate is measured against exact mode in tests.
+- cuckoo — numpy fingerprint tables; like bloom, but URLs can be
+           released (deleted) again.
+Bloom and cuckoo share one sharded, versioned store (`ShardedSeenFilter`)
+and supply only how a shard is loaded, saved, claimed and released.
+
+A filter does not discover its own version: `resume(version)` restores
+exactly the version the crawl manifest recorded with its last commit
+(plans/checkpoint.py), so state written by a round that crashed before
+its commit is never read.
 
 All per-row work is vectorized numpy inside Arrow-batched mapInPandas.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -80,40 +91,42 @@ def _set_bits(bitmap: np.ndarray, pos: np.ndarray) -> None:
     np.bitwise_or.at(bitmap, flat >> 3, np.left_shift(1, (flat & 7).astype(np.uint8)).astype(np.uint8))
 
 
-class BloomSeenFilter:
-    """Sharded, versioned bloom URL-seen filter over a checkpoint dir."""
+class ShardedSeenFilter:
+    """Sharded, versioned filter state over a checkpoint dir:
+    `<store>/<KIND>/manifest_v{version}.json` maps shard → data file
+    `<store>/<KIND>/data/v{version}_shard_{id}{SUFFIX}`.
 
-    def __init__(
-        self,
-        store_dir: str,
-        n_shards: int = 32,
-        total_bits: int = 1 << 24,
-        k: int = 7,
-    ):
+    Subclasses supply the per-shard parts: `_load`, `_dump` and the
+    claim operation `_claim`."""
+
+    KIND: str
+    SUFFIX: str
+    # attributes the manifest records; a resume adopts them
+    GEOMETRY: tuple[str, ...]
+
+    def __init__(self, store_dir: str, n_shards: int):
         self.store_dir = store_dir
         self.n_shards = n_shards
-        self.bits_per_shard = max(64, total_bits // n_shards)
-        self.k = k
         self.version = -1
-        os.makedirs(os.path.join(store_dir, "bloom", "data"), exist_ok=True)
+        self.data_dir = os.path.join(store_dir, self.KIND, "data")
+        os.makedirs(self.data_dir, exist_ok=True)
 
     # ------------------------------------------------------------ state
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.store_dir, "bloom", f"manifest_v{version}.json")
+        return os.path.join(self.store_dir, self.KIND, f"manifest_v{version}.json")
 
-    def _read_manifest(self, version: int) -> dict[str, str]:
-        if version < 0:
-            return {}
+    def _shard_path(self, version: int, shard: int) -> str:
+        return os.path.join(self.data_dir, f"v{version}_shard_{shard}{self.SUFFIX}")
+
+    def _read_manifest(self, version: int) -> dict:
         with open(self._manifest_path(version)) as f:
-            return json.load(f)["shards"]
+            return json.load(f)
 
     def _commit_manifest(self, version: int, shards: dict[str, str]) -> None:
         payload = {
             "version": version,
-            "n_shards": self.n_shards,
-            "bits_per_shard": self.bits_per_shard,
-            "k": self.k,
+            **{name: getattr(self, name) for name in self.GEOMETRY},
             "shards": shards,
         }
         path = self._manifest_path(version)
@@ -122,17 +135,22 @@ class BloomSeenFilter:
             json.dump(payload, f)
         os.replace(tmp, path)  # atomic snapshot commit
 
-    def latest_version(self) -> int:
-        base = os.path.join(self.store_dir, "bloom")
-        versions = [
-            int(name[len("manifest_v"):-len(".json")])
-            for name in os.listdir(base)
-            if name.startswith("manifest_v")
-        ]
-        return max(versions, default=-1)
+    def _save(self, state: np.ndarray, path: str) -> None:
+        fd, tmp = tempfile.mkstemp(dir=self.data_dir)
+        with os.fdopen(fd, "wb") as f:
+            self._dump(state, f)
+        os.replace(tmp, path)
 
-    def resume(self) -> None:
-        self.version = self.latest_version()
+    def resume(self, version: int) -> None:
+        """Restore exactly `version` (-1 = empty), the version the crawl
+        manifest recorded, with the geometry it was written with: probing
+        a shard under another geometry misses its bits or fingerprints
+        (false negatives, so seen URLs would be crawled again)."""
+        if version >= 0:
+            meta = self._read_manifest(version)
+            for name in self.GEOMETRY:
+                setattr(self, name, int(meta[name]))
+        self.version = version
 
     # ------------------------------------------------------------- ops
 
@@ -146,26 +164,36 @@ class BloomSeenFilter:
 
         `dedup_first`: column names forming the 'first discovery'
         ordering. When given, duplicate urls within the batch are
-        collapsed INSIDE the shard task to the row with the
-        lexicographically smallest (dedup_first...) tuple — identical
-        to an upstream groupBy(url).agg(min(struct(...))), but without
-        that groupBy's own exchange: the shard shuffle already
+        collapsed to the row with the lexicographically smallest
+        (dedup_first...) tuple, as a groupBy(url).agg(min(struct(...)))
+        would — but INSIDE the shard task: the shard shuffle already
         co-locates every copy of a url (shard = f(url)), so the claim's
-        one shuffle does double duty (guide §2.4). Without it, callers
-        dedup by their own ordering before calling, as before."""
-        spark = df.sparkSession
+        one shuffle does double duty (guide §2.4)."""
+        return self._apply(df, url_col, self._claim, dedup_first)
+
+    def _apply(self, df: DataFrame, url_col: str, op: Callable,
+               dedup_first: list[str] | None = None) -> DataFrame:
+        """The shared claim loop: run `op(state, h1, h2, salt) ->
+        (emit mask, changed)` on each shard's rows, save the shards it
+        changed, and commit them as the next version. `op` may update
+        `state` in place; `salt` (version ^ shard id) seeds any randomness
+        per shard, so a shard's state does not depend on which other
+        shards share its task."""
         in_cols = df.columns
         hashed = with_seen_hashes(df, url_col, self.n_shards)
-        manifest = self._read_manifest(self.version)
+        shards = self._read_manifest(self.version)["shards"] if self.version >= 0 else {}
         new_version = self.version + 1
-        data_dir = os.path.join(self.store_dir, "bloom", "data")
-        bits_per_shard, k = self.bits_per_shard, self.k
+        # files left at this version by an attempt that never committed
+        # (a crash, or a rollback by resume) must not reach its manifest
+        for shard in range(self.n_shards):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(self._shard_path(new_version, shard))
 
         out_schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in hashed.schema.fields
         )
 
-        def tas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             parts = [b for b in batches if len(b)]
             if not parts:
                 return
@@ -175,48 +203,69 @@ class BloomSeenFilter:
                     [url_col, *dedup_first], kind="mergesort"
                 ).drop_duplicates(url_col, keep="first")
             for shard_id, grp in pdf.groupby(_SHARD, sort=True):
-                shard_key = str(int(shard_id))
-                path = manifest.get(shard_key)
-                if path is not None and os.path.exists(path):
-                    bitmap = np.fromfile(path, dtype=np.uint8).copy()
-                else:
-                    bitmap = np.zeros(bits_per_shard // 8 + 1, dtype=np.uint8)
-                pos = _bit_positions(
+                shard = int(shard_id)
+                path = shards.get(str(shard))
+                state = self._load(path if path is not None and os.path.exists(path) else None)
+                emit, changed = op(
+                    state,
                     grp[_H1].values.astype(np.int64),
                     grp[_H2].values.astype(np.int64),
-                    k,
-                    bits_per_shard,
+                    new_version ^ shard,
                 )
-                seen = _probe_bitmap(bitmap, pos)
-                unseen = grp.loc[~seen]
-                if len(unseen):
-                    _set_bits(bitmap, pos[~seen])
-                    new_path = os.path.join(
-                        data_dir, f"v{new_version}_shard_{shard_key}.bin"
-                    )
-                    fd, tmp = tempfile.mkstemp(dir=data_dir)
-                    with os.fdopen(fd, "wb") as f:
-                        bitmap.tofile(f)
-                    os.replace(tmp, new_path)
-                    yield unseen
+                if changed:
+                    self._save(state, self._shard_path(new_version, shard))
+                if emit.any():
+                    yield grp.loc[emit]
 
         result = (
             _shard_tasks(hashed, self.n_shards)
-            .mapInPandas(tas, schema=out_schema)
+            .mapInPandas(run, schema=out_schema)
             .select(*in_cols)
         )
         # Materialize now: the state mutation must happen-before manifest
         # commit (this is the micro-batch barrier, like a streaming epoch).
         result = result.localCheckpoint(eager=True)
-        shards = dict(manifest)
-        for shard_id in range(self.n_shards):
-            candidate = os.path.join(data_dir, f"v{new_version}_shard_{shard_id}.bin")
-            if os.path.exists(candidate):
-                shards[str(shard_id)] = candidate
-        self._commit_manifest(new_version, shards)
+        committed = dict(shards)
+        for shard in range(self.n_shards):
+            path = self._shard_path(new_version, shard)
+            if os.path.exists(path):
+                committed[str(shard)] = path
+        self._commit_manifest(new_version, committed)
         self.version = new_version
-        _ = spark  # session kept for API symmetry
         return result
+
+
+class BloomSeenFilter(ShardedSeenFilter):
+    """Sharded, versioned bloom URL-seen filter over a checkpoint dir."""
+
+    KIND, SUFFIX = "bloom", ".bin"
+    GEOMETRY = ("n_shards", "bits_per_shard", "k")
+
+    def __init__(
+        self,
+        store_dir: str,
+        n_shards: int = 32,
+        total_bits: int = 1 << 24,
+        k: int = 7,
+    ):
+        super().__init__(store_dir, n_shards)
+        self.bits_per_shard = max(64, total_bits // n_shards)
+        self.k = k
+
+    def _load(self, path: str | None) -> np.ndarray:
+        if path is None:
+            return np.zeros(self.bits_per_shard // 8 + 1, dtype=np.uint8)
+        return np.fromfile(path, dtype=np.uint8)
+
+    @staticmethod
+    def _dump(bitmap: np.ndarray, f) -> None:
+        bitmap.tofile(f)
+
+    def _claim(self, bitmap, h1, h2, salt):
+        pos = _bit_positions(h1, h2, self.k, self.bits_per_shard)
+        new = ~_probe_bitmap(bitmap, pos)
+        _set_bits(bitmap, pos[new])
+        return new, bool(new.any())
 
 
 class ExactSeenFilter:
@@ -232,11 +281,10 @@ class ExactSeenFilter:
         self.version = -1
         os.makedirs(self.store_dir, exist_ok=True)
 
-    def resume(self) -> None:
-        versions = [
-            int(name[1:]) for name in os.listdir(self.store_dir) if name.startswith("v")
-        ]
-        self.version = max(versions, default=-1)
+    def resume(self, version: int) -> None:
+        """Restore exactly `version` (-1 = empty); later deltas are not
+        read, and the next claim overwrites the first of them."""
+        self.version = version
 
     def _seen_df(self, spark: SparkSession) -> DataFrame | None:
         paths = [
@@ -247,7 +295,18 @@ class ExactSeenFilter:
             return None
         return spark.read.parquet(*paths)
 
-    def claim_unseen(self, df: DataFrame, url_col: str = "url") -> DataFrame:
+    def claim_unseen(self, df: DataFrame, url_col: str = "url",
+                     dedup_first: list[str] | None = None) -> DataFrame:
+        """See `ShardedSeenFilter.claim_unseen`; here the in-batch dedup
+        is the groupBy(url).agg(min(struct(...))) itself."""
+        if dedup_first:
+            rest = [c for c in df.columns if c != url_col and c not in dedup_first]
+            first = df.groupBy(url_col).agg(
+                F.min(F.struct(*dedup_first, *rest)).alias("_first"))
+            df = first.select(*[
+                F.col(c) if c == url_col else F.col("_first")[c].alias(c)
+                for c in df.columns
+            ])
         spark = df.sparkSession
         seen = self._seen_df(spark)
         if seen is not None:
@@ -255,7 +314,7 @@ class ExactSeenFilter:
                 seen.withColumnRenamed("url", url_col).select(url_col),
                 on=url_col,
                 how="left_anti",
-            )
+            ).select(*df.columns)
         else:
             unseen = df
         unseen = unseen.localCheckpoint(eager=True)
@@ -270,7 +329,7 @@ class ExactSeenFilter:
 # --------------------------------------------------------------- cuckoo
 
 
-class CuckooSeenFilter:
+class CuckooSeenFilter(ShardedSeenFilter):
     """Sharded, versioned CUCKOO URL-seen filter — bloom's sibling with
     DELETION support (north rule: "bloom/cuckoo URL-seen").
 
@@ -283,21 +342,22 @@ class CuckooSeenFilter:
     permanently errors can free its slot so a corrected URL variant
     re-enters), which bloom fundamentally cannot do.
 
-    Sharding/versioning mirrors BloomSeenFilter: shard by xxhash64(url),
-    one numpy table per shard, manifest JSON per version, untouched
-    shards carried forward by reference. Probes are vectorized numpy;
-    the insert loop is per-fingerprint Python because eviction chains
-    are data-dependent (state maintenance, not row math — the per-row
-    analytics stays in vectorized UDF land).
+    Shares BloomSeenFilter's store: shard by xxhash64(url), one numpy
+    table per shard, manifest JSON per version, untouched shards carried
+    forward by reference. Probes are vectorized numpy; the insert loop
+    is per-fingerprint Python because eviction chains are data-dependent
+    (state maintenance, not row math — the per-row analytics stays in
+    vectorized UDF land).
     """
 
+    KIND, SUFFIX = "cuckoo", ".npy"
+    GEOMETRY = ("n_shards", "buckets")
     MAX_KICKS = 500
     SLOTS = 4
 
     def __init__(self, store_dir: str, n_shards: int = 32,
                  buckets_per_shard: int = 1 << 14, seed: int = 0x5EED):
-        self.store_dir = store_dir
-        self.n_shards = n_shards
+        super().__init__(store_dir, n_shards)
         # buckets MUST be a power of two: the alternate-bucket map
         # i2 = (i1 XOR h(fp)) mod buckets is an involution only then
         # (XOR of two values < 2^k stays < 2^k, so the mod is a no-op and
@@ -306,59 +366,16 @@ class CuckooSeenFilter:
         # _contains false negatives -> double-crawled URLs.
         self.buckets = 1 << max(1, int(buckets_per_shard - 1).bit_length())
         self.seed = seed
-        self.version = -1
-        os.makedirs(os.path.join(store_dir, "cuckoo", "data"), exist_ok=True)
 
-    # ------------------------------------------------------------ state
-
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.store_dir, "cuckoo", f"manifest_v{version}.json")
-
-    def _read_manifest(self, version: int) -> dict[str, str]:
-        if version < 0:
-            return {}
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)["shards"]
-
-    def _commit_manifest(self, version: int, shards: dict[str, str]) -> None:
-        payload = {
-            "version": version,
-            "n_shards": self.n_shards,
-            "buckets": self.buckets,
-            "shards": shards,
-        }
-        path = self._manifest_path(version)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, path)
-
-    def latest_version(self) -> int:
-        base = os.path.join(self.store_dir, "cuckoo")
-        versions = [
-            int(name[len("manifest_v"):-len(".json")])
-            for name in os.listdir(base)
-            if name.startswith("manifest_v")
-        ]
-        return max(versions, default=-1)
-
-    def resume(self) -> None:
-        self.version = self.latest_version()
-        # Geometry is part of the on-disk format: a store persisted with a
-        # different bucket count (e.g. by a build that did not round up to
-        # a power of two) must not be probed under this instance's
-        # geometry — that yields silent false negatives (re-crawled URLs).
-        if self.version >= 0:
-            with open(self._manifest_path(self.version)) as f:
-                meta = json.load(f)
-            persisted = int(meta.get("buckets", self.buckets))
-            if persisted & (persisted - 1):
-                raise ValueError(
-                    f"cuckoo store at {self.store_dir!r} has non-power-of-two "
-                    f"bucket count {persisted}; rebuild the store"
-                )
-            self.buckets = persisted
-            self.n_shards = int(meta.get("n_shards", self.n_shards))
+    def resume(self, version: int) -> None:
+        super().resume(version)
+        # a store persisted by a build that did not round up to a power of
+        # two cannot be probed correctly under any geometry
+        if self.buckets & (self.buckets - 1):
+            raise ValueError(
+                f"cuckoo store at {self.store_dir!r} has non-power-of-two "
+                f"bucket count {self.buckets}; rebuild the store"
+            )
 
     # ---------------------------------------------------------- kernels
 
@@ -416,96 +433,43 @@ class CuckooSeenFilter:
             cur, table[ub][us] = table[ub][us], cur
         return False  # table over-full; caller treats row as seen (safe)
 
-    # ------------------------------------------------------------- ops
+    # ------------------------------------------------------- shard parts
 
-    def _apply(self, df: DataFrame, url_col: str, mode: str) -> DataFrame:
-        """mode='claim': emit+insert unseen rows. mode='release': delete
-        fingerprints, emit rows actually removed."""
-        in_cols = df.columns
-        hashed = with_seen_hashes(df, url_col, self.n_shards)
-        manifest = self._read_manifest(self.version)
-        new_version = self.version + 1
-        data_dir = os.path.join(self.store_dir, "cuckoo", "data")
-        buckets, slots = self.buckets, self.SLOTS
-        filt = self
+    def _load(self, path: str | None) -> np.ndarray:
+        if path is None:
+            return np.zeros((self.buckets, self.SLOTS), dtype=np.uint16)
+        return np.load(path)
 
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in hashed.schema.fields
-        )
+    @staticmethod
+    def _dump(table: np.ndarray, f) -> None:
+        np.save(f, table)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [b for b in batches if len(b)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for shard_id, grp in pdf.groupby(_SHARD, sort=True):
-                shard_key = str(int(shard_id))
-                # seeded per shard, so a shard's table does not depend on
-                # which other shards share its task
-                rng = np.random.RandomState(filt.seed ^ new_version ^ int(shard_id))
-                path = manifest.get(shard_key)
-                if path is not None and os.path.exists(path):
-                    table = np.load(path).copy()
-                else:
-                    table = np.zeros((buckets, slots), dtype=np.uint16)
-                h1 = grp[_H1].values.astype(np.int64)
-                h2 = grp[_H2].values.astype(np.int64)
-                fp = filt._fingerprints(h2)
-                b1 = filt._bucket1(h1)
-                b2 = filt._alt_bucket(b1, fp)
-                if mode == "claim":
-                    seen = filt._contains(table, b1, b2, fp)
-                    emit = grp.loc[~seen]
-                    changed = False
-                    for i in np.nonzero(~seen)[0]:
-                        ok = filt._insert_one(
-                            table, rng, int(b1[i]), int(b2[i]), int(fp[i])
-                        )
-                        changed = changed or ok
-                else:  # release
-                    present = filt._contains(table, b1, b2, fp)
-                    emit = grp.loc[present]
-                    changed = False
-                    for i in np.nonzero(present)[0]:
-                        for b in (int(b1[i]), int(b2[i])):
-                            row = table[b]
-                            hits = np.nonzero(row == fp[i])[0]
-                            if len(hits):
-                                row[hits[0]] = 0
-                                changed = True
-                                break
-                if changed or mode == "claim":
-                    new_path = os.path.join(
-                        data_dir, f"v{new_version}_shard_{shard_key}.npy"
-                    )
-                    fd, tmp = tempfile.mkstemp(dir=data_dir, suffix=".npy")
-                    os.close(fd)
-                    np.save(tmp, table)  # suffix .npy → saves in place
-                    os.replace(tmp, new_path)
-                if len(emit):
-                    yield emit
+    def _candidates(self, h1, h2):
+        fp = self._fingerprints(h2)
+        b1 = self._bucket1(h1)
+        return b1, self._alt_bucket(b1, fp), fp
 
-        result = (
-            _shard_tasks(hashed, self.n_shards)
-            .mapInPandas(run, schema=out_schema)
-            .select(*in_cols)
-        )
-        result = result.localCheckpoint(eager=True)
-        shards = dict(manifest)
-        for shard_id in range(self.n_shards):
-            candidate = os.path.join(
-                data_dir, f"v{new_version}_shard_{shard_id}.npy"
-            )
-            if os.path.exists(candidate):
-                shards[str(shard_id)] = candidate
-        self._commit_manifest(new_version, shards)
-        self.version = new_version
-        return result
+    def _claim(self, table, h1, h2, salt):
+        b1, b2, fp = self._candidates(h1, h2)
+        new = ~self._contains(table, b1, b2, fp)
+        rng = np.random.RandomState(self.seed ^ salt)
+        changed = False
+        for i in np.nonzero(new)[0]:
+            changed |= self._insert_one(table, rng, int(b1[i]), int(b2[i]), int(fp[i]))
+        return new, changed
 
-    def claim_unseen(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        return self._apply(df, url_col, "claim")
+    def _release(self, table, h1, h2, salt):
+        b1, b2, fp = self._candidates(h1, h2)
+        present = self._contains(table, b1, b2, fp)
+        for i in np.nonzero(present)[0]:
+            for b in (int(b1[i]), int(b2[i])):
+                hits = np.nonzero(table[b] == fp[i])[0]
+                if len(hits):
+                    table[b][hits[0]] = 0
+                    break
+        return present, bool(present.any())
 
     def release(self, df: DataFrame, url_col: str = "url") -> DataFrame:
         """Delete the URLs' fingerprints (bloom cannot); returns the rows
         whose fingerprint was actually present and removed."""
-        return self._apply(df, url_col, "release")
+        return self._apply(df, url_col, self._release)

@@ -21,7 +21,6 @@ Design rules:
 
 from __future__ import annotations
 
-import math
 import random
 
 import pyspark.sql.functions as F
@@ -101,38 +100,6 @@ def hyperplane_bucket_col(vec: Column, n_planes: int = 8, seed: int = 7,
         bit = F.when(dot_col(vec, arr) > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
         bucket = bit if bucket is None else bucket + bit
     return bucket
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, n_planes: int = 8,
-             seed: int = 7, dim: int = 64, id_col: str = "vec_id",
-             vec_col: str = "embedding", q_id_col: str = "query_id",
-             q_vec_col: str = "q_vec") -> DataFrame:
-    """Approximate top-k: candidates = corpus vectors in the query's
-    hyperplane bucket, reranked by exact cosine. Recall rises with fewer
-    planes (bigger buckets); scale path probes the bucket join instead of
-    the full cross product."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v"),
-        hyperplane_bucket_col(F.col(vec_col), n_planes, seed, dim).alias("bucket"),
-        l2_norm_col(F.col(vec_col)).alias("_nv"),
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(q_id_col).alias("query_id"), F.col(q_vec_col).alias("_qv"),
-            hyperplane_bucket_col(F.col(q_vec_col), n_planes, seed, dim).alias("bucket"),
-            l2_norm_col(F.col(q_vec_col)).alias("_nq"),
-        )
-    )
-    scored = c.join(q, "bucket").select(
-        "query_id", "neighbor_id",
-        cosine_col(F.col("_qv"), F.col("_v"), F.col("_nq"), F.col("_nv")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 # ---------------------------------------------------------------- IVF

@@ -6,16 +6,20 @@ the parquet layout and commit protocol map 1:1 onto Iceberg snapshots,
 which this container cannot run for lack of the runtime jars):
 
     store/
-      manifest.json        # {"last_round": N} — atomic commit pointer
+      manifest.json        # {"last_round": N, "seen_version": V} — atomic
+                           # commit pointer; V is the seen-filter version
+                           # to resume with
       pending/round=N/     # pending frontier snapshot after round N
       waves/round=N/       # the scheduled wave of round N (ordered)
       results/round=N/     # extracted article structs
       metrics/round=N/     # per-host + per-partition lineage metrics
-      bloom/, exact_seen/  # seen-filter state (its own manifests)
+      bloom/, cuckoo/,     # seen-filter state, one version per claim
+      exact_seen/          # (bloom and cuckoo keep their own manifests)
 
 Exact resume (north rule): a crashed round never bumped the manifest,
-so rerunning it regenerates byte-identical outputs (every stage is a
-deterministic function of committed state) and then commits.
+so rerunning it from the recorded seen-filter version regenerates
+byte-identical outputs (every stage is a deterministic function of
+committed state) and then commits.
 """
 
 from __future__ import annotations
@@ -42,18 +46,25 @@ class CrawlStore:
 
     # ----------------------------------------------------------- commit
 
-    def last_round(self) -> int:
-        """Last committed round; -1 = seeded only, -2 = empty store."""
+    def _manifest(self) -> dict:
         try:
             with open(self._manifest_path()) as f:
-                return json.load(f)["last_round"]
+                return json.load(f)
         except FileNotFoundError:
-            return -2
+            return {"last_round": -2, "seen_version": -1}
 
-    def commit_round(self, round_no: int) -> None:
+    def last_round(self) -> int:
+        """Last committed round; -1 = seeded only, -2 = empty store."""
+        return self._manifest()["last_round"]
+
+    def seen_version(self) -> int:
+        """Seen-filter version of the last commit; -1 = empty store."""
+        return self._manifest()["seen_version"]
+
+    def commit_round(self, round_no: int, seen_version: int) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.root)
         with os.fdopen(fd, "w") as f:
-            json.dump({"last_round": round_no}, f)
+            json.dump({"last_round": round_no, "seen_version": seen_version}, f)
         os.replace(tmp, self._manifest_path())
 
     # --------------------------------------------------------------- io

@@ -26,7 +26,6 @@ Scale shape of one round (what the plan compiles to):
 
 The round's link and new-URL counts are DataFrame observations filled by
 the claim and pending-write jobs; the only extra job is the wave count.
-(Exact mode dedups with a groupBy(url) before its anti-join claim.)
 
 Every per-row computation is a vectorized pandas/Arrow UDF; all
 predicates/windows/joins are JVM-side (BASELINE.json input_hint).
@@ -37,7 +36,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -55,7 +54,7 @@ from ..operators.politeness import (
     host_budgets,
     robots_filter,
 )
-from ..operators.seen_filter import BloomSeenFilter, ExactSeenFilter
+from ..operators.seen_filter import BloomSeenFilter, CuckooSeenFilter, ExactSeenFilter
 from .checkpoint import CrawlStore
 
 # seq values for round r live in [r*SEQ_STRIDE, (r+1)*SEQ_STRIDE)
@@ -74,7 +73,7 @@ class CrawlConfig:
     unique_hosts_round0: bool = True
     default_host_budget: int = 4
     n_salts: int = 16
-    seen_mode: str = "bloom"  # "bloom" | "exact"
+    seen_mode: str = "bloom"  # "bloom" | "cuckoo" | "exact"
     # bloom/cuckoo state layout: the number of per-shard bitmaps (tables)
     # on disk. It does not set the claim's task count, which is
     # min(n_shards, cores).
@@ -82,7 +81,6 @@ class CrawlConfig:
     total_bloom_bits: int = 1 << 24
     max_depth: int = 8
     n_hosts: int = 50
-    fetch_partitions: int | None = None
     # synthetic-page content multiplier (datagen.synthweb.page_spec):
     # 1 = small parity fixtures; ~20 ≈ realistic 30 KB article pages
     # for throughput/scaling benchmarks.
@@ -135,7 +133,6 @@ class CrawlConfig:
     # host_state/<round> like every other table, so resume is exact.
     token_buckets: bool = False
     bucket_cap_rounds: int = 2
-    extra: dict = field(default_factory=dict)
 
 
 FRONTIER_COLS = ["url", "seq", "host", "depth", "priority", "attempt", "not_before"]
@@ -183,15 +180,14 @@ class CrawlScheduler:
             self.fetch_fn = _fetch
         else:
             self.fetch_fn = fetch_page
-        if self.config.seen_mode == "bloom":
+        mode = self.config.seen_mode
+        if mode == "bloom":
             self.seen = BloomSeenFilter(
                 store_dir,
                 n_shards=self.config.n_shards,
                 total_bits=self.config.total_bloom_bits,
             )
-        elif self.config.seen_mode == "cuckoo":
-            from ..operators.seen_filter import CuckooSeenFilter
-
+        elif mode == "cuckoo":
             # ~same memory as the bloom config: buckets*4 slots*2B per shard
             self.seen = CuckooSeenFilter(
                 store_dir,
@@ -200,8 +196,10 @@ class CrawlScheduler:
                     1024, self.config.total_bloom_bits // (self.config.n_shards * 64)
                 ),
             )
-        else:
+        elif mode == "exact":
             self.seen = ExactSeenFilter(store_dir)
+        else:
+            raise ValueError(f"unknown seen_mode {mode!r}: use 'bloom', 'cuckoo' or 'exact'")
 
     # ------------------------------------------------------------ setup
 
@@ -224,14 +222,13 @@ class CrawlScheduler:
         )
         claimed = self.seen.claim_unseen(pending)
         self.store.write(claimed, "pending", -1)
-        self.store.commit_round(-1)
+        self.store.commit_round(-1, self.seen.version)
 
     def resume(self) -> int:
-        """Return the next round to run, restoring seen-filter state."""
-        last = self.store.last_round()
-        if hasattr(self.seen, "resume"):
-            self.seen.resume()
-        return last + 1
+        """Return the next round to run, restoring the seen-filter
+        version the last commit recorded (-1 on an empty store)."""
+        self.seen.resume(self.store.seen_version())
+        return self.store.last_round() + 1
 
     # ------------------------------------------------------------ round
 
@@ -251,7 +248,7 @@ class CrawlScheduler:
         fetch_fn = self.fetch_fn
         amp_first = self.config.amp_static_first
         amp_min = self.config.amp_min_chars
-        parts = self.config.fetch_partitions or self.spark.sparkContext.defaultParallelism
+        parts = self.spark.sparkContext.defaultParallelism
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in wave.schema.fields
         ) + f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
@@ -463,32 +460,13 @@ class CrawlScheduler:
             ).observe(links_obs, F.count(F.lit(1)).alias("n"))
             t = _mark("link_expand", t)
             # in-batch first-occurrence dedup: keep the earliest discovery
-            # in crawl-schedule order (parent's wave pos, then link pos).
-            # The bloom filter dedups INSIDE the claim's shard task
-            # (shard = f(url) co-locates every copy of a url), so it needs
-            # no groupBy(url) exchange of its own; same min-struct
-            # semantics as the groupBy the other filters use.
+            # in crawl-schedule order (parent's wave pos, then link pos)
             renamed = links.select(
                 F.col("target").alias("url"), "parent_pos", "pos", "parent_depth"
             )
-            if isinstance(self.seen, BloomSeenFilter):
-                claimed = self.seen.claim_unseen(
-                    renamed, dedup_first=["parent_pos", "pos", "parent_depth"]
-                )
-            else:
-                dedup = renamed.groupBy("url").agg(
-                    F.min(
-                        F.struct("parent_pos", "pos", "parent_depth")
-                    ).alias("first")
-                )
-                claimed = self.seen.claim_unseen(
-                    dedup.select(
-                        "url",
-                        F.col("first.parent_pos").alias("parent_pos"),
-                        F.col("first.pos").alias("pos"),
-                        F.col("first.parent_depth").alias("parent_depth"),
-                    )
-                )
+            claimed = self.seen.claim_unseen(
+                renamed, dedup_first=["parent_pos", "pos", "parent_depth"]
+            )
             new_rows = claimed.select(
                 "url", "parent_pos", "pos",
                 (F.col("parent_depth") + 1).alias("depth"),
@@ -564,7 +542,7 @@ class CrawlScheduler:
             fut_pending.result()
         # the commit marker lands only after EVERY table of the round is
         # on disk (the happens-before edge resume depends on)
-        self.store.commit_round(round_no)
+        self.store.commit_round(round_no, self.seen.version)
 
         wave.unpersist()
         articles.unpersist()

@@ -89,9 +89,12 @@ class StreamingSeedIngest:
                 F.lit(0).cast("long").alias("not_before"),
             )
         ).filter(F.col("host").isNotNull()).select(*FRONTIER_COLS)
-        last = self.scheduler.store.last_round()
-        pending_path = self.scheduler.store.path("pending", last)
-        rows.write.mode("append").parquet(pending_path)
+        store = self.scheduler.store
+        last = store.last_round()
+        # the claim made a new seen-filter version between rounds: record
+        # it, so a resume after a later crash restores it
+        store.commit_round(last, self.scheduler.seen.version)
+        rows.write.mode("append").parquet(store.path("pending", last))
         _ = cfg  # politeness applies at wave selection, not ingest
 
     def start(self, seeds_dir: str, checkpoint_dir: str,

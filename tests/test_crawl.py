@@ -77,6 +77,69 @@ def test_crawl_resume_is_exact(spark, tmp_store):
         assert got[r] == expected[r], f"round {r} post-resume mismatch"
 
 
+def _crash_cfg(seen_mode):
+    return CrawlConfig(wave_size=WAVE, round0_limit=ROUND0, default_host_budget=BUDGET,
+                       seen_mode=seen_mode, n_shards=8, total_bloom_bits=1 << 22)
+
+
+class _CrashingStore(CrawlStore):
+    """Fails at the commit of one round, after all its tables and its
+    seen-filter version are written."""
+
+    def __init__(self, root, crash_round):
+        super().__init__(root)
+        self.crash_round = crash_round
+
+    def commit_round(self, round_no, *args):
+        if round_no == self.crash_round:
+            raise OSError(f"crash at the commit of round {round_no}")
+        super().commit_round(round_no, *args)
+
+
+@pytest.mark.parametrize("crash_round", [1, -1])
+@pytest.mark.parametrize("seen_mode", ["exact", "bloom", "cuckoo"])
+def test_resume_after_a_crash_inside_a_round_is_exact(spark, tmp_store, seen_mode,
+                                                      crash_round):
+    """Resume restores the seen-filter version of the last commit, not
+    the one the crashed round (or seeding, round -1) left on disk."""
+    seeds = build_seed_frontier(spark, N_SEEDS)
+    sched = CrawlScheduler(spark, tmp_store, _crash_cfg(seen_mode))
+    sched.store = _CrashingStore(tmp_store, crash_round)
+    with pytest.raises(OSError, match="crash at the commit"):
+        sched.run(N_ROUNDS, seeds=seeds)
+    resumed = CrawlScheduler(spark, tmp_store, _crash_cfg(seen_mode))  # fresh process
+    resumed.run(N_ROUNDS, seeds=seeds)
+    assert _spark_waves(resumed, spark, N_ROUNDS) == _expected_waves()
+
+
+def test_resume_after_streamed_seeds_and_a_crash_is_exact(spark, tmp_store):
+    """A seed batch claimed between rounds makes a seen-filter version of
+    its own; a crash in the next round resumes from that version."""
+    from horseman_article_parser_spark.streaming.frontier_stream import StreamingSeedIngest
+
+    late = [f"https://streamed.example/late/{i}" for i in range(8)]
+    seeds = build_seed_frontier(spark, N_SEEDS)
+    sched = CrawlScheduler(spark, tmp_store, _crash_cfg("bloom"))
+    sched.run(1, seeds=seeds)
+    StreamingSeedIngest(sched).process_batch(
+        spark.createDataFrame([(u,) for u in late], "url string"), 0)
+    sched.store = _CrashingStore(tmp_store, 1)
+    with pytest.raises(OSError, match="crash at the commit"):
+        sched.run_round(1)
+    resumed = CrawlScheduler(spark, tmp_store, _crash_cfg("bloom"))
+    resumed.run(N_ROUNDS)
+    expected = sim_crawl(seed_urls(N_SEEDS), n_rounds=N_ROUNDS, wave_size=WAVE,
+                         round0_limit=ROUND0, default_host_budget=BUDGET,
+                         streamed_seeds={0: late})
+    assert any("streamed.example" in u for u in expected[1])
+    assert _spark_waves(resumed, spark, N_ROUNDS) == expected
+
+
+def test_unknown_seen_mode_is_rejected(spark, tmp_store):
+    with pytest.raises(ValueError, match="seen_mode"):
+        CrawlScheduler(spark, tmp_store, CrawlConfig(seen_mode="blom"))
+
+
 def test_bloom_mode_matches_exact_at_low_load(spark, tmp_store):
     # with a roomy bloom filter, FP≈0 ⇒ identical schedule to exact mode
     cfg = CrawlConfig(

@@ -7,6 +7,7 @@ import os
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from horseman_article_parser_spark.operators.seen_filter import (
     BloomSeenFilter,
@@ -28,7 +29,7 @@ def test_exact_claim_unseen(spark, tmp_store):
     assert got2 == {"d"}
     # resume from disk: a fresh instance sees all prior state
     g = ExactSeenFilter(tmp_store)
-    g.resume()
+    g.resume(f.version)
     got3 = {r["url"] for r in g.claim_unseen(_df(spark, ["a", "d", "e"])).collect()}
     assert got3 == {"e"}
 
@@ -49,8 +50,7 @@ def test_bloom_resume_and_fp_rate(spark, tmp_store):
     f.claim_unseen(_df(spark, urls1)).count()
 
     g = BloomSeenFilter(tmp_store, n_shards=8, total_bits=1 << 20, k=7)
-    g.resume()
-    assert g.version == f.version
+    g.resume(f.version)
     # none of the inserted urls pass after resume
     again = g.claim_unseen(_df(spark, urls1[:300])).count()
     assert again == 0
@@ -59,6 +59,75 @@ def test_bloom_resume_and_fp_rate(spark, tmp_store):
     claimed = g.claim_unseen(_df(spark, fresh)).count()
     fp_rate = 1.0 - claimed / len(fresh)
     assert fp_rate < 0.01, f"bloom FP rate too high: {fp_rate}"
+
+
+FILTERS = {
+    "exact": ExactSeenFilter,
+    "bloom": lambda store: BloomSeenFilter(store, n_shards=8, total_bits=1 << 20),
+    "cuckoo": lambda store: CuckooSeenFilter(store, n_shards=8, buckets_per_shard=1 << 10),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(FILTERS))
+def test_resume_rolls_back_to_the_given_version(spark, tmp_store, mode):
+    """resume(v) restores version v, not the newest one on disk: claims
+    made after v are forgotten, also those of shards a later claim at the
+    same version leaves untouched."""
+    a = [f"https://h{i % 30}.x/a-{i}" for i in range(400)]
+    b = [f"https://h{i % 30}.x/b-{i}" for i in range(400)]
+    f = FILTERS[mode](tmp_store)
+    f.claim_unseen(_df(spark, a))
+    assert f.claim_unseen(_df(spark, b)).count() == len(b)
+    g = FILTERS[mode](tmp_store)
+    g.resume(0)
+    # first a few of B, then all of B: the rest claim again
+    first = {r["url"] for r in g.claim_unseen(_df(spark, b[:3])).collect()}
+    assert first == set(b[:3])
+    again = {r["url"] for r in g.claim_unseen(_df(spark, b)).collect()}
+    assert again <= set(b[3:])
+    if mode == "exact":
+        assert again == set(b[3:])
+    else:  # apart from false positives
+        assert len(again) >= len(b) - 3 - 4
+    assert not {r["url"] for r in g.claim_unseen(_df(spark, a)).collect()}
+
+
+@pytest.mark.parametrize("mode", sorted(FILTERS))
+def test_dedup_first_matches_groupby_min_struct(spark, tmp_store, mode):
+    """claim_unseen(dedup_first=...) keeps, per url, the row an upstream
+    groupBy(url).agg(min(struct(...))) keeps, on every filter."""
+    def url(j):
+        return f"https://h{j % 9}.x/d-{j}"
+
+    rng = np.random.RandomState(7)
+    # 70 urls, ~6 copies each; the first 10 urls are already seen
+    rows = [(int(rng.randint(5)), url(i % 70), int(rng.randint(100))) for i in range(400)]
+    batch = spark.createDataFrame(rows, "a int, url string, b int")
+    seen = {url(j) for j in range(10)}
+    f = FILTERS[mode](tmp_store)
+    f.claim_unseen(_df(spark, sorted(seen)))
+    claimed = f.claim_unseen(batch, dedup_first=["a", "b"])
+    assert claimed.columns == ["a", "url", "b"]
+    first = batch.groupBy("url").agg(F.min(F.struct("a", "b")).alias("m"))
+    want = {(r["m"]["a"], r["url"], r["m"]["b"]) for r in first.collect()
+            if r["url"] not in seen}
+    assert len(want) == 60
+    got = [tuple(r) for r in claimed.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+@pytest.mark.parametrize("mode", ["bloom", "cuckoo"])
+def test_resume_adopts_the_persisted_geometry(spark, tmp_store, mode):
+    """A store reopened with another shard count is probed with the
+    geometry it was written with: no seen URL comes back as new."""
+    urls = [f"https://h{i % 20}.x/g-{i}" for i in range(500)]
+    f = FILTERS[mode](tmp_store)
+    f.claim_unseen(_df(spark, urls))
+    g = type(f)(tmp_store, n_shards=16)
+    g.resume(f.version)
+    assert g.n_shards == 8
+    assert g.claim_unseen(_df(spark, urls)).count() == 0
 
 
 def test_bloom_more_shards_than_tasks_matches_numpy_reference(spark, tmp_store):
@@ -154,7 +223,7 @@ def test_cuckoo_claim_release_resume(spark, tmp_store):
     assert got3 <= set(urls1[:60])
     # resume from disk
     g = CuckooSeenFilter(tmp_store, n_shards=8, buckets_per_shard=1 << 10)
-    g.resume()
+    g.resume(f.version)
     got4 = {r["url"] for r in g.claim_unseen(_df(spark, urls1)).collect()}
     assert got4 == set()
 
