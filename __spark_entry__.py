@@ -532,9 +532,9 @@ def _synth_pages(spark, sf_dir, fields=None, extra_cols=()):
             arts = []
             for d, src, lang, text in zip(
                     pdf["doc_id"], pdf["source"], pdf["lang"], pdf["text"]):
+                d = int(d)
                 arts.append(extract_article(
-                    _SYNTH_URL_TPL.format(src=src, lang=lang, slot=d % 400),
-                    _synth_page_html(int(d), lang, text), fields))
+                    _synth_url(d, src, lang), _synth_page_html(d, lang, text), fields))
             out = pdf[keep].copy()
             out["article"] = arts
             yield out
@@ -542,12 +542,21 @@ def _synth_pages(spark, sf_dir, fields=None, extra_cols=()):
     return sel.mapInPandas(run, schema=out_schema)
 
 
-_SYNTH_URL_TPL = "https://{src}.example.com/{lang}/story-{slot}"
+def _synth_url(d: int, src: str | None, lang: str | None) -> str | None:
+    """The page url `_synth_pages` renders; null when an input is null,
+    as the former JVM concat propagated it."""
+    if src is None or lang is None:
+        return None
+    return f"https://{src}.example.com/{lang}/story-{d % 400}"
 
 
-def _synth_page_html(d: int, lang: str, text: str) -> str:
+def _synth_page_html(d: int, lang: str | None, text: str | None) -> str | None:
     """The page template `_synth_pages` renders — byte-identical to the
-    former JVM concat (equivalence pinned in tests/test_extract.py)."""
+    former JVM concat, null included: a null lang or text gives a null
+    page, which extracts to the all-null article (equivalence pinned in
+    tests/test_extract.py)."""
+    if lang is None or text is None:
+        return None
     ds = str(d)
     img = (
         f'<figure><img src="/img/{ds}.png" alt="alt text" '

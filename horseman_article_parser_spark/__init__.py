@@ -11,3 +11,7 @@ is designed for a 10^10-URL frontier on a multi-executor cluster.
 """
 
 __version__ = "0.1.0"
+
+from ._pyworker import install_in_task as _install_in_task
+
+_install_in_task()

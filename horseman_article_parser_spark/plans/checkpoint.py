@@ -11,8 +11,8 @@ which this container cannot run for lack of the runtime jars):
                            # to resume with
       pending/round=N/     # pending frontier snapshot after round N
       waves/round=N/       # the scheduled wave of round N (ordered)
-      results/round=N/     # extracted article structs
-      metrics/round=N/     # per-host + per-partition lineage metrics
+      results/round=N/     # extracted article structs (per-host counts:
+                           # plans.crawl.host_metrics over this table)
       bloom/, cuckoo/,     # seen-filter state, one version per claim
       exact_seen/          # (bloom and cuckoo keep their own manifests)
 

@@ -1,5 +1,6 @@
 """The crawl scheduler: round-based frontier → fetch wave → link
-expansion, with politeness, URL-seen dedup, metrics and exact resume.
+expansion, with politeness, URL-seen dedup, round counts and exact
+resume.
 
 This is the north-rule core. Round 0 reproduces the reference's
 scheduling order exactly (uniq → uniqueByHost(limit) → FIFO by seed
@@ -11,21 +12,25 @@ enqueued with priority = link_depth + in_article_link_score, emitted in
 deterministic (priority, seq) order under per-host politeness budgets.
 
 Scale shape of one round (what the plan compiles to):
-  pending scan (parquet, host-bucketed)            — no shuffle
+  pending scan (plain parquet, not host-bucketed)  — no shuffle
   robots broadcast join                            — no shuffle
   two-phase host budget                            — 2 window shuffles,
                                                       salt-bounded keys
   top-k wave (orderBy+limit = TakeOrdered)         — per-partition top-k
-  fetch + extract (mapInPandas)                    — 1 Arrow crossing
-  link canonicalize + skip filter (codegen + UDF)  — narrow
+  fetch + extract + link canonicalize              — 1 Arrow crossing
+    (mapInPandas; the kernel returns `targets`)
+  posexplode(targets) + skip/depth filter          — JVM only, narrow
   seen-filter test-and-set (shard shuffle into     — 1 shuffle
     min(n_shards, cores) tasks; in-batch dedup
     runs inside each shard task, no groupBy)
   seq: arithmetic encode of (parent, link) pos     — narrow, no rank
   pending' = pending ⟕̸ wave ∪ new                  — broadcast anti-join
 
-The round's link and new-URL counts are DataFrame observations filled by
-the claim and pending-write jobs; the only extra job is the wave count.
+The round's counts are DataFrame observations filled by the jobs that
+already run: scheduled/ok/err/amp/dynamic by the results write, links and
+new URLs by the claim and pending write. The only extra job is the wave
+count that materializes the cached wave. There is no per-host metrics
+table; `host_metrics(results)` computes it from a round's results.
 
 Every per-row computation is a vectorized pandas/Arrow UDF; all
 predicates/windows/joins are JVM-side (BASELINE.json input_hint).
@@ -40,11 +45,11 @@ from dataclasses import dataclass
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.window import Window
 
 from ..datagen.synthweb import fetch_page
-from ..functions.urls import canonicalize_url_udf, skip_col
+from ..functions.urls import canonicalize_url, skip_col
 from ..operators.frontier_ops import (
     build_wave0,
     with_host,
@@ -150,6 +155,25 @@ def _ensure_frontier_cols(df: DataFrame) -> DataFrame:
     return df
 
 
+def _result_counts() -> list[Column]:
+    """scheduled, ok, err and the A2 per-source rollup (amp vs dynamic,
+    as the reference's batch-sample-run.js reports it) over results rows."""
+    return [
+        F.count(F.lit(1)).alias("scheduled"),
+        F.count(F.when(F.col("status") == 200, 1)).alias("ok"),
+        F.count(F.when(F.col("status") != 200, 1)).alias("err"),
+        F.count(F.when(F.col("source") == "amp", 1)).alias("amp"),
+        F.count(F.when(F.col("source") == "dynamic", 1)).alias("dynamic"),
+    ]
+
+
+def host_metrics(results: DataFrame) -> DataFrame:
+    """Per-host counts of one round's `results` table (A1): host,
+    scheduled, ok, err, amp, dynamic. The round itself returns the same
+    counts summed over hosts, from an observation on its results write."""
+    return results.groupBy("host").agg(*_result_counts())
+
+
 class CrawlScheduler:
     def __init__(
         self,
@@ -241,7 +265,11 @@ class CrawlScheduler:
         html); fusing them halves the worker count and ships html
         JVM→Python exactly once — html never returns to the JVM at all,
         only the narrow article struct does (results persist the struct;
-        the raw page is re-fetchable by URL)."""
+        the raw page is re-fetchable by URL).
+
+        The kernel also returns `targets`: `canonicalize_url` of each
+        `article.links` href, in link order (null where unparseable), so
+        link expansion needs no second Python stage. Results drop it."""
         from ..functions.urls import amp_candidates
         from ..operators.extract import ARTICLE_STRUCT, extract_article
 
@@ -251,7 +279,8 @@ class CrawlScheduler:
         parts = self.spark.sparkContext.defaultParallelism
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in wave.schema.fields
-        ) + f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
+        ) + (f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
+             ", `targets` array<string>")
 
         rescue = self.config.canonical_rescue
         probe_first = self.config.probe_first
@@ -317,13 +346,18 @@ class CrawlScheduler:
                 status = []
                 source = []
                 articles = []
+                targets = []
                 for st, fu, src_, html in fetched:
+                    art = extract_article(fu, html)
                     status.append(st)
                     source.append(src_)
-                    articles.append(extract_article(fu, html))
+                    articles.append(art)
+                    targets.append(
+                        [canonicalize_url(link["href"]) for link in art["links"] or ()])
                 pdf["status"] = status
                 pdf["source"] = source
                 pdf["article"] = articles
+                pdf["targets"] = targets
                 yield pdf
 
         return wave.repartition(parts).mapInPandas(run, schema=schema)
@@ -376,12 +410,6 @@ class CrawlScheduler:
         cfg = self.config
         spark = self.spark
         t0 = time.monotonic()
-        timings: dict[str, float] = {}
-
-        def _mark(label: str, since: float) -> float:
-            now = time.monotonic()
-            timings[label] = round(now - since, 3)
-            return now
 
         pending = _ensure_frontier_cols(
             self.store.read(spark, "pending", round_no - 1)
@@ -418,7 +446,7 @@ class CrawlScheduler:
         # driver pool (guide §2.6 — independent jobs back-fill each
         # other's stragglers; both only read the cached wave). The wave
         # write costs ~0.4 s/round that was previously serial.
-        wave_count = wave.count()
+        wave.count()
 
         def _write_wave() -> None:
             # sortWithinPartitions, not orderBy — the wave is a single
@@ -432,128 +460,103 @@ class CrawlScheduler:
 
         # the round's counts arrive with the jobs that already run:
         # each Observation is filled when its DataFrame's job finishes
-        links_obs, new_obs = Observation(), Observation()
+        results_obs, links_obs, new_obs = Observation(), Observation(), Observation()
         # leaving the with-block joins the pool, so a failed write cannot
         # leave a background write running after the round has raised
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut_wave = pool.submit(_write_wave)
-            t = _mark("wave_select", t0)
-
-            # --- fetch + extract (ONE fused Arrow crossing)
+            # --- fetch + extract + link canonicalize (ONE Arrow crossing)
             articles = self._fetch_extract(wave).persist()
-            self.store.write(articles, "results", round_no)
+            self.store.write(
+                articles.drop("targets").observe(results_obs, *_result_counts()),
+                "results", round_no)
             fut_wave.result()
-            t = _mark("fetch_extract", t)
 
-            # --- link expansion → canonicalize → filter → dedup → claim
-            links = articles.filter(F.col("status") == 200).select(
+        # --- link expansion → skip/depth filter → dedup → claim, all in
+        # the JVM: the kernel already canonicalized each link into
+        # `targets` (same order as article.links, null when unparseable)
+        links = (
+            articles.filter(F.col("status") == 200)
+            .select(
                 F.col("pos").alias("parent_pos"),
                 F.col("depth").alias("parent_depth"),
-                F.posexplode_outer("article.links").alias("pos", "link"),
+                F.posexplode("targets").alias("pos", "url"),
             )
-            links = links.withColumn(
-                "target", canonicalize_url_udf(F.col("link.href")))
-            links = links.filter(
-                F.col("target").isNotNull()
-                & ~skip_col(F.col("target"))
+            .filter(
+                F.col("url").isNotNull()
+                & ~skip_col(F.col("url"))
                 & (F.col("parent_depth") < cfg.max_depth)
-            ).observe(links_obs, F.count(F.lit(1)).alias("n"))
-            t = _mark("link_expand", t)
-            # in-batch first-occurrence dedup: keep the earliest discovery
-            # in crawl-schedule order (parent's wave pos, then link pos)
-            renamed = links.select(
-                F.col("target").alias("url"), "parent_pos", "pos", "parent_depth"
             )
-            claimed = self.seen.claim_unseen(
-                renamed, dedup_first=["parent_pos", "pos", "parent_depth"]
+            .select("url", "parent_pos", "pos", "parent_depth")
+            .observe(links_obs, F.count(F.lit(1)).alias("n"))
+        )
+        # in-batch first-occurrence dedup: keep the earliest discovery
+        # in crawl-schedule order (parent's wave pos, then link pos)
+        claimed = self.seen.claim_unseen(
+            links, dedup_first=["parent_pos", "pos", "parent_depth"]
+        )
+        new_rows = claimed.select(
+            "url", "parent_pos", "pos",
+            (F.col("parent_depth") + 1).alias("depth"),
+        )
+        # deterministic seq for the next generation: an
+        # order-preserving ARITHMETIC encode of the (unique) discovery
+        # position — no ranking job, no extra shuffle. parent_pos <
+        # wave_size and link pos < 1024 (extract caps links at 1000,
+        # reference W7), so the encode is injective and ordered
+        # exactly like a dense rank.
+        new_frontier = with_host(
+            new_rows.select(
+                "url",
+                (
+                    F.lit((round_no + 1) * SEQ_STRIDE)
+                    + F.col("parent_pos") * LINK_POS_STRIDE
+                    + F.col("pos")
+                ).alias("seq"),
+                F.col("depth").cast("int"),
+                # north rule: priority = link_depth + in-article link score
+                (
+                    F.col("depth")
+                    + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0
+                ).alias("priority"),
+                F.lit(0).alias("attempt"),
+                F.lit(0).cast("long").alias("not_before"),
             )
-            new_rows = claimed.select(
-                "url", "parent_pos", "pos",
-                (F.col("parent_depth") + 1).alias("depth"),
-            )
-            t = _mark("seen_claim", t)
-            # deterministic seq for the next generation: an
-            # order-preserving ARITHMETIC encode of the (unique) discovery
-            # position — no ranking job, no extra shuffle. parent_pos <
-            # wave_size and link pos < 1024 (extract caps links at 1000,
-            # reference W7), so the encode is injective and ordered
-            # exactly like a dense rank.
-            new_frontier = with_host(
-                new_rows.select(
-                    "url",
-                    (
-                        F.lit((round_no + 1) * SEQ_STRIDE)
-                        + F.col("parent_pos") * LINK_POS_STRIDE
-                        + F.col("pos")
-                    ).alias("seq"),
-                    F.col("depth").cast("int"),
-                    # north rule: priority = link_depth + in-article link score
-                    (
-                        F.col("depth")
-                        + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0
-                    ).alias("priority"),
-                    F.lit(0).alias("attempt"),
-                    F.lit(0).cast("long").alias("not_before"),
-                )
-            ).select(*FRONTIER_COLS).observe(new_obs, F.count(F.lit(1)).alias("n"))
+        ).select(*FRONTIER_COLS).observe(new_obs, F.count(F.lit(1)).alias("n"))
 
-            # --- next pending = (pending − wave) ∪ new [∪ retries]
-            # wave is <= wave_size rows (a config constant): broadcasting
-            # the anti-join build side means the 10^10-row pending
-            # frontier is NEVER shuffled to subtract one wave
-            remaining = pending.join(
-                F.broadcast(wave.select("url")), on="url", how="left_anti"
+        # --- next pending = (pending − wave) ∪ new [∪ retries]
+        # wave is <= wave_size rows (a config constant): broadcasting
+        # the anti-join build side means the 10^10-row pending
+        # frontier is NEVER shuffled to subtract one wave
+        remaining = pending.join(
+            F.broadcast(wave.select("url")), on="url", how="left_anti"
+        )
+        next_pending = remaining.select(*FRONTIER_COLS).unionByName(new_frontier)
+        if cfg.retry_failed:
+            # T5: failed rows re-enter with attempt+1; linear backoff
+            # in rounds mirrors the reference's 1000·attempt ms sleep
+            retries = articles.filter(
+                (F.col("status") != 200)
+                & (F.col("attempt") + 1 < cfg.max_attempts)
+            ).select(
+                "url", "seq", "host", "depth", "priority",
+                (F.col("attempt") + 1).alias("attempt"),
+                (F.lit(round_no + 1) + F.col("attempt")).cast("long").alias("not_before"),
             )
-            next_pending = remaining.select(*FRONTIER_COLS).unionByName(new_frontier)
-            if cfg.retry_failed:
-                # T5: failed rows re-enter with attempt+1; linear backoff
-                # in rounds mirrors the reference's 1000·attempt ms sleep
-                retries = articles.filter(
-                    (F.col("status") != 200)
-                    & (F.col("attempt") + 1 < cfg.max_attempts)
-                ).select(
-                    "url", "seq", "host", "depth", "priority",
-                    (F.col("attempt") + 1).alias("attempt"),
-                    (F.lit(round_no + 1) + F.col("attempt")).cast("long").alias("not_before"),
-                )
-                next_pending = next_pending.unionByName(retries)
-            # pending and metrics read only cached inputs (claimed is
-            # checkpointed, articles persisted) and write disjoint paths —
-            # run them concurrently too
-            fut_pending = pool.submit(
-                self.store.write, next_pending, "pending", round_no)
-            t = _mark("pending_submit", t)
-
-            # --- metrics: per-host aggregate (A1)
-            metrics = (
-                articles.groupBy("host")
-                .agg(
-                    F.count("*").alias("scheduled"),
-                    F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
-                    F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("err"),
-                    # A2 per-source rollup (amp vs dynamic), as the
-                    # reference's batch-sample-run.js reports it
-                    F.sum(F.when(F.col("source") == "amp", 1).otherwise(0)).alias("amp"),
-                    F.sum(F.when(F.col("source") == "dynamic", 1).otherwise(0)).alias("dynamic"),
-                )
-                .withColumn("round", F.lit(round_no))
-            )
-            self.store.write(metrics, "metrics", round_no)
-            fut_pending.result()
+            next_pending = next_pending.unionByName(retries)
+        self.store.write(next_pending, "pending", round_no)
         # the commit marker lands only after EVERY table of the round is
         # on disk (the happens-before edge resume depends on)
         self.store.commit_round(round_no, self.seen.version)
 
         wave.unpersist()
         articles.unpersist()
-        _mark("metrics_commit", t)
         return {
             "round": round_no,
-            "scheduled": wave_count,
+            **results_obs.get,
             "links_extracted": links_obs.get["n"],
             "new_urls": new_obs.get["n"],
             "seconds": time.monotonic() - t0,
-            "timings": timings,
         }
 
     def run(self, n_rounds: int, seeds: DataFrame | None = None) -> list[dict]:

@@ -12,7 +12,7 @@ import pytest
 from horseman_article_parser_spark.datagen.frontier import build_seed_frontier, seed_urls
 from horseman_article_parser_spark.functions.urls import canonicalize_url, skip_col
 from horseman_article_parser_spark.plans.checkpoint import CrawlStore
-from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
+from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler, host_metrics
 from horseman_article_parser_spark.plans.reference_sim import sim_crawl
 
 N_SEEDS = 120
@@ -163,10 +163,13 @@ def test_metrics_and_results_written(spark, tmp_store):
         wave_size=WAVE, round0_limit=ROUND0, default_host_budget=BUDGET, seen_mode="exact"
     )
     sched = CrawlScheduler(spark, tmp_store, cfg)
-    sched.run(1, seeds=build_seed_frontier(spark, N_SEEDS))
-    metrics = sched.store.read(spark, "metrics", 0)
-    assert metrics.agg(F.sum("scheduled")).first()[0] == WAVE
+    [st] = sched.run(1, seeds=build_seed_frontier(spark, N_SEEDS))
     results = sched.store.read(spark, "results", 0)
+    metrics = host_metrics(results)
+    sums = metrics.agg(*[F.sum(c).alias(c) for c in ("scheduled", "ok", "err")]).first()
+    assert sums["scheduled"] == WAVE
+    # the round's observed counts are the per-host counts summed
+    assert (st["scheduled"], st["ok"], st["err"]) == tuple(sums)
     ok = results.filter(F.col("status") == 200)
     assert ok.count() > 0
     # extracted structs are populated for 200s
@@ -308,14 +311,15 @@ def test_amp_static_first_race(spark, tmp_path):
                       amp_static_first=True)
     sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, fetch_fn=fetchy)
     sched.init_from_seeds(seeds)
-    sched.run_round(0)
+    st = sched.run_round(0)
     res = sched.store.read(spark, "results", 0)
     by_host = {r.host: r.source for r in res.select("host", "source").collect()}
     assert by_host["h0.x"] == "amp"
     assert all(v == "dynamic" for h, v in by_host.items() if h != "h0.x")
-    met = sched.store.read(spark, "metrics", 0)
+    met = host_metrics(res)
     agg = met.agg(F.sum("amp").alias("a"), F.sum("dynamic").alias("d")).collect()[0]
     assert (agg.a, agg.d) == (1, 3)
+    assert (st["amp"], st["dynamic"]) == (1, 3)
 
 
 def test_sim_streamed_seeds_between_rounds():
@@ -333,3 +337,82 @@ def test_sim_streamed_seeds_between_rounds():
     # 8 arrive, budget 2 per host -> exactly the 2 lowest-url-rank ones
     assert got == ["https://streamed.example/late/0",
                    "https://streamed.example/late/1"]
+
+
+# in-article hrefs that stress canonicalization and the skip rules
+_ODD_LINKS = (
+    '<a href="">empty</a><a href="   ">blank</a>'
+    '<a href="HTTP://Host.EXAMPLE:80/a#frag">upper</a><a href="https://h:8443/x">port</a>'
+    '<a href="mailto:someone@example.com">mail</a><a href="javascript:void(0)">js</a>'
+    '<a href="relative/page">rel</a><a href="/rooted?q=1">root</a><a href="../up">up</a>'
+    '<a href="https://files.example/doc.pdf">pdf</a>'
+    '<a href="https://Trailing.Example./p">dot</a>'
+    '<a href="http://host.example/a">same as upper</a>'
+    '<a href="https://b.example/p1">a seed</a>'
+)
+_ODD_PAGES = {
+    "https://a.example/p0": (200, _ODD_LINKS),
+    "https://b.example/p1": (200, "<p>a page without links</p>"),
+    "https://c.example/p2": (404, '<a href="https://c.example/never">not followed</a>'),
+    "https://d.example/p3": (200, '<a href="https://h:8443/x">again</a>'
+                                  '<a href="/d-only">d</a><a href="ftp://d.example/f">ftp</a>'),
+}
+
+
+def _odd_fetcher():
+    # nested, so the closure pickles by value to the Python workers
+    def fetch(url):
+        status, body = _ODD_PAGES[url]
+        return status, f"<html><body><article><p>text</p>{body}</article></body></html>"
+
+    return fetch
+
+
+def _expected_expansion(wave, fetch, max_depth):
+    """links_extracted, new_urls and the pending rows of round 0, from
+    extract_article, canonicalize_url and skip_reason in plain Python."""
+    from urllib.parse import urlsplit
+
+    from horseman_article_parser_spark.functions.urls import skip_reason
+    from horseman_article_parser_spark.operators.extract import extract_article
+    from horseman_article_parser_spark.plans.crawl import LINK_POS_STRIDE, SEQ_STRIDE
+
+    kept, first = 0, {}
+    for w in sorted(wave, key=lambda w: w["pos"]):
+        status, html = fetch(w["url"])
+        if status != 200 or w["depth"] >= max_depth:
+            continue
+        for pos, link in enumerate(extract_article(w["url"], html)["links"] or []):
+            target = canonicalize_url(link["href"])
+            if target is None or skip_reason(target) is not None:
+                continue
+            kept += 1
+            if target not in _ODD_PAGES:  # the seeds are already seen
+                first.setdefault(target, (w["pos"], pos, w["depth"] + 1))
+    pending = {
+        (url, SEQ_STRIDE + ppos * LINK_POS_STRIDE + pos, urlsplit(url).hostname, depth,
+         depth + min(pos, 9) / 10.0, 0, 0)
+        for url, (ppos, pos, depth) in first.items()
+    }
+    return kept, len(first), pending
+
+
+@pytest.mark.parametrize("seen_mode", ["exact", "bloom"])
+def test_link_expansion_matches_python_canonicalization(spark, tmp_store, seen_mode):
+    """Links canonicalized inside the fetch kernel expand to the same
+    counts and pending rows as canonicalize_url + the skip rules."""
+    seeds = spark.createDataFrame([(u, i) for i, u in enumerate(_ODD_PAGES)],
+                                  "url string, seq long")
+    cfg = CrawlConfig(wave_size=10, round0_limit=10, unique_hosts_round0=False,
+                      default_host_budget=5, seen_mode=seen_mode, n_shards=4,
+                      total_bloom_bits=1 << 16)
+    fetch = _odd_fetcher()
+    sched = CrawlScheduler(spark, tmp_store, cfg, fetch_fn=fetch)
+    [st] = sched.run(1, seeds=seeds)
+    wave = sched.store.read(spark, "waves", 0).collect()
+    assert sorted(w["url"] for w in wave) == sorted(_ODD_PAGES)
+    kept, new, pending = _expected_expansion(wave, fetch, cfg.max_depth)
+    assert (st["links_extracted"], st["new_urls"]) == (kept, new)
+    got = {tuple(r) for r in sched.store.read(spark, "pending", 0).collect()}
+    assert got == pending
+    assert "targets" not in sched.store.read(spark, "results", 0).columns

@@ -314,6 +314,8 @@ def test_synth_pages_template_matches_jvm(spark):
     rows = [(d, f"src{d % 3}", ["en", "fr", "de"][d % 3],
              f"Body text {d} & <none> 'quoted'")
             for d in (0, 1, 2, 5, 399, 400, 401, 1234)]
+    # the concat propagates a null source, lang or text to the url/page
+    rows += [(7, None, "en", "t"), (8, "src2", None, "t"), (9, "src0", "fr", None)]
     df = spark.createDataFrame(
         rows, "doc_id bigint, source string, lang string, text string")
     d = F.col("doc_id").cast("string")
@@ -356,6 +358,5 @@ def test_synth_pages_template_matches_jvm(spark):
            df.select("doc_id", url.alias("url"), html.alias("html")).collect()}
     for doc_id, src, lang, text in rows:
         exp_url, exp_html = jvm[doc_id]
-        assert E._SYNTH_URL_TPL.format(
-            src=src, lang=lang, slot=doc_id % 400) == exp_url
+        assert E._synth_url(doc_id, src, lang) == exp_url
         assert E._synth_page_html(doc_id, lang, text) == exp_html
