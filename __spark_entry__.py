@@ -345,7 +345,7 @@ def q_url_transforms(spark, sf_dir):
     ]
     # the sanitized payload must exceed one 76-char base64 line (57
     # input bytes) so the oracle pins the CRLF-chunking fix in
-    # sanitize_data_url_cols (Spark's base64 MIME-wraps long output)
+    # with_sanitized_data_url (Spark's base64 MIME-wraps long output)
     embedded = F.concat(
         F.lit("<html><body><script>track()</script><p>Doc "),
         F.col("seq").cast("string"),
@@ -1310,20 +1310,13 @@ def q_langid(spark, sf_dir):
         F.array(*[F.lit(LANG_SAMPLES[lang]) for lang in langs]),
         (F.col("doc_id") % len(langs)).cast("int") + 1,
     )
-    # materialize the normalized text ONCE: scoring 52 profiles against
-    # an inlined normalization repeats its regexp subtree ~1000× and
-    # kicks the plan out of codegen (see trigram_lang_scores docstring)
+    # normalization stays JVM-side; scoring is one Arrow-batched kernel
+    # (a Column-algebra form needs 70×15 replace-scans in one projection,
+    # past codegen's 64 KB limit, and ran interpreted — see
+    # langid_batch_col), O(|text| + gated profiles) per row
     base = docs.select("doc_id", sample.alias("txt")).withColumn(
         "_nt", TS.lang_normtext_col("txt")
     )
-    # SCALE PATH (r5, closes the r4 langid cost-pin miss): the Column-
-    # algebra form needs 70×15 replace-scans in one projection; janino
-    # aborts codegen at that size ('Code grows beyond 64 KB') and the
-    # whole tree runs interpreted (~45 ms/row at sf0.1 — and the r4
-    # shape even evaluated it twice, once for the winner struct, once
-    # for best_score). langid_batch_col is one Arrow-batched kernel
-    # doing the identical integer arithmetic (bit-parity pinned in
-    # test_textstats), O(|text| + gated profiles) per row.
     st = TS.langid_batch_col(F.col("_nt"))
     return base.select(
         "doc_id",
@@ -1334,21 +1327,18 @@ def q_langid(spark, sf_dir):
 
 
 def q_sentiment(spark, sf_dir):
-    """A10 sentiment: the inline occurrence-algebra path (score, scaled
-    comparative, reference label quirk) PLUS the explode→broadcast-join
-    aggregation path's score as `score_join` — both implementations
-    driver-checked in one row, and their agreement is itself pinned."""
+    """A10 sentiment: score, scaled comparative and the reference label
+    quirk, plus `score_join`, which the oracle computes a second way
+    (explode → lexicon join → sum) — both oracle-checked in one row."""
     docs = _load(_prep(spark), sf_dir, "documents")
-    # r6 (guide §4): one Arrow kernel pass. The former plan ran the
-    # staged inline algebra AND the explode→broadcast-join→agg path
-    # over one scan — value-correct, but the 10-term array_remove sum
-    # plus the join/agg machinery made a large codegen tree whose JIT
-    # dominated in-suite time (~1.9 s best-of-2 at sf1 vs ~0.7 s for
-    # the kernel). The kernel's per-token dict lookup IS the shape that
-    # scales to AFINN-165-sized lexicons (an O(tokens) map-side pass,
-    # lexicon shipped with the closure); sentiment_via_join stays in
-    # textstats as the declarative twin and both are parity-pinned in
-    # test_textstats.
+    # r6 (guide §4): one Arrow kernel pass. The former plan ran a staged
+    # inline algebra AND an explode→broadcast-join→agg path over one
+    # scan — value-correct, but the 10-term array_remove sum plus the
+    # join/agg machinery made a large codegen tree whose JIT dominated
+    # in-suite time (~1.9 s best-of-2 at sf1 vs ~0.7 s for the kernel).
+    # The kernel's per-token dict lookup IS the shape that scales to
+    # AFINN-165-sized lexicons (an O(tokens) map-side pass, lexicon
+    # shipped with the closure).
     return TS.sentiment_batch(docs)
 
 
@@ -1417,10 +1407,8 @@ def q_keywords_topk(spark, sf_dir):
     weight scaled to bigint (floats never reach the driver hash).
 
     Runs the Arrow-kernel scale path (keywords_phrases_batch): per-doc
-    TF top-k needs no cross-row state, so the declarative explode →
-    hash-agg → window pays two shuffles for nothing. Bit-parity with
-    the declarative keywords_topk ∪ keyphrases_topk plan is pinned by
-    tests/test_textstats.py::test_keywords_kernel_matches_declarative."""
+    TF top-k needs no cross-row state, so an explode → hash-agg →
+    window plan would pay two shuffles for nothing."""
     docs = _load(_prep(spark), sf_dir, "documents")
     return TS.keywords_phrases_batch(docs, k_terms=10, k_phrases=8,
                                      lengths=(2, 3))

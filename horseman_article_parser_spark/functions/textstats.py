@@ -1,7 +1,7 @@
-"""Text-analysis column algebra: tokens, readability, quality, language
-ID, sentiment, fingerprints. Everything here is a pure Column expression
-(JVM-side, whole-stage-codegen) — zero Python crossings — so each op is
-also renderable as ANSI SQL for the DuckDB oracle.
+"""Text analysis: tokens, readability, quality, language ID, sentiment,
+keywords, fingerprints — Column expressions (JVM-side, whole-stage
+codegen) where one projection can carry the work, Arrow batch kernels
+where it cannot. Each op renders as ANSI SQL for the DuckDB oracle.
 
 Reference parity (behavior, not code):
 - readability counts + readingTime = round(words/200*60)
@@ -15,16 +15,13 @@ Reference parity (behavior, not code):
     /root/reference/controllers/entityParser.js:83-90 (X1)
 - language detect = n-gram profile scoring with 'en' default
     /root/reference/controllers/language.js:26-46 (N1) — here a
-    franc-style ranked-trigram model over 70 languages spanning 24
-    scripts (Latin, Cyrillic, Greek, Arabic, Hebrew, Devanagari,
-    Bengali, Tamil, Thai, Georgian, Armenian, Hangul, kana, Han),
-    argmax with deterministic alphabetical tie-break and 'eng'/'en'
-    fallback when no trigram hits.
+    franc-style ranked-trigram model (LANG_TRIGRAMS), argmax with
+    deterministic alphabetical tie-break and 'eng'/'en' fallback when
+    no trigram hits.
 
-Scale notes: these run over `documents.text` at 100 TB as a single
-narrow projection — no shuffle, no UDF, fully pipelined into the scan.
-Token-explode variants (sentiment via lexicon join, TF top-k) shuffle
-once on (doc_id) or (doc_id, token), both high-cardinality keys.
+Scale notes: everything is per-document and narrow — no shuffle, fully
+pipelined into the scan — except keywords_cleaned_topk, which shuffles
+once on (doc_id, token).
 """
 
 from __future__ import annotations
@@ -47,9 +44,10 @@ LANG_DEFAULT = "en"
 # (" th", "he ") score, franc-style. Score = Σ count(tg)·(K − rank);
 # winner = max score, alphabetical iso6393 tie-break, all-zero → eng.
 #
-# Scale shape: pure Column algebra (occurrence counts via length
-# difference under non-overlapping replace) — no explode, no shuffle,
-# no UDF; identical arithmetic renders to the DuckDB oracle.
+# Scale shape: normalization is Column algebra (lang_normtext_col), the
+# scoring is one Arrow-batched kernel (langid_batch_col) — no explode,
+# no shuffle. The DuckDB oracle renders the same arithmetic as
+# non-overlapping occurrence counts (length difference under replace).
 
 LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
     "amh": ("ነው ", " እና", "እና ", "ውስጥ", "ላይ ", "የሚ", "ናቸው", "አለ", "ነበር",
@@ -566,11 +564,11 @@ ISO3_TO_1: dict[str, str] = {
 LANG_DEFAULT_ISO3 = "eng"
 
 # Script gates: every trigram of the gated language contains ≥1 char in
-# the range, so `text lacks the script ⇒ score is 0` — wrapping the
-# 15-count sum in when(rlike(range), ...).otherwise(0) is an IDENTITY
-# on results (asserted in tests) that lets lazy branch evaluation skip
-# ~half the profile arithmetic on any single-script text. Latin-script
-# languages are ungated (Latin text is the common case).
+# the range, so `text lacks the script ⇒ score is 0` — skipping the
+# profile when the gate does not match is an IDENTITY on results
+# (asserted in tests) that saves ~half the profile arithmetic on any
+# single-script text. Latin-script languages are gated by
+# LATIN_KERNEL_CLASS instead.
 LANG_SCRIPT_GATES: dict[str, str] = {
     "amh": r"[ሀ-፿]", "arb": r"[؀-ۿ]",
     "ben": r"[ঀ-৿]", "bul": r"[Ѐ-ӿ]",
@@ -619,48 +617,16 @@ LANG_SCRIPT_GATES: dict[str, str] = {
     "krc": r"[Ѐ-ӿ]", "ava": r"[Ѐ-ӿ]", "bua": r"[Ѐ-ӿ]",
 }
 
-# Latin-script gate for every language NOT in LANG_SCRIPT_GATES: all 25
-# Latin profiles' trigrams carry >=1 Latin-script letter (verified by
-# test_latin_gate_identity), so `text has no Latin letter => score 0` is
-# an identity — a CJK/Arabic/Indic row skips ALL Latin profile sums
-# (39 of the 70 languages)
-# (VERDICT r3 next-round #7: gates must short-circuit scoring, not just
-# weight it). Applied only through the materialized `gate_flags` path:
-# whole-stage codegen does NOT common-subexpression-eliminate the 25
-# identical rlike nodes across when() branches (measured: inline Latin
-# gates cost more than the sums they skip), so the flags must be
-# computed once per row as a real column (script_gate_flags_col).
-LATIN_GATE = r"\p{IsLatin}"
-
-# Python re lacks Java's \p{IsLatin}; the batch kernel uses this class
-# instead: Basic Latin + Latin-1/Extended-A/B + IPA + Latin Extended
-# Additional + Extended-C + Extended-D. The identity requirement is
-# one-directional — every ungated profile trigram must contain >=1
-# char IN THIS CLASS (so "text contains a Latin trigram" implies "the
-# kernel gate matches"); tests/test_textstats.py::
-# test_latin_gate_identity_invariant asserts each trigram against this
-# exact class, not Unicode names, so a profile using only
-# outside-class letters (e.g. the U+02BB ʻokina, script=Common) fails
-# the test instead of silently zeroing in the kernel.
+# Latin-script gate for every language NOT in LANG_SCRIPT_GATES, so a
+# CJK/Arabic/Indic row skips ALL Latin profile sums. Python re lacks
+# Java's \p{IsLatin}; the class is Basic Latin + Latin-1/Extended-A/B +
+# IPA + Latin Extended Additional + Extended-C + Extended-D. Every
+# ungated profile trigram must contain >=1 char IN THIS CLASS for the
+# gate to be an identity; tests/test_textstats.py::
+# test_latin_gate_identity_invariant asserts that against this exact
+# class, so a profile using only outside-class letters (e.g. the U+02BB
+# ʻokina, script=Common) fails the test instead of silently zeroing.
 LATIN_KERNEL_CLASS = "[A-Za-zÀ-ÖØ-öø-ʯḀ-ỿⱠ-ⱿꜢ-ꟿ]"
-
-
-def script_gate_flags_col(norm: Column) -> Column:
-    """One boolean per DISTINCT script-gate regex (24 ranges + Latin),
-    evaluated ONCE per row. Materialize with withColumn and hand to
-    trigram_lang_scores/langid_struct_col as `gate_flags` so the 52
-    per-language gates become struct-field reads instead of 52 regex
-    scans."""
-    return F.struct(
-        *[
-            norm.rlike(g).alias(f"g{i}")
-            for i, g in enumerate(_DISTINCT_GATES)
-        ]
-    )
-
-
-_DISTINCT_GATES = sorted(set(LANG_SCRIPT_GATES.values()) | {LATIN_GATE})
-_GATE_FIELD = {g: f"g{i}" for i, g in enumerate(_DISTINCT_GATES)}
 
 
 def lang_normtext_col(text: Column | str) -> Column:
@@ -676,103 +642,11 @@ def lang_normtext_col(text: Column | str) -> Column:
     )
 
 
-def _trigram_count(norm: Column, tg: str) -> Column:
-    """Non-overlapping occurrence count via length difference."""
-    return (
-        (F.length(norm) - F.length(F.replace(norm, F.lit(tg), F.lit(""))))
-        / F.lit(len(tg))
-    ).cast("long")
-
-
-def trigram_lang_scores(text: Column | str,
-                        profiles: dict[str, tuple[str, ...]] | None = None,
-                        prenormalized: bool = False,
-                        gate_flags: Column | None = None) -> dict[str, Column]:
-    """Per-language trigram scores (pure Column algebra).
-
-    prenormalized=True means `text` is ALREADY the lang_normtext_col
-    output, materialized as a real column. Callers scoring many
-    profiles should do that: inlining the normalization repeats its
-    regexp subtree once per trigram count (2 × Σ|profiles| times),
-    which blows the expression past whole-stage codegen's method-size
-    limit and forces interpreted re-evaluation of the regexp per
-    occurrence — measured 4× slower when first hit at 33 profiles; the
-    shipped table is larger still.
-
-    gate_flags: the materialized script_gate_flags_col struct. With it,
-    EVERY language is gated (incl. the Latin-script 25) by a struct-
-    field read; without it, only the non-Latin gates apply as inline
-    rlike (the Latin gate is a net loss un-shared, see LATIN_GATE)."""
-    p = profiles or LANG_TRIGRAMS
-    norm = _c(text) if prenormalized else lang_normtext_col(text)
-    out: dict[str, Column] = {}
-    for lang, tgs in p.items():
-        k = len(tgs)
-        score = None
-        for rank, tg in enumerate(tgs):
-            term = _trigram_count(norm, tg) * F.lit(k - rank)
-            score = term if score is None else score + term
-        score = score.cast("long")
-        if p is LANG_TRIGRAMS:
-            if gate_flags is not None:
-                gate = LANG_SCRIPT_GATES.get(lang, LATIN_GATE)
-                cond = gate_flags[_GATE_FIELD[gate]]
-            else:
-                gate = LANG_SCRIPT_GATES.get(lang)
-                cond = norm.rlike(gate) if gate is not None else None
-            if cond is not None:
-                score = F.when(cond, score).otherwise(F.lit(0).cast("long"))
-        out[lang] = score
-    return out
-
-
-def langid_from_scores(scores: dict[str, Column]) -> Column:
-    """Winner struct(iso6391, iso6393) from an ALREADY-BUILT per-language
-    score dict. Callers that also need the raw scores (best_score
-    columns, diagnostics) must use this instead of langid_struct_col —
-    whole-stage codegen does not common-subexpression-eliminate the
-    ~1000 trigram-count terms across two separate projections, so
-    computing the struct and the scores independently doubles the
-    per-row work (measured: the r4 langid bench paid exactly that)."""
-    langs = sorted(scores)
-    entries = [
-        F.struct(scores[lang].alias("score"), F.lit(-i).alias("negrank"))
-        for i, lang in enumerate(langs)
-    ]
-    best = F.array_max(F.array(*entries))
-    iso3_winner = F.element_at(
-        F.array(*[F.lit(lang) for lang in langs]), -best["negrank"] + 1
-    )
-    iso3 = F.when(best["score"] > 0, iso3_winner).otherwise(
-        F.lit(LANG_DEFAULT_ISO3)
-    )
-    iso1_arr = F.array(*[F.lit(ISO3_TO_1[lang]) for lang in langs])
-    iso1 = F.when(
-        best["score"] > 0, F.element_at(iso1_arr, -best["negrank"] + 1)
-    ).otherwise(F.lit(LANG_DEFAULT))
-    return F.struct(iso1.alias("iso6391"), iso3.alias("iso6393"))
-
-
-def langid_struct_col(text: Column | str,
-                      profiles: dict[str, tuple[str, ...]] | None = None,
-                      prenormalized: bool = False,
-                      gate_flags: Column | None = None) -> Column:
-    """N1 full output: struct(iso6391, iso6393) like the reference's
-    detectLanguage (language.js:26-46). Winner = max trigram score,
-    alphabetical iso6393 tie-break, all-zero → eng/en. See
-    trigram_lang_scores on prenormalized / gate_flags, and
-    langid_from_scores when the caller ALSO needs the score columns."""
-    scores = trigram_lang_scores(text, profiles or LANG_TRIGRAMS,
-                                 prenormalized=prenormalized,
-                                 gate_flags=gate_flags)
-    return langid_from_scores(scores)
-
-
 def langid_batch_col(norm_text: Column) -> Column:
     """The SCALE path for full-breadth language ID: one Arrow-batched
-    kernel returning struct(iso6391, iso6393, best_score) — bit-exact
-    with the Column-algebra path (pinned by
-    tests/test_textstats.py::test_langid_batch_kernel_matches_column_algebra).
+    kernel returning struct(iso6391, iso6393, best_score), checked
+    against the DuckDB oracle's score algebra (q_langid) and by the
+    edge-text pins in tests/test_textstats.py.
 
     Why a kernel and not Column algebra: the declarative form needs
     |languages| × 15 replace-scans in ONE projection; at 70 languages
@@ -786,9 +660,9 @@ def langid_batch_col(norm_text: Column) -> Column:
     non-matching scripts. Input must ALREADY be lang_normtext_col
     output (normalization stays JVM-side).
 
-    Semantics replicated exactly: per-trigram weight (15-rank),
-    non-overlapping counts, script gates as hard zeroes, max score
-    with alphabetical-iso6393 tie-break, all-zero -> eng/en."""
+    Semantics: per-trigram weight (15-rank), non-overlapping counts,
+    script gates as hard zeroes, max score with alphabetical-iso6393
+    tie-break, all-zero -> eng/en."""
     import re as _re
 
     import pandas as pd
@@ -801,8 +675,7 @@ def langid_batch_col(norm_text: Column) -> Column:
     # most of the ~1500 gate-open foreign tokens fail this test (their
     # leading trigram never occurs), turning the hot loop from ~1500
     # C substring scans/row into 3 substring-set builds + dict probes
-    # (measured 2.5× at sf1; bit-parity pinned by the kernel-vs-Column
-    # test and the unchanged driver oracle).
+    # (measured 2.5× at sf1; value-identical under the DuckDB oracle).
     profiles = {
         lang: tuple(
             (tg, len(tgs) - i, tg[:3], min(len(tg), 3))
@@ -1089,11 +962,11 @@ def readability_cols(text: Column | str,
 
 def with_quality(df: DataFrame, text_col: str = "text",
                  tokens: Column | None = None) -> DataFrame:
-    """Training-data quality signals as staged projections (the
-    with_sentiment pattern): `stopword_hits`, `alpha_ratio_x1e4` and
-    `quality_score` (additive over length, mean word length, stopword
-    ratio and alpha ratio, clamped to [0,100] and rounded to an integer
-    so the value is hash-stable across engines).
+    """Training-data quality signals as staged projections:
+    `stopword_hits`, `alpha_ratio_x1e4` and `quality_score` (additive
+    over length, mean word length, stopword ratio and alpha ratio,
+    clamped to [0,100] and rounded to an integer so the value is
+    hash-stable across engines).
 
     `quality_score` shares the stopword occurrence sum and the alpha
     regexp with the other two; as independent Column trees, selecting
@@ -1149,151 +1022,6 @@ def with_quality(df: DataFrame, text_col: str = "text",
         )
         .drop("_q_nchars", "_q_nwords", "_q_stop", "_q_alpha",
               "_q_alpha_ratio", "_q_mean", "_q_stop_ratio")
-    )
-
-
-# ---------------------------------------------------------- sentiment
-
-
-def sentiment_cols(text: Column | str, lexicon: dict[str, int] | None = None,
-                   pretokenized: bool = False) -> dict[str, Column]:
-    """A10: AFINN token-sum without exploding — occurrence-count × score
-    per lexicon word (identical result to explode+join for whole-word
-    tokens, and shuffle-free). comparative = score / token_count.
-    Label quirk preserved: Neutral only at comparative == 0.05 exactly.
-
-    pretokenized=True means `text` is already the tokens_col output
-    materialized as a column — callers should do that: inlining the
-    split once per lexicon word keeps the whole projection out of
-    codegen and re-splits the text |lexicon|+1 times per row."""
-    lex = lexicon or AFINN_MINI
-    toks = _c(text) if pretokenized else tokens_col(text)
-    n_toks = F.size(toks)
-    score = None
-    for w in sorted(lex):
-        # codegen'd occurrence count (see occurrences_col shape note);
-        # the filter() HOF form ran interpreted per element
-        contrib = (
-            (n_toks - F.size(F.array_remove(toks, w))).cast("long")
-            * F.lit(lex[w])
-        )
-        score = contrib if score is None else score + contrib
-    n = F.size(toks)
-    comparative = F.when(n > 0, score.cast("double") / n).otherwise(F.lit(0.0))
-    label = (
-        F.when(comparative > 0.05, F.lit("Positive"))
-        .when(comparative < 0.05, F.lit("Negative"))
-        .otherwise(F.lit("Neutral"))
-    )
-    return {
-        "sentiment_score": score.cast("long"),
-        "comparative_x1e6": F.round(comparative * 1_000_000).cast("long"),
-        "sentiment_label": label,
-    }
-
-
-def with_sentiment(df: DataFrame, text_col: str = "text",
-                   lexicon: dict[str, int] | None = None,
-                   keep_staged: bool = False) -> DataFrame:
-    """Staged-projection form of :func:`sentiment_cols` — identical
-    values (the driver oracle and the inline-vs-join agreement pin are
-    unchanged), different physical shape.
-
-    sentiment_cols returns three independent Column trees that each
-    embed the full |lexicon|-term occurrence sum: selected together,
-    the plan evaluates ~4 copies of every array_remove scan per row
-    (score, comparative, and both label branches — conditional
-    evaluation blocks codegen CSE, same pathology as
-    urls.with_sanitized_data_url). Here tokens, n, score, and the raw
-    comparative are each staged once behind a Project boundary and the
-    outputs are cheap derivations."""
-    lex = lexicon or AFINN_MINI
-    df = df.withColumn("_sn_toks", tokens_col(text_col))
-    df = df.withColumn("_sn_n", F.size("_sn_toks"))
-    toks, n = F.col("_sn_toks"), F.col("_sn_n")
-    score = None
-    for w in sorted(lex):
-        contrib = (
-            (n - F.size(F.array_remove(toks, w))).cast("long") * F.lit(lex[w])
-        )
-        score = contrib if score is None else score + contrib
-    df = df.withColumn("sentiment_score", score.cast("long"))
-    df = df.withColumn(
-        "_sn_comp",
-        F.when(n > 0,
-               F.col("sentiment_score").cast("double") / n).otherwise(0.0),
-    )
-    comp = F.col("_sn_comp")
-    out = (
-        df.withColumn("comparative_x1e6",
-                      F.round(comp * 1_000_000).cast("long"))
-        .withColumn(
-            "sentiment_label",
-            F.when(comp > 0.05, F.lit("Positive"))
-            .when(comp < 0.05, F.lit("Negative"))
-            .otherwise(F.lit("Neutral")),
-        )
-    )
-    if keep_staged:
-        # caller reuses _sn_toks/_sn_n (e.g. the explode→join scoring
-        # path over the SAME scan — q_sentiment r6); must drop them
-        return out.drop("_sn_comp")
-    return out.drop("_sn_toks", "_sn_n", "_sn_comp")
-
-
-def sentiment_via_join(docs: DataFrame, lexicon: dict[str, int] | None = None,
-                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """A10 as the canonical explode→broadcast-join→agg plan (the shape
-    that scales when the lexicon is AFINN-165-sized rather than inline).
-
-    The explode is map-side PRE-FILTERED to lexicon hits: non-sentiment
-    tokens (the overwhelming majority) never become rows, so the
-    hash-agg shuffle carries |hits| instead of |tokens| rows — ~50×
-    smaller here, same result (a dropped token contributes 0 to the sum
-    either way; explode_outer keeps zero-hit docs alive with a null
-    token that left-joins to nothing). Measured 6.5 s → 0.7 s at sf0.1,
-    verified row-identical to the unfiltered plan.
-
-    Two physical-shape fixes (r5, 3× at sf1, row-identical):
-    `n_tokens` and the filtered hit array are staged in projections
-    BELOW the Generate — selecting them alongside explode_outer() put
-    the Project above the Generate, so size(split(text)) re-ran once
-    per exploded hit (~9×/doc here) instead of once per doc. And the
-    10-row lexicon side is built from JVM literals (range(1) + inline)
-    rather than spark.createDataFrame, which plans as a Python-RDD scan
-    and pays a Python-worker round trip on every action that rebuilds
-    the broadcast."""
-    lex = lexicon or AFINN_MINI
-    spark = docs.sparkSession
-    lex_df = F.broadcast(
-        spark.range(1).select(
-            F.inline(F.array(*[
-                F.struct(F.lit(k).alias("token"), F.lit(v).alias("tok_score"))
-                for k, v in sorted(lex.items())
-            ]))
-        )
-    )
-    toks = (
-        docs
-        .withColumn("n_tokens", token_count_col(text_col))
-        .withColumn(
-            "_hits",
-            F.filter(tokens_col(text_col), lambda t: t.isin(*sorted(lex))),
-        )
-        .select(id_col, "n_tokens", F.explode_outer("_hits").alias("token"))
-    )
-    return (
-        toks.join(lex_df, "token", "left")
-        .groupBy(id_col, "n_tokens")
-        .agg(F.sum(F.coalesce("tok_score", F.lit(0))).alias("sentiment_score"))
-        .select(
-            id_col,
-            "sentiment_score",
-            F.round(
-                F.col("sentiment_score").cast("double")
-                / F.greatest("n_tokens", F.lit(1)) * 1_000_000
-            ).cast("long").alias("comparative_x1e6"),
-        )
     )
 
 
@@ -1491,101 +1219,6 @@ def keywords_cleaned_topk(docs: DataFrame, k: int = 10,
     )
 
 
-# ------------------------------------------------------------- top-k TF
-
-
-def keywords_topk(docs: DataFrame, k: int = 10, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  stopwords: tuple[str, ...] = STOPWORDS_MINI) -> DataFrame:
-    """A9/N3: term-frequency top-k per document, stopword- and
-    POS-filtered (only noun-ish terms rank, mirroring retext-keywords'
-    noun gate — keywordParser.js:10-28), deterministic (count desc,
-    term asc) tie-break. One shuffle on (doc, term), one window on
-    doc — both key-spread."""
-    from pyspark.sql.window import Window
-
-    toks = docs.select(id_col, F.explode(tokens_col(text_col)).alias("term"))
-    toks = toks.filter(
-        ~F.col("term").isin(*stopwords)
-        & (F.length("term") > 1)
-        & pos_noun_gate_col(F.col("term"))
-    )
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    w = Window.partitionBy(id_col).orderBy(F.desc("tf"), F.asc("term"))
-    return (
-        tf.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "rank")
-    )
-
-
-def keyphrases_topk(docs: DataFrame, k: int = 10, n: int | tuple[int, ...] = 2,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    stopwords: tuple[str, ...] = STOPWORDS_MINI) -> DataFrame:
-    """N3 keyphrases: top-k word n-grams per document by frequency,
-    phrases containing stopwords at either edge dropped. retext-keywords
-    ranks noun-phrase spans of ANY length together
-    (/root/reference/controllers/keywordParser.js:32-77); pass a tuple
-    of lengths (e.g. (2, 3)) to pool several gram lengths into one
-    ranking — all lengths come out of ONE explode over the same token
-    array. Score = tf / max_tf per doc, the reference's normalized
-    keyphrase weight. One explode → one (doc, phrase) shuffle → one
-    window."""
-    from pyspark.sql.window import Window
-
-    lengths = (n,) if isinstance(n, int) else tuple(n)
-    toks = docs.select(F.col(id_col), tokens_col(text_col).alias("_t"))
-    # guard docs shorter than n tokens: sequence(0, stop) with stop < 0
-    # DESCENDS in Spark (default step -1, not an empty array), making
-    # slice() see start=0 and throw under ANSI mode. Filtering size >= n
-    # both fixes the crash and matches the oracle (range() yields zero
-    # rows for short docs).
-    toks = toks.filter(F.size("_t") >= min(lengths))
-    # NOTE (r5): two "optimizations" were tried and measured SLOWER
-    # than this shape, both for the same reason — Catalyst's
-    # CollapseProject inlines a materialized helper array (per-token
-    # gate flags) at every use site, and higher-order array functions
-    # run interpreted, so per-row array algebra recomputes the gate
-    # regex ~25× per row (24 s vs 4.9 s at sf0.1). The explode →
-    # hash-agg (map-side combine) → per-doc window below is the right
-    # Spark shape; leave it.
-    def _join_grams(ln: int):
-        # single-arg lambda REQUIRED: F.transform treats a 2-parameter
-        # function as (element, index) — a default-arg closure would be
-        # silently bound to the index
-        return lambda i: F.array_join(F.slice("_t", i + 1, ln), " ")
-
-    gram_arrays = [
-        F.when(
-            F.size("_t") >= ln,
-            F.transform(F.sequence(F.lit(0), F.size("_t") - ln), _join_grams(ln)),
-        ).otherwise(F.array().cast("array<string>"))
-        for ln in lengths
-    ]
-    grams = toks.select(
-        F.col(id_col),
-        F.explode(F.concat(*gram_arrays)).alias("phrase"),
-    )
-    first = F.element_at(F.split(F.col("phrase"), " "), 1)
-    last = F.element_at(F.split(F.col("phrase"), " "), -1)
-    grams = grams.filter(
-        ~first.isin(*stopwords) & ~last.isin(*stopwords)
-        & (F.length("phrase") > 3)
-        # noun-phrase gate: every word noun-ish-or-adjective (the gate
-        # passes adjectives, so "economic growth" survives while
-        # "running quickly" does not)
-        & F.forall(F.split(F.col("phrase"), " "), pos_noun_gate_col)
-    )
-    tf = grams.groupBy(id_col, "phrase").agg(F.count("*").alias("tf"))
-    w_max = Window.partitionBy(id_col)
-    w_rank = Window.partitionBy(id_col).orderBy(F.desc("tf"), F.asc("phrase"))
-    return (
-        tf.withColumn("score", F.col("tf") / F.max("tf").over(w_max))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "phrase", "tf", F.round("score", 9).alias("score"), "rank")
-    )
-
 def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                            k_phrases: int = 8,
                            lengths: tuple[int, ...] = (2, 3),
@@ -1593,25 +1226,30 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                            text_col: str = "text",
                            stopwords: tuple[str, ...] = STOPWORDS_MINI,
                            ) -> DataFrame:
-    """The SCALE path for the keywords+keyphrases surface: ONE Arrow
-    batch kernel per doc row instead of explode → (doc, gram) hash-agg
-    → per-doc window — per-document TF top-k needs no cross-row state,
-    so the two shuffles are pure overhead. Bit-exact with
-    keywords_topk(k_terms) ∪ keyphrases_topk(k_phrases, lengths)
-    (pinned by tests/test_textstats.py::
-    test_keywords_kernel_matches_declarative).
+    """A9/N3 keywords + keyphrases: ONE Arrow batch kernel per doc row
+    instead of explode → (doc, gram) hash-agg → per-doc window —
+    per-document TF top-k needs no cross-row state, so shuffles would
+    be pure overhead.
 
-    r6: tokenization moved IN-kernel (_java_tokens, the exact Java-\\s
-    mirror the other kernels pin) — shipping JVM-built array<string>
-    columns through Arrow materialized a per-row object array on the
-    pandas side and dominated the query (~1.0 s of its 1.4 s at sf1);
-    raw text crosses instead. The noun gate (first-char Lu | lexicon +
-    ly/ing/ed suffix rules) is memoized per distinct surface token
-    across the batch and evaluated once per token POSITION per doc, so
-    each n-gram checks precomputed flags — the declarative plan
-    re-evaluates its regex per occurrence. round(x, 9) and
-    round(x*1e9) replicate Spark's HALF_UP-on-shortest-repr double
-    rounding via Decimal so score_x1e9 is bit-identical.
+    - terms: whitespace tokens (_java_tokens) that are not stopwords,
+      longer than one char and pass the POS noun gate (retext-keywords'
+      noun filter, keywordParser.js:10-28); top `k_terms` by
+      (tf desc, term asc).
+    - phrases: word n-grams of every length in `lengths`, pooled into
+      one ranking (retext-keywords ranks spans of any length together,
+      keywordParser.js:32-77); dropped when the first or last word is a
+      stopword, any word fails the gate (adjectives pass, so "economic
+      growth" survives while "running quickly" does not) or the phrase
+      is ≤3 chars; docs with fewer tokens than min(lengths) yield none.
+      Top `k_phrases` by (tf desc, phrase asc); score = tf / max_tf per
+      doc, the reference's normalized weight.
+
+    The noun gate (first-char Lu | lexicon + ly/ing/ed suffix rules) is
+    memoized per distinct surface token across the batch and evaluated
+    once per token POSITION per doc, so each n-gram checks precomputed
+    flags. round(x, 9) and round(x*1e9) replicate Spark's
+    HALF_UP-on-shortest-repr double rounding via Decimal, so score_x1e9
+    equals the oracle's integer.
 
     Output is already exploded: (id, kind, gram, tf, rank, score_x1e9)
     with kind='term' rows (score_x1e9 null) and kind='phrase' rows.
@@ -1670,7 +1308,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
             for rid, text in zip(pdf[id_col], pdf[text_col]):
                 toks = _java_tokens(text if text is not None else "")
                 # kind='term': stopword + length + gate filter, TF,
-                # (tf desc, term asc) top-k — keywords_topk exactly
+                # (tf desc, term asc) top-k
                 cnt = Counter(
                     t for t in toks
                     if t not in stop and len(t) > 1 and gate(t)
@@ -1683,7 +1321,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                     tfs.append(tf); ranks.append(rk); scores.append(None)
                 # kind='phrase': all n-grams of each length, edge-
                 # stopword + len>3 + all-words-gated, pooled ranking,
-                # score = round(tf/max_tf, 9) — keyphrases_topk exactly
+                # score = round(tf/max_tf, 9)
                 if len(toks) < min(lens):
                     continue
                 gates = [gate(t) for t in toks]
@@ -1723,15 +1361,16 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
 
 # ------------------------------------------------- per-doc stat kernels
 #
-# Arrow-batched twins of the text_quality / sentiment Column algebra
-# (the langid/keywords pattern, guide §4): every output is per-document,
-# so the declarative plans' only real cost is their very large generated
-# expression trees — dozens of regex/array scans whose codegen classes
-# dominate first- and second-run JIT time. The kernels do the identical
-# integer/double arithmetic in one Python pass per row; bit-equivalence
-# with the Column algebra is pinned over the corpus and adversarial
-# fixtures (tests/test_textstats.py::test_text_quality_kernel_matches_
-# declarative / test_sentiment_kernel_matches_declarative).
+# Arrow-batched text_quality / sentiment (the langid/keywords pattern,
+# guide §4): every output is per-document, so a declarative plan's only
+# real cost is its very large generated expression tree — dozens of
+# regex/array scans whose codegen classes dominate first- and
+# second-run JIT time. The kernels do the integer/double arithmetic in
+# one Python pass per row. text_quality_batch is pinned bit-exact to
+# its staged Column algebra (tests/test_textstats.py::test_text_quality
+# _kernel_matches_declarative); sentiment_batch is checked against the
+# DuckDB oracle over the corpus plus adversarial documents
+# (tests/test_oracle_parity.py).
 #
 # Java-regex semantics are mirrored EXACTLY, not approximated:
 # - Java \s (no UNICODE_CHARACTER_CLASS) is ASCII [ \t\n\x0B\f\r];
@@ -1864,11 +1503,12 @@ def text_quality_batch(docs: DataFrame, id_col: str = "doc_id",
 def sentiment_batch(docs: DataFrame, lexicon: dict[str, int] | None = None,
                     id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """q_sentiment's output row in one Arrow kernel pass — bit-identical
-    to with_sentiment (inline occurrence algebra) with `score_join`
-    carrying the explode→broadcast-join path's sum (the two are equal
-    by construction: both total lexicon scores over whole tokens; the
-    agreement was already pinned when they were separate plans)."""
+    """A10 sentiment, q_sentiment's output row, in one Arrow kernel
+    pass: AFINN sum over whitespace tokens (_java_tokens), comparative
+    = score / token_count (0 for no tokens) scaled to an integer, and
+    the reference's label quirk — Neutral only at comparative == 0.05
+    exactly. `score_join` repeats the score: the oracle computes it a
+    second way (explode → lexicon join → sum), and both must agree."""
     import re as _sre
     from decimal import ROUND_HALF_UP, Decimal
     from typing import Iterator

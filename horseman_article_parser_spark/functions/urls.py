@@ -287,15 +287,21 @@ def apply_url_rewrites_col(url: Column | str, rewrites: list[tuple[str, str]]) -
     return u if out is None else out.otherwise(u)
 
 
-def sanitize_data_url_cols(url: Column | str, js_enabled: bool = False
-                           ) -> tuple[Column, Column]:
+def with_sanitized_data_url(
+    df: DataFrame,
+    url: str,
+    html_out: str,
+    url_out: str,
+    js_enabled: bool = False,
+) -> DataFrame:
     """F13 data:URL sanitize (/root/reference/controllers/utils.js:11-28):
-    decode the payload (base64 or percent-encoded), strip <script>
-    elements when JavaScript is disabled, re-encode as a base64
-    data:text/html URL. Returns (sanitized_html, sanitized_url).
+    decode the payload of column `url` (base64 or percent-encoded),
+    strip <script> elements when JavaScript is disabled, re-encode as a
+    base64 data:text/html URL. Adds `html_out` (sanitized html) and
+    `url_out` (sanitized url).
 
-    Pure Column algebra (base64/regexp built-ins), so it runs JVM-side
-    and renders to an exact DuckDB oracle.
+    Column algebra (base64/regexp built-ins), so it runs JVM-side and
+    renders to an exact DuckDB oracle.
 
     Parity gotchas handled here (each bit us or the review):
     - Spark's base64() MIME-chunks its output with CRLF every 76 chars
@@ -316,68 +322,13 @@ def sanitize_data_url_cols(url: Column | str, js_enabled: bool = False
       the same cleaning pipeline + try_to_binary + make_valid_utf8
       (ANSI-safe; a round-3 revision wrongly folded these into the
       ('', raw url) fallback the reference only uses for percent
-      payloads)."""
-    u = F.col(url) if isinstance(url, str) else url
-    comma = F.instr(u, ",")
-    meta = F.substring(u, 1, comma - 1)
-    payload = F.substr(u, comma + 1)
-    pct = F.call_function(
-        "try_url_decode", F.replace(payload, F.lit("+"), F.lit("%2B"))
-    )
-    # Node-lenient base64: strip non-alphabet, cut at first '=', drop a
-    # lone trailing char, re-pad to a multiple of 4 -> always decodable.
-    # Node's decoder accepts the base64url alphabet too ('-'/'_' map to
-    # '+'/'/'), so those are kept and translated, not stripped.
-    b64_clean = F.split(
-        F.translate(
-            F.regexp_replace(payload, B64_JUNK_RE, ""), "-_", "+/"
-        ),
-        "=",
-    ).getItem(0)
-    n = F.length(b64_clean)
-    b64_kept = F.when(n % 4 == 1, b64_clean.substr(F.lit(1), n - 1)).otherwise(
-        b64_clean
-    )
-    b64_pad = F.rpad(
-        b64_kept, ((F.length(b64_kept) + 3) / 4).cast("int") * 4, "="
-    )
-    b64_html = F.call_function(
-        "make_valid_utf8",  # U+FFFD substitution == Buffer.toString('utf8')
-        F.try_to_binary(b64_pad, F.lit("base64")).cast("string"),
-    )
-    html = F.when(meta.contains(";base64"), b64_html).otherwise(pct)
-    decoded_ok = html.isNotNull()
-    sanitized_core = (
-        html
-        if js_enabled
-        else F.regexp_replace(html, r"(?i)<script[^>]*>[\s\S]*?</script>", "")
-    )
-    sanitized = F.when(decoded_ok, sanitized_core).otherwise(F.lit(""))
-    b64 = F.regexp_replace(
-        F.base64(F.encode(sanitized, "UTF-8")), r"[\r\n]", ""
-    )
-    new_url = F.when(
-        decoded_ok, F.concat(F.lit("data:text/html;base64,"), b64)
-    ).otherwise(u)
-    return sanitized, new_url
+      payloads).
 
-
-def with_sanitized_data_url(
-    df: DataFrame,
-    url: str,
-    html_out: str,
-    url_out: str,
-    js_enabled: bool = False,
-) -> DataFrame:
-    """Staged-projection form of :func:`sanitize_data_url_cols` — same
-    semantics (bit-for-bit; the unit suite runs both forms), different
-    physical shape.
-
-    The single-expression form re-inlines `html` (a regexp/base64 chain)
-    into every consumer: `decoded_ok`, the script-strip, the re-encode,
-    and the fallback branch each embed a full copy, and codegen's
+    Physical shape: as one expression, `html` (a regexp/base64 chain)
+    would be re-inlined into every consumer — the decoded check, the
+    script-strip, the re-encode and the fallback branch — and codegen's
     common-subexpression elimination can't hoist them because they sit
-    under different `when` branches (conditional evaluation). At sf1
+    under different `when` branches (conditional evaluation); at sf1
     that made the sanitize chain ~90% of the url_transforms bill. Here
     each expensive intermediate is an aliased column in its own Project;
     CollapseProject keeps a Project boundary whenever a non-cheap alias
@@ -390,6 +341,10 @@ def with_sanitized_data_url(
     pct = F.call_function(
         "try_url_decode", F.replace(payload, F.lit("+"), F.lit("%2B"))
     )
+    # Node-lenient base64: strip non-alphabet, cut at first '=', drop a
+    # lone trailing char, re-pad to a multiple of 4 -> always decodable.
+    # Node's decoder accepts the base64url alphabet too ('-'/'_' map to
+    # '+'/'/'), so those are kept and translated, not stripped.
     b64_clean = F.split(
         F.translate(
             F.regexp_replace(payload, B64_JUNK_RE, ""), "-_", "+/"
@@ -406,7 +361,7 @@ def with_sanitized_data_url(
     kept = F.col("_sdu_kept")
     b64_pad = F.rpad(kept, ((F.length(kept) + 3) / 4).cast("int") * 4, "=")
     b64_html = F.call_function(
-        "make_valid_utf8",
+        "make_valid_utf8",  # U+FFFD substitution == Buffer.toString('utf8')
         F.try_to_binary(b64_pad, F.lit("base64")).cast("string"),
     )
     meta = F.substring(u, 1, comma - 1)

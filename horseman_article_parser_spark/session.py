@@ -10,7 +10,10 @@ single Arrow record batch.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -77,13 +80,30 @@ def get_spark(
     return spark
 
 
+@functools.cache
+def _zip_dir() -> str:
+    """This process's private dir for package zips, removed at exit."""
+    d = tempfile.mkdtemp(prefix="hap-pyfiles-")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers (the local-mode
     equivalent of `spark-submit --py-files pkg.zip`, north rule). Without
     it, pandas-UDF closures referencing package modules fail to unpickle
-    on workers whenever the driver's CWD isn't the repo root."""
+    on workers whenever the driver's CWD isn't the repo root.
+
+    Once per SparkContext: a context that already lists a package zip
+    among its Python includes returns at once, so per-query callers
+    (`__spark_entry__._prep`) neither re-walk the tree nor re-add the
+    file (each addPyFile also grows this process's sys.path)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
+    sc = spark.sparkContext
+    if any(n.startswith(pkg_name + "-") and n.endswith(".zip")
+           for n in sc._python_includes):
+        return
     sources: list[tuple[str, str]] = []
     newest = 0.0
     for root, _dirs, files in os.walk(pkg_dir):
@@ -93,13 +113,14 @@ def _ship_package(spark: SparkSession) -> None:
                 rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                 sources.append((full, rel))
                 newest = max(newest, os.path.getmtime(full))
-    # cache key = newest source mtime across the WHOLE tree (the package
-    # dir's own mtime misses edits inside subpackages → stale executors)
-    zip_path = os.path.join(tempfile.gettempdir(), f"{pkg_name}-{newest:.0f}.zip")
+    # name = newest source mtime across the WHOLE tree (the package
+    # dir's own mtime misses edits inside subpackages), so a new
+    # context after an edit ships the edited tree
+    zip_path = os.path.join(_zip_dir(), f"{pkg_name}-{newest:.0f}.zip")
     if not os.path.exists(zip_path):
         tmp = zip_path + ".tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
             for full, rel in sorted(sources):
                 zf.write(full, rel)
         os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    sc.addPyFile(zip_path)

@@ -5,13 +5,15 @@ predicate pushdown reaching the parquet scan, broadcast-hash joins for
 dimension/config tables, whole-stage codegen coverage, and absence of
 needless exchanges.
 
-Usage: python scripts/explain_audit.py [sf_dir]  (prints a PASS/FAIL
-summary; exits non-zero on any failed expectation).
+Usage: python scripts/explain_audit.py [sf_dir]  (prints each failed
+expectation; exits non-zero on any). tests/test_explain_audit.py runs
+`audit` at sf0.001 inside pytest.
 """
 
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -47,8 +49,7 @@ EXPECTATIONS = {
         ("Broadcast", "rules table must broadcast, never shuffle the frontier"),
     ],
     # sentiment: per-doc lexicon sum is per-row work — one Arrow kernel
-    # pass (r6; the declarative explode→broadcast-join twin stays
-    # parity-pinned in test_textstats)
+    # pass (r6; the oracle keeps the explode→lexicon-join form)
     "sentiment": [
         ("MapInPandas", "per-doc lexicon sum runs in the Arrow kernel"),
     ],
@@ -57,6 +58,7 @@ EXPECTATIONS = {
     ],
     # keywords/keyphrases: the Arrow kernel path — per-doc TF top-k is
     # per-row work, so the plan must be one MapInPandas over the scan
+    # (MAX_EXCHANGES bounds its exchanges to the input fan-out)
     "keywords_topk": [
         ("MapInPandas", "per-doc top-k runs in the Arrow kernel"),
     ],
@@ -102,21 +104,35 @@ FORBIDDEN = {
 # degenerate single-row-group test parquet (absent at production
 # layouts). r6: the fan-out spreads by HASHING the table's natural
 # unique key (guide §2.5 — deterministic spread key, no
-# sort-before-repartition), so the check is an exchange COUNT bound,
-# not a textual hashpartitioning ban: a second exchange of any kind is
-# the regression (the old explode → hash-agg → window keywords shape
-# paid two; per-row predicates/transforms need none beyond the spread).
-# name -> allowed exchange count (url_filters unions two independent
-# scan branches, so it carries one fan-out per branch)
-MAX_EXCHANGES = {"url_filters": 2, "url_transforms": 1, "keywords_topk": 1}
+# sort-before-repartition), so each plan gets an exchange COUNT bound
+# and every exchange in it must be hashpartitioning on exactly that
+# key: a second exchange, or one keyed on anything else (round-robin,
+# a per-token or per-gram key), is the regression.
+# name -> (allowed exchange count, spread key: the table's _SPREAD_KEYS
+# or the query's declared `key=`). url_filters unions two independent
+# scan branches, so it carries one fan-out per branch.
+MAX_EXCHANGES = {
+    "url_filters": (2, E._SPREAD_KEYS["documents"]),
+    "url_transforms": (1, E._SPREAD_KEYS["documents"]),
+    "keywords_topk": (1, E._SPREAD_KEYS["documents"]),
+}
+
+
+def _exchange_keys(plan: str) -> list[list[str] | None]:
+    """Per Exchange in a formatted plan: its hashpartitioning columns
+    (expression ids stripped), or None for any other partitioning."""
+    out = []
+    for m in re.finditer(r"\(\d+\) Exchange\b[\s\S]*?Arguments: (.*)", plan):
+        h = re.match(r"hashpartitioning\((.*), \d+\)", m.group(1))
+        out.append(None if h is None else
+                   [re.sub(r"#\d+L?$", "", c) for c in h.group(1).split(", ")])
+    return out
 
 
 def _partitionless_windows(plan: str) -> list[str]:
     """Window operators whose partition spec is empty — the
     single-partition scale-killer. Formatted plans print windows as
     'Arguments: [exprs], [partition-cols], [order]'."""
-    import re
-
     hits = []
     for m in re.finditer(r"\(\d+\) Window\b[\s\S]*?Arguments: (.*)", plan):
         args = m.group(1)
@@ -125,68 +141,60 @@ def _partitionless_windows(plan: str) -> list[str]:
     return hits
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("explain-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+def audit(spark, sf_dir: str) -> list[str]:
+    """Run every plan expectation over the queries at `sf_dir`; returns
+    one line per failed expectation (empty when the audit passes)."""
     queries = E.queries()
-    failures = 0
+    failures: list[str] = []
+
+    def check(ok: bool, what: str) -> None:
+        if not ok:
+            failures.append(what)
+
     for name, expects in EXPECTATIONS.items():
         plan = plan_of(queries[name](spark, sf_dir))
         for needle, why in expects:
-            ok = needle in plan
-            print(f"{'PASS' if ok else 'FAIL'} {name}: expect '{needle}' ({why})")
-            failures += 0 if ok else 1
+            check(needle in plan, f"{name}: expect '{needle}' ({why})")
     for name, forbids in FORBIDDEN.items():
         plan = plan_of(queries[name](spark, sf_dir))
         for needle, why in forbids:
-            ok = needle not in plan
-            print(f"{'PASS' if ok else 'FAIL'} {name}: forbid '{needle}' ({why})")
-            failures += 0 if ok else 1
-    import re as _re0
-
-    for name, cap in MAX_EXCHANGES.items():
-        plan = plan_of(queries[name](spark, sf_dir))
-        n_ex = len(_re0.findall(r"\(\d+\) Exchange\b", plan))
-        ok = n_ex <= cap
-        print(f"{'PASS' if ok else 'FAIL'} {name}: at most {cap} exchange(s) "
-              f"(the input fan-out; found {n_ex})")
-        failures += 0 if ok else 1
+            check(needle not in plan, f"{name}: forbid '{needle}' ({why})")
+    for name, (cap, key) in MAX_EXCHANGES.items():
+        keys = _exchange_keys(plan_of(queries[name](spark, sf_dir)))
+        check(len(keys) <= cap,
+              f"{name}: at most {cap} exchange(s) (the input fan-out; "
+              f"found {len(keys)})")
+        check(all(k == key for k in keys),
+              f"{name}: every exchange is hashpartitioning on {key} "
+              f"(found {keys})")
     # robots EVALUATION in isolation (pre-parsed rules, the per-round
     # hot path): frontier side shuffle-free — the only Exchange allowed
     # is the tiny rules-side groupBy(host); no per-url window, no SMJ.
-    import re as _re
+    from horseman_article_parser_spark.operators import politeness as PO
 
-    import pyspark.sql.functions as _F
-
-    from horseman_article_parser_spark.operators import politeness as _PO
-
-    _cand = spark.createDataFrame(
+    cand = spark.createDataFrame(
         [(f"https://h{i % 7}.example/p/{i}", f"h{i % 7}.example")
          for i in range(200)],
         "url string, host string",
     )
-    _rules = spark.createDataFrame(
+    rules = spark.createDataFrame(
         [("h0.example", "disallow", "/p", 1000)],
         "host string, rule_type string, path_prefix string, crawl_delay_ms int",
     )
-    plan = plan_of(_PO.robots_filter(_cand, _rules))
-    n_shuffle = len(_re.findall(r"\(\d+\) Exchange\b", plan))
-    ok = (n_shuffle <= 1 and "BroadcastHashJoin" in plan
+    plan = plan_of(PO.robots_filter(cand, rules))
+    n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
+    check(n_shuffle <= 1 and "BroadcastHashJoin" in plan
           and "SortMergeJoin" not in plan
-          and not _partitionless_windows(plan))
-    print(f"{'PASS' if ok else 'FAIL'} robots_filter(eval): frontier side "
-          f"shuffle-free (shuffle exchanges={n_shuffle}, rules-side only; "
-          f"no SMJ/window)")
-    failures += 0 if ok else 1
+          and not _partitionless_windows(plan),
+          f"robots_filter(eval): frontier side shuffle-free (shuffle "
+          f"exchanges={n_shuffle}, rules-side only; no SMJ/window)")
     # full driver query (parse chain included): the frontier join must
     # still be a broadcast-hash join and no partition-less window may
     # appear anywhere (the parser's windows are host-keyed)
     plan = plan_of(queries["robots_filter"](spark, sf_dir))
-    ok = "BroadcastHashJoin" in plan and not _partitionless_windows(plan)
-    print(f"{'PASS' if ok else 'FAIL'} robots_filter(full): parse chain keeps "
-          f"the frontier join broadcast + all windows host-keyed")
-    failures += 0 if ok else 1
+    check("BroadcastHashJoin" in plan and not _partitionless_windows(plan),
+          "robots_filter(full): parse chain keeps the frontier join "
+          "broadcast + all windows host-keyed")
     # NO partition-less windows anywhere in the frontier/crawl queries:
     # row_number() over an un-partitioned window funnels the whole input
     # through one task — the textbook 10^10-row scale-killer.
@@ -194,16 +202,24 @@ def main() -> int:
                  "frontier_slice", "politeness_budget", "robots_filter",
                  "seen_antijoin", "round_robin_interleave"):
         hits = _partitionless_windows(plan_of(queries[name](spark, sf_dir)))
-        ok = not hits
-        print(f"{'PASS' if ok else 'FAIL'} {name}: no partition-less window"
-              + ("" if ok else f" -> {hits[0]}"))
-        failures += 0 if ok else 1
+        check(not hits, f"{name}: no partition-less window"
+              + (f" -> {hits[0]}" if hits else ""))
     # column pruning spot check: text_quality must read ONLY doc_id+text
     plan = plan_of(queries["text_quality"](spark, sf_dir))
-    pruned = "ReadSchema" in plan and "lang" not in plan.split("ReadSchema", 1)[1][:400]
-    print(f"{'PASS' if pruned else 'FAIL'} text_quality: scan prunes unused columns")
-    failures += 0 if pruned else 1
-    print(f"\n{failures} failed expectations")
+    check("ReadSchema" in plan
+          and "lang" not in plan.split("ReadSchema", 1)[1][:400],
+          "text_quality: scan prunes unused columns")
+    return failures
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    spark = get_spark("explain-audit")
+    spark.sparkContext.setLogLevel("ERROR")
+    failures = audit(spark, sf_dir)
+    for f in failures:
+        print(f"FAIL {f}")
+    print(f"\n{len(failures)} failed expectations")
     return 1 if failures else 0
 
 

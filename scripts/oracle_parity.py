@@ -5,6 +5,9 @@ DuckDB over the same sf dir, compare row count, column names, and
 order-insensitive values (columns sorted by name, rows sorted).
 
 Usage: python scripts/oracle_parity.py [sf_dir] [query ...]
+
+tests/test_oracle_parity.py runs the same comparison (`mismatch`) for
+every query at sf0.001 inside pytest.
 """
 
 from __future__ import annotations
@@ -46,13 +49,51 @@ def df_rows(cols, rows):
     return sorted(cols), sorted(out, key=repr)
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per `entry.TABLES` table of `sf_dir`."""
+    con = duckdb.connect()
+    for t in entry.TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def mismatch(s_cols, s_rows, rel) -> str | None:
+    """Compare Spark's result (column names, row tuples) with the DuckDB
+    relation `rel`: oracle column types, column names, row count, then
+    order-insensitive values. None when they agree, else what differs."""
+    d_cols = [c.lower() for c in rel.columns]
+    d_types = [str(t) for t in rel.types]
+    d_rows = rel.fetchall()
+    # Type lint: the driver's value hash is dtype-sensitive (HUGEINT /
+    # DECIMAL / DOUBLE serialize differently from Spark's BIGINT), so
+    # every oracle column must land in the exact-comparable set.
+    bad_types = [
+        (c, t)
+        for c, t in zip(d_cols, d_types)
+        if t not in ALLOWED_ORACLE_TYPES
+    ]
+    if bad_types:
+        return f"TYPELINT non-exact oracle column types: {bad_types}"
+    sc, sr = df_rows([c.lower() for c in s_cols], s_rows)
+    dc, dr = df_rows(d_cols, d_rows)
+    if sc != dc:
+        return f"columns {sc} vs {dc}"
+    if len(sr) != len(dr):
+        return (f"rowcount {len(sr)} vs {len(dr)}\n"
+                f"  spark sample: {sr[:3]}\n  duck  sample: {dr[:3]}")
+    mism = [i for i, (a, b) in enumerate(zip(sr, dr)) if a != b]
+    if mism:
+        i = mism[0]
+        return (f"{len(mism)}/{len(sr)} rows differ; first @{i}:\n"
+                f"  cols : {sc}\n  spark: {sr[i]}\n  duck : {dr[i]}")
+    return None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("oracle-parity")
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_views(sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -71,53 +112,20 @@ def main():
             continue
         dt = time.monotonic() - t0
         if name not in oracles:
-            ok = len(s_rows) >= 0
             print(f"ok   {name}: rows-only ({len(s_rows)} rows, {dt:.1f}s)")
             n_pass += 1
             continue
         try:
-            rel = con.sql(oracles[name])
-            d_cols = [c.lower() for c in rel.columns]
-            d_types = [str(t) for t in rel.types]
-            d_rows = rel.fetchall()
+            problem = mismatch(s_cols, s_rows, con.sql(oracles[name]))
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
             n_fail += 1
             continue
-        # Type lint: the driver's value hash is dtype-sensitive (HUGEINT /
-        # DECIMAL / DOUBLE serialize differently from Spark's BIGINT), so
-        # every oracle column must land in the exact-comparable set.
-        bad_types = [
-            (c, t)
-            for c, t in zip(d_cols, d_types)
-            if t not in ALLOWED_ORACLE_TYPES
-        ]
-        if bad_types:
-            print(f"FAIL {name}: TYPELINT non-exact oracle column types: {bad_types}")
+        if problem:
+            print(f"FAIL {name}: {problem}")
             n_fail += 1
             continue
-        sc, sr = df_rows([c.lower() for c in s_cols], s_rows)
-        dc, dr = df_rows(d_cols, d_rows)
-        if sc != dc:
-            print(f"FAIL {name}: columns {sc} vs {dc}")
-            n_fail += 1
-            continue
-        if len(sr) != len(dr):
-            print(f"FAIL {name}: rowcount {len(sr)} vs {len(dr)}")
-            print("  spark sample:", sr[:3])
-            print("  duck  sample:", dr[:3])
-            n_fail += 1
-            continue
-        mism = [i for i, (a, b) in enumerate(zip(sr, dr)) if a != b]
-        if mism:
-            i = mism[0]
-            print(f"FAIL {name}: {len(mism)}/{len(sr)} rows differ; first @{i}:")
-            print("  cols :", sc)
-            print("  spark:", sr[i])
-            print("  duck :", dr[i])
-            n_fail += 1
-            continue
-        print(f"PASS {name} ({len(sr)} rows, {dt:.1f}s)")
+        print(f"PASS {name} ({len(s_rows)} rows, {dt:.1f}s)")
         n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
     return 1 if n_fail else 0

@@ -113,27 +113,3 @@ def test_occurrences_array_remove_matches_filter_random(spark):
         ]
     ).collect()
     assert all(all(row) for row in checks)
-
-
-def test_with_sentiment_matches_sentiment_cols_random(spark):
-    """The staged with_sentiment projection must be row-identical to
-    the inline sentiment_cols trees on random lexicon-dense texts."""
-    rng = random.Random(45054)
-    vocab = ["good", "bad", "fast", "slow", "great", "error", "dup",
-             "merge", "big", "small", "filler", "words", ""]
-    rows = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 30))))
-        for i in range(300)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from horseman_article_parser_spark.functions import textstats as TS
-
-    staged = TS.with_sentiment(docs).select(
-        "doc_id", "sentiment_score", "comparative_x1e6", "sentiment_label"
-    )
-    toked = docs.withColumn("_toks", TS.tokens_col("text"))
-    cols = TS.sentiment_cols(F.col("_toks"), pretokenized=True)
-    inline = toked.select("doc_id", *[c.alias(n) for n, c in cols.items()])
-    assert sorted(map(tuple, staged.collect())) == sorted(
-        map(tuple, inline.collect())
-    )

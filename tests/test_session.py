@@ -1,0 +1,23 @@
+"""Session factory: the package ships to executors once per context."""
+
+import os
+import sys
+
+from horseman_article_parser_spark import session
+
+
+def test_ship_package_once_per_context(spark):
+    """get_spark already shipped the package; further calls (every
+    query's `_prep` makes one) add no Python include and no
+    sys.path entry."""
+    sc = spark.sparkContext
+    includes, path = list(sc._python_includes), list(sys.path)
+    session._ship_package(spark)
+    session._ship_package(spark)
+    assert sc._python_includes == includes
+    assert sys.path == path
+    shipped = [n for n in includes
+               if n.startswith("horseman_article_parser_spark-")]
+    assert len(shipped) == 1
+    # the zip lives in this process's own temp dir, removed at exit
+    assert os.path.exists(os.path.join(session._zip_dir(), shipped[0]))

@@ -1,23 +1,30 @@
-"""textstats regressions (keywords/keyphrases edge cases)."""
+"""textstats regressions (keywords/keyphrases edge cases, language ID)."""
 
 from horseman_article_parser_spark.functions.textstats import (
-    keyphrases_topk,
-    keywords_topk,
+    keywords_phrases_batch,
 )
 
 
+def _grams(spark, rows, kind, **kw):
+    """(doc_id, gram, tf, rank) of the `kind` rows ('term' | 'phrase')
+    that keywords_phrases_batch emits for `rows` of (doc_id, text)."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = keywords_phrases_batch(docs, **kw).filter(f"kind = '{kind}'")
+    return [(r.doc_id, r.gram, r.tf, r.rank)
+            for r in out.orderBy("doc_id", "rank").collect()]
+
+
 def test_keyphrases_short_docs_do_not_crash(spark):
-    # docs with < n tokens used to make sequence(0, size-n) DESCEND
-    # (Spark defaults step to -1), crashing slice() under ANSI mode;
-    # they must instead yield zero phrases, matching the oracle.
-    docs = spark.createDataFrame(
+    # docs with fewer tokens than the gram length must yield zero
+    # phrases, matching the oracle.
+    rows = _grams(
+        spark,
         [(1, "solo"), (2, ""), (3, "budget report"), (4, "three word doc")],
-        ["doc_id", "text"],
+        "phrase", k_phrases=5, lengths=(2,),
     )
-    rows = keyphrases_topk(docs, k=5, n=2).collect()
     by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r["phrase"])
+    for doc_id, phrase, _tf, _rank in rows:
+        by_doc.setdefault(doc_id, []).append(phrase)
     assert 1 not in by_doc and 2 not in by_doc
     assert by_doc.get(3) == ["budget report"]
     assert set(by_doc.get(4, [])) == {"three word", "word doc"}
@@ -33,7 +40,8 @@ def test_keywords_pos_gate_drops_verbs_and_adverbs(spark):
     text = ("the runner was running quickly past the tower while the "
             "tower meeting heard Paris said nothing about the tower")
     docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    terms = {r["term"] for r in keywords_topk(docs, k=10).collect()}
+    terms = {g for _, g, _, _ in _grams(spark, [(1, text)], "term",
+                                       k_terms=10)}
     assert "tower" in terms and "runner" in terms and "meeting" in terms
     assert "Paris" in terms  # proper-noun bypass
     assert "running" not in terms and "quickly" not in terms
@@ -48,8 +56,8 @@ def test_keyphrases_pos_gate_keeps_adjective_noun(spark):
     verb/adverb spans ('running quickly')."""
     text = ("economic growth economic growth running quickly "
             "budget meeting budget meeting")
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    phrases = {r["phrase"] for r in keyphrases_topk(docs, k=10, n=2).collect()}
+    phrases = {g for _, g, _, _ in _grams(spark, [(1, text)], "phrase",
+                                         k_phrases=10, lengths=(2,))}
     assert "economic growth" in phrases and "budget meeting" in phrases
     assert "running quickly" not in phrases
 
@@ -70,37 +78,59 @@ def test_keywords_acronym_retention(spark):
 
 
 def test_keywords_topk_deterministic_ties(spark):
-    docs = spark.createDataFrame([(1, "zebra apple zebra apple mango")],
-                                 ["doc_id", "text"])
-    rows = keywords_topk(docs, k=2).collect()
-    assert [(r["term"], r["tf"], r["rank"]) for r in rows] == [
+    rows = _grams(spark, [(1, "zebra apple zebra apple mango")], "term",
+                  k_terms=2)
+    assert [(g, tf, rk) for _, g, tf, rk in rows] == [
         ("apple", 2, 1), ("zebra", 2, 2)]
 
 
-def test_trigram_langid_detects_all_profile_languages(spark):
-    """N1 trigram model: every LANG_SAMPLES sentence (52 languages,
-    incl. Cyrillic/Greek/Japanese scripts) must detect as itself, with
-    the reference's iso6391+iso6393 pair (language.js:6-13,26-46)."""
-    import __spark_entry__ as entry
+def _langid(spark, texts):
+    """(iso6391, iso6393, best_score) of langid_batch_col per text."""
     from horseman_article_parser_spark.functions.textstats import (
-        ISO3_TO_1,
-        langid_struct_col,
+        lang_normtext_col,
+        langid_batch_col,
     )
 
-    rows = [(iso3, text) for iso3, text in sorted(entry.LANG_SAMPLES.items())]
-    df = spark.createDataFrame(rows, ["want", "txt"])
-    got = df.select("want", langid_struct_col("txt").alias("lid")).collect()
-    for r in got:
-        assert r["lid"]["iso6393"] == r["want"], r
-        assert r["lid"]["iso6391"] == ISO3_TO_1[r["want"]], r
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, txt string")
+    lid = langid_batch_col(lang_normtext_col("txt")).alias("lid")
+    return [tuple(r.lid) for r in df.select("i", lid).orderBy("i").collect()]
+
+
+def test_trigram_langid_detects_all_profile_languages(spark):
+    """N1 trigram model: every LANG_SAMPLES sentence (every profile
+    language, incl. Cyrillic/Greek/Japanese scripts) must detect as
+    itself, with the reference's iso6391+iso6393 pair
+    (language.js:6-13,26-46)."""
+    import __spark_entry__ as entry
+    from horseman_article_parser_spark.functions.textstats import ISO3_TO_1
+
+    want = sorted(entry.LANG_SAMPLES)
+    got = _langid(spark, [entry.LANG_SAMPLES[iso3] for iso3 in want])
+    for iso3, (iso1, got3, score) in zip(want, got):
+        assert (iso1, got3) == (ISO3_TO_1[iso3], iso3), (iso3, got3)
+        assert score > 0, iso3
 
 
 def test_trigram_langid_empty_defaults_to_english(spark):
-    from horseman_article_parser_spark.functions.textstats import langid_struct_col
+    for iso1, iso3, score in _langid(spark, ["", "12345 67890"]):
+        assert (iso1, iso3, score) == ("en", "eng", 0)
 
-    df = spark.createDataFrame([("",), ("12345 67890",)], ["txt"])
-    for r in df.select(langid_struct_col("txt").alias("lid")).collect():
-        assert r["lid"]["iso6393"] == "eng" and r["lid"]["iso6391"] == "en"
+
+def test_langid_batch_kernel_edge_texts(spark):
+    """Texts that score zero everywhere and mixed-script texts: the
+    kernel's winner and best_score equal what the DuckDB oracle's score
+    algebra gives for the same texts."""
+    import __spark_entry__ as entry
+
+    s = entry.LANG_SAMPLES
+    got = _langid(spark, [
+        "",                                 # all-zero -> eng/en
+        "zzq xqj qqv",                      # Latin chars, no hits
+        s["rus"] + " " + s["fra"],          # mixed script
+        s["cmn"] + " le la les et",
+    ])
+    assert got == [("en", "eng", 0), ("en", "eng", 0),
+                   ("fr", "fra", 132), ("zh", "cmn", 150)]
 
 
 def test_bpe_token_count_pretokenizer(spark):
@@ -142,38 +172,14 @@ def test_script_gates_are_identities():
             assert pat.search(tg), (lang, tg)
 
 
-def test_langid_gated_equals_ungated(spark):
-    """The script gate is a pure runtime optimization: scores with and
-    without gates agree on every sample."""
-    import __spark_entry__ as entry
-    from horseman_article_parser_spark.functions import textstats as TS
-
-    rows = [(k, v) for k, v in sorted(entry.LANG_SAMPLES.items())]
-    df = spark.createDataFrame(rows, ["want", "txt"]).withColumn(
-        "_nt", TS.lang_normtext_col("txt")
-    )
-    gated = TS.trigram_lang_scores(TS.F.col("_nt"), prenormalized=True)
-    ungated = TS.trigram_lang_scores(
-        TS.F.col("_nt"), dict(TS.LANG_TRIGRAMS), prenormalized=True
-    )
-    sel = df.select(
-        "want",
-        *[gated[lang].alias(f"g_{lang}") for lang in sorted(gated)],
-        *[ungated[lang].alias(f"u_{lang}") for lang in sorted(ungated)],
-    )
-    for r in sel.collect():
-        for lang in gated:
-            assert r[f"g_{lang}"] == r[f"u_{lang}"], (r["want"], lang)
-
-
 def test_keyphrases_pooled_lengths(spark):
     """Variable-length keyphrase pooling: 2- and 3-gram noun phrases
     rank together (keywordParser.js:32-77 spans any length)."""
     text = ("annual budget report annual budget report annual budget "
             "report city council city council")
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    rows = keyphrases_topk(docs, k=10, n=(2, 3)).collect()
-    got = {r["phrase"]: (r["tf"], r["rank"]) for r in rows}
+    rows = _grams(spark, [(1, text)], "phrase", k_phrases=10,
+                  lengths=(2, 3))
+    got = {g: (tf, rk) for _, g, tf, rk in rows}
     assert "annual budget report" in got  # 3-gram present
     assert "annual budget" in got and "city council" in got
     # tf ordering: 'annual budget' tf=3 beats 'city council' tf=2 and
@@ -190,7 +196,7 @@ def test_latin_gate_identity_invariant():
     LATIN_KERNEL_CLASS itself (not Unicode names) guards the exact
     failure mode: a future trigram whose only Latin letters fall
     outside the kernel class would silently zero that language in the
-    kernel while the Column-algebra path still scores it."""
+    kernel while the DuckDB oracle still scores it."""
     import re
 
     from horseman_article_parser_spark.functions.textstats import (
@@ -205,136 +211,6 @@ def test_latin_gate_identity_invariant():
             continue
         for tg in tgs:
             assert latin_re.search(tg), (lang, tg)
-
-
-def test_langid_gate_flags_identity(spark):
-    """The materialized script-gate-flags path must produce the exact
-    same winners and scores as the ungated path on every sample
-    language (gates are an identity, short-circuit only)."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
-    from horseman_article_parser_spark.functions import textstats as TS
-
-    langs = sorted(TS.LANG_TRIGRAMS)
-    docs = spark.createDataFrame(
-        [(i, entry.LANG_SAMPLES[lang]) for i, lang in enumerate(langs)],
-        ["doc_id", "txt"],
-    ).withColumn("_nt", TS.lang_normtext_col("txt")).withColumn(
-        "_gf", TS.script_gate_flags_col(F.col("_nt"))
-    )
-    # Per-score identity, compared in CHUNKS of languages: a single
-    # select carrying all |langs|x15 plain terms PLUS the gated copies
-    # (~3000+ expression nodes at 105 languages) OOMs the driver during
-    # planning — and per-language score equality on every sample is the
-    # stronger form of the winner-level identity anyway.
-    plain_scores = TS.trigram_lang_scores(F.col("_nt"), prenormalized=True)
-    gated_scores = TS.trigram_lang_scores(F.col("_nt"), prenormalized=True,
-                                          gate_flags=F.col("_gf"))
-    chunk = 15
-    for start in range(0, len(langs), chunk):
-        part = langs[start:start + chunk]
-        rows = docs.select(
-            "doc_id",
-            *[plain_scores[lg].alias(f"p_{lg}") for lg in part],
-            *[gated_scores[lg].alias(f"g_{lg}") for lg in part],
-        ).collect()
-        assert len(rows) == len(langs)
-        for r in rows:
-            for lg in part:
-                assert r[f"p_{lg}"] == r[f"g_{lg}"], (lg, r.doc_id)
-
-
-def test_langid_batch_kernel_matches_column_algebra(spark):
-    """The Arrow-batched scale kernel (langid_batch_col) must be
-    BIT-EXACT with the declarative Column-algebra path — same winner,
-    same iso codes, same best_score — on every sample language, on
-    mixed-script text, and on texts that score zero everywhere. The
-    kernel exists because codegen aborts ('Code grows beyond 64 KB')
-    at 70x15 trigram terms and the projection runs interpreted; see
-    langid_batch_col's docstring."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
-    from horseman_article_parser_spark.functions import textstats as TS
-
-    langs = sorted(TS.LANG_TRIGRAMS)
-    rows = [(i, entry.LANG_SAMPLES[lang]) for i, lang in enumerate(langs)]
-    n = len(rows)
-    rows += [
-        (n, ""),                                   # all-zero -> eng/en
-        (n + 1, "zzq xqj qqv"),                    # Latin chars, no hits
-        (n + 2, entry.LANG_SAMPLES["rus"] + " " +
-                entry.LANG_SAMPLES["fra"]),        # mixed script
-        (n + 3, entry.LANG_SAMPLES["cmn"] + " le la les et"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "txt"]).withColumn(
-        "_nt", TS.lang_normtext_col("txt")
-    )
-    scores = TS.trigram_lang_scores(F.col("_nt"), prenormalized=True)
-    ref_struct = TS.langid_from_scores(scores)
-    ref_best = F.greatest(*scores.values())
-    kern = TS.langid_batch_col(F.col("_nt"))
-    got = docs.select(
-        "doc_id",
-        ref_struct["iso6391"].alias("r1"), ref_struct["iso6393"].alias("r3"),
-        ref_best.alias("rb"),
-        kern["iso6391"].alias("k1"), kern["iso6393"].alias("k3"),
-        kern["best_score"].alias("kb"),
-    ).collect()
-    assert len(got) == n + 4
-    for r in got:
-        assert (r.k1, r.k3, r.kb) == (r.r1, r.r3, r.rb), r
-
-def test_keywords_kernel_matches_declarative(spark):
-    """The Arrow keywords/keyphrases kernel (keywords_phrases_batch)
-    must be BIT-EXACT with the declarative keywords_topk(10) ∪
-    keyphrases_topk(8, (2,3)) union the driver query used to run —
-    same grams, tf, ranks, and HALF_UP-rounded score_x1e9 — across
-    testdata docs plus hand-built edge cases (ties broken term-asc,
-    capitalized proper nouns passing the gate, suffix-gated words,
-    short/empty docs, phrase edge stopwords, len<=3 phrases)."""
-    import pyspark.sql.functions as F
-    from horseman_article_parser_spark.functions.textstats import (
-        keyphrases_topk,
-        keywords_phrases_batch,
-        keywords_topk,
-    )
-
-    edge = spark.createDataFrame(
-        [
-            (1, "alpha beta alpha Gamma beta alpha of the to in"),
-            (2, ""),
-            (3, "x"),  # single short token: no terms, no phrases
-            (4, "tie tie toe toe moon moon"),  # tf ties -> term asc
-            (5, "quickly running speeded feeling ceiling seed"),
-            (6, "the market the report a summit of data"),
-            (7, "storm Storm STORM sTorm storm"),
-            (8, "ab cd ab cd ab cd"),  # phrases len<=3 dropped ("ab cd" is 5)
-        ],
-        "doc_id long, text string",
-    )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for d in (edge, docs.select("doc_id", "text")):
-        kws = keywords_topk(d, k=10).select(
-            "doc_id", F.lit("term").alias("kind"),
-            F.col("term").alias("gram"), "tf", "rank",
-            F.lit(None).cast("long").alias("score_x1e9"),
-        )
-        phr = keyphrases_topk(d, k=8, n=(2, 3)).select(
-            "doc_id", F.lit("phrase").alias("kind"),
-            F.col("phrase").alias("gram"), "tf", "rank",
-            F.round(F.col("score") * 1_000_000_000).cast("long")
-            .alias("score_x1e9"),
-        )
-        want = kws.unionByName(phr)
-        got = keywords_phrases_batch(d, k_terms=10, k_phrases=8,
-                                     lengths=(2, 3))
-        assert got.schema == want.schema or [
-            (f.name, f.dataType) for f in got.schema
-        ] == [(f.name, f.dataType) for f in want.schema]
-        diff = want.exceptAll(got).unionAll(got.exceptAll(want))
-        assert diff.count() == 0, diff.limit(20).collect()
 
 
 def test_normtext_positive_class_equivalence():
@@ -401,30 +277,3 @@ def test_text_quality_kernel_matches_declarative(spark):
         b = sorted(map(tuple, kern.collect()))
         assert a == b, next(
             (x, y) for x, y in zip(a, b) if x != y)
-
-
-def test_sentiment_kernel_matches_declarative(spark):
-    """sentiment_batch must be BIT-EXACT with with_sentiment (inline
-    staged algebra) and its score must equal the explode→broadcast-join
-    path's sum (sentiment_via_join) over testdata + fixtures."""
-    from horseman_article_parser_spark.functions import textstats as TS
-
-    edge = spark.createDataFrame(
-        ADVERSARIAL_TEXTS, "doc_id long, text string")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for d in (edge, docs.select("doc_id", "text")):
-        decl = TS.with_sentiment(d).select(
-            "doc_id", "sentiment_score", "comparative_x1e6",
-            "sentiment_label")
-        kern = TS.sentiment_batch(d)
-        a = sorted(map(tuple, decl.collect()))
-        b = sorted(
-            (r.doc_id, r.sentiment_score, r.comparative_x1e6,
-             r.sentiment_label)
-            for r in kern.collect())
-        assert a == b, next((x, y) for x, y in zip(a, b) if x != y)
-        # the join-path twin agrees on the score (score_join column)
-        jn = {r.doc_id: r.sentiment_score
-              for r in TS.sentiment_via_join(d).collect()}
-        for r in kern.collect():
-            assert jn[r.doc_id] == r.score_join, r

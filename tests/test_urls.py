@@ -77,20 +77,17 @@ def test_sanitize_data_url(spark):
     percent-encoded payloads decode too."""
     import base64
 
-    import pyspark.sql.functions as F
-
     from horseman_article_parser_spark.functions.urls import (
-        sanitize_data_url_cols,
+        with_sanitized_data_url,
     )
 
     sample = "<html><body><script>evil()</script><p>Safe</p></body></html>"
     du = "data:text/html;base64," + base64.b64encode(sample.encode()).decode()
     pct = "data:text/html,%3Cp%3EHi%3C%2Fp%3E"
-    df = spark.createDataFrame([(du,), (pct,)], ["u"])
-    h_off, u_off = sanitize_data_url_cols("u", js_enabled=False)
-    h_on, _ = sanitize_data_url_cols("u", js_enabled=True)
-    rows = df.select(h_off.alias("off"), u_off.alias("nu"),
-                     h_on.alias("on")).collect()
+    df = spark.createDataFrame([(0, du), (1, pct)], ["i", "u"])
+    df = with_sanitized_data_url(df, "u", "off", "nu", js_enabled=False)
+    df = with_sanitized_data_url(df, "u", "on", "nu_on", js_enabled=True)
+    rows = df.orderBy("i").collect()
     assert rows[0].off == "<html><body><p>Safe</p></body></html>"
     assert "<script>" in rows[0].on
     assert base64.b64decode(rows[0].nu.split(",")[1]).decode() == rows[0].off
@@ -107,7 +104,7 @@ def test_sanitize_data_url_malformed_payloads_node_parity(spark):
     import base64
 
     from horseman_article_parser_spark.functions.urls import (
-        sanitize_data_url_cols,
+        with_sanitized_data_url,
     )
 
     def node_b64(payload: str) -> bytes:
@@ -129,12 +126,10 @@ def test_sanitize_data_url_malformed_payloads_node_parity(spark):
     bad_pct = "data:text/html,%ZZbroken"
     good = ("data:text/html;base64,"
             + base64.b64encode(b"<p>fine</p>").decode())
-    df = spark.createDataFrame(
-        [(bad_utf8,), (not_b64,), (b64url,), (mixed,), (bad_pct,), (good,)],
-        ["u"],
-    )
-    h, nu = sanitize_data_url_cols("u", js_enabled=False)
-    rows = df.select(F.col("u"), h.alias("h"), nu.alias("nu")).collect()
+    payloads = [bad_utf8, not_b64, b64url, mixed, bad_pct, good]
+    df = spark.createDataFrame(list(enumerate(payloads)), ["i", "u"])
+    rows = (with_sanitized_data_url(df, "u", "h", "nu", js_enabled=False)
+            .orderBy("i").collect())
     for r in rows[:4]:  # base64 rows: lenient decode + U+FFFD, no catch
         payload = r.u.split(",", 1)[1]
         expect_html = node_b64(payload).decode("utf-8", errors="replace")
@@ -147,44 +142,6 @@ def test_sanitize_data_url_malformed_payloads_node_parity(spark):
     assert rows[4].h == "" and rows[4].nu == bad_pct
     assert rows[5].h == "<p>fine</p>"
     assert rows[5].nu == good  # valid payload round-trips byte-identically
-
-
-def test_with_sanitized_data_url_matches_column_form(spark):
-    """The staged-projection form (with_sanitized_data_url — one
-    evaluation per expensive intermediate; the sf1 hot path) must be
-    bit-for-bit identical to the single-expression column form on every
-    payload class: valid base64, base64url, lenient-decode garbage,
-    invalid UTF-8, percent-encoded, and broken percent."""
-    import base64
-
-    from horseman_article_parser_spark.functions.urls import (
-        sanitize_data_url_cols,
-        with_sanitized_data_url,
-    )
-
-    payloads = [
-        "data:text/html;base64,"
-        + base64.b64encode(
-            b"<html><script>x()</script><p>hi</p></html>"
-        ).decode(),
-        "data:text/html;base64,"
-        + base64.urlsafe_b64encode(b"<p>a?b></p>").decode(),
-        "data:text/html;base64,!!!not-base64!!!",
-        "data:text/html;base64,/w==",
-        "data:text/html,%3Cp%3EHi%3C%2Fp%3E",
-        "data:text/html,%ZZbroken",
-        "data:text/html;base64,A-B_C",
-    ]
-    df = spark.createDataFrame([(p,) for p in payloads], ["u"])
-    for js in (False, True):
-        h, nu = sanitize_data_url_cols("u", js_enabled=js)
-        col_rows = df.select(h.alias("h"), nu.alias("nu")).collect()
-        staged_rows = (
-            with_sanitized_data_url(df, "u", "h", "nu", js_enabled=js)
-            .select("h", "nu")
-            .collect()
-        )
-        assert col_rows == staged_rows
 
 
 def test_b64_junk_positive_class_equivalence():
