@@ -27,16 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from horseman_article_parser_spark.functions.hashing import (
-    MINHASH_P,
-    h32,
     h32_sql,
     minhash_params,
     universal_hash_sql,
 )
 from horseman_article_parser_spark.functions import textstats as TS
 from horseman_article_parser_spark.functions.urls import (
-    amp_candidates_udf,
-    canonicalize_url_udf,
     keep_likely_article_col,
     skip_col,
 )

@@ -213,14 +213,6 @@ def canonicalize_url_udf(urls: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(canonicalize_url, na_action="ignore")
 
 
-@pandas_udf(ArrayType(StringType()))
-def amp_candidates_udf(urls: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Arrow-batched X21: the 4 AMP URL variants per input URL
-    (/root/reference/index.js:325-334)."""
-    for s in urls:
-        yield s.map(amp_candidates, na_action="ignore")
-
-
 _URL_TRANSFORM_STRUCT = StructType(
     [
         StructField("canonical", StringType()),
@@ -237,8 +229,7 @@ def url_transform_struct_udf(
     """Fused Arrow kernel for q_url_transforms: canonicalize(raw) +
     amp_candidates(url) + amp_candidates(canonical) in ONE Python pass.
 
-    Value-identical to chaining canonicalize_url_udf and two
-    amp_candidates_udf calls, but the chain plans as 2-3 stacked
+    Three separate per-column UDFs would plan as 2-3 stacked
     ArrowEvalPython nodes (amp_q consumes the canonical UDF's output,
     so it can never share a node) — three JVM→Python→JVM crossings of
     the same rows. One struct-returning UDF pays the boundary once

@@ -10,7 +10,8 @@ from the canonical page, and — if ≥2 — synthesize the reference's
 Spark shape: ONE fused Arrow pass (mapInPandas) that filters thin rows
 in-kernel, so the canonical fetch happens only for the thin subset — a
 filtered second wave, not a full re-crawl. Fetches inside the kernel
-overlap via the same bounded thread pool the crawl fetch stage uses.
+overlap via `probe.overlapped`, the thread-pool map the crawl fetch
+stage uses. The crawl's own S8 step calls `rescue_thin_page` per URL.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.htmldom import Element, parse_html
+from .probe import overlapped
 
 _WS_RE = re.compile(r"\s+")
 MIN_PARA_CHARS = 60
@@ -116,7 +118,6 @@ def canonical_refetch(
     fetch_fn: Callable[[str], tuple[int, str]],
     id_col: str = "doc_id",
     html_col: str = "html",
-    concurrency: int = 8,
 ) -> DataFrame:
     """(id, html) → (id, used, n_entries, first_para, synth_html).
 
@@ -127,21 +128,11 @@ def canonical_refetch(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            htmls = list(pdf[html_col])
-            if concurrency > 1 and len(htmls) > 1:
-                with ThreadPoolExecutor(
-                    max_workers=min(concurrency, len(htmls))
-                ) as ex:
-                    rescues = list(
-                        ex.map(lambda h: rescue_thin_page(h, fetch_fn), htmls)
-                    )
-            else:
-                rescues = [rescue_thin_page(h, fetch_fn) for h in htmls]
+            rescues = overlapped(lambda h: rescue_thin_page(h, fetch_fn),
+                                 list(pdf[html_col]))
             yield pd.DataFrame({id_col: pdf[id_col], "rescue": rescues})
 
     return pages.select(id_col, html_col).mapInPandas(

@@ -37,7 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 from ..functions.htmldom import Element, parse_html
-from ..functions.partitioning import fan_out
 
 _NEG_TAGS = frozenset("nav aside footer form header noscript template".split())
 _NEG_CLASSES = frozenset(
@@ -552,13 +551,10 @@ def page_candidates(html: str | None) -> list[dict]:
 
 def candidate_features(
     pages: DataFrame, id_col: str = "doc_id", html_col: str = "html",
-    fan_out_scan: bool = False,
 ) -> DataFrame:
     """One Arrow pass: (doc, html) → exploded candidate feature rows.
     Output is narrow (xpath + 18 numeric features); HTML never leaves
     the scan stage."""
-    if fan_out_scan:
-        pages = fan_out(pages)
     out_schema = T.StructType(
         [pages.schema[id_col], T.StructField("candidate", CANDIDATE_STRUCT)]
     )

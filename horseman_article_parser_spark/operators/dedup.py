@@ -53,12 +53,6 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep exactly one row (min id) per normalized-text fingerprint."""
-    w = Window.partitionBy(fingerprint_col(text_col)).orderBy(id_col)
-    return docs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
 # ---------------------------------------------------------- shingles
 
 

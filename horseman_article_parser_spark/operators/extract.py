@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.htmldom import Element, clean_ws, get_by_id, parse_html
-from ..functions.partitioning import fan_out
 
 MAX_LINKS = 1000
 MAX_IMAGES = 500
@@ -620,17 +619,10 @@ def extract_article(
 
 def extract_articles(
     fetched: DataFrame, url_col: str = "url", html_col: str = "html",
-    fan_out_scan: bool = False, fields: frozenset[str] | None = None,
+    fields: frozenset[str] | None = None,
     output_cols: list[str] | None = None,
 ) -> DataFrame:
     """DataFrame op: adds an `article` struct column via one Arrow pass.
-
-    `fan_out_scan=True` lifts a single-split local *scan* to the
-    session's parallelism so all Python workers engage. It inspects the
-    plan's partitioning (`.rdd`), which under AQE can materialize
-    upstream query stages — so it must only be set when `fetched` is a
-    cheap scan/projection, never mid-pipeline (the crawl loop already
-    partitions its fetch wave explicitly).
 
     `fields` prunes which article keys the kernel computes (see
     extract_article). `output_cols` restricts which INPUT columns the
@@ -638,8 +630,6 @@ def extract_articles(
     row) makes a pointless Python→JVM round trip just to be dropped by
     the caller's next select (guide §4.1: only the columns the function
     needs should cross the boundary — in either direction)."""
-    if fan_out_scan:
-        fetched = fan_out(fetched)
     keep = output_cols if output_cols is not None else [
         f.name for f in fetched.schema.fields
     ]

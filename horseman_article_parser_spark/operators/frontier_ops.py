@@ -96,8 +96,8 @@ def slice_frontier(df: DataFrame, start: int, limit: int, seq_col: str = "seq") 
     sorts (or single-partitions) the frontier. Only the ≤ start+limit
     survivors are then ranked (via the range-partitioned
     ordered_zip_with_index, NOT a partition-less window) to drop the
-    first `start`. The old plan put row_number() over an un-partitioned
-    window across the whole frontier — one task owns 10^10 rows.
+    first `start`. A row_number() over an un-partitioned window across
+    the whole frontier would put 10^10 rows in one task.
     """
     k = start + limit
     topk = df.orderBy(seq_col).limit(k)

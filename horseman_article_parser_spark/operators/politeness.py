@@ -48,8 +48,8 @@ def robots_filter(candidates: DataFrame, robots: DataFrame | None, url_col: str 
     # SHUFFLE-FREE longest-prefix resolution: pre-aggregate the (tiny)
     # rules table into one array per host, broadcast it, and resolve the
     # winning rule per row with higher-order functions — the frontier
-    # side never exchanges (the old Window.partitionBy(url) plan
-    # re-shuffled the full candidates×rules product every round).
+    # side never exchanges (a window over url would shuffle the full
+    # candidates×rules product every round).
     rules_by_host = robots.groupBy("host").agg(
         F.collect_list(
             F.struct(

@@ -6,14 +6,15 @@ status check before the expensive full fetch; sites that 405 on HEAD
 fall back to a short GET. In this engine the probe is a pluggable
 `probe_fn(url) -> status` (the sandbox replaces live HTTP with
 deterministic synthetic responses, SURVEY §7.3), and the wave stage is
-a mapInPandas pass with the same bounded thread-pool overlap the fetch
-kernel uses — probes are pure RTT, so overlapping them is the whole
-point.
+a mapInPandas pass through `overlapped`, the bounded thread-pool map
+every fetching kernel uses — probes are pure RTT, so overlapping them
+is the whole point.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -21,6 +22,14 @@ from pyspark.sql import types as T
 
 PROBE_OK_STATUSES = range(200, 400)
 HEAD_FALLBACK_STATUS = 405  # sites that reject HEAD still get a GET
+# In-kernel fetch fan-out: real crawls are RTT-bound, so each Arrow batch
+# overlaps network waits with a bounded thread pool (sleep/IO releases
+# the GIL; extraction stays serial per task so CPU work never
+# oversubscribes the cores the task scheduler already owns). Per-host
+# volume is bounded per round by the politeness budget computed at wave
+# selection; within a wave the reference's worker pool fetches
+# concurrently too (reference scripts/batch-sample-run.js:315-338).
+FETCH_CONCURRENCY = 8
 
 
 def probe_ok(status: int) -> bool:
@@ -28,11 +37,20 @@ def probe_ok(status: int) -> bool:
     return status in PROBE_OK_STATUSES or status == HEAD_FALLBACK_STATUS
 
 
+def overlapped(fn: Callable, items: list) -> list:
+    """[fn(x) for x in items] with up to FETCH_CONCURRENCY calls in
+    flight. `map` keeps input order, so results line up with the input
+    rows whatever order the calls finish in."""
+    if len(items) < 2:
+        return [fn(x) for x in items]
+    with ThreadPoolExecutor(max_workers=min(FETCH_CONCURRENCY, len(items))) as ex:
+        return list(ex.map(fn, items))
+
+
 def probe_urls(
     frontier: DataFrame,
     probe_fn: Callable[[str], int],
     url_col: str = "url",
-    concurrency: int = 8,
 ) -> DataFrame:
     """Add (status int, ok boolean) probe columns; rows keep all input
     columns so the caller filters `ok` before the fetch wave."""
@@ -43,19 +61,10 @@ def probe_urls(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            urls = list(pdf[url_col])
-            if concurrency > 1 and len(urls) > 1:
-                with ThreadPoolExecutor(
-                    max_workers=min(concurrency, len(urls))
-                ) as ex:
-                    statuses = list(ex.map(probe_fn, urls))
-            else:
-                statuses = [probe_fn(u) for u in urls]
+            statuses = overlapped(probe_fn, list(pdf[url_col]))
             pdf = pdf.copy()
             pdf["status"] = statuses
             pdf["ok"] = [probe_ok(s) for s in statuses]

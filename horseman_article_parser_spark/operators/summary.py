@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F

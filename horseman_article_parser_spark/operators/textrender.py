@@ -27,7 +27,6 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 

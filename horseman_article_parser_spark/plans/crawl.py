@@ -49,7 +49,9 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.window import Window
 
 from ..datagen.synthweb import fetch_page
-from ..functions.urls import canonicalize_url, skip_col
+from ..functions.urls import amp_candidates, canonicalize_url, skip_col
+from ..operators.canonical import rescue_thin_page
+from ..operators.extract import ARTICLE_STRUCT, extract_article
 from ..operators.frontier_ops import (
     build_wave0,
     with_host,
@@ -59,6 +61,7 @@ from ..operators.politeness import (
     host_budgets,
     robots_filter,
 )
+from ..operators.probe import overlapped, probe_ok
 from ..operators.seen_filter import BloomSeenFilter, CuckooSeenFilter, ExactSeenFilter
 from .checkpoint import CrawlStore
 
@@ -69,6 +72,17 @@ SEQ_STRIDE = 1 << 40
 # order-preserving, so it replaces a dense rank without a ranking job.
 # Bounds: wave_size * 1024 must stay < SEQ_STRIDE (wave_size < 2^30).
 LINK_POS_STRIDE = 1 << 10
+# T5 retry ladder (CrawlConfig.retry_failed): a failing URL is tried at
+# most this many times in all.
+MAX_ATTEMPTS = 3
+# S7 AMP static race (CrawlConfig.amp_static_first): the static page wins
+# when it returns 200 with at least this much HTML — the reference
+# prefers static when the background AMP fetch yields >=1000 chars
+# (reference index.js:322-366,485-497).
+AMP_MIN_CHARS = 1000
+# T2 token buckets (CrawlConfig.token_buckets): a host banks at most this
+# many rounds of its refill.
+BUCKET_CAP_ROUNDS = 2
 
 
 @dataclass
@@ -85,6 +99,10 @@ class CrawlConfig:
     n_shards: int = 32
     total_bloom_bits: int = 1 << 24
     max_depth: int = 8
+    # Callers size their seed frontier with it
+    # (build_seed_frontier(n_hosts=cfg.n_hosts)). The scheduler does not
+    # read it: fetch_page renders cross-host links over
+    # datagen.synthweb.N_HOSTS_DEFAULT (50) hosts whatever this says.
     n_hosts: int = 50
     # synthetic-page content multiplier (datagen.synthweb.page_spec):
     # 1 = small parity fixtures; ~20 ≈ realistic 30 KB article pages
@@ -96,18 +114,14 @@ class CrawlConfig:
     fetch_rtt_ms: float = 0.0
     # T5 retry ladder: re-queue non-200 fetches with attempt+1 and a
     # linear round backoff (not_before = round + 1 + attempt), up to
-    # max_attempts total tries. Off by default: retries extend the
+    # MAX_ATTEMPTS total tries. Off by default: retries extend the
     # reference's semantics (its batch loop retries per-URL in-process),
     # and the crawl-order parity fixtures pin the no-retry schedule.
     retry_failed: bool = False
-    max_attempts: int = 3
     # S7 AMP static race: try AMP candidate URLs first and prefer the
-    # static page when it returns 200 with >= amp_min_chars of HTML
-    # (/root/reference/index.js:322-366,485-497: prefer static when the
-    # background AMP fetch yields >=1000 chars). Adds a `source` column
-    # ('amp' | 'dynamic') to results for the A2 per-source rollup.
+    # static page when it returns 200 with >= AMP_MIN_CHARS of HTML.
+    # Results carry `source` ('amp' | 'dynamic') for the A2 rollup.
     amp_static_first: bool = False
-    amp_min_chars: int = 1000
     # S5 HTTP probe: preflight status check before the full fetch
     # (httpProbe, /root/reference/scripts/batch-sample-run.js:34-57) —
     # a failing probe (not ok and not 405) skips the page fetch and
@@ -120,39 +134,39 @@ class CrawlConfig:
     # when the canonical page is rich (/root/reference/index.js:
     # 1243-1336). Off by default: parity fixtures pin the plain pages.
     canonical_rescue: bool = False
-    # In-kernel fetch fan-out: real crawls are RTT-bound, so each Arrow
-    # batch overlaps network waits with a bounded thread pool (sleep/IO
-    # releases the GIL; extraction stays serial per task so CPU work
-    # never oversubscribes the cores the task scheduler already owns).
-    # Per-host volume is bounded per ROUND by the politeness budget
-    # computed at wave selection; within a wave the reference's worker
-    # pool fetches concurrently too
-    # (/root/reference/scripts/batch-sample-run.js:315-338).
-    fetch_concurrency: int = 8
     # T2 persistent per-host token buckets: each round a host's budget
     # is min(cap, carried_tokens + refill) where refill is its
     # robots-derived budget (else default_host_budget) and cap =
-    # bucket_cap_rounds * refill. Unused budget carries over — the
+    # BUCKET_CAP_ROUNDS * refill. Unused budget carries over — the
     # stateful generalization of the per-wave cap (the reference has no
     # token bucket at all; the north rule adds it). State checkpoints to
     # host_state/<round> like every other table, so resume is exact.
     token_buckets: bool = False
-    bucket_cap_rounds: int = 2
 
 
+# attempt counts retries (T5); not_before is the earliest eligible round,
+# the round-based analog of the reference's linear 1000·attempt ms
+# backoff (reference scripts/batch-crawl.js:146-147).
 FRONTIER_COLS = ["url", "seq", "host", "depth", "priority", "attempt", "not_before"]
 
 
-def _ensure_frontier_cols(df: DataFrame) -> DataFrame:
-    """Backward/forward-compatible pending schema: attempt (retry count,
-    T5) and not_before (earliest eligible round, the round-based analog
-    of the reference's linear 1000·attempt ms backoff,
-    /root/reference/scripts/batch-crawl.js:146-147) default to 0."""
-    if "attempt" not in df.columns:
-        df = df.withColumn("attempt", F.lit(0))
-    if "not_before" not in df.columns:
-        df = df.withColumn("not_before", F.lit(0).cast("long"))
-    return df
+def new_frontier_rows(df: DataFrame, seq: Column, depth: Column | int = 0,
+                      priority: Column | float = 0.0) -> DataFrame:
+    """Pending rows (FRONTIER_COLS) for URLs entering the frontier: `df`
+    carries url and host; attempt 0 and not_before 0 make them eligible
+    at once. Every pending writer builds its rows here, so the parquet
+    files appended under one pending/<round> all share one schema — a
+    file with fewer or differently typed columns makes the merged read
+    resolve to an arbitrary footer."""
+    return df.select(
+        "url",
+        seq.alias("seq"),
+        "host",
+        F.lit(depth).cast("int").alias("depth"),
+        F.lit(priority).alias("priority"),
+        F.lit(0).alias("attempt"),
+        F.lit(0).cast("long").alias("not_before"),
+    )
 
 
 def _result_counts() -> list[Column]:
@@ -190,20 +204,16 @@ class CrawlScheduler:
         self.store = CrawlStore(store_dir)
         self.robots = robots
         self.budgets = host_budgets(robots)
-        if fetch_fn is not None:
-            self.fetch_fn = fetch_fn
-        elif self.config.fetch_scale != 1 or self.config.fetch_rtt_ms > 0:
+        if fetch_fn is None:
             scale = self.config.fetch_scale
             rtt_s = self.config.fetch_rtt_ms / 1000.0
 
-            def _fetch(u: str) -> tuple[int, str]:
+            def fetch_fn(u: str) -> tuple[int, str]:
                 if rtt_s > 0:
                     time.sleep(rtt_s)
                 return fetch_page(u, scale=scale)
 
-            self.fetch_fn = _fetch
-        else:
-            self.fetch_fn = fetch_page
+        self.fetch_fn = fetch_fn
         mode = self.config.seen_mode
         if mode == "bloom":
             self.seen = BloomSeenFilter(
@@ -235,15 +245,7 @@ class CrawlScheduler:
         the reference drops them (they are never re-queued there)."""
         cfg = self.config
         wave0 = build_wave0(seeds, cfg.round0_limit, cfg.unique_hosts_round0)
-        pending = wave0.select(
-            "url",
-            "seq",
-            "host",
-            F.lit(0).alias("depth"),
-            F.lit(0.0).alias("priority"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).cast("long").alias("not_before"),
-        )
+        pending = new_frontier_rows(wave0, F.col("seq"))
         claimed = self.seen.claim_unseen(pending)
         self.store.write(claimed, "pending", -1)
         self.store.commit_round(-1, self.seen.version)
@@ -270,29 +272,22 @@ class CrawlScheduler:
         The kernel also returns `targets`: `canonicalize_url` of each
         `article.links` href, in link order (null where unparseable), so
         link expansion needs no second Python stage. Results drop it."""
-        from ..functions.urls import amp_candidates
-        from ..operators.extract import ARTICLE_STRUCT, extract_article
-
         fetch_fn = self.fetch_fn
+        probe_fn = self.probe_fn
         amp_first = self.config.amp_static_first
-        amp_min = self.config.amp_min_chars
+        rescue = self.config.canonical_rescue
+        probe_first = self.config.probe_first
         parts = self.spark.sparkContext.defaultParallelism
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in wave.schema.fields
         ) + (f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
              ", `targets` array<string>")
 
-        rescue = self.config.canonical_rescue
-        probe_first = self.config.probe_first
-        probe_fn = getattr(self, "probe_fn", None)
-
         def fetch_one(u: str) -> tuple[int, str, str, str]:
             """(status, final_url, source, html) with optional HEAD→GET
             probe (S5), AMP race (S7) and canonical rescue (S8)."""
             cached = None  # (status, html) when the probe fallback was a full GET
             if probe_first:
-                from ..operators.probe import probe_ok
-
                 if probe_fn is not None:
                     st0 = probe_fn(u)
                 else:
@@ -305,44 +300,21 @@ class CrawlScheduler:
             if amp_first:
                 for cu in amp_candidates(u) or []:
                     st, html = fetch_fn(cu)
-                    if st == 200 and html and len(html) >= amp_min:
+                    if st == 200 and html and len(html) >= AMP_MIN_CHARS:
                         return st, cu, "amp", html
-            st, html = cached if cached is not None else fetch_fn(u)
+            st, html = cached or fetch_fn(u)
             if rescue and st == 200 and html:
-                from ..operators.canonical import (
-                    MIN_PARAS,
-                    canonical_href,
-                    live_summary_html,
-                    substantial_paragraphs,
-                )
-
-                if len(substantial_paragraphs(html)) < MIN_PARAS:
-                    canon = canonical_href(html)
-                    if canon:
-                        st2, html2 = fetch_fn(canon)
-                        if st2 == 200 and html2:
-                            cp = substantial_paragraphs(html2)
-                            if len(cp) >= MIN_PARAS:
-                                return st, u, "canonical", live_summary_html(cp)
+                rescued = rescue_thin_page(html, fetch_fn)
+                if rescued["used"]:
+                    return st, u, "canonical", rescued["synth_html"]
             return st, u, "dynamic", html
-
-        concurrency = max(1, self.config.fetch_concurrency)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if not len(pdf):
                     continue
                 pdf = pdf.copy()
-                urls = list(pdf["url"])
-                # overlap RTTs: map preserves input order, so results stay
-                # aligned with the wave rows regardless of completion order
-                if concurrency > 1 and len(urls) > 1:
-                    with ThreadPoolExecutor(
-                        max_workers=min(concurrency, len(urls))
-                    ) as ex:
-                        fetched = list(ex.map(fetch_one, urls))
-                else:
-                    fetched = [fetch_one(u) for u in urls]
+                fetched = overlapped(fetch_one, list(pdf["url"]))
                 status = []
                 source = []
                 articles = []
@@ -385,7 +357,7 @@ class CrawlScheduler:
             hosts = hosts.join(prev, "host", "left")
         else:
             hosts = hosts.withColumn("tokens", F.lit(None).cast("long"))
-        cap = refill * cfg.bucket_cap_rounds
+        cap = refill * BUCKET_CAP_ROUNDS
         avail = F.least(cap, F.coalesce(F.col("tokens"), F.lit(0)) + refill)
         return hosts.select(
             "host",
@@ -411,9 +383,7 @@ class CrawlScheduler:
         spark = self.spark
         t0 = time.monotonic()
 
-        pending = _ensure_frontier_cols(
-            self.store.read(spark, "pending", round_no - 1)
-        )
+        pending = self.store.read(spark, "pending", round_no - 1)
 
         # --- wave selection: backoff gate → robots → politeness → top-k
         eligible = pending.filter(F.col("not_before") <= round_no)
@@ -430,11 +400,9 @@ class CrawlScheduler:
             order_cols=["priority", "seq"],
             n_salts=cfg.n_salts,
         )
-        # wave cut = TakeOrderedAndProject: per-partition top-k + merge.
-        # The previous plan ranked the ENTIRE polite frontier through a
-        # range repartition + eager checkpoint + offsets collect (3 jobs
-        # and a full shuffle) only to keep the first wave_size rows; the
-        # top-k never materializes more than wave_size rows per task.
+        # wave cut = TakeOrderedAndProject: per-partition top-k + merge,
+        # so no task materializes more than wave_size rows and the
+        # polite frontier is never ranked or shuffled as a whole.
         # pos is then a window over the ALREADY-LIMITED rows — bounded
         # by wave_size (a config constant), never by frontier size.
         top = polite.orderBy("priority", "seq").limit(cfg.wave_size)
@@ -444,15 +412,15 @@ class CrawlScheduler:
         # materialize the cache once, then the wave checkpoint write and
         # the fetch+extract+results job run CONCURRENTLY from a small
         # driver pool (guide §2.6 — independent jobs back-fill each
-        # other's stragglers; both only read the cached wave). The wave
-        # write costs ~0.4 s/round that was previously serial.
+        # other's stragglers; both only read the cached wave), so the
+        # wave write (~0.4 s/round) overlaps the fetch.
         wave.count()
 
         def _write_wave() -> None:
             # sortWithinPartitions, not orderBy — the wave is a single
             # partition (global pos window), so a local sort preserves
             # the same on-disk order without orderBy's range-sampling
-            # job + exchange per round (r6)
+            # job + exchange per round
             self.store.write(
                 wave.sortWithinPartitions("pos"), "waves", round_no)
             if cfg.token_buckets:
@@ -495,34 +463,24 @@ class CrawlScheduler:
         claimed = self.seen.claim_unseen(
             links, dedup_first=["parent_pos", "pos", "parent_depth"]
         )
-        new_rows = claimed.select(
-            "url", "parent_pos", "pos",
-            (F.col("parent_depth") + 1).alias("depth"),
-        )
+        depth = F.col("parent_depth") + 1
         # deterministic seq for the next generation: an
         # order-preserving ARITHMETIC encode of the (unique) discovery
         # position — no ranking job, no extra shuffle. parent_pos <
         # wave_size and link pos < 1024 (extract caps links at 1000,
         # reference W7), so the encode is injective and ordered
         # exactly like a dense rank.
-        new_frontier = with_host(
-            new_rows.select(
-                "url",
-                (
-                    F.lit((round_no + 1) * SEQ_STRIDE)
-                    + F.col("parent_pos") * LINK_POS_STRIDE
-                    + F.col("pos")
-                ).alias("seq"),
-                F.col("depth").cast("int"),
-                # north rule: priority = link_depth + in-article link score
-                (
-                    F.col("depth")
-                    + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0
-                ).alias("priority"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).cast("long").alias("not_before"),
-            )
-        ).select(*FRONTIER_COLS).observe(new_obs, F.count(F.lit(1)).alias("n"))
+        new_frontier = new_frontier_rows(
+            with_host(claimed),
+            seq=(
+                F.lit((round_no + 1) * SEQ_STRIDE)
+                + F.col("parent_pos") * LINK_POS_STRIDE
+                + F.col("pos")
+            ),
+            depth=depth,
+            # north rule: priority = link_depth + in-article link score
+            priority=depth + F.least(F.col("pos"), F.lit(9)).cast("double") / 10.0,
+        ).observe(new_obs, F.count(F.lit(1)).alias("n"))
 
         # --- next pending = (pending − wave) ∪ new [∪ retries]
         # wave is <= wave_size rows (a config constant): broadcasting
@@ -537,7 +495,7 @@ class CrawlScheduler:
             # in rounds mirrors the reference's 1000·attempt ms sleep
             retries = articles.filter(
                 (F.col("status") != 200)
-                & (F.col("attempt") + 1 < cfg.max_attempts)
+                & (F.col("attempt") + 1 < MAX_ATTEMPTS)
             ).select(
                 "url", "seq", "host", "depth", "priority",
                 (F.col("attempt") + 1).alias("attempt"),

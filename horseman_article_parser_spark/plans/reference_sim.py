@@ -26,7 +26,7 @@ from ..operators.extract import extract_article
 SEQ_STRIDE = 1 << 40
 LINK_POS_STRIDE = 1 << 10  # must match plans.crawl.LINK_POS_STRIDE
 STREAM_SEQ_BASE = 1 << 60  # must match streaming.frontier_stream
-STREAM_BATCH_SEQ_STRIDE = 1 << 20  # StreamingSeedIngest.batch_seq_stride
+STREAM_BATCH_SEQ_STRIDE = 1 << 20  # must match streaming.frontier_stream
 
 
 def js_url_host(u: str) -> str | None:

@@ -30,10 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.urls import canonicalize_url_udf, skip_col
-from ..operators.frontier_ops import with_host
+from ..operators.frontier_ops import ordered_zip_with_index, with_host
+from ..plans.crawl import new_frontier_rows
 
-# seqs for streamed seeds live above any round-assigned range
+# seqs for streamed seeds live above any round-assigned range; batch b
+# takes [STREAM_SEQ_BASE + b * BATCH_SEQ_STRIDE, ...)
 STREAM_SEQ_BASE = 1 << 60
+BATCH_SEQ_STRIDE = 1 << 20
 
 
 def seed_file_stream(spark: SparkSession, seeds_dir: str,
@@ -55,12 +58,11 @@ class StreamingSeedIngest:
     """foreachBatch bridge: seed stream → seen-filter claim → pending
     store appends. One instance per scheduler store."""
 
-    def __init__(self, scheduler, batch_seq_stride: int = 1 << 20):
+    def __init__(self, scheduler):
         self.scheduler = scheduler
-        self.batch_seq_stride = batch_seq_stride
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cfg = self.scheduler.config
+        # politeness applies at wave selection, not at ingest
         cleaned = (
             batch_df.withColumn("url", canonicalize_url_udf(F.col("url")))
             .filter(F.col("url").isNotNull() & ~skip_col(F.col("url")))
@@ -68,34 +70,20 @@ class StreamingSeedIngest:
         )
         claimed = self.scheduler.seen.claim_unseen(cleaned)
         # deterministic per-batch seq: url-order rank inside the batch
-        from ..operators.frontier_ops import ordered_zip_with_index
-
-        from ..plans.crawl import FRONTIER_COLS
-
         ranked = ordered_zip_with_index(claimed, ["url"], out_col="_idx")
-        base = STREAM_SEQ_BASE + batch_id * self.batch_seq_stride
-        # Emit the FULL frontier schema: pending/<round> holds 7-column
-        # files from init/run_round; appending a 5-column file makes the
-        # merged read resolve to an arbitrary footer (attempt/not_before
-        # silently dropped, or streamed rows read NULL not_before and are
-        # never scheduled). attempt=0 / not_before=0 = immediately eligible.
-        rows = with_host(
-            ranked.select(
-                "url",
-                (F.lit(base) + F.col("_idx")).alias("seq"),
-                F.lit(0).alias("depth"),
-                F.lit(0.0).alias("priority"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).cast("long").alias("not_before"),
-            )
-        ).filter(F.col("host").isNotNull()).select(*FRONTIER_COLS)
+        base = STREAM_SEQ_BASE + batch_id * BATCH_SEQ_STRIDE
+        # the full 7-column frontier row, like every other pending
+        # writer, so the appended file merges with the round's files
+        rows = new_frontier_rows(
+            with_host(ranked).filter(F.col("host").isNotNull()),
+            seq=F.lit(base) + F.col("_idx"),
+        )
         store = self.scheduler.store
         last = store.last_round()
         # the claim made a new seen-filter version between rounds: record
         # it, so a resume after a later crash restores it
         store.commit_round(last, self.scheduler.seen.version)
         rows.write.mode("append").parquet(store.path("pending", last))
-        _ = cfg  # politeness applies at wave selection, not ingest
 
     def start(self, seeds_dir: str, checkpoint_dir: str,
               max_files_per_trigger: int | None = None) -> StreamingQuery:

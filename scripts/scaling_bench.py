@@ -26,7 +26,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 QUICK = "--quick" in sys.argv
-# Wave sizing: with the in-kernel fetch fan-out (fetch_concurrency=8)
+# Wave sizing: with the in-kernel fetch fan-out (FETCH_CONCURRENCY = 8)
 # each executor thread drives 8 in-flight connections, so the wave must
 # be large enough that network time dominates the fixed ~10 s/round of
 # Spark job latency at BOTH levels — exactly the regime of a production

@@ -252,7 +252,7 @@ def test_failed_write_leaves_no_round_thread_running(spark, tmp_store):
 
 def test_retry_ladder_requeues_failed(spark, tmp_path):
     """T5: non-200 fetches re-enter with attempt+1 and linear round
-    backoff, up to max_attempts; parity schedule (retry off) unchanged
+    backoff, up to MAX_ATTEMPTS; parity schedule (retry off) unchanged
     is covered by the other tests."""
     from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
     import pyspark.sql.functions as F
@@ -270,7 +270,7 @@ def test_retry_ladder_requeues_failed(spark, tmp_path):
     )
     cfg = CrawlConfig(wave_size=10, round0_limit=10, unique_hosts_round0=False,
                       default_host_budget=5, n_shards=4, total_bloom_bits=1 << 16,
-                      retry_failed=True, max_attempts=3)
+                      retry_failed=True)
     sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, fetch_fn=flaky_fetch)
     sched.init_from_seeds(seeds)
 
@@ -282,13 +282,48 @@ def test_retry_ladder_requeues_failed(spark, tmp_path):
             row = wave.filter(F.col("url").contains("bad")).collect()[0]
             appearances.append((r, row.attempt))
     # attempt 0 at round 0; backoff not_before=1 -> round 1 (attempt 1);
-    # then not_before = 2+1 = 3 -> round 3 (attempt 2); max_attempts=3
+    # then not_before = 2+1 = 3 -> round 3 (attempt 2); MAX_ATTEMPTS=3
     # stops further retries
     assert appearances == [(0, 0), (1, 1), (3, 2)]
 
 
+def test_out_of_order_fetches_stay_aligned_with_wave_rows(spark, tmp_path):
+    """The fetch pool finishes URLs out of order (earlier URLs sleep
+    longer); every results row still carries its own URL's status and
+    article."""
+    from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
+
+    n = 24
+    done = tmp_path / "done.txt"
+
+    def slow_fetch(url):
+        i = int(url.rsplit("-", 1)[-1])
+        time.sleep((n - i) * 0.02)
+        with open(done, "a") as f:
+            f.write(f"{i}\n")
+        status = 200 if i % 3 else 500
+        return status, f"<html><head><title>{url}</title></head><body><p>x</p></body></html>"
+
+    seeds = spark.createDataFrame(
+        [(f"https://h{i}.x/page-{i}", i) for i in range(n)], "url string, seq long"
+    )
+    cfg = CrawlConfig(wave_size=n, round0_limit=n, n_shards=2, max_depth=0)
+    sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, fetch_fn=slow_fetch)
+    sched.init_from_seeds(seeds)
+    sched.run_round(0)
+
+    finished = [int(x) for x in done.read_text().split()]
+    assert sorted(finished) == list(range(n)) and finished != sorted(finished)
+    rows = sched.store.read(spark, "results", 0).select(
+        "url", "status", "article.title").collect()
+    assert len(rows) == n
+    for url, status, title in rows:
+        i = int(url.rsplit("-", 1)[-1])
+        assert (status, title) == (200 if i % 3 else 500, url)
+
+
 def test_amp_static_first_race(spark, tmp_path):
-    """S7: AMP candidate preferred when it yields >= amp_min_chars;
+    """S7: AMP candidate preferred when it yields >= AMP_MIN_CHARS;
     source column + A2 per-source metrics rollup."""
     from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
     import pyspark.sql.functions as F

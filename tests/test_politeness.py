@@ -92,7 +92,7 @@ def test_budget_enforced_with_hot_host_skew(spark):
 
 def test_token_buckets_accumulate_and_cap(spark, tmp_path):
     """T2: unused per-host budget carries across rounds up to
-    bucket_cap_rounds * refill; consumed budget depletes the bucket."""
+    BUCKET_CAP_ROUNDS * refill; consumed budget depletes the bucket."""
     import pyspark.sql.functions as F
 
     from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
@@ -106,7 +106,7 @@ def test_token_buckets_accumulate_and_cap(spark, tmp_path):
     )
     cfg = CrawlConfig(wave_size=2, round0_limit=100, unique_hosts_round0=False,
                       default_host_budget=2, n_shards=4, total_bloom_bits=1 << 16,
-                      token_buckets=True, bucket_cap_rounds=2)
+                      token_buckets=True)
     sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg,
                            fetch_fn=lambda u: (200, "<html><body><p>x</p></body></html>"))
     sched.init_from_seeds(seeds)
