@@ -19,11 +19,13 @@ horseman_article_parser_spark/functions/hashing.py):
 
 from __future__ import annotations
 
+import os
 import tempfile
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from horseman_article_parser_spark.functions.hashing import (
@@ -55,8 +57,6 @@ def _prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
-_FANOUT_CACHE: dict[tuple[str, str], bool] = {}
-
 # Natural unique key per table: the generic fan-out spreads by hashing
 # this key instead of round-robin. Round-robin repartition pays a local
 # binary sort of its input (spark.sql.execution.sortBeforeRepartition,
@@ -79,61 +79,75 @@ _SPREAD_KEYS: dict[str, list[str]] = {
 }
 
 
+# One entry per table file: its (st_mtime_ns, st_size), its row-group
+# count and the schema Spark inferred on the first read. Without a schema
+# every read runs Spark's schema inference, a one-task job that reads one
+# footer: 81-97 ms per read on 4 cores, against 10-11 ms with the schema
+# given, and a pass over the headline queries reads 5 files 22 times.
+# Spark's own inferred schema is kept (not one converted from pyarrow),
+# so timestamp and nullability mapping cannot drift. A file rewritten at
+# the same path has a new stat, so it is inferred again.
+_TABLE_FILES: dict[str, tuple[tuple[int, int], int, StructType]] = {}
+
+
+def _read_table(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """The table file at `path` and its row-group count; only the first
+    read of an unchanged file starts Spark's schema-inference job."""
+    stat = os.stat(path)
+    stamp = (stat.st_mtime_ns, stat.st_size)
+    known = _TABLE_FILES.get(path)
+    if known is not None and known[0] == stamp:
+        return spark.read.schema(known[2]).parquet(path), known[1]
+    df = spark.read.parquet(path)
+    try:
+        import pyarrow.parquet as pq
+
+        groups = pq.ParquetFile(path).num_row_groups
+    except Exception:
+        groups = 1 << 30  # unreadable metadata: assume splittable
+    _TABLE_FILES[path] = (stamp, groups, df.schema)
+    return df, groups
+
+
 def _load(spark: SparkSession, sf_dir: str, name: str,
           fanout: bool | str = True, key: str | None = None) -> DataFrame:
-    """Read a table, fanning out DEGENERATE input layouts.
+    """Read a table, spreading DEGENERATE input layouts over the cores.
 
     The small-SF test parquet is written as ONE row group per file; a
     row group is Spark's minimum split unit, so no maxPartitionBytes /
-    openCostInBytes setting can parallelize the scan — every per-row
+    openCostInBytes setting can parallelize the scan, and every per-row
     kernel downstream (langid, keywords, url algebra, image decode)
-    runs as a single task with the other 31 cores idle. When the file
-    layout offers fewer splits than the session has cores, spread the
-    rows with one round-robin repartition (a single pass over a tiny
-    file). At production scale — files with hundreds of 128 MB row
-    groups — the condition is false and the plan is untouched; hash
-    exchanges, the actual scale hazard, are still audited separately
-    (scripts/explain_audit.py forbids them on per-row plans).
+    would run as a single task. When the file offers fewer row groups
+    than the session has cores, the rows are spread with one hash
+    repartition on the table's natural unique key (_SPREAD_KEYS) into
+    defaultParallelism partitions: no sort-before-repartition pass
+    (round-robin needs one), deterministic under task retry (guide
+    §2.5), and as even as round-robin because the key is unique. At
+    production scale (hundreds of 128 MB row groups per file) the
+    condition is false and the plan is untouched.
+    scripts/explain_audit.py checks that every exchange of an audited
+    plan hashes on the spread key (or the query's declared key).
 
-    r6 (guide §2.4 — remove shuffles outright):
-    - `fanout=False` skips the spread entirely. Right for small sides
-      that are about to be BROADCAST (repartitioning a side that every
-      executor receives whole is waste).
+    The file's schema and row-group count are read once per process
+    and file version (_read_table), so a repeated read starts no job.
+
+    - `fanout=False` skips the spread. Right for small sides that are
+      about to be BROADCAST (repartitioning a side that every executor
+      receives whole is waste).
     - `fanout="agg"` is for queries that AGGREGATE the table straight
       down: the partial agg collapses rows before any exchange, so the
-      spread is pure cost whenever the scan has splits at all — but a
-      single-row-group BIG table would run its whole map side in one
-      task, so the truly degenerate layout (groups == 1) still
-      spreads. Layout-robust either way.
-    - `key=` replaces the generic spread with a hash repartition on
-      the column the query shuffles by NEXT (window/groupBy key): the
-      fan-out exchange then doubles as the query's own exchange and
-      EnsureRequirements inserts no second one — one shuffle instead of
-      two. Only used where downstream aggregation is order-insensitive
-      (integer sums / row_number over an explicit ORDER BY).
-    - Without `key=`, the spread hashes the table's NATURAL unique key
-      (_SPREAD_KEYS) instead of round-robin: same even distribution,
-      no sort-before-repartition pass, deterministic under task retry
-      (guide §2.5)."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+      spread is pure cost whenever the scan has splits at all; only the
+      truly degenerate layout (one row group) still spreads, so a big
+      single-group table does not run its whole map side in one task.
+    - `key=` hashes on the column the query shuffles by NEXT
+      (window/groupBy key) instead: the spread exchange then doubles as
+      the query's own exchange and EnsureRequirements inserts no second
+      one. Only used where downstream aggregation is order-insensitive
+      (integer sums / row_number over an explicit ORDER BY)."""
+    df, groups = _read_table(spark, f"{sf_dir}/{name}.parquet")
     if fanout is False:
         return df
-    ckey = (sf_dir, name)
-    groups = _FANOUT_CACHE.get(ckey)
-    if groups is None:
-        try:
-            import pyarrow.parquet as pq
-
-            groups = pq.ParquetFile(f"{sf_dir}/{name}.parquet").num_row_groups
-        except Exception:
-            groups = 1 << 30  # unreadable metadata: assume splittable
-        _FANOUT_CACHE[ckey] = groups
     if fanout == "agg":
-        # aggregate-straight-down reader: the map-side partial agg
-        # collapses rows before any exchange, so the spread is pure
-        # cost WHEN the scan has splits at all — but a single-row-group
-        # big table would otherwise run its whole map side in ONE task,
-        # so the truly degenerate layout still spreads
         need = groups == 1
     else:
         need = groups < spark.sparkContext.defaultParallelism
@@ -2346,8 +2360,6 @@ def q_crawl_two_rounds(spark, sf_dir):
     expected (pos, url, round) rows are inlined as VALUES
     (_crawl_two_rounds_oracle_rows); order parity is additionally
     pytest-pinned (tests/test_crawl.py, tests/test_streaming.py)."""
-    import os
-
     from horseman_article_parser_spark.datagen.frontier import build_seed_frontier
     from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
     from horseman_article_parser_spark.streaming.frontier_stream import (

@@ -293,7 +293,9 @@ class ExactSeenFilter:
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        # every delta is one `url` column: with the schema given, the
+        # read starts no schema-inference job
+        return spark.read.schema("url string").parquet(*paths)
 
     def claim_unseen(self, df: DataFrame, url_col: str = "url",
                      dedup_first: list[str] | None = None) -> DataFrame:

@@ -29,11 +29,19 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CrawlStore:
     def __init__(self, root: str):
         self.root = root
+        # kind -> the schema this store last wrote, or inferred, for that
+        # kind (every round of a kind has one schema). A read with the
+        # schema given starts no job; without one, Spark's inference
+        # runs a one-task footer job per read. A fresh store (a resume)
+        # infers once, and Spark makes a given schema nullable exactly
+        # as it does an inferred one.
+        self._schemas: dict[str, StructType] = {}
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------------ paths
@@ -71,9 +79,15 @@ class CrawlStore:
 
     def write(self, df: DataFrame, kind: str, round_no: int) -> None:
         df.write.mode("overwrite").parquet(self.path(kind, round_no))
+        self._schemas[kind] = df.schema
 
     def read(self, spark: SparkSession, kind: str, round_no: int) -> DataFrame:
-        return spark.read.parquet(self.path(kind, round_no))
+        schema = self._schemas.get(kind)
+        if schema is None:
+            df = spark.read.parquet(self.path(kind, round_no))
+            self._schemas[kind] = df.schema
+            return df
+        return spark.read.schema(schema).parquet(self.path(kind, round_no))
 
     def exists(self, kind: str, round_no: int) -> bool:
         return os.path.exists(self.path(kind, round_no))

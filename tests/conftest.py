@@ -1,6 +1,7 @@
 import shutil
 import sys
 import tempfile
+import uuid
 from pathlib import Path
 
 import pytest
@@ -24,3 +25,23 @@ def tmp_store():
     d = tempfile.mkdtemp(prefix="hap_store_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def jobs_started(spark):
+    """jobs_started(fn) -> (fn(), number of Spark jobs fn started), from
+    a job group of its own and the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_started-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs started by one call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job starts reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

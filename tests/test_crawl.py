@@ -5,6 +5,7 @@ from checkpoint must continue identically."""
 
 import threading
 import time
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -12,7 +13,12 @@ import pytest
 from horseman_article_parser_spark.datagen.frontier import build_seed_frontier, seed_urls
 from horseman_article_parser_spark.functions.urls import canonicalize_url, skip_col
 from horseman_article_parser_spark.plans.checkpoint import CrawlStore
-from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler, host_metrics
+from horseman_article_parser_spark.plans.crawl import (
+    FRONTIER_COLS,
+    CrawlConfig,
+    CrawlScheduler,
+    host_metrics,
+)
 from horseman_article_parser_spark.plans.reference_sim import sim_crawl
 
 N_SEEDS = 120
@@ -82,6 +88,20 @@ def _crash_cfg(seen_mode):
                        seen_mode=seen_mode, n_shards=8, total_bloom_bits=1 << 22)
 
 
+def _assert_fresh_store_reads_what_was_written(spark, jobs_started, writer, fresh,
+                                               round_no):
+    """The store that wrote `pending` reads it with the schema it wrote,
+    starting no job; a fresh store on the same dir remembers no schema,
+    so it infers one, and both read the same rows and schema."""
+    wrote, n_writer = jobs_started(lambda: writer.read(spark, "pending", round_no))
+    read, n_fresh = jobs_started(lambda: fresh.read(spark, "pending", round_no))
+    assert n_writer == 0
+    assert n_fresh >= 1
+    assert read.schema == wrote.schema
+    assert read.columns == FRONTIER_COLS
+    assert Counter(map(tuple, read.collect())) == Counter(map(tuple, wrote.collect()))
+
+
 class _CrashingStore(CrawlStore):
     """Fails at the commit of one round, after all its tables and its
     seen-filter version are written."""
@@ -98,8 +118,8 @@ class _CrashingStore(CrawlStore):
 
 @pytest.mark.parametrize("crash_round", [1, -1])
 @pytest.mark.parametrize("seen_mode", ["exact", "bloom", "cuckoo"])
-def test_resume_after_a_crash_inside_a_round_is_exact(spark, tmp_store, seen_mode,
-                                                      crash_round):
+def test_resume_after_a_crash_inside_a_round_is_exact(spark, tmp_store, jobs_started,
+                                                      seen_mode, crash_round):
     """Resume restores the seen-filter version of the last commit, not
     the one the crashed round (or seeding, round -1) left on disk."""
     seeds = build_seed_frontier(spark, N_SEEDS)
@@ -108,11 +128,13 @@ def test_resume_after_a_crash_inside_a_round_is_exact(spark, tmp_store, seen_mod
     with pytest.raises(OSError, match="crash at the commit"):
         sched.run(N_ROUNDS, seeds=seeds)
     resumed = CrawlScheduler(spark, tmp_store, _crash_cfg(seen_mode))  # fresh process
+    _assert_fresh_store_reads_what_was_written(
+        spark, jobs_started, sched.store, resumed.store, crash_round)
     resumed.run(N_ROUNDS, seeds=seeds)
     assert _spark_waves(resumed, spark, N_ROUNDS) == _expected_waves()
 
 
-def test_resume_after_streamed_seeds_and_a_crash_is_exact(spark, tmp_store):
+def test_resume_after_streamed_seeds_and_a_crash_is_exact(spark, tmp_store, jobs_started):
     """A seed batch claimed between rounds makes a seen-filter version of
     its own; a crash in the next round resumes from that version."""
     from horseman_article_parser_spark.streaming.frontier_stream import StreamingSeedIngest
@@ -123,6 +145,9 @@ def test_resume_after_streamed_seeds_and_a_crash_is_exact(spark, tmp_store):
     sched.run(1, seeds=seeds)
     StreamingSeedIngest(sched).process_batch(
         spark.createDataFrame([(u,) for u in late], "url string"), 0)
+    # the streamed rows are appended beside round 0's pending file
+    _assert_fresh_store_reads_what_was_written(
+        spark, jobs_started, sched.store, CrawlStore(tmp_store), 0)
     sched.store = _CrashingStore(tmp_store, 1)
     with pytest.raises(OSError, match="crash at the commit"):
         sched.run_round(1)
