@@ -174,9 +174,8 @@ frontier AS (
 """.strip()
 
 
-def _frontier(spark: SparkSession, sf_dir: str, fanout: bool = True,
-              key: str | None = None) -> DataFrame:
-    docs = _load(spark, sf_dir, "documents", fanout=fanout, key=key)
+def _frontier(spark: SparkSession, sf_dir: str, fanout: bool = True) -> DataFrame:
+    docs = _load(spark, sf_dir, "documents", fanout=fanout)
     return docs.select(
         F.col("doc_id").alias("seq"),
         F.concat(

@@ -85,8 +85,9 @@ def _decode_png(data: bytes) -> np.ndarray:
     return raw[:, 1:].reshape(h, w, 3).copy()
 
 
-def encode_lossy(pixels: np.ndarray, step: int = DEFAULT_LOSSY_STEP) -> bytes:
+def encode_lossy(pixels: np.ndarray) -> bytes:
     """Deterministic lossy codec (QJPG container): quantize + deflate."""
+    step = DEFAULT_LOSSY_STEP
     if pixels.dtype != np.uint8 or pixels.ndim != 3 or pixels.shape[2] != 3:
         raise ValueError("encode_lossy expects (h, w, 3) uint8")
     h, w = pixels.shape[:2]

@@ -130,9 +130,8 @@ def _video_batch(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def build_audio_table(spark: SparkSession, n: int,
-                      partitions: int | None = None) -> DataFrame:
-    base = spark.range(0, n, 1, partitions or min(32, max(1, n // 64 or 1)))
+def build_audio_table(spark: SparkSession, n: int) -> DataFrame:
+    base = spark.range(0, n, 1, min(32, max(1, n // 64 or 1)))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -142,9 +141,8 @@ def build_audio_table(spark: SparkSession, n: int,
     return base.mapInPandas(gen, schema=AUDIO_SCHEMA)
 
 
-def build_videos_table(spark: SparkSession, n: int,
-                       partitions: int | None = None) -> DataFrame:
-    base = spark.range(0, n, 1, partitions or min(32, max(1, n // 64 or 1)))
+def build_videos_table(spark: SparkSession, n: int) -> DataFrame:
+    base = spark.range(0, n, 1, min(32, max(1, n // 64 or 1)))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

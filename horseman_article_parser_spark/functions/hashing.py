@@ -44,9 +44,9 @@ def h32_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
 
 
-def minhash_params(n_hashes: int, seed: int = MINHASH_SEED) -> list[tuple[int, int]]:
+def minhash_params(n_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a_j, b_j) pairs shared by Spark plans and oracles."""
-    rng = random.Random(seed)
+    rng = random.Random(MINHASH_SEED)
     return [
         (rng.randrange(1, 1 << 20), rng.randrange(0, MINHASH_P))
         for _ in range(n_hashes)

@@ -751,7 +751,7 @@ def langid_batch_col(norm_text: Column) -> Column:
 # AFINN-style lexicon over this engine's synthetic-corpus vocabulary
 # (the reference ships AFINN-165 as a dependency; the scoring algebra —
 # sum, comparative = sum/token_count, threshold labels — is what we
-# reproduce; the lexicon is pluggable).
+# reproduce).
 AFINN_MINI: dict[str, int] = {
     "fast": 2,
     "big": 1,
@@ -1073,9 +1073,10 @@ def bag_fingerprint_col(text: Column | str) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def excerpt_col(text: Column | str, limit: int = 200) -> Column:
-    """X8: first `limit` chars extended to the next word boundary, then
+def excerpt_col(text: Column | str) -> Column:
+    """X8: first 200 chars extended to the next word boundary, then
     first letter capitalized (index.js:1399 behavior)."""
+    limit = 200
     t = F.trim(F.regexp_replace(_c(text), r"\s+", " "))
     snippet = F.when(F.length(t) <= limit, t).otherwise(
         F.concat(
@@ -1171,8 +1172,7 @@ def capitalize_first_col(c: Column) -> Column:
     )
 
 
-def clean_keyword_col(tok: Column,
-                      stopwords: tuple[str, ...] = STOPWORDS_MINI) -> Column:
+def clean_keyword_col(tok: Column) -> Column:
     """cleanKeyword: NULL when rejected, else the capitalized
     possessive-stripped surface form."""
     t = F.regexp_replace(F.trim(tok), r"\s+", " ")
@@ -1183,7 +1183,7 @@ def clean_keyword_col(tok: Column,
     ok = (
         t.rlike(r"\p{L}")
         & (F.length(norm) >= 2)
-        & ~norm.isin(*stopwords)
+        & ~norm.isin(*STOPWORDS_MINI)
         & ~(all_caps & (F.length(norm) > 4))
         & ~norm.rlike("^[0-9]+$")
         & (F.length(cleaned) > 0)
@@ -1191,10 +1191,7 @@ def clean_keyword_col(tok: Column,
     return F.when(ok, cleaned)
 
 
-def keywords_cleaned_topk(docs: DataFrame, k: int = 10,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          stopwords: tuple[str, ...] = STOPWORDS_MINI
-                          ) -> DataFrame:
+def keywords_cleaned_topk(docs: DataFrame, k: int = 10) -> DataFrame:
     """N3 with the reference's cleaning cascade: tokens → POS noun gate
     (retext-pos stand-in) → cleanKeyword → dedupe on the normalized
     cleaned form (keywordSeen, keywordParser.js:33-46) → TF top-k
@@ -1202,20 +1199,20 @@ def keywords_cleaned_topk(docs: DataFrame, k: int = 10,
     from pyspark.sql.window import Window
 
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_col(text_col)).alias("_raw")
+        F.col("doc_id"), F.explode(tokens_col("text")).alias("_raw")
     ).filter(pos_noun_gate_col(F.col("_raw")))
     cleaned = toks.select(
-        F.col(id_col), clean_keyword_col(F.col("_raw"), stopwords).alias("_kw")
+        F.col("doc_id"), clean_keyword_col(F.col("_raw")).alias("_kw")
     ).filter(F.col("_kw").isNotNull())
     keyed = cleaned.withColumn("_key", normalize_token_col(F.col("_kw")))
-    tf = keyed.groupBy(id_col, "_key").agg(
+    tf = keyed.groupBy("doc_id", "_key").agg(
         F.count("*").alias("tf"), F.min("_kw").alias("keyword")
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tf"), F.asc("keyword"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("keyword"))
     return (
         tf.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_col, "keyword", "tf", "rank")
+        .select("doc_id", "keyword", "tf", "rank")
     )
 
 
@@ -1384,7 +1381,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
 _JAVA_WS = "[ \t\n\x0b\f\r]"
 
 
-def _java_tokens(text: str, _split=None) -> list[str]:
+def _java_tokens(text: str) -> list[str]:
     """Python mirror of tokens_col: trim(U+0020) then split on Java
     \\s+; whole-empty trimmed text -> []."""
     import re as _re
@@ -1407,8 +1404,7 @@ def _java_normalize(text: str) -> str:
     return t.strip(" ").lower()
 
 
-def text_quality_batch(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def text_quality_batch(docs: DataFrame) -> DataFrame:
     """q_text_quality's full output row in one Arrow kernel pass —
     bit-identical to readability_cols + occurrences_col + with_quality
     + bpe_token_count_col + bag_fingerprint_col over the same text."""
@@ -1435,9 +1431,9 @@ def text_quality_batch(docs: DataFrame, id_col: str = "doc_id",
         return int(Decimal(repr(x)).quantize(
             Decimal(1), rounding=ROUND_HALF_UP))
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, characters long, "
+        f"doc_id {id_field.dataType.simpleString()}, characters long, "
         "words long, sentences long, paragraphs long, reading_time long, "
         "n_the long, n_bpe_tokens long, stopword_hits long, "
         "alpha_ratio_x1e4 long, quality_score long, bag_fp string"
@@ -1449,7 +1445,7 @@ def text_quality_batch(docs: DataFrame, id_col: str = "doc_id",
                 "characters", "words", "sentences", "paragraphs",
                 "reading_time", "n_the", "n_bpe_tokens", "stopword_hits",
                 "alpha_ratio_x1e4", "quality_score", "bag_fp")}
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 t = text if text is not None else ""
                 trimmed = t.strip(" ")
                 toks = ([] if trimmed == "" else tok_re.split(trimmed))
@@ -1490,21 +1486,19 @@ def text_quality_batch(docs: DataFrame, id_col: str = "doc_id",
                 bag.sort(key=lambda s: s.encode("utf-16-be"))
                 rows["bag_fp"].append(
                     hashlib.md5(" ".join(bag).encode("utf-8")).hexdigest())
-            out = pdf[[id_col]].copy()
+            out = pdf[["doc_id"]].copy()
             for k, v in rows.items():
                 out[k] = pd.Series(
                     v, dtype=("object" if k == "bag_fp" else "int64"))
             yield out
 
-    sel = docs.select(F.col(id_col), F.col(text_col))
+    sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)
 
 
-def sentiment_batch(docs: DataFrame, lexicon: dict[str, int] | None = None,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def sentiment_batch(docs: DataFrame) -> DataFrame:
     """A10 sentiment, q_sentiment's output row, in one Arrow kernel
-    pass: AFINN sum over whitespace tokens (_java_tokens), comparative
+    pass: AFINN_MINI sum over whitespace tokens (_java_tokens), comparative
     = score / token_count (0 for no tokens) scaled to an integer, and
     the reference's label quirk — Neutral only at comparative == 0.05
     exactly. `score_join` repeats the score: the oracle computes it a
@@ -1515,16 +1509,15 @@ def sentiment_batch(docs: DataFrame, lexicon: dict[str, int] | None = None,
 
     import pandas as pd
 
-    lex = dict(lexicon or AFINN_MINI)
     tok_re = _sre.compile(_JAVA_WS + "+")
 
     def _rhu(x: float) -> int:
         return int(Decimal(repr(x)).quantize(
             Decimal(1), rounding=ROUND_HALF_UP))
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, "
+        f"doc_id {id_field.dataType.simpleString()}, "
         "sentiment_score long, comparative_x1e6 long, "
         "sentiment_label string, score_join long"
     )
@@ -1532,12 +1525,12 @@ def sentiment_batch(docs: DataFrame, lexicon: dict[str, int] | None = None,
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             scores, comps, labels = [], [], []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 t = (text if text is not None else "").strip(" ")
                 toks = [] if t == "" else tok_re.split(t)
                 score = 0
                 for x in toks:
-                    s = lex.get(x)
+                    s = AFINN_MINI.get(x)
                     if s is not None:
                         score += s
                 n = len(toks)
@@ -1547,12 +1540,12 @@ def sentiment_batch(docs: DataFrame, lexicon: dict[str, int] | None = None,
                 labels.append(
                     "Positive" if comp > 0.05
                     else ("Negative" if comp < 0.05 else "Neutral"))
-            out = pdf[[id_col]].copy()
+            out = pdf[["doc_id"]].copy()
             out["sentiment_score"] = pd.Series(scores, dtype="int64")
             out["comparative_x1e6"] = pd.Series(comps, dtype="int64")
             out["sentiment_label"] = labels
             out["score_join"] = pd.Series(scores, dtype="int64")
             yield out
 
-    sel = docs.select(F.col(id_col), F.col(text_col))
+    sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)

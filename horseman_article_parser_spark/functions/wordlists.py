@@ -1143,10 +1143,9 @@ def builtin_dictionary(spark: SparkSession, lang: str = "en") -> DataFrame:
     return spark.createDataFrame([(w,) for w in wordlist(lang)], "word string")
 
 
-def builtin_dictionaries(
-    spark: SparkSession, langs: tuple[str, ...] = ("en", "fr", "es")
-) -> DataFrame:
-    """Long (lang, word) relation for `misspellings_multilang` — the
-    relational form of the reference's dictionary-{lang} file set."""
-    rows = [(lg, w) for lg in langs for w in wordlist(lg)]
+def builtin_dictionaries(spark: SparkSession) -> DataFrame:
+    """Long (lang, word) relation over en, fr and es for
+    `misspellings_multilang` — the relational form of the reference's
+    dictionary-{lang} file set."""
+    rows = [(lg, w) for lg in ("en", "fr", "es") for w in wordlist(lg)]
     return spark.createDataFrame(rows, "lang string, word string")

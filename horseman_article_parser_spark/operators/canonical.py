@@ -116,15 +116,13 @@ def rescue_thin_page(
 def canonical_refetch(
     pages: DataFrame,
     fetch_fn: Callable[[str], tuple[int, str]],
-    id_col: str = "doc_id",
-    html_col: str = "html",
 ) -> DataFrame:
-    """(id, html) → (id, used, n_entries, first_para, synth_html).
+    """(doc_id, html) → (doc_id, used, n_entries, first_para, synth_html).
 
     Thin rows are detected in-kernel; only those fetch their canonical
     URL (thread-pool overlapped). Rich rows pass through untouched."""
     out_schema = T.StructType(
-        [pages.schema[id_col], T.StructField("rescue", REFETCH_STRUCT)]
+        [pages.schema["doc_id"], T.StructField("rescue", REFETCH_STRUCT)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -132,9 +130,9 @@ def canonical_refetch(
             if not len(pdf):
                 continue
             rescues = overlapped(lambda h: rescue_thin_page(h, fetch_fn),
-                                 list(pdf[html_col]))
-            yield pd.DataFrame({id_col: pdf[id_col], "rescue": rescues})
+                                 list(pdf["html"]))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "rescue": rescues})
 
-    return pages.select(id_col, html_col).mapInPandas(
+    return pages.select("doc_id", "html").mapInPandas(
         run, schema=out_schema
-    ).select(id_col, "rescue.*")
+    ).select("doc_id", "rescue.*")

@@ -256,11 +256,11 @@ def _paragraph_count(el: Element) -> int:
     return len(el.find_all("p", "br"))
 
 
-def drill_down_to_content(el: Element, min_len: int = 400,
-                          max_ld: float = 0.5) -> Element:
+def drill_down_to_content(el: Element) -> Element:
     """drillDownToContent (:208-247): BFS (depth ≤ 5) over container
     tags, pick the node with the best direct-paragraph-weighted score
-    among those meeting relaxed length/link-density floors."""
+    among those meeting relaxed length/link-density floors (≥200 chars,
+    link density ≤0.65)."""
     best_node, best_score = el, -math.inf
     queue: list[tuple[Element, int]] = [(el, 0)]
     while queue:
@@ -281,7 +281,7 @@ def drill_down_to_content(el: Element, min_len: int = 400,
             - min(f["ld"] * 12.0, 8.0)
             - f["boiler"]
         )
-        if f["len"] >= min(min_len, 200) and f["ld"] <= max(max_ld, 0.65):
+        if f["len"] >= 200 and f["ld"] <= 0.65:
             if s > best_score:
                 best_node, best_score = node, s
         if depth < 5:
@@ -291,15 +291,14 @@ def drill_down_to_content(el: Element, min_len: int = 400,
     return best_node
 
 
-def evaluate_fragmentation(node: Element, min_len: int = 400,
-                           max_ld: float = 0.5) -> dict:
+def evaluate_fragmentation(node: Element) -> dict:
     """evaluateFragmentation (:299-359): does `node` hold the article
     split across ≥2 sibling parts (each ≥150 chars with a paragraph),
     whose combined text dominates, with no single part owning ≥65%?"""
     result = {"qualifies": False, "parts": [], "ratio": 0.0}
     if node.tag in ("html", "body", "#document"):
         return result
-    min_child, min_combined = 150, max(min_len, 400)
+    min_child, min_combined = 150, 400
     parts, parts_text = [], 0
     for child in node.children:
         if not isinstance(child, Element):
@@ -319,7 +318,7 @@ def evaluate_fragmentation(node: Element, min_len: int = 400,
     result["ratio"] = ratio
     if ratio < 0.35:
         return result
-    if _link_density(node) > max(max_ld, 0.65):
+    if _link_density(node) > 0.65:
         return result
     result["qualifies"] = True
     result["parts"] = [c for c, _ in parts]
@@ -335,13 +334,12 @@ def _contains(ancestor: Element, node: Element) -> bool:
     return False
 
 
-def find_fragmented_ancestor(node: Element, min_len: int = 400,
-                             max_ld: float = 0.5) -> Element | None:
+def find_fragmented_ancestor(node: Element) -> Element | None:
     """findFragmentedAncestor (:363-396): nearest ancestor (≤12 up, then
     any article/section/main ancestor) whose fragmentation analysis
     qualifies AND whose parts include the origin."""
     def _check(parent: Element) -> bool:
-        analysis = evaluate_fragmentation(parent, min_len, max_ld)
+        analysis = evaluate_fragmentation(parent)
         return analysis["qualifies"] and any(
             _contains(part, node) for part in analysis["parts"]
         )
@@ -469,12 +467,12 @@ def css_selector(el: Element) -> str:
     return " > ".join(parts)
 
 
-def detect_container(html: str | None, min_len: int = 400,
-                     max_ld: float = 0.5) -> dict:
+def detect_container(html: str | None) -> dict:
     """Per-page detection with drill-down + fragmentation promotion:
     gather → drill each candidate → heuristic score → best (with the
-    reference's threshold fallback to the runner-up) → promote to a
-    fragmented ancestor when the body is split across siblings."""
+    reference's threshold fallback to the runner-up when the best has
+    under 400 chars or link density over 0.5) → promote to a fragmented
+    ancestor when the body is split across siblings."""
     empty = {"xpath": None, "css_selector": None, "fragmented": False}
     if not html:
         return empty
@@ -484,7 +482,7 @@ def detect_container(html: str | None, min_len: int = 400,
         return empty
     scored = []
     for el in cands:
-        refined = drill_down_to_content(el, min_len, max_ld)
+        refined = drill_down_to_content(el)
         # F9: features over the stripped CLONE (the reference's
         # `const clean = stripBadContainers(refined)`, :602-604) — the
         # selected node stays the original for xpath/selector output
@@ -493,9 +491,9 @@ def detect_container(html: str | None, min_len: int = 400,
     # stable order: score desc, xpath asc (pins ties like rank_candidates)
     scored.sort(key=lambda t: (-t[2], _xpath(t[0])))
     selected, f, _ = scored[0]
-    if not (f["len"] >= min_len and f["ld"] <= max_ld) and len(scored) > 1:
+    if not (f["len"] >= 400 and f["ld"] <= 0.5) and len(scored) > 1:
         selected = scored[1][0]
-    frag = find_fragmented_ancestor(selected, min_len, max_ld)
+    frag = find_fragmented_ancestor(selected)
     if frag is not None:
         selected, fragmented = frag, True
     else:
@@ -516,11 +514,11 @@ DETECT_STRUCT = T.StructType(
 )
 
 
-def detect_containers(pages: DataFrame, id_col: str = "doc_id",
-                      html_col: str = "html") -> DataFrame:
-    """DataFrame op: (doc, html) → (doc, xpath, fragmented)."""
+def detect_containers(pages: DataFrame) -> DataFrame:
+    """DataFrame op: (doc_id, html) → (doc_id, xpath, css_selector,
+    fragmented)."""
     out_schema = T.StructType(
-        [pages.schema[id_col], T.StructField("detected", DETECT_STRUCT)]
+        [pages.schema["doc_id"], T.StructField("detected", DETECT_STRUCT)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -529,14 +527,14 @@ def detect_containers(pages: DataFrame, id_col: str = "doc_id",
                 continue
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    "detected": [detect_container(h) for h in pdf[html_col]],
+                    "doc_id": pdf["doc_id"],
+                    "detected": [detect_container(h) for h in pdf["html"]],
                 }
             )
 
-    return pages.select(id_col, html_col).mapInPandas(
+    return pages.select("doc_id", "html").mapInPandas(
         run, schema=out_schema
-    ).select(id_col, "detected.*")
+    ).select("doc_id", "detected.*")
 
 
 def page_candidates(html: str | None) -> list[dict]:
@@ -549,14 +547,12 @@ def page_candidates(html: str | None) -> list[dict]:
     ]
 
 
-def candidate_features(
-    pages: DataFrame, id_col: str = "doc_id", html_col: str = "html",
-) -> DataFrame:
-    """One Arrow pass: (doc, html) → exploded candidate feature rows.
+def candidate_features(pages: DataFrame) -> DataFrame:
+    """One Arrow pass: (doc_id, html) → exploded candidate feature rows.
     Output is narrow (xpath + 18 numeric features); HTML never leaves
     the scan stage."""
     out_schema = T.StructType(
-        [pages.schema[id_col], T.StructField("candidate", CANDIDATE_STRUCT)]
+        [pages.schema["doc_id"], T.StructField("candidate", CANDIDATE_STRUCT)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -564,15 +560,15 @@ def candidate_features(
             if not len(pdf):
                 continue
             rows = []
-            for rid, html in zip(pdf[id_col], pdf[html_col]):
+            for rid, html in zip(pdf["doc_id"], pdf["html"]):
                 for cand in page_candidates(html):
-                    rows.append({id_col: rid, "candidate": cand})
+                    rows.append({"doc_id": rid, "candidate": cand})
             if rows:
                 yield pd.DataFrame(rows)
 
     return (
         pages.mapInPandas(run, schema=out_schema)
-        .select(id_col, "candidate.*")
+        .select("doc_id", "candidate.*")
     )
 
 
@@ -600,15 +596,14 @@ def heuristic_score_col() -> Column:
     )
 
 
-def rank_candidates(features: DataFrame, id_col: str = "doc_id",
-                    score: Column | None = None) -> DataFrame:
-    """W1: per-document rank by score desc (xpath tiebreak pinned)."""
+def rank_candidates(features: DataFrame) -> DataFrame:
+    """W1: per-document rank by heuristic score desc (xpath tiebreak
+    pinned)."""
     from pyspark.sql.window import Window
 
-    s = score if score is not None else heuristic_score_col()
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("xpath"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("xpath"))
     return (
-        features.withColumn("score", s)
+        features.withColumn("score", heuristic_score_col())
         .withColumn("rank", F.row_number().over(w))
     )
 
@@ -677,8 +672,7 @@ def train_gd(rows: list[tuple[list[float], int]], lr: float = 0.05,
     return {"weights": w, "bias": b}
 
 
-def train_reranker(features: DataFrame, label_col: str = "label",
-                   max_iter: int = 100, reg: float = 0.001):
+def train_reranker(features: DataFrame, max_iter: int = 100):
     """A11 at scale: spark.ml LogisticRegression over the 16-dim
     vectors (distributed L-BFGS; same model family as the reference's
     GD — weights differ numerically, ranking quality is what tests
@@ -686,13 +680,13 @@ def train_reranker(features: DataFrame, label_col: str = "label",
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
-    vecs = features.select(*vector_cols(), F.col(label_col).cast("double"))
+    vecs = features.select(*vector_cols(), F.col("label").cast("double"))
     assembler = VectorAssembler(
         inputCols=[f"v{i}" for i in range(N_DIMS)], outputCol="features"
     )
     lr = LogisticRegression(
-        featuresCol="features", labelCol=label_col, maxIter=max_iter,
-        regParam=reg, standardization=False,
+        featuresCol="features", labelCol="label", maxIter=max_iter,
+        regParam=0.001, standardization=False,
     )
     model = lr.fit(assembler.transform(vecs))
     weights = {

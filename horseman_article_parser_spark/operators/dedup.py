@@ -42,62 +42,58 @@ DEFAULT_SHINGLE_STEP = 4
 # ------------------------------------------------------------ exact
 
 
-def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct normalized text,
-    with the keeper (min id) and duplicate count. Single shuffle on the
-    md5 fingerprint; partial agg collapses dups map-side."""
+    with the keeper (min doc_id) and duplicate count. Single shuffle on
+    the md5 fingerprint; partial agg collapses dups map-side."""
     return (
-        docs.select(F.col(id_col), fingerprint_col(text_col).alias("fingerprint"))
+        docs.select(F.col("doc_id"), fingerprint_col("text").alias("fingerprint"))
         .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("n_dups"))
+        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_dups"))
     )
 
 
 # ---------------------------------------------------------- shingles
 
 
-def shingles_col(text: Column | str, k: int = DEFAULT_SHINGLE_K,
-                 step: int = DEFAULT_SHINGLE_STEP) -> Column:
-    """Character k-gram shingles at a fixed stride over normalized text.
-    Stride `step` bounds the explode factor to len/step (≈len/4) while
-    preserving Jaccard resolution for near-dup detection."""
+def shingles_col(text: Column | str) -> Column:
+    """Character k-gram shingles at stride `step` over normalized text
+    (DEFAULT_SHINGLE_K, DEFAULT_SHINGLE_STEP). The stride bounds the
+    explode factor to len/step (≈len/4) while preserving Jaccard
+    resolution for near-dup detection."""
+    k, step = DEFAULT_SHINGLE_K, DEFAULT_SHINGLE_STEP
     t = normalize_text_col(text)
     positions = F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1)), F.lit(step))
     return F.transform(positions, lambda i: F.substring(t, i, k))
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 k: int = DEFAULT_SHINGLE_K, step: int = DEFAULT_SHINGLE_STEP,
-                 distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) pairs — the set representation when
-    `distinct=True`; the raw multiset otherwise (enough for any
-    duplicate-insensitive consumer like MinHash's `min`, saving the
-    distinct's full shuffle of the exploded rows).
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) pairs, the raw multiset (enough for any
+    duplicate-insensitive consumer like MinHash's `min`; a distinct
+    would add a full shuffle of the exploded rows).
 
     The normalization regex runs ONCE per document in its own projection
     (referenced from every shingle position, CollapseProject keeps it
     un-inlined), and the narrow pre-explode rows are `fan_out` so a
     single-split local file doesn't serialize the explode."""
-    t = normalize_text_col(text_col)
-    norm = fan_out(docs.select(F.col(id_col), t.alias("_t")))
+    k, step = DEFAULT_SHINGLE_K, DEFAULT_SHINGLE_STEP
+    t = normalize_text_col("text")
+    norm = fan_out(docs.select(F.col("doc_id"), t.alias("_t")))
     positions = F.sequence(
         F.lit(1), F.greatest(F.length("_t") - (k - 1), F.lit(1)), F.lit(step)
     )
-    sh = norm.select(
-        F.col(id_col),
+    return norm.select(
+        F.col("doc_id"),
         F.explode(
             F.transform(positions, lambda i: F.substring(F.col("_t"), i, k))
         ).alias("shingle"),
     )
-    return sh.distinct() if distinct else sh
 
 
 # ------------------------------------------------------------ minhash
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 16, id_col: str = "doc_id",
-                       text_col: str = "text", k: int = DEFAULT_SHINGLE_K,
-                       step: int = DEFAULT_SHINGLE_STEP) -> DataFrame:
+def minhash_signatures(docs: DataFrame, n_hashes: int = 16) -> DataFrame:
     """MinHash signature per doc: columns mh0..mh{n-1} (bigint).
 
     Plan: shingle explode → h32(shingle) → n universal hashes → one
@@ -107,17 +103,16 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 16, id_col: str = "doc_i
     directly — no distinct, exactly one shuffle (with map-side partial
     mins) in the whole plan."""
     params = minhash_params(n_hashes)
-    sh = doc_shingles(docs, id_col, text_col, k, step, distinct=False)
+    sh = doc_shingles(docs)
     h = h32(F.col("shingle"))
     aggs = [
         F.min(universal_hash(h, a, b)).alias(f"mh{j}")
         for j, (a, b) in enumerate(params)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_band_buckets(signatures: DataFrame, bands: int, rows_per_band: int,
-                     id_col: str = "doc_id",
                      carry_signature: bool = False) -> DataFrame:
     """(band, bucket, doc_id[, mh*]): bucket = md5-hash of the band's
     signature slice. Docs sharing (band, bucket) are near-dup
@@ -136,11 +131,11 @@ def lsh_band_buckets(signatures: DataFrame, bands: int, rows_per_band: int,
         entries.append(F.struct(F.lit(b).alias("band"), h32(key).alias("bucket")))
     carry = [F.col(c) for c in mh_cols] if carry_signature else []
     return signatures.select(
-        F.explode(F.array(*entries)).alias("_bb"), F.col(id_col), *carry
+        F.explode(F.array(*entries)).alias("_bb"), F.col("doc_id"), *carry
     ).select(
         F.col("_bb.band").alias("band"),
         F.col("_bb.bucket").alias("bucket"),
-        F.col(id_col),
+        F.col("doc_id"),
         *[c for c in mh_cols] if carry_signature else [],
     )
 
@@ -148,9 +143,7 @@ def lsh_band_buckets(signatures: DataFrame, bands: int, rows_per_band: int,
 # ------------------------------------------------------ exact jaccard
 
 
-def ngram_jaccard(docs_a: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", k: int = DEFAULT_SHINGLE_K,
-                  step: int = DEFAULT_SHINGLE_STEP) -> DataFrame:
+def ngram_jaccard(docs_a: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for given (id_a, id_b) pairs.
 
     r6 shape: one per-doc shingle SET array (array_distinct over the
@@ -168,11 +161,11 @@ def ngram_jaccard(docs_a: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     pair join moves no more bytes than before; the per-doc set build
     is now O(docs) instead of O(pairs) work."""
     shset = docs_a.select(
-        F.col(id_col),
-        F.array_distinct(shingles_col(text_col, k, step)).alias("_sh"),
+        F.col("doc_id"),
+        F.array_distinct(shingles_col("text")).alias("_sh"),
     )
-    a = shset.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
-    b = shset.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
+    a = shset.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sh_a"))
+    b = shset.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sh_b"))
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
     return (
         pairs.join(a, "id_a")
@@ -191,8 +184,7 @@ def ngram_jaccard(docs_a: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 # ------------------------------------------------------------ simhash
 
 
-def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """SimHash fingerprint: per-bit sign-sum of token hashes.
 
     Explode rows = tokens (NOT tokens×bits): each of the `bits` sign-sums
@@ -203,8 +195,8 @@ def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
     sign-sum references `_h`, not `h32(tok)`: aggregate expressions are
     evaluated independently, so the inline form re-hashed every token
     `bits` times (measured 17 s → 5 s at sf1/32 bits)."""
-    toks = fan_out(docs.select(F.col(id_col), tokens_col(text_col).alias("_toks"))).select(
-        F.col(id_col), F.explode_outer("_toks").alias("tok")
+    toks = fan_out(docs.select(F.col("doc_id"), tokens_col("text").alias("_toks"))).select(
+        F.col("doc_id"), F.explode_outer("_toks").alias("tok")
     ).withColumn("_h", h32(F.col("tok")))
     h = F.col("_h")
     aggs = [
@@ -215,12 +207,12 @@ def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
         ).alias(f"s{b}")
         for b in range(bits)
     ]
-    sums = toks.groupBy(id_col).agg(*aggs)
+    sums = toks.groupBy("doc_id").agg(*aggs)
     sig = None
     for b in range(bits):
         bit = F.when(F.col(f"s{b}") > 0, F.lit(1).cast("long") * (1 << b)).otherwise(0)
         sig = bit if sig is None else sig + bit
-    return sums.select(F.col(id_col), sig.alias("simhash"))
+    return sums.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 # persisted intermediates registered by operators below; callers
@@ -336,13 +328,12 @@ def blocked_hamming_pairs(sig_df: DataFrame, sig_col: str, id_col: str,
 
 
 def simhash_near_pairs(sig: DataFrame, max_hamming: int = 3, bits: int = 32,
-                       id_col: str = "doc_id", n_blocks: int = 4,
-                       max_bucket: int = 1000) -> DataFrame:
+                       n_blocks: int = 4, max_bucket: int = 1000) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming —
     block-permutation equi-join with identical-signature collapse and
     mega-bucket caps (see `blocked_hamming_pairs`)."""
     return blocked_hamming_pairs(
-        sig, "simhash", id_col, bits, n_blocks, max_hamming, max_bucket
+        sig, "simhash", "doc_id", bits, n_blocks, max_hamming, max_bucket
     )
 
 
@@ -350,7 +341,6 @@ def simhash_near_pairs(sig: DataFrame, max_hamming: int = 3, bits: int = 32,
 
 
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
                         n_planes: int = 8, seed: int = 7,
                         max_bucket: int = 1000) -> DataFrame:
     """Near-duplicate vectors by cosine ≥ threshold, LSH-bucketed.
@@ -371,12 +361,12 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
     from .similarity import cosine_col, hyperplane_bucket_col, l2_norm_col
 
     keyed = emb.select(
-        F.col(id_col).alias("_id"),
+        F.col("vec_id").alias("_id"),
         F.md5(
-            F.concat_ws(",", F.transform(F.col(vec_col), lambda x: x.cast("string")))
+            F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
         ).alias("_fp"),
-        hyperplane_bucket_col(F.col(vec_col), n_planes=n_planes, seed=seed).alias("bucket"),
-        l2_norm_col(F.col(vec_col)).alias("_norm"),
+        hyperplane_bucket_col(F.col("embedding"), n_planes=n_planes, seed=seed).alias("bucket"),
+        l2_norm_col(F.col("embedding")).alias("_norm"),
     )
     # identical vectors → identical (bucket, norm); min-id representative
     groups = keyed.groupBy("_fp").agg(
@@ -396,8 +386,8 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
         .select("_ra", "_rb", "na", "nb")
     )
     # verify: vectors join back BY ID — the only shuffle vectors ride
-    va = emb.select(F.col(id_col).alias("_ra"), F.col(vec_col).alias("_va"))
-    vb = emb.select(F.col(id_col).alias("_rb"), F.col(vec_col).alias("_vb"))
+    va = emb.select(F.col("vec_id").alias("_ra"), F.col("embedding").alias("_va"))
+    vb = emb.select(F.col("vec_id").alias("_rb"), F.col("embedding").alias("_vb"))
     verified = (
         cand.join(va, "_ra").join(vb, "_rb")
         .select(
@@ -457,9 +447,7 @@ def _h32_py(s: str) -> int:
 
 
 def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
-                      rows_per_band: int = 2, id_col: str = "doc_id",
-                      text_col: str = "text", k: int = DEFAULT_SHINGLE_K,
-                      step: int = DEFAULT_SHINGLE_STEP) -> DataFrame:
+                      rows_per_band: int = 2) -> DataFrame:
     """minhash_signatures + lsh_band_buckets(carry_signature=True) in
     one kernel pass: (band, bucket, doc_id, mh0..mh{n-1}) rows, zero
     shuffles."""
@@ -476,11 +464,12 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
 
-    id_field = docs.schema[id_col]
+    k, step = DEFAULT_SHINGLE_K, DEFAULT_SHINGLE_STEP
+    id_field = docs.schema["doc_id"]
     mh_cols = [f"mh{j}" for j in range(n_hashes)]
     out_schema = (
         "band int, bucket long, "
-        f"{id_col} {id_field.dataType.simpleString()}, "
+        f"doc_id {id_field.dataType.simpleString()}, "
         + ", ".join(f"{c} long" for c in mh_cols)
     )
 
@@ -499,7 +488,7 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
                 continue
             flat: list[int] = []
             offsets = [0]
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 t = _java_normalize(text if text is not None else "")
                 # mirror of shingles_col: 1-based stride positions over
                 # sequence(1, greatest(len-(k-1), 1), step)
@@ -516,7 +505,7 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
             for j in range(n_hashes):
                 mins[j] = np.minimum.reduceat(
                     (a_vec[j] * hm + b_vec[j]) % MINHASH_P, starts)
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["doc_id"].to_numpy()
             # band explosion vectorized: rows are doc-major × band
             bucket_keys = [
                 "_".join(str(int(mins[b * rows_per_band + r, d]))
@@ -528,19 +517,18 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
                     np.tile(np.arange(bands, dtype=np.int32), len(pdf))),
                 "bucket": pd.Series(
                     [sh_hash(kk) for kk in bucket_keys], dtype="int64"),
-                id_col: pd.Series(np.repeat(ids, bands),
-                                  dtype=pdf[id_col].dtype),
+                "doc_id": pd.Series(np.repeat(ids, bands),
+                                    dtype=pdf["doc_id"].dtype),
             })
             for j, c in enumerate(mh_cols):
                 out[c] = pd.Series(np.repeat(mins[j], bands), dtype="int64")
             yield out
 
-    sel = docs.select(F.col(id_col), F.col(text_col))
+    sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)
 
 
-def simhash_batch(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def simhash_batch(docs: DataFrame, bits: int = 32) -> DataFrame:
     """simhash() in one kernel pass: (doc_id, simhash) with the per-bit
     sign-sums vectorized over a flat token-hash array."""
     from typing import Iterator
@@ -550,10 +538,8 @@ def simhash_batch(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
 
     from ..functions.textstats import _java_tokens
 
-    id_field = docs.schema[id_col]
-    out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, simhash long"
-    )
+    id_field = docs.schema["doc_id"]
+    out_schema = f"doc_id {id_field.dataType.simpleString()}, simhash long"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict[str, int] = {}
@@ -570,7 +556,7 @@ def simhash_batch(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
                 continue
             flat: list[int] = []
             offsets = [0]
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = _java_tokens(text if text is not None else "")
                 flat.extend(tok_hash(t) for t in toks)
                 offsets.append(len(flat))
@@ -593,10 +579,10 @@ def simhash_batch(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
                 # contribution)
                 sigs[(sums > 0) & (lens > 0)] |= np.int64(1) << b
             out = pd.DataFrame({
-                id_col: pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "simhash": pd.Series(sigs, dtype="int64"),
             })
             yield out
 
-    sel = docs.select(F.col(id_col), F.col(text_col))
+    sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)

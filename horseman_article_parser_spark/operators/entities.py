@@ -923,16 +923,12 @@ ENTITIES_STRUCT = T.StructType(
 )
 
 
-def extract_entities_df(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    hints: dict | None = None,
-) -> DataFrame:
-    """DataFrame op: adds an `entities` struct column (one Arrow pass;
-    hint sets ride the closure = broadcast once per executor)."""
+def extract_entities_df(docs: DataFrame) -> DataFrame:
+    """DataFrame op: (doc_id, text) → (doc_id, entities struct), one
+    Arrow pass."""
     out_schema = T.StructType(
-        [docs.schema[id_col], T.StructField("entities", ENTITIES_STRUCT)]
+        [docs.schema["doc_id"], T.StructField("entities", ENTITIES_STRUCT)]
     )
-    hints_local = hints
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -940,26 +936,23 @@ def extract_entities_df(
                 continue
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    "entities": [
-                        extract_entities(t, hints_local) for t in pdf[text_col]
-                    ],
+                    "doc_id": pdf["doc_id"],
+                    "entities": [extract_entities(t) for t in pdf["text"]],
                 }
             )
 
     return docs.mapInPandas(run, schema=out_schema)
 
 
-def entities_exploded(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", hints: dict | None = None) -> DataFrame:
-    """(doc, kind, pos, entity) rows — the relational surface for
+def entities_exploded(docs: DataFrame) -> DataFrame:
+    """(doc_id, kind, pos, entity) rows — the relational surface for
     dedupe/anti-join compositions (J3/J4 downstream)."""
-    ent = extract_entities_df(docs, id_col, text_col, hints)
+    ent = extract_entities_df(docs)
     parts = []
     for kind in ("people", "places", "orgs", "topics"):
         parts.append(
             ent.select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.lit(kind).alias("kind"),
                 F.posexplode_outer(F.col(f"entities.{kind}")).alias("pos", "entity"),
             ).filter(F.col("entity").isNotNull())

@@ -618,11 +618,12 @@ def extract_article(
 
 
 def extract_articles(
-    fetched: DataFrame, url_col: str = "url", html_col: str = "html",
+    fetched: DataFrame,
     fields: frozenset[str] | None = None,
     output_cols: list[str] | None = None,
 ) -> DataFrame:
-    """DataFrame op: adds an `article` struct column via one Arrow pass.
+    """DataFrame op: adds an `article` struct column, extracted from the
+    `url` and `html` columns, via one Arrow pass.
 
     `fields` prunes which article keys the kernel computes (see
     extract_article). `output_cols` restricts which INPUT columns the
@@ -645,7 +646,7 @@ def extract_articles(
                 continue
             arts = [
                 extract_article(u, h, fields)
-                for u, h in zip(pdf[url_col], pdf[html_col])
+                for u, h in zip(pdf["url"], pdf["html"])
             ]
             out = pdf[keep].copy()
             out["article"] = arts

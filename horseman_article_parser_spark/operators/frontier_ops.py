@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from ..functions.urls import host_col
 
 
-def uniq(frontier: DataFrame, url_col: str = "url", seq_col: str = "seq") -> DataFrame:
+def uniq(frontier: DataFrame) -> DataFrame:
     """First-occurrence distinct preserving seed order (F1).
 
     min(struct(seq, others...)) instead of min_by per column: min_by
@@ -42,7 +42,7 @@ def uniq(frontier: DataFrame, url_col: str = "url", seq_col: str = "seq") -> Dat
     struct min stays in hash aggregation with map-side partials — the
     difference between O(n) and O(n log n) per partition on a 10^10-row
     frontier. seq leads the struct, so struct ordering == seq ordering."""
-    others = [c for c in frontier.columns if c not in (url_col, seq_col)]
+    others = [c for c in frontier.columns if c not in ("url", "seq")]
     # Plan note: min_by carries string state, so Spark uses a
     # SortAggregate (HashAggregateExec needs fixed-width agg buffers;
     # min(struct)/packed-string variants hit the same limit). The
@@ -52,39 +52,37 @@ def uniq(frontier: DataFrame, url_col: str = "url", seq_col: str = "seq") -> Dat
     # differs. A hash-only alternative (agg min(seq) + self-join back)
     # costs a second full shuffle, which is strictly worse at frontier
     # scale.
-    agg = [F.min(seq_col).alias(seq_col)] + [
-        F.min_by(c, seq_col).alias(c) for c in others
+    agg = [F.min("seq").alias("seq")] + [
+        F.min_by(c, "seq").alias(c) for c in others
     ]
-    return frontier.groupBy(url_col).agg(*agg)
+    return frontier.groupBy("url").agg(*agg)
 
 
-def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """JVM-side host column; reference uses `new URL(u).host` (lowercased,
-    default-port-stripped by the URL class)."""
-    return df.withColumn("host", host_col(F.col(url_col)))
+def with_host(df: DataFrame) -> DataFrame:
+    """JVM-side host column of `url`; reference uses `new URL(u).host`
+    (lowercased, default-port-stripped by the URL class)."""
+    return df.withColumn("host", host_col(F.col("url")))
 
 
-def unique_by_host(
-    df: DataFrame, limit: int | None = None, seq_col: str = "seq"
-) -> DataFrame:
+def unique_by_host(df: DataFrame, limit: int | None = None) -> DataFrame:
     """Keep the first URL per host in seed order, then the first `limit`
     hosts in seed order (F2). Unparseable URLs (null host) are dropped,
     matching the reference's silent try/catch skip."""
     if "host" not in df.columns:
         df = with_host(df)
     df = df.filter(F.col("host").isNotNull())
-    w = Window.partitionBy("host").orderBy(seq_col)
+    w = Window.partitionBy("host").orderBy("seq")
     firsts = (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
     if limit is not None:
-        firsts = firsts.orderBy(seq_col).limit(limit)
+        firsts = firsts.orderBy("seq").limit(limit)
     return firsts
 
 
-def slice_frontier(df: DataFrame, start: int, limit: int, seq_col: str = "seq") -> DataFrame:
+def slice_frontier(df: DataFrame, start: int, limit: int) -> DataFrame:
     """Positional slice after dedup (F14): rows at ranks [start, start+limit).
 
     Rank is computed against the current ordering of `seq`; because seq
@@ -100,10 +98,10 @@ def slice_frontier(df: DataFrame, start: int, limit: int, seq_col: str = "seq") 
     the whole frontier would put 10^10 rows in one task.
     """
     k = start + limit
-    topk = df.orderBy(seq_col).limit(k)
+    topk = df.orderBy("seq").limit(k)
     if start <= 0:
         return topk
-    ranked = ordered_zip_with_index(topk, [seq_col], out_col="_pos")
+    ranked = ordered_zip_with_index(topk, ["seq"], out_col="_pos")
     return ranked.filter(F.col("_pos") >= start).drop("_pos")
 
 
@@ -139,7 +137,7 @@ def round_robin_interleave(
 
 
 def ordered_zip_with_index(
-    df: DataFrame, order_cols: list[str], out_col: str = "idx", num_partitions: int | None = None
+    df: DataFrame, order_cols: list[str], out_col: str = "idx"
 ) -> DataFrame:
     """Scalable deterministic global rank over a total order.
 
@@ -156,7 +154,7 @@ def ordered_zip_with_index(
 
     import pandas as pd
 
-    n_parts = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 4)
+    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 4)
     cols = [F.col(c) for c in order_cols]
     arranged = df.repartitionByRange(n_parts, *cols).sortWithinPartitions(*cols)
     arranged = arranged.withColumn("_pid", F.spark_partition_id())

@@ -166,11 +166,11 @@ LIVEBLOG_STRUCT = T.StructType(
 )
 
 
-def liveblog_summaries(pages: DataFrame, id_col: str = "doc_id",
-                       html_col: str = "html") -> DataFrame:
-    """DataFrame op: adds a `liveblog` struct column (one Arrow pass)."""
+def liveblog_summaries(pages: DataFrame) -> DataFrame:
+    """DataFrame op: (doc_id, html) → (doc_id, liveblog struct), one
+    Arrow pass."""
     out_schema = T.StructType(
-        [pages.schema[id_col], T.StructField("liveblog", LIVEBLOG_STRUCT)]
+        [pages.schema["doc_id"], T.StructField("liveblog", LIVEBLOG_STRUCT)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -179,8 +179,8 @@ def liveblog_summaries(pages: DataFrame, id_col: str = "doc_id",
                 continue
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    "liveblog": [build_liveblog_summary(h) for h in pdf[html_col]],
+                    "doc_id": pdf["doc_id"],
+                    "liveblog": [build_liveblog_summary(h) for h in pdf["html"]],
                 }
             )
 

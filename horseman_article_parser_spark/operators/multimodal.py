@@ -83,8 +83,7 @@ def image_features(images: DataFrame) -> DataFrame:
     return src.mapInPandas(kernel, schema=IMAGE_FEATURE_SCHEMA)
 
 
-def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 6,
-                         n_blocks: int = 8, max_bucket: int = 1000) -> DataFrame:
+def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Near-duplicate images by phash Hamming distance — metadata-only
     plan: reads (image_id, phash), never `bytes`. Same block-permutation
     equi-join as text SimHash, with the identical-signature collapse and
@@ -95,7 +94,7 @@ def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 6,
 
     sig = images.select(F.col("image_id"), F.col("phash"))
     return blocked_hamming_pairs(
-        sig, "phash", "image_id", 64, n_blocks, max_hamming, max_bucket
+        sig, "phash", "image_id", 64, 8, max_hamming, 1000
     )
 
 

@@ -9,8 +9,9 @@ broadcast-joined to candidates; the longest matching prefix wins
 (standard robots longest-match semantics); no matching rule => allowed.
 
 Per-host budget: at most `budget(host)` URLs scheduled per round, where
-budget = wave_seconds*1000 / crawl_delay_ms (default delay when no
-rule). Enforced with a TWO-PHASE top-k to survive hot-host skew:
+budget = wave_seconds*1000 / crawl_delay_ms (the caller's default
+budget when no rule gives a delay). Enforced with a TWO-PHASE top-k to
+survive hot-host skew:
 
   phase 1 (salted local cap): rank within (host, salt) where
       salt = pmod(xxhash64(url), n_salts); keep rank <= budget.
@@ -31,19 +32,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-DEFAULT_CRAWL_DELAY_MS = 1000
 
-
-def robots_filter(candidates: DataFrame, robots: DataFrame | None, url_col: str = "url") -> DataFrame:
+def robots_filter(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
     """Drop candidates disallowed by robots rules (longest-prefix match).
 
-    `candidates` must have a `host` column. The rules table is tiny
+    `candidates` must have `url` and `host` columns. The rules table is tiny
     (policy config), so the join is an explicit broadcast-hash join —
     no shuffle of the frontier side.
     """
     if robots is None:
         return candidates
-    path = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
+    path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     cand = candidates.withColumn("_path", path)
     # SHUFFLE-FREE longest-prefix resolution: pre-aggregate the (tiny)
     # rules table into one array per host, broadcast it, and resolve the
@@ -117,7 +116,6 @@ def enforce_host_budget(
     default_budget: int,
     order_cols: list[str],
     n_salts: int = 16,
-    url_col: str = "url",
 ) -> DataFrame:
     """Two-phase per-host top-k under (priority, seq) order (see module doc)."""
     df = candidates
@@ -129,7 +127,7 @@ def enforce_host_budget(
 
     order = [F.col(c) for c in order_cols]
     # phase 1: salted local cap — bounds any single shuffle key
-    df = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)))
+    df = df.withColumn("_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts)))
     w1 = Window.partitionBy("host", "_salt").orderBy(*order)
     df = df.withColumn("_r1", F.row_number().over(w1)).filter(F.col("_r1") <= F.col("_budget"))
     # phase 2: exact cap over ≤ n_salts*budget survivors per host
@@ -138,10 +136,8 @@ def enforce_host_budget(
     return df.drop("_budget", "_salt", "_r1", "_r2")
 
 
-def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman",
-                     host_col: str = "host",
-                     text_col: str = "robots_txt") -> DataFrame:
-    """Parse raw robots.txt bodies into the rules table
+def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman") -> DataFrame:
+    """Parse raw (host, robots_txt) bodies into the rules table
     (host, rule_type, path_prefix, crawl_delay_ms) — the Arrow-kernel
     scale path. Robots parsing is per-body-local (lines of one host
     never interact with another host's), so the declarative chain's
@@ -227,12 +223,12 @@ def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman",
     def kernel(batches):
         for pdf in batches:
             hs, rts, pps, dms = [], [], [], []
-            for host, body in zip(pdf[host_col], pdf[text_col]):
+            for host, body in zip(pdf["host"], pdf["robots_txt"]):
                 for rt, pp, dm in _parse_body(body):
                     hs.append(host); rts.append(rt)
                     pps.append(pp); dms.append(dm)
             yield pd.DataFrame({
-                host_col: pd.array(hs, dtype="string"),
+                "host": pd.array(hs, dtype="string"),
                 "rule_type": pd.array(rts, dtype="string"),
                 "path_prefix": pd.array(pps, dtype="string"),
                 "crawl_delay_ms": pd.array(dms, dtype="Int64"),
@@ -240,14 +236,12 @@ def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman",
 
     return robots_files.mapInPandas(
         kernel,
-        f"{host_col} string, rule_type string, path_prefix string, "
+        "host string, rule_type string, path_prefix string, "
         "crawl_delay_ms long",
     )
 
 
-def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
-                          host_col: str = "host",
-                          text_col: str = "robots_txt") -> DataFrame:
+def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman") -> DataFrame:
     """Declarative twin of :func:`parse_robots_txt` (the Arrow kernel is
     the default path — see its docstring for why). Kept because the
     window/aggregate chain is the relational reference the kernel is
@@ -268,17 +262,17 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
     numbering via running sums, ordered by line position) → aggregate
     group headers → pick best group per host. Everything keys on host —
     robots bodies are per-host small, and hosts are high-cardinality."""
-    w_host = Window.partitionBy(host_col).orderBy("line_no")
+    w_host = Window.partitionBy("host").orderBy("line_no")
     lines = robots_files.select(
-        F.col(host_col),
+        F.col("host"),
         # normalize CRLF / lone CR before splitting — real-world robots.txt
         # is very often CRLF and a trailing \r would otherwise ride every
         # agent name and path prefix, silently disabling the host's rules
         F.posexplode(
-            F.split(F.regexp_replace(F.col(text_col), r"\r\n?", "\n"), "\n")
+            F.split(F.regexp_replace(F.col("robots_txt"), r"\r\n?", "\n"), "\n")
         ).alias("line_no", "raw"),
     ).select(
-        host_col, "line_no",
+        "host", "line_no",
         # strip comments + whitespace (incl. tabs)
         F.regexp_replace(
             F.trim(F.regexp_replace("raw", r"#.*$", "")), r"^[\t ]+|[\t ]+$", ""
@@ -286,7 +280,7 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
     ).filter(F.col("line") != "")
     _strip = lambda c: F.regexp_replace(c, r"^[\t ]+|[\t ]+$", "")  # noqa: E731
     kv = lines.select(
-        host_col, "line_no",
+        "host", "line_no",
         F.lower(_strip(F.regexp_extract("line", r"^([^:]+):", 1))).alias("key"),
         _strip(F.regexp_extract("line", r"^[^:]+:(.*)$", 1)).alias("value"),
     ).filter(F.col("key") != "")
@@ -301,7 +295,7 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
     ).filter(F.col("group_id") > 0)
     agents = (
         grouped.filter(F.col("key") == "user-agent")
-        .groupBy(host_col, "group_id")
+        .groupBy("host", "group_id")
         .agg(F.collect_set(F.lower("value")).alias("agents"))
         .withColumn(
             "match_rank",
@@ -311,16 +305,16 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
         )
         .filter(F.col("match_rank").isNotNull())
     )
-    w_best = Window.partitionBy(host_col).orderBy("match_rank", "group_id")
+    w_best = Window.partitionBy("host").orderBy("match_rank", "group_id")
     best = (
         agents.withColumn("_rn", F.row_number().over(w_best))
         .filter(F.col("_rn") == 1)
-        .select(host_col, "group_id")
+        .select("host", "group_id")
     )
-    rules = grouped.join(best, [host_col, "group_id"])
+    rules = grouped.join(best, ["host", "group_id"])
     delay = (
         rules.filter(F.col("key") == "crawl-delay")
-        .groupBy(host_col)
+        .groupBy("host")
         .agg(
             (F.min(F.expr("try_cast(value AS DOUBLE)")) * 1000)
             .cast("long").alias("crawl_delay_ms")
@@ -330,11 +324,11 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
         rules.filter(F.col("key").isin("allow", "disallow"))
         .filter(F.col("value") != "")
         .select(
-            host_col,
+            "host",
             F.col("key").alias("rule_type"),
             F.col("value").alias("path_prefix"),
         )
-        .join(delay, host_col, "left")
+        .join(delay, "host", "left")
     )
     # a delay-only group ('User-agent: *\nCrawl-delay: 10' with no path
     # rules — common in the wild) must still surface its delay:
@@ -342,13 +336,13 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman",
     # path-less 'delay' row for hosts with a delay but no path rules
     # (robots_filter ignores NULL prefixes — startswith(NULL) is NULL)
     delay_only = (
-        delay.join(path_rules.select(host_col).distinct(), host_col, "left_anti")
+        delay.join(path_rules.select("host").distinct(), "host", "left_anti")
         .select(
-            host_col,
+            "host",
             F.lit("delay").alias("rule_type"),
             F.lit(None).cast("string").alias("path_prefix"),
             "crawl_delay_ms",
         )
     )
     out = path_rules.unionByName(delay_only)
-    return out.select(host_col, "rule_type", "path_prefix", "crawl_delay_ms")
+    return out.select("host", "rule_type", "path_prefix", "crawl_delay_ms")

@@ -47,13 +47,10 @@ def overlapped(fn: Callable, items: list) -> list:
         return list(ex.map(fn, items))
 
 
-def probe_urls(
-    frontier: DataFrame,
-    probe_fn: Callable[[str], int],
-    url_col: str = "url",
-) -> DataFrame:
-    """Add (status int, ok boolean) probe columns; rows keep all input
-    columns so the caller filters `ok` before the fetch wave."""
+def probe_urls(frontier: DataFrame, probe_fn: Callable[[str], int]) -> DataFrame:
+    """Add (status int, ok boolean) probe columns, probing each `url`;
+    rows keep all input columns so the caller filters `ok` before the
+    fetch wave."""
     out_schema = T.StructType(
         list(frontier.schema.fields)
         + [T.StructField("status", T.IntegerType()),
@@ -64,7 +61,7 @@ def probe_urls(
         for pdf in batches:
             if not len(pdf):
                 continue
-            statuses = overlapped(probe_fn, list(pdf[url_col]))
+            statuses = overlapped(probe_fn, list(pdf["url"]))
             pdf = pdf.copy()
             pdf["status"] = statuses
             pdf["ok"] = [probe_ok(s) for s in statuses]

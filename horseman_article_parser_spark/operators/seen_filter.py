@@ -12,7 +12,7 @@ Iceberg-style manifest (a JSON snapshot mapping shard → data file), so
 untouched shards are carried forward by reference, never rewritten — the
 same trick Iceberg manifests use to avoid rewriting unchanged data files.
 
-Three modes, one call: `claim_unseen(df, url_col, dedup_first)` and
+Three modes, one call: `claim_unseen(df, dedup_first)` and
 `resume(version)` mean the same thing on each.
 - exact  — append-only parquet of seen URLs; probe = left-anti join.
            Used by correctness fixtures (zero false positives).
@@ -49,9 +49,10 @@ from pyspark.sql import DataFrame, SparkSession
 _H1, _H2, _SHARD = "_seen_h1", "_seen_h2", "_seen_shard"
 
 
-def with_seen_hashes(df: DataFrame, url_col: str, n_shards: int) -> DataFrame:
-    """Attach JVM-side (whole-stage-codegen) hash columns for probing."""
-    u = F.col(url_col)
+def with_seen_hashes(df: DataFrame, n_shards: int) -> DataFrame:
+    """Attach JVM-side (whole-stage-codegen) hash columns of `url` for
+    probing."""
+    u = F.col("url")
     return (
         df.withColumn(_H1, F.xxhash64(u))
         .withColumn(_H2, F.xxhash64(u, F.lit(0x9E3779B9)))
@@ -154,9 +155,9 @@ class ShardedSeenFilter:
 
     # ------------------------------------------------------------- ops
 
-    def claim_unseen(self, df: DataFrame, url_col: str = "url",
+    def claim_unseen(self, df: DataFrame,
                      dedup_first: list[str] | None = None) -> DataFrame:
-        """Atomic test-and-set: returns rows whose URL was not seen, and
+        """Atomic test-and-set: returns rows whose `url` was not seen, and
         commits a new state version with those URLs inserted.
 
         One shuffle (on shard_id) into min(n_shards, cores) tasks; each
@@ -169,9 +170,9 @@ class ShardedSeenFilter:
         would — but INSIDE the shard task: the shard shuffle already
         co-locates every copy of a url (shard = f(url)), so the claim's
         one shuffle does double duty (guide §2.4)."""
-        return self._apply(df, url_col, self._claim, dedup_first)
+        return self._apply(df, self._claim, dedup_first)
 
-    def _apply(self, df: DataFrame, url_col: str, op: Callable,
+    def _apply(self, df: DataFrame, op: Callable,
                dedup_first: list[str] | None = None) -> DataFrame:
         """The shared claim loop: run `op(state, h1, h2, salt) ->
         (emit mask, changed)` on each shard's rows, save the shards it
@@ -180,7 +181,7 @@ class ShardedSeenFilter:
         per shard, so a shard's state does not depend on which other
         shards share its task."""
         in_cols = df.columns
-        hashed = with_seen_hashes(df, url_col, self.n_shards)
+        hashed = with_seen_hashes(df, self.n_shards)
         shards = self._read_manifest(self.version)["shards"] if self.version >= 0 else {}
         new_version = self.version + 1
         # files left at this version by an attempt that never committed
@@ -200,8 +201,8 @@ class ShardedSeenFilter:
             pdf = pd.concat(parts, ignore_index=True)
             if dedup_first:
                 pdf = pdf.sort_values(
-                    [url_col, *dedup_first], kind="mergesort"
-                ).drop_duplicates(url_col, keep="first")
+                    ["url", *dedup_first], kind="mergesort"
+                ).drop_duplicates("url", keep="first")
             for shard_id, grp in pdf.groupby(_SHARD, sort=True):
                 shard = int(shard_id)
                 path = shards.get(str(shard))
@@ -297,31 +298,27 @@ class ExactSeenFilter:
         # read starts no schema-inference job
         return spark.read.schema("url string").parquet(*paths)
 
-    def claim_unseen(self, df: DataFrame, url_col: str = "url",
+    def claim_unseen(self, df: DataFrame,
                      dedup_first: list[str] | None = None) -> DataFrame:
         """See `ShardedSeenFilter.claim_unseen`; here the in-batch dedup
         is the groupBy(url).agg(min(struct(...))) itself."""
         if dedup_first:
-            rest = [c for c in df.columns if c != url_col and c not in dedup_first]
-            first = df.groupBy(url_col).agg(
+            rest = [c for c in df.columns if c != "url" and c not in dedup_first]
+            first = df.groupBy("url").agg(
                 F.min(F.struct(*dedup_first, *rest)).alias("_first"))
             df = first.select(*[
-                F.col(c) if c == url_col else F.col("_first")[c].alias(c)
+                F.col(c) if c == "url" else F.col("_first")[c].alias(c)
                 for c in df.columns
             ])
         spark = df.sparkSession
         seen = self._seen_df(spark)
         if seen is not None:
-            unseen = df.join(
-                seen.withColumnRenamed("url", url_col).select(url_col),
-                on=url_col,
-                how="left_anti",
-            ).select(*df.columns)
+            unseen = df.join(seen, on="url", how="left_anti").select(*df.columns)
         else:
             unseen = df
         unseen = unseen.localCheckpoint(eager=True)
         new_version = self.version + 1
-        unseen.select(F.col(url_col).alias("url")).write.mode("overwrite").parquet(
+        unseen.select("url").write.mode("overwrite").parquet(
             os.path.join(self.store_dir, f"v{new_version}")
         )
         self.version = new_version
@@ -471,7 +468,7 @@ class CuckooSeenFilter(ShardedSeenFilter):
                     break
         return present, bool(present.any())
 
-    def release(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        """Delete the URLs' fingerprints (bloom cannot); returns the rows
+    def release(self, df: DataFrame) -> DataFrame:
+        """Delete the `url`s' fingerprints (bloom cannot); returns the rows
         whose fingerprint was actually present and removed."""
-        return self._apply(df, url_col, self._release)
+        return self._apply(df, self._release)

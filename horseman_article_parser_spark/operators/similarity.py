@@ -51,24 +51,23 @@ def cosine_col(a: Column, b: Column, norm_a: Column | None = None,
 # --------------------------------------------------------- brute force
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                q_id_col: str = "query_id", q_vec_col: str = "q_vec") -> DataFrame:
-    """Exact cosine top-k: broadcast the query set against the corpus.
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k of each (query_id, q_vec) query over the
+    (vec_id, embedding) corpus: broadcast the query set against the corpus.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k per query,
     ties broken by neighbor_id for determinism. The only shuffle is the
     per-query top-k window over score triples."""
-    q = F.broadcast(queries.select(F.col(q_id_col), F.col(q_vec_col)))
+    q = F.broadcast(queries.select(F.col("query_id"), F.col("q_vec")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm_col(F.col(vec_col)).alias("_nv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_v"),
+        l2_norm_col(F.col("embedding")).alias("_nv"),
     )
     scored = c.crossJoin(q).select(
-        F.col(q_id_col).alias("query_id"),
+        F.col("query_id"),
         "neighbor_id",
-        cosine_col(F.col(q_vec_col), F.col("_v"), l2_norm_col(F.col(q_vec_col)), F.col("_nv")).alias("cosine"),
+        cosine_col(F.col("q_vec"), F.col("_v"), l2_norm_col(F.col("q_vec")), F.col("_nv")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -106,7 +105,6 @@ def hyperplane_bucket_col(vec: Column, n_planes: int = 8, seed: int = 7,
 
 
 def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     seed_mod: int = 97, exact_means: bool = False) -> DataFrame:
     """Lloyd's k-means over DataFrame ops. Init = deterministic sample
     (vec_id ordering); each iteration is one assign (broadcast centroids)
@@ -123,9 +121,9 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
     # numbered on the driver — no RDD API, no extra jobs (the old path
     # cost a .first() for dim + an RDD zipWithIndex round-trip)
     seed_rows = (
-        corpus.orderBy(F.col(id_col) % seed_mod, id_col)
+        corpus.orderBy(F.col("vec_id") % seed_mod, "vec_id")
         .limit(n_centroids)
-        .select(F.col(vec_col).alias("c_vec"))
+        .select(F.col("embedding").alias("c_vec"))
         .collect()
     )
     cents = corpus.sparkSession.createDataFrame(
@@ -133,10 +131,10 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
         "cluster int, c_vec array<float>",
     )
     for _ in range(n_iters):
-        assigned = assign_clusters(corpus, cents, id_col, vec_col)
+        assigned = assign_clusters(corpus, cents)
         exploded = (
-            assigned.join(corpus, id_col)
-            .select("cluster", F.posexplode(F.col(vec_col)).alias("d", "val"))
+            assigned.join(corpus, "vec_id")
+            .select("cluster", F.posexplode(F.col("embedding")).alias("d", "val"))
         )
         if exact_means:
             mean = (
@@ -159,33 +157,30 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
     return cents.select("cluster", "c_vec")
 
 
-def assign_clusters(corpus: DataFrame, centroids: DataFrame,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def assign_clusters(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest centroid per vector (max cosine; min cluster id ties)."""
     joined = corpus.crossJoin(F.broadcast(centroids))
-    sim = cosine_col(F.col(vec_col), F.col("c_vec"))
-    w = Window.partitionBy(id_col).orderBy(F.desc(sim), F.asc("cluster"))
+    sim = cosine_col(F.col("embedding"), F.col("c_vec"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc(sim), F.asc("cluster"))
     return (
         joined.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(F.col(id_col), "cluster")
+        .select(F.col("vec_id"), "cluster")
     )
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-             k: int = 10, n_probe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding", q_id_col: str = "query_id",
-             q_vec_col: str = "q_vec") -> DataFrame:
+             k: int = 10, n_probe: int = 4) -> DataFrame:
     """IVF search: query probes its n_probe nearest centroid lists; exact
     cosine rerank inside the probed lists only."""
-    assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    inv = corpus.join(assigned, id_col).select(
-        F.col("cluster"), F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"), l2_norm_col(F.col(vec_col)).alias("_nv"),
+    assigned = assign_clusters(corpus, centroids)
+    inv = corpus.join(assigned, "vec_id").select(
+        F.col("cluster"), F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_v"), l2_norm_col(F.col("embedding")).alias("_nv"),
     )
     qc = queries.crossJoin(F.broadcast(centroids)).select(
-        F.col(q_id_col).alias("query_id"), F.col(q_vec_col).alias("_qv"),
-        F.col("cluster"), cosine_col(F.col(q_vec_col), F.col("c_vec")).alias("_csim"),
+        F.col("query_id"), F.col("q_vec").alias("_qv"),
+        F.col("cluster"), cosine_col(F.col("q_vec"), F.col("c_vec")).alias("_csim"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("_csim"), F.asc("cluster"))
     probes = (

@@ -65,12 +65,11 @@ def normalize_entity_col(s: Column) -> Column:
     return F.lower(F.trim(out))
 
 
-def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", positions: bool = False,
+def doc_tokens(docs: DataFrame, positions: bool = False,
                carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(doc, line, word_idx, word) after the reference pre-pass; words
-    are stripped of edge punctuation and lowercased for dictionary
-    probing (original kept as `word`).
+    """(doc_id, line, word_idx, word) over `text` after the reference
+    pre-pass; words are stripped of edge punctuation and lowercased for
+    dictionary probing (original kept as `word`).
 
     With positions=True also emits `col_char` / `offset_start` /
     `offset_end` (spellCheck.js:29-47 shape). Both are running
@@ -85,19 +84,19 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
     back onto the exploded tokens."""
     carry = [F.col(c) for c in carry_cols]
     lines = docs.select(
-        F.col(id_col), *carry,
-        F.posexplode(F.split(mask_urls_col(text_col), "\n")).alias("_ln", "_line"),
+        F.col("doc_id"), *carry,
+        F.posexplode(F.split(mask_urls_col("text"), "\n")).alias("_ln", "_line"),
     )
     arr = F.split(F.col("_line"), " ")
     if not positions:
         toks = lines.select(
-            F.col(id_col), *carry,
+            F.col("doc_id"), *carry,
             (F.col("_ln") + 1).alias("line"),
             F.posexplode(F.filter(arr, lambda w: w != "")).alias("word_idx", "_raw"),
         )
         word = F.regexp_replace(F.col("_raw"), r"^[^A-Za-z]+|[^A-Za-z]+$", "")
         return toks.select(
-            F.col(id_col), *carry, "line", "word_idx",
+            F.col("doc_id"), *carry, "line", "word_idx",
             word.alias("word"), F.lower(word).alias("word_lc"),
         ).filter(F.col("word") != "")
     # positions path: explode UNFILTERED so empty tokens (a collapsed
@@ -105,14 +104,14 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
     # filtered token ordinal is _rp minus the leading-empty marker
     # (interior empties are impossible after the space collapse).
     toks = lines.select(
-        F.col(id_col), *carry,
+        F.col("doc_id"), *carry,
         (F.col("_ln") + 1).alias("line"),
         F.when(F.try_element_at(arr, F.lit(1)) == "", F.lit(1))
         .otherwise(F.lit(0)).alias("_lead"),
         F.posexplode(arr).alias("_rp", "_raw"),
     )
     wdoc = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("line", "_rp")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -120,14 +119,14 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
         "_off_raw",
         F.coalesce(F.sum(F.length("_raw") + 1).over(wdoc), F.lit(0).cast("long")),
     )
-    wline = Window.partitionBy(id_col, "line").orderBy("_rp")
+    wline = Window.partitionBy("doc_id", "line").orderBy("_rp")
     toks = toks.withColumn(
         "_col_raw", F.col("_off_raw") - F.first("_off_raw").over(wline) + 1
     ).filter(F.col("_raw") != "")
     strip_lead = F.length(F.regexp_extract("_raw", r"^[^A-Za-z]+", 0))
     word = F.regexp_replace(F.col("_raw"), r"^[^A-Za-z]+|[^A-Za-z]+$", "")
     return toks.select(
-        F.col(id_col), *carry, "line",
+        F.col("doc_id"), *carry, "line",
         (F.col("_rp") - F.col("_lead")).alias("word_idx"),
         word.alias("word"), F.lower(word).alias("word_lc"),
         (F.col("_col_raw") + strip_lead).cast("int").alias("col_char"),
@@ -140,16 +139,13 @@ def misspellings(
     docs: DataFrame,
     dictionary: DataFrame,
     entities: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     positions: bool = False,
 ) -> DataFrame:
-    """N4 + J3: (doc, line, word_idx, word[, char positions]) not in
+    """N4 + J3: (doc_id, line, word_idx, word[, char positions]) not in
     `dictionary(word)`, minus words whose normalized/depluralized form
-    is a known entity token in `entities(entity)` (per-corpus table;
-    the reference's per-article Set becomes a join keyed by doc when
-    entities carry `id_col`)."""
-    toks = doc_tokens(docs, id_col, text_col, positions=positions)
+    is a known entity token in `entities(entity)` (one per-corpus
+    table, where the reference keeps a Set per article)."""
+    toks = doc_tokens(docs, positions=positions)
     dict_lc = F.broadcast(
         dictionary.select(F.lower("word").alias("word_lc")).distinct()
     )
@@ -184,7 +180,7 @@ def misspellings(
             missed["word_lc"] == ent_tokens["word_key"],
             "left_anti",
         )
-    cols = [id_col, "line", "word_idx", "word"]
+    cols = ["doc_id", "line", "word_idx", "word"]
     if positions:
         cols += ["col_char", "offset_start", "offset_end"]
     return missed.select(*cols)
@@ -194,7 +190,7 @@ def misspellings(
 # retext-spell returns edit-distance suggestions per misspelling
 # (/root/reference/controllers/spellCheck.js:29-55, `expected`). The
 # deterministic relational form: dictionary words within Levenshtein
-# distance `max_distance`, alphabetical, capped. Candidate generation is
+# distance 1, alphabetical, capped. Candidate generation is
 # the symspell deletes-table join (Garbe's public algorithm): keys =
 # word ∪ single-char deletions on BOTH sides; two words at distance ≤ 1
 # always share a key, so the join bounds the search without a cross
@@ -215,15 +211,7 @@ def _deletes1_col(word: Column) -> Column:
     )
 
 
-def misspellings_multilang(
-    docs: DataFrame,
-    dictionaries: DataFrame,
-    entities: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    positions: bool = False,
-    fallback_lang: str = "en",
-) -> DataFrame:
+def misspellings_multilang(docs: DataFrame, dictionaries: DataFrame) -> DataFrame:
     """N4 with the reference's per-language dictionary selection
     (/root/reference/index.js:1383-1396: `dictionary-{iso6391}` of the
     DETECTED language, en fallback when that dictionary is absent).
@@ -231,9 +219,9 @@ def misspellings_multilang(
     `dictionaries` is a long table (lang string, word string) — the
     relational form of the per-language hunspell files. Each doc's
     language comes from the trigram langid; its effective dictionary is
-    that language's rows, or `fallback_lang`'s when the detected
-    language has none. Output adds a `lang` column (the effective
-    dictionary language per doc).
+    that language's rows, or English's when the detected language has
+    none. Output: (doc_id, lang, line, word_idx, word), `lang` being
+    the effective dictionary language per doc.
 
     Scale shape: langid runs as the Arrow-batched kernel
     (langid_batch_col — at the 105-language profile table the
@@ -246,7 +234,7 @@ def misspellings_multilang(
     the single-dictionary path."""
     from ..functions.textstats import lang_normtext_col, langid_batch_col
 
-    nt = lang_normtext_col(F.col(text_col))
+    nt = lang_normtext_col(F.col("text"))
     docs_l = docs.withColumn("_nt", nt).withColumn(
         "_lang", langid_batch_col(F.col("_nt"))["iso6391"]
     ).drop("_nt")
@@ -255,55 +243,27 @@ def misspellings_multilang(
     )
     docs_l = docs_l.join(F.broadcast(avail), "_lang", "left").withColumn(
         "lang",
-        F.when(F.col("_has"), F.col("_lang")).otherwise(F.lit(fallback_lang)),
+        F.when(F.col("_has"), F.col("_lang")).otherwise(F.lit("en")),
     )
-    toks = doc_tokens(docs_l, id_col, text_col, positions=positions,
-                      carry_cols=("lang",))
+    toks = doc_tokens(docs_l, carry_cols=("lang",))
     dict_lc = F.broadcast(
         dictionaries.select(
             F.col("lang"), F.lower("word").alias("word_lc")
         ).distinct()
     )
     missed = toks.join(dict_lc, ["lang", "word_lc"], "left_anti")
-    if entities is not None:
-        ent_tokens = (
-            entities.select(
-                F.explode(
-                    F.filter(
-                        F.split(normalize_entity_col(F.col("entity")), " "),
-                        lambda w: w != "",
-                    )
-                ).alias("tok")
-            )
-            .select(
-                F.explode(
-                    F.array_distinct(
-                        F.array(F.col("tok"), F.concat(F.col("tok"), F.lit("s")))
-                    )
-                ).alias("word_key")
-            )
-            .distinct()
-        )
-        missed = missed.join(
-            F.broadcast(ent_tokens),
-            missed["word_lc"] == ent_tokens["word_key"],
-            "left_anti",
-        )
-    cols = [id_col, "lang", "line", "word_idx", "word"]
-    if positions:
-        cols += ["col_char", "offset_start", "offset_end"]
-    return missed.select(*cols)
+    return missed.select("doc_id", "lang", "line", "word_idx", "word")
 
 
 def suggest_corrections(
     missed: DataFrame,
     dictionary: DataFrame,
     max_suggestions: int = 5,
-    max_distance: int = 1,
-    id_cols: tuple[str, ...] = ("doc_id", "line", "word_idx"),
 ) -> DataFrame:
-    """Add a `suggestions` column (comma-joined, alphabetical, capped at
-    max_suggestions; '' when none) to a misspellings frame."""
+    """Add a `suggestions` column (dictionary words within Levenshtein
+    distance 1, comma-joined, alphabetical, capped at max_suggestions;
+    '' when none) to a misspellings frame."""
+    id_cols = ("doc_id", "line", "word_idx")
     dict_keys = F.broadcast(
         dictionary.select(F.lower("word").alias("_dw"))
         .distinct()
@@ -317,7 +277,7 @@ def suggest_corrections(
         F.explode(_deletes1_col(F.col("_wl"))).alias("_key"),
     )
     cand = keyed.join(dict_keys, "_key").filter(
-        F.levenshtein(F.col("_wl"), F.col("_dw")) <= max_distance
+        F.levenshtein(F.col("_wl"), F.col("_dw")) <= 1
     )
     agg = cand.groupBy(*id_cols, "word").agg(
         F.array_join(

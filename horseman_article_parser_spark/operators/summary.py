@@ -2,8 +2,10 @@
 
 Behavior-parity reimplementation of the reference's buildSummary
 (/root/reference/controllers/summary.js:21-174): sentence scoring with
-position decay, paragraph decay, paragraph-start bonus, title/meta/
-keyword token overlap, digit/factual/length bonuses and noise penalty;
+position decay, paragraph decay, paragraph-start bonus, title/meta
+token overlap (no caller supplies the reference's keyword list, so its
+keyword-overlap bonus is left out), digit/factual/length bonuses and
+noise penalty;
 greedy selection under a per-paragraph cap with paragraph-diversity
 deferral; coverage repair at n/3 and 2n/3; final re-sort by original
 position.
@@ -128,7 +130,6 @@ def build_summary(
     text: str | None,
     title: str = "",
     meta_description: str = "",
-    keywords: list[str] | None = None,
     max_sentences: int = DEFAULT_MAX_SENTENCES,
 ) -> dict:
     """Per-document kernel; returns {"text": str, "sentences": [str]}."""
@@ -143,9 +144,6 @@ def build_summary(
 
     title_tokens = _token_set(title)
     meta_tokens = _token_set(meta_description)
-    kw_tokens: set[str] = set()
-    for kw in keywords or []:
-        kw_tokens |= _token_set(kw if isinstance(kw, str) else str(kw))
     n = len(sentences)
 
     scored = []
@@ -163,9 +161,6 @@ def build_summary(
         m_ov = len(tokens & meta_tokens)
         if m_ov:
             score += 0.3 + min(m_ov, 4) * 0.2
-        k_ov = len(tokens & kw_tokens)
-        if k_ov:
-            score += 0.2 + min(k_ov, 4) * 0.15
         if re.search(r"[0-9]", s["text"]):
             score += 0.35
         if any(p.search(s["text"]) for p in _FACTUAL):
@@ -279,32 +274,24 @@ SUMMARY_STRUCT = T.StructType(
 )
 
 
-def summary_udf(max_sentences: int = DEFAULT_MAX_SENTENCES):
-    """Arrow-batched (text, title, meta_description) → summary struct."""
+def summarize(
+    docs: DataFrame,
+    title_col: Column | None = None,
+    meta_col: Column | None = None,
+) -> DataFrame:
+    """DataFrame op: adds a `summary` struct(text, sentences) column over
+    `text`, one Arrow-batched build_summary call per row."""
 
     @pandas_udf(SUMMARY_STRUCT)
     def _summarize(
         text: pd.Series, title: pd.Series, meta: pd.Series
     ) -> pd.DataFrame:
         rows = [
-            build_summary(t, ti or "", me or "", max_sentences=max_sentences)
+            build_summary(t, ti or "", me or "")
             for t, ti, me in zip(text, title, meta)
         ]
         return pd.DataFrame(rows)
 
-    return _summarize
-
-
-def summarize(
-    docs: DataFrame,
-    text_col: str = "text",
-    title_col: Column | None = None,
-    meta_col: Column | None = None,
-    max_sentences: int = DEFAULT_MAX_SENTENCES,
-) -> DataFrame:
-    """DataFrame op: adds a `summary` struct(text, sentences) column."""
     title = title_col if title_col is not None else F.lit("")
     meta = meta_col if meta_col is not None else F.lit("")
-    return docs.withColumn(
-        "summary", summary_udf(max_sentences)(F.col(text_col), title, meta)
-    )
+    return docs.withColumn("summary", _summarize(F.col("text"), title, meta))

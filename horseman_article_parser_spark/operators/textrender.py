@@ -333,19 +333,19 @@ TEXTS_STRUCT = T.StructType(
 )
 
 
-def render_texts(pages: DataFrame, id_col: str = "doc_id",
-                 html_col: str = "html", title_col: str | None = None,
+def render_texts(pages: DataFrame, title_col: str | None = None,
                  strip_boilerplate: bool = False) -> DataFrame:
-    """One Arrow pass → struct(raw, formatted, html) per page.
+    """One Arrow pass over (doc_id, html) → struct(raw, formatted, html)
+    per page.
 
     strip_boilerplate=True runs the F10 CTA/ad/related-node removal
     (stripNonArticleElements) on the html before rendering, matching the
     reference pipeline (/root/reference/index.js:1197). Default off:
     parity fixtures for the plain renderings pin the unstripped output.
     """
-    cols = [id_col, html_col] + ([title_col] if title_col else [])
+    cols = ["doc_id", "html"] + ([title_col] if title_col else [])
     out_schema = T.StructType(
-        [pages.schema[id_col], T.StructField("texts", TEXTS_STRUCT)]
+        [pages.schema["doc_id"], T.StructField("texts", TEXTS_STRUCT)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -354,12 +354,12 @@ def render_texts(pages: DataFrame, id_col: str = "doc_id",
                 continue
             titles = pdf[title_col] if title_col else [None] * len(pdf)
             rows = []
-            for h, t in zip(pdf[html_col], titles):
+            for h, t in zip(pdf["html"], titles):
                 if strip_boilerplate:
                     h = strip_non_article(h)
                 raw = raw_text(h)
                 fmt = formatted_text(h, t)
                 rows.append({"raw": raw, "formatted": fmt, "html": html_text(fmt)})
-            yield pd.DataFrame({id_col: pdf[id_col], "texts": rows})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "texts": rows})
 
     return pages.select(*cols).mapInPandas(run, schema=out_schema)

@@ -6,10 +6,12 @@ the parquet layout and commit protocol map 1:1 onto Iceberg snapshots,
 which this container cannot run for lack of the runtime jars):
 
     store/
-      manifest.json        # {"last_round": N, "seen_version": V} — atomic
-                           # commit pointer; V is the seen-filter version
-                           # to resume with
-      pending/round=N/     # pending frontier snapshot after round N
+      manifest.json        # {"last_round": N, "seen_version": V,
+                           #  "stream_batch": B} — atomic commit pointer;
+                           # V is the seen-filter version to resume with,
+                           # B the last streamed seed batch applied
+      pending/round=N/     # pending frontier snapshot after round N, plus
+                           # stream-B-* files: streamed seeds of batch B
       waves/round=N/       # the scheduled wave of round N (ordered)
       results/round=N/     # extracted article structs (per-host counts:
                            # plans.crawl.host_metrics over this table)
@@ -59,7 +61,7 @@ class CrawlStore:
             with open(self._manifest_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"last_round": -2, "seen_version": -1}
+            return {"last_round": -2, "seen_version": -1, "stream_batch": -1}
 
     def last_round(self) -> int:
         """Last committed round; -1 = seeded only, -2 = empty store."""
@@ -69,17 +71,47 @@ class CrawlStore:
         """Seen-filter version of the last commit; -1 = empty store."""
         return self._manifest()["seen_version"]
 
-    def commit_round(self, round_no: int, seen_version: int) -> None:
+    def stream_batch(self) -> int:
+        """Id of the last streamed seed batch committed; -1 = none."""
+        return self._manifest().get("stream_batch", -1)
+
+    def _commit(self, **fields) -> None:
+        manifest = {**self._manifest(), **fields}
         fd, tmp = tempfile.mkstemp(dir=self.root)
         with os.fdopen(fd, "w") as f:
-            json.dump({"last_round": round_no, "seen_version": seen_version}, f)
+            json.dump(manifest, f)
         os.replace(tmp, self._manifest_path())
+
+    def commit_round(self, round_no: int, seen_version: int) -> None:
+        self._commit(last_round=round_no, seen_version=seen_version)
+
+    def commit_stream_batch(self, batch_id: int, seen_version: int) -> None:
+        """Record streamed seed batch `batch_id` as applied, together
+        with the seen-filter version its claim made."""
+        self._commit(stream_batch=batch_id, seen_version=seen_version)
 
     # --------------------------------------------------------------- io
 
     def write(self, df: DataFrame, kind: str, round_no: int) -> None:
         df.write.mode("overwrite").parquet(self.path(kind, round_no))
         self._schemas[kind] = df.schema
+
+    def write_part(self, df: DataFrame, kind: str, round_no: int, name: str) -> None:
+        """Add `df` to a round's table as files named `name-*`, replacing
+        the files an earlier attempt left under that name, so a retried
+        write leaves one copy of the rows, not two. Spark writes to a
+        staging directory first; only complete files are moved in."""
+        staging = os.path.join(self.root, "_staging", name)
+        df.write.mode("overwrite").parquet(staging)
+        target = self.path(kind, round_no)
+        os.makedirs(target, exist_ok=True)
+        for f in os.listdir(target):
+            if f.startswith(f"{name}-"):
+                os.remove(os.path.join(target, f))
+        for f in sorted(os.listdir(staging)):
+            # _SUCCESS and the hidden .crc checksums stay behind
+            if not f.startswith(("_", ".")):
+                os.replace(os.path.join(staging, f), os.path.join(target, f"{name}-{f}"))
 
     def read(self, spark: SparkSession, kind: str, round_no: int) -> DataFrame:
         schema = self._schemas.get(kind)

@@ -22,11 +22,8 @@ from urllib.parse import urlsplit
 from ..datagen.synthweb import fetch_page
 from ..functions.urls import canonicalize_url, skip_reason
 from ..operators.extract import extract_article
-
-SEQ_STRIDE = 1 << 40
-LINK_POS_STRIDE = 1 << 10  # must match plans.crawl.LINK_POS_STRIDE
-STREAM_SEQ_BASE = 1 << 60  # must match streaming.frontier_stream
-STREAM_BATCH_SEQ_STRIDE = 1 << 20  # must match streaming.frontier_stream
+from ..streaming.frontier_stream import BATCH_SEQ_STRIDE, STREAM_SEQ_BASE
+from .crawl import LINK_POS_STRIDE, SEQ_STRIDE
 
 
 def js_url_host(u: str) -> str | None:
@@ -81,11 +78,10 @@ def sim_crawl(
     round0_limit: int,
     default_host_budget: int = 4,
     max_depth: int = 8,
-    host_budget_overrides: dict[str, int] | None = None,
-    disallow: list[tuple[str, str]] | None = None,  # (host, path_prefix)
     streamed_seeds: dict[int, list[str]] | None = None,
 ) -> list[list[str]]:
-    """Full multi-round simulation; returns scheduled URLs per round.
+    """Full multi-round simulation, without robots rules and with one
+    budget for every host; returns scheduled URLs per round.
 
     `streamed_seeds[r]` is a seed batch that arrives AFTER round r
     completes (the streaming ingest between rounds, T6): it replays
@@ -93,8 +89,6 @@ def sim_crawl(
     skip-filter → dedup → claim-unseen → url-order rank → seq =
     STREAM_SEQ_BASE + idx, depth 0, priority 0.0 — making the stateful
     two-round driver query (`crawl_two_rounds`) oracle-checkable."""
-    overrides = host_budget_overrides or {}
-    disallow = disallow or []
     streamed_seeds = streamed_seeds or {}
     wave0 = sim_wave0(seed_list, round0_limit)
     # frontier rows: (url, seq, host, depth, priority)
@@ -105,23 +99,11 @@ def sim_crawl(
     waves: list[list[str]] = []
 
     for rnd in range(n_rounds):
-        # robots disallow (longest matching prefix wins; allow if none)
-        def allowed(url: str, host: str) -> bool:
-            path = urlsplit(url).path or "/"
-            best: tuple[int, bool] | None = None
-            for d_host, prefix in disallow:
-                if d_host == host and path.startswith(prefix):
-                    if best is None or len(prefix) > best[0]:
-                        best = (len(prefix), False)
-            return best is None or best[1]
-
-        candidates = [row for row in pending if allowed(row[0], row[2])]
-        candidates.sort(key=lambda r: (r[4], r[1]))  # (priority, seq)
+        candidates = sorted(pending, key=lambda r: (r[4], r[1]))  # (priority, seq)
         taken: list[tuple] = []
         per_host: dict[str, int] = {}
         for row in candidates:
-            budget = overrides.get(row[2], default_host_budget)
-            if per_host.get(row[2], 0) >= budget:
+            if per_host.get(row[2], 0) >= default_host_budget:
                 continue
             per_host[row[2]] = per_host.get(row[2], 0) + 1
             taken.append(row)
@@ -175,7 +157,7 @@ def sim_crawl(
                         continue
                     cleaned.add(cu)
                 unseen = [u for u in sorted(cleaned) if u not in seen]
-                base = STREAM_SEQ_BASE + batch_id * STREAM_BATCH_SEQ_STRIDE
+                base = STREAM_SEQ_BASE + batch_id * BATCH_SEQ_STRIDE
                 for idx, u in enumerate(unseen):
                     seen.add(u)  # claimed even when the host filter drops it
                     host = js_url_host(u)

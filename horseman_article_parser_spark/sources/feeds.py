@@ -35,14 +35,14 @@ _ATOM_HREF_ALT = r'(?s)<link[^>]*rel="alternate"[^>]*href="([^"]*)"'
 _ATOM_HREF_ANY = r'(?s)<link[^>]*href="([^"]*)"'
 
 
-def feeds_from_lines(lines: DataFrame, line_col: str = "value") -> DataFrame:
-    """S2 core rule on an already-loaded lines relation: trim, drop
-    blanks and `#` comments (fetch-curated-urls.js:22-30). Split out of
-    read_feeds_file so by-construction line sets (driver oracle) and
-    real files share one implementation."""
+def feeds_from_lines(lines: DataFrame) -> DataFrame:
+    """S2 core rule on an already-loaded relation of `value` lines:
+    trim, drop blanks and `#` comments (fetch-curated-urls.js:22-30).
+    Split out of read_feeds_file so by-construction line sets (driver
+    oracle) and real files share one implementation."""
     df = lines.select(
-        *[c for c in lines.columns if c != line_col],
-        F.trim(line_col).alias("feed_url"),
+        *[c for c in lines.columns if c != "value"],
+        F.trim("value").alias("feed_url"),
     )
     return df.filter(
         (F.length("feed_url") > 0) & ~F.col("feed_url").startswith("#")
@@ -119,43 +119,40 @@ def sitemap_links_col(xml: Column | str) -> Column:
     return F.filter(locs, lambda u: u != "")
 
 
-def extract_feed_links(feeds: DataFrame, xml_col: str = "xml",
-                       feed_col: str = "feed_url") -> DataFrame:
-    """Explode per-feed item links with in-feed position (for W8
-    round-robin interleave downstream): (feed_url, pos, url)."""
+def extract_feed_links(feeds: DataFrame) -> DataFrame:
+    """Explode per-feed item links of the `xml` column with in-feed
+    position (for W8 round-robin interleave downstream):
+    (feed_url, pos, url)."""
     links = F.when(
-        F.col(xml_col).contains("<urlset"), sitemap_links_col(xml_col)
-    ).otherwise(rss_links_col(xml_col))
+        F.col("xml").contains("<urlset"), sitemap_links_col("xml")
+    ).otherwise(rss_links_col("xml"))
     return feeds.select(
-        F.col(feed_col), F.posexplode(links).alias("pos", "url")
+        F.col("feed_url"), F.posexplode(links).alias("pos", "url")
     )
 
 
-def merge_csv_lines(spark: SparkSession, paths: list[str],
-                    header: str | None = None) -> tuple[str, DataFrame]:
+def merge_csv_lines(spark: SparkSession, paths: list[str]) -> tuple[str, DataFrame]:
     """S11 CSV merge (/root/reference/scripts/merge-csv.js:15-43):
     unique trimmed non-empty rows across files, header excluded
-    wherever it reappears. The reference's first-seen header becomes an
-    explicit parameter (or is taken from the first line of the first
-    file — a 1-row read); rows dedupe distributed via dropDuplicates —
-    Spark-first restatement of its in-memory Set.
+    wherever it reappears. The header is the reference's first-seen
+    one: the first line of the first file (a 1-row read); rows dedupe
+    distributed via dropDuplicates — Spark-first restatement of its
+    in-memory Set.
 
     Returns (header, rows DataFrame with a single `row` column)."""
-    if header is None:
-        first = spark.read.text(paths[0]).limit(1).collect()
-        if not first:
-            raise ValueError("no header found in first input")
-        header = first[0]["value"].strip()
+    first = spark.read.text(paths[0]).limit(1).collect()
+    if not first:
+        raise ValueError("no header found in first input")
+    header = first[0]["value"].strip()
     return header, merge_csv_rows(spark.read.text(paths), header)
 
 
-def merge_csv_rows(lines: DataFrame, header: str,
-                   line_col: str = "value") -> DataFrame:
-    """S11 core rule on an already-loaded lines relation: unique
-    trimmed non-empty rows, the header excluded wherever it reappears
-    (merge-csv.js:15-43)."""
+def merge_csv_rows(lines: DataFrame, header: str) -> DataFrame:
+    """S11 core rule on an already-loaded relation of `value` lines:
+    unique trimmed non-empty rows, the header excluded wherever it
+    reappears (merge-csv.js:15-43)."""
     return (
-        lines.select(F.trim(line_col).alias("row"))
+        lines.select(F.trim("value").alias("row"))
         .filter((F.col("row") != "") & (F.col("row") != header))
         .dropDuplicates(["row"])
     )

@@ -8,11 +8,12 @@ explicit with Structured Streaming:
 - `seed_file_stream` + `StreamingSeedIngest`: new seed-list files
   dropped into a directory arrive as micro-batches (`readStream.text`);
   each batch is trimmed, skip-filtered, canonicalized, claimed against
-  the scheduler's URL-seen filter (idempotent bloom test-and-set — a
-  replayed batch after failure re-claims already-set bits and yields no
-  duplicate frontier rows), and appended to the pending store with
+  the scheduler's URL-seen filter, and added to the pending store with
   batch-deterministic seqs. Checkpointing is the streaming engine's
-  offset log + our versioned seen-filter manifests (T6).
+  offset log + the crawl manifest, which records each applied batch id
+  with the seen-filter version its claim made (T6): a batch replayed
+  after a crash claims again from the committed version and replaces
+  its own pending files, and a replay of a committed batch is skipped.
 - `windowed_host_metrics`: per-host windowed counters with a watermark
   for late fetch-completion events (T7/T8) — the streaming restatement
   of the reference's `[progress]` counters
@@ -56,19 +57,27 @@ def seed_file_stream(spark: SparkSession, seeds_dir: str,
 
 class StreamingSeedIngest:
     """foreachBatch bridge: seed stream → seen-filter claim → pending
-    store appends. One instance per scheduler store."""
+    store files. One streaming query per scheduler store: its batch ids
+    key both the replay check and the streamed seqs."""
 
     def __init__(self, scheduler):
         self.scheduler = scheduler
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        store, seen = self.scheduler.store, self.scheduler.seen
+        # committed before the streaming engine logged it done: a replay
+        if batch_id <= store.stream_batch():
+            return
+        # an attempt that crashed before its commit claimed into a seen
+        # version no manifest records; claim again from the committed one
+        seen.resume(store.seen_version())
         # politeness applies at wave selection, not at ingest
         cleaned = (
             batch_df.withColumn("url", canonicalize_url_udf(F.col("url")))
             .filter(F.col("url").isNotNull() & ~skip_col(F.col("url")))
             .dropDuplicates(["url"])
         )
-        claimed = self.scheduler.seen.claim_unseen(cleaned)
+        claimed = seen.claim_unseen(cleaned)
         # deterministic per-batch seq: url-order rank inside the batch
         ranked = ordered_zip_with_index(claimed, ["url"], out_col="_idx")
         base = STREAM_SEQ_BASE + batch_id * BATCH_SEQ_STRIDE
@@ -78,12 +87,10 @@ class StreamingSeedIngest:
             with_host(ranked).filter(F.col("host").isNotNull()),
             seq=F.lit(base) + F.col("_idx"),
         )
-        store = self.scheduler.store
-        last = store.last_round()
-        # the claim made a new seen-filter version between rounds: record
-        # it, so a resume after a later crash restores it
-        store.commit_round(last, self.scheduler.seen.version)
-        rows.write.mode("append").parquet(store.path("pending", last))
+        # rows first, under a name a replay of this batch replaces; then
+        # one commit records the batch and its claim's seen version
+        store.write_part(rows, "pending", store.last_round(), f"stream-{batch_id}")
+        store.commit_stream_batch(batch_id, seen.version)
 
     def start(self, seeds_dir: str, checkpoint_dir: str,
               max_files_per_trigger: int | None = None) -> StreamingQuery:
@@ -102,11 +109,10 @@ def windowed_host_metrics(
     events: DataFrame,
     window_duration: str = "1 minute",
     watermark: str = "2 minutes",
-    time_col: str = "event_time",
     source_col: str | None = None,
     phase_col: str | None = None,
 ) -> DataFrame:
-    """T7/T8: per-host fetch counters over event-time windows with a
+    """T7/T8: per-host fetch counters over `event_time` windows with a
     watermark bounding late-data state.
 
     source_col: when given, adds the A2 source-count split — n_amp /
@@ -137,12 +143,12 @@ def windowed_host_metrics(
         aggs += [
             F.array_join(F.sort_array(F.collect_set(F.col(phase_col))), ",")
             .alias("phases"),
-            F.max(F.col(time_col)).alias("last_event"),
+            F.max(F.col("event_time")).alias("last_event"),
         ]
         extra += ["phases", "last_event"]
     return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, window_duration).alias("win"), "host")
+        events.withWatermark("event_time", watermark)
+        .groupBy(F.window("event_time", window_duration).alias("win"), "host")
         .agg(*aggs)
         .select(
             F.col("win.start").alias("window_start"),

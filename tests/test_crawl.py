@@ -160,6 +160,55 @@ def test_resume_after_streamed_seeds_and_a_crash_is_exact(spark, tmp_store, jobs
     assert _spark_waves(resumed, spark, N_ROUNDS) == expected
 
 
+class _StreamCrashStore(CrawlStore):
+    """Fails once while a streamed seed batch is applied: as its pending
+    rows are written, just before the manifest records the batch, or
+    just after."""
+
+    def __init__(self, root, crash_at):
+        super().__init__(root)
+        self.crash_at = crash_at
+
+    def path(self, kind, round_no):
+        if self.crash_at == "pending_write" and kind == "pending":
+            raise OSError("crash at the pending write")
+        return super().path(kind, round_no)
+
+    def commit_stream_batch(self, *args):
+        if self.crash_at == "before_commit":
+            raise OSError("crash before the commit")
+        super().commit_stream_batch(*args)
+        if self.crash_at == "after_commit":
+            raise OSError("crash after the commit")
+
+
+@pytest.mark.parametrize("crash_at", ["pending_write", "before_commit", "after_commit"])
+def test_streamed_seed_batch_replayed_after_a_crash_lands_once(spark, tmp_store, crash_at):
+    """Structured Streaming replays a batch whose foreachBatch crashed,
+    with the same batch_id. The replay, in a fresh process, must leave
+    the batch's URLs in pending exactly once and crawl as if no crash
+    had happened."""
+    from horseman_article_parser_spark.streaming.frontier_stream import StreamingSeedIngest
+
+    late = [f"https://streamed.example/late/{i}" for i in range(8)]
+    batch = spark.createDataFrame([(u,) for u in late], "url string")
+    sched = CrawlScheduler(spark, tmp_store, _crash_cfg("bloom"))
+    sched.run(1, seeds=build_seed_frontier(spark, N_SEEDS))
+    sched.store = _StreamCrashStore(tmp_store, crash_at)
+    with pytest.raises(OSError, match="crash"):
+        StreamingSeedIngest(sched).process_batch(batch, 0)
+    replay = CrawlScheduler(spark, tmp_store, _crash_cfg("bloom"))  # fresh process
+    replay.resume()
+    StreamingSeedIngest(replay).process_batch(batch, 0)
+    pending = [r.url for r in replay.store.read(spark, "pending", 0).collect()]
+    assert Counter(u for u in pending if "streamed.example" in u) == Counter(late)
+    replay.run(2)
+    expected = sim_crawl(seed_urls(N_SEEDS), n_rounds=2, wave_size=WAVE,
+                         round0_limit=ROUND0, default_host_budget=BUDGET,
+                         streamed_seeds={0: late})
+    assert _spark_waves(replay, spark, 2) == expected
+
+
 def test_unknown_seen_mode_is_rejected(spark, tmp_store):
     with pytest.raises(ValueError, match="seen_mode"):
         CrawlScheduler(spark, tmp_store, CrawlConfig(seen_mode="blom"))

@@ -1,16 +1,20 @@
 """Unreachable code stays out: a pure-AST pass over the repo, no Spark.
 
-(a) No module in the package, `__spark_entry__.py`, `bench_extra.py` or
-    `scripts/` imports a name it never uses. Package `__init__.py`
+(a) No module in the package, `__spark_entry__.py` or `scripts/`
+    imports a name it never uses. Package `__init__.py`
     re-exports and import lines marked `# noqa` are exempt.
 (b) Every top-level `def` and `class` of the package is used by name
     somewhere in the repo outside its own definition. Being imported is
     not a use.
+(c) Every defaulted parameter of the package and `__spark_entry__.py`
+    is set by some call in the repo, and every `CrawlConfig` field by
+    some caller outside the scheduler.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from collections import Counter
 from pathlib import Path
 
@@ -62,7 +66,7 @@ def test_no_unused_imports(trees):
     files = [p for p in trees
              if PACKAGE in p.parents and p.name != "__init__.py"
              or p.parent == ROOT / "scripts"
-             or p in (ROOT / "__spark_entry__.py", ROOT / "bench_extra.py")]
+             or p == ROOT / "__spark_entry__.py"]
     unused = [u for p in files for u in _unused_imports(p, trees[p])]
     assert not unused, "imported but never used:\n" + "\n".join(unused)
 
@@ -83,3 +87,114 @@ def test_every_package_definition_is_used(trees):
             if not elsewhere and uses[path][name] <= _uses(node)[name]:
                 dead.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
     assert not dead, "defined but never used:\n" + "\n".join(dead)
+
+
+def _embedded_scripts(tree: ast.Module):
+    """Python programs held in `str.format` templates (a script run in a
+    child interpreter), parsed with each `{field}` replaced by 0."""
+    for n in ast.walk(tree):
+        if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and re.search(r"^(import|from) \w", n.value, re.M)):
+            src = re.sub(r"\{\w+(![rs])?\}", "0", n.value)
+            try:
+                yield ast.parse(src.replace("{{", "{").replace("}}", "}"))
+            except SyntaxError:
+                continue
+
+
+@pytest.fixture(scope="module")
+def calls(trees) -> list[tuple[Path, str, ast.Call]]:
+    """(file, callee name, call) for every call in the repo, including
+    those of embedded scripts. The callee name is a `Name`'s id or an
+    `Attribute`'s attr."""
+    out = []
+    for path, tree in trees.items():
+        for mod in (tree, *_embedded_scripts(tree)):
+            for n in ast.walk(mod):
+                if isinstance(n, ast.Call) and isinstance(n.func, (ast.Name, ast.Attribute)):
+                    name = n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+                    out.append((path, name, n))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef, method: bool):
+    """(name, call position or None) of each parameter with a default.
+    The position is the one a call passes it at, `self`/`cls` not
+    counted; keyword-only parameters have none."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if method and pos and pos[0].arg in ("self", "cls") else 0
+    out = [(p.arg, i - skip) for i, p in enumerate(pos)
+           if i >= len(pos) - len(a.defaults)]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+def _defs(tree: ast.Module):
+    """(def, is_method) for every function of a module, nested ones too."""
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                          ast.AsyncFunctionDef)):
+            for d in n.body:
+                if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield d, isinstance(n, ast.ClassDef)
+
+
+# fetch_page(n_hosts) stays unset: CrawlConfig.n_hosts is to be wired
+# into the crawl's fetch, so seeds and rendered links share one host pool.
+UNSET_EXEMPT = {"fetch_page(n_hosts)"}
+
+
+def test_every_defaulted_parameter_is_set_by_some_call(trees, calls):
+    """(c) Every parameter with a default, of every non-dunder `def` in
+    the package and `__spark_entry__.py`, is set by at least one call
+    in the repo (tests count): by keyword, by position, or through `*`
+    (from its position on) or `**` unpacking. A parameter no call sets
+    is a configuration nothing runs; its default is the code."""
+    keywords: dict[str, set] = {}
+    positions: dict[str, int] = {}  # most positional arguments passed
+    for _, name, c in calls:
+        kws = keywords.setdefault(name, set())
+        kws |= {k.arg for k in c.keywords}  # None: `**` unpacking
+        star = any(isinstance(a, ast.Starred) for a in c.args)
+        positions[name] = max(positions.get(name, 0), 1 << 30 if star else len(c.args))
+    unset = []
+    for path, tree in trees.items():
+        if PACKAGE not in path.parents and path != ROOT / "__spark_entry__.py":
+            continue
+        for fn, method in _defs(tree):
+            if fn.name.startswith("__") and fn.name.endswith("__"):
+                continue
+            kws = keywords.get(fn.name, set())
+            for arg, pos in _defaulted(fn, method):
+                key = f"{fn.name}({arg})"
+                if (arg in kws or None in kws or key in UNSET_EXEMPT
+                        or pos is not None and pos < positions.get(fn.name, 0)):
+                    continue
+                unset.append(f"{path.relative_to(ROOT)}:{fn.lineno} {key}")
+    assert not unset, "parameters no call sets:\n" + "\n".join(unset)
+
+
+def test_every_crawl_config_field_is_set_outside_the_scheduler(trees, calls):
+    """(c) Every CrawlConfig field is set by some caller outside
+    `plans/crawl.py`: by keyword to `CrawlConfig(...)` or `replace(...)`,
+    or as a key of a module-level `dict(...)` unpacked into
+    `CrawlConfig(**...)`."""
+    crawl = PACKAGE / "plans" / "crawl.py"
+    cls = next(n for n in trees[crawl].body
+               if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig")
+    fields = {s.target.id for s in cls.body if isinstance(s, ast.AnnAssign)}
+    set_ = set()
+    for path, name, c in calls:
+        if path == crawl or name not in ("CrawlConfig", "replace"):
+            continue
+        set_ |= {k.arg for k in c.keywords}
+        unpacked = {n.id for k in c.keywords if k.arg is None
+                    for n in ast.walk(k.value) if isinstance(n, ast.Name)}
+        for a in trees[path].body:
+            if (isinstance(a, ast.Assign) and isinstance(a.value, ast.Call)
+                    and getattr(a.value.func, "id", None) == "dict"
+                    and any(getattr(t, "id", None) in unpacked for t in a.targets)):
+                set_ |= {k.arg for k in a.value.keywords}
+    assert fields <= set_, f"CrawlConfig fields no caller sets: {sorted(fields - set_)}"
