@@ -495,75 +495,48 @@ def q_domain_rules_join(spark, sf_dir):
 # -- extraction --------------------------------------------------------------
 
 
-def _synth_pages(spark, sf_dir, fields=None, extra_cols=()):
-    """Synthesized page table → extracted articles.
+def _synth_pages(spark, sf_dir, fields=None):
+    """The `documents` table plus an `article` column: each row's page
+    is rendered and extracted inside one Arrow UDF.
 
-    r6: the former `docs ⋈ frontier` self-join only re-attached a `url`
-    that is itself a pure expression of `documents` columns (source,
-    lang, doc_id) — the identical expression _frontier builds. Inlining
-    it removes one scan of `documents`, one broadcast join and two
-    exchanges per extract query (guide §2.4: remove shuffles outright;
-    value-identical by construction, oracle hashes unchanged).
-
-    r6 (guide §4.1): the page html is RENDERED INSIDE the extraction
-    kernel from the narrow source columns (doc_id, source, lang, text)
-    instead of a ~25-fragment JVM concat shipped through Arrow. Only
-    the bytes the kernel actually needs cross the boundary (the markup
-    wrapper is a constant template), and the concat's large generated
-    expression — the dominant first-run JIT cost, measured 4.9 s →
-    1.2 s at sf1 — disappears. Values are bit-identical: the Python
-    f-string renders the same template (pinned in
+    The page url and html are pure expressions of (doc_id, source,
+    lang, text), so only those narrow columns cross into Python and the
+    markup wrapper is a constant template; a JVM concat of the same
+    page would be a large generated expression whose JIT dominated the
+    first run (4.9 s against 1.2 s at sf1). `_synth_url` and
+    `_synth_page_html` render the same bytes as that concat (pinned in
     tests/test_extract.py::test_synth_pages_template_matches_jvm).
 
-    `fields` prunes the kernel (see extract_article); `extra_cols` are
-    additional Column expressions over `documents` computed JVM-side
-    and carried through the kernel untouched (e.g. the excerpt for
-    q_extract_meta)."""
+    `fields` prunes the kernel (see extract_article); callers select
+    the article fields and any `documents` columns they need."""
     from horseman_article_parser_spark.operators.extract import (
         ARTICLE_STRUCT,
         extract_article,
     )
 
-    docs = _load(spark, sf_dir, "documents")
-    extras = [c.alias(n) for n, c in extra_cols]
-    sel = docs.select("doc_id", *extras, "source", "lang", "text")
-    by_name = {f.name: f for f in sel.schema.fields}
-    keep = ["doc_id", *[n for n, _ in extra_cols]]
-    out_schema = (
-        ", ".join(f"`{n}` {by_name[n].dataType.simpleString()}" for n in keep)
-        + f", `article` {ARTICLE_STRUCT.simpleString()}"
+    extract = F.udf(
+        lambda d, src, lang, text: extract_article(
+            _synth_url(d, src, lang), _synth_page_html(d, lang, text), fields),
+        ARTICLE_STRUCT, useArrow=True,
     )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arts = []
-            for d, src, lang, text in zip(
-                    pdf["doc_id"], pdf["source"], pdf["lang"], pdf["text"]):
-                d = int(d)
-                arts.append(extract_article(
-                    _synth_url(d, src, lang), _synth_page_html(d, lang, text), fields))
-            out = pdf[keep].copy()
-            out["article"] = arts
-            yield out
-
-    return sel.mapInPandas(run, schema=out_schema)
+    docs = _load(spark, sf_dir, "documents")
+    return docs.withColumn(
+        "article", extract("doc_id", "source", "lang", "text"))
 
 
 def _synth_url(d: int, src: str | None, lang: str | None) -> str | None:
     """The page url `_synth_pages` renders; null when an input is null,
-    as the former JVM concat propagated it."""
+    as a JVM concat of the same parts would be."""
     if src is None or lang is None:
         return None
     return f"https://{src}.example.com/{lang}/story-{d % 400}"
 
 
 def _synth_page_html(d: int, lang: str | None, text: str | None) -> str | None:
-    """The page template `_synth_pages` renders — byte-identical to the
-    former JVM concat, null included: a null lang or text gives a null
-    page, which extracts to the all-null article (equivalence pinned in
-    tests/test_extract.py)."""
+    """The page template `_synth_pages` renders — byte-identical to a
+    JVM concat of the same parts, null included: a null lang or text
+    gives a null page, which extracts to the all-null article
+    (equivalence pinned in tests/test_extract.py)."""
     if lang is None or text is None:
         return None
     ds = str(d)
@@ -658,12 +631,11 @@ def q_extract_jsonld(spark, sf_dir):
     pages = docs.select(
         "doc_id", F.lit("https://x.example/a").alias("url"), html.alias("html")
     )
-    # r6: no extra repartition — _load already fanned the scan out; a
-    # second round-robin exchange of the built pages was pure cost
+    # no repartition: _load already fanned the scan out
     from horseman_article_parser_spark.operators.extract import extract_articles
 
     arts = extract_articles(
-        pages, output_cols=["doc_id"],
+        pages,
         fields=frozenset({"headline", "n_jsonld_articles", "jsonld_articles"}),
     )
     return arts.select(
@@ -676,21 +648,15 @@ def q_extract_jsonld(spark, sf_dir):
 
 def q_extract_meta(spark, sf_dir):
     """X12 meta extraction + X8 excerpt (folded: both are per-doc
-    derivations of the page head/body; excerpt runs over the document
-    text joined back by id)."""
-    spark = _prep(spark)
-    # r6: the excerpt is Column algebra over `documents.text` — carrying
-    # it through the kernel replaces the former second scan + self-join
-    # on doc_id (one scan, zero joins; identical rows)
-    arts = _synth_pages(
-        spark, sf_dir, fields=frozenset({"meta", "description"}),
-        extra_cols=(("excerpt", TS.excerpt_col("text")),),
-    )
+    derivations of the page head/body; the excerpt is Column algebra
+    over the same row's document text)."""
+    arts = _synth_pages(_prep(spark), sf_dir,
+                        fields=frozenset({"meta", "description"}))
     return arts.select(
         "doc_id",
         F.size("article.meta").alias("n_meta"),
         F.col("article.description").alias("description"),
-        "excerpt",
+        TS.excerpt_col("text").alias("excerpt"),
     )
 
 
@@ -1569,7 +1535,7 @@ def q_ivf_trained_recall(spark, sf_dir):
     emb = _load(spark, sf_dir, "embeddings")
     cents = SIM.train_centroids(
         emb, n_centroids=IVF_TRAIN_CENTS, n_iters=IVF_TRAIN_ITERS,
-        seed_mod=IVF_TRAIN_SEED_MOD, exact_means=True,
+        seed_mod=IVF_TRAIN_SEED_MOD,
     )
     queries = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
@@ -1891,9 +1857,6 @@ def q_content_candidates(spark, sf_dir):
                F.lit('<img src="/i.png" alt="a">')).otherwise(F.lit("")),
         F.lit("</article></body></html>"),
     )
-    # r6: the frontier self-join only re-keyed the same doc_ids (its url
-    # was never selected) and the extra repartition duplicated _load's
-    # fan-out — both removed, identical rows
     pages = docs.select("doc_id", html.alias("html"))
     ranked = rank_candidates(candidate_features(pages))
     return ranked.select(
@@ -2169,7 +2132,6 @@ def q_text_render(spark, sf_dir):
         render_texts,
         strip_tags,
     )
-    from pyspark.sql.types import StringType
 
     docs = _load(_prep(spark), sf_dir, "documents")
     d = F.col("doc_id").cast("string")
@@ -2185,24 +2147,14 @@ def q_text_render(spark, sf_dir):
         F.lit('</div><aside>side</aside><p id="keep">Keep '), F.col("text"),
         F.lit("</p></body></html>"),
     )
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # hints attached as real objects (`from __future__ import
-    # annotations` stringifies inline ones, which pandas_udf can't
-    # resolve against this module's globals); replaces the deprecated
-    # explicit PandasUDFType.SCALAR argument
-    def _strip(h):
-        return pd.Series([strip_tags(x, ["aside", ".promo"]) for x in h])
-
-    _strip.__annotations__ = {"h": pd.Series, "return": pd.Series}
-    strip_udf = pandas_udf(_strip, StringType())
+    strip_udf = F.udf(lambda h: strip_tags(h, ["aside", ".promo"]),
+                      "string", useArrow=True)
 
     pages = docs.select(
         "doc_id", html.alias("html"), strip_html.alias("strip_html"),
         F.concat(F.lit("Story "), d).alias("title"),
     )
-    # r6: no extra repartition — _load already fanned the scan out
+    # no repartition: _load already fanned the scan out
     out = render_texts(pages, title_col="title")
     stripped = pages.select("doc_id", strip_udf("strip_html").alias("stripped"))
     return out.select(
@@ -2506,7 +2458,7 @@ def q_av_features(spark, sf_dir):
     """Audio + video payload features in one union surface: audio rows
     carry the PCM-decoded RMS (scaled bigint), video rows the first
     sampled frame's pHash — both decoded by the REAL pure-python
-    WAV/HVID codecs inside mapInPandas (bytes never reach the JVM). The
+    WAV/HVID codecs behind Arrow UDFs (bytes never enter a shuffle). The
     oracle replays the deterministic datagen + identical arithmetic
     driver-side and inlines exact expected VALUES (same pattern as
     image_near_dups)."""
@@ -2865,9 +2817,9 @@ def _ivf_trained_sql() -> str:
     Lloyd's iterations unrolled as CTE pairs (assign → exact-integer-sum
     means → float32-rounded centroid vectors), then the same IVF
     probe/rerank and brute-force recall join. Every arithmetic step
-    mirrors the Spark expression order (see train_centroids
-    exact_means) so trained centroids — and therefore the routing and
-    the recall counts — agree exactly."""
+    mirrors the Spark expression order (see train_centroids) so
+    trained centroids — and therefore the routing and the recall
+    counts — agree exactly."""
     cos = ("list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
            " * sqrt(list_dot_product({b}, {b})))")
     ctes = [

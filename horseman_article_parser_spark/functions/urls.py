@@ -15,10 +15,10 @@ handling (NOT code ports):
 
 Each exists in two forms:
  1. a plain-Python scalar function (used by the parity simulator and
-    inside pandas UDFs), and
+    inside Arrow UDFs and batch kernels), and
  2. a Column-expression builder (`*_col`) that keeps the hot-path work
     JVM-side inside whole-stage codegen wherever regex/parse_url can
-    express it — pandas UDFs only where true URL-parsing is required.
+    express it — Python only where true URL-parsing is required.
 """
 
 from __future__ import annotations
@@ -205,12 +205,9 @@ def keep_likely_article_col(url: Column) -> Column:
     )
 
 
-@pandas_udf(StringType())
-def canonicalize_url_udf(urls: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Arrow-batched canonicalization — full URL-parse semantics that
-    parse_url can't express (default-port strip, IDN-safe lowercase)."""
-    for s in urls:
-        yield s.map(canonicalize_url, na_action="ignore")
+# canonicalize_url behind an Arrow UDF: full URL-parse semantics that
+# parse_url can't express (default-port strip, IDN-safe lowercase).
+canonicalize_url_udf = F.udf(canonicalize_url, StringType(), useArrow=True)
 
 
 _URL_TRANSFORM_STRUCT = StructType(

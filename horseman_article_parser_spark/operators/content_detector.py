@@ -20,18 +20,17 @@ contentDetector feature/scoring pipeline and logistic reranker:
   for small/driver-side parity; `train_reranker` is the distributed
   path via spark.ml LogisticRegression over the same 16-dim vectors.
 
-Split of work: the DOM walk is one Arrow pass emitting a *narrow*
-feature struct per candidate (never the HTML), so scoring, ranking and
-training all stay JVM-side / in spark.ml on shuffled feature rows only.
+Split of work: the DOM walk runs per page behind an Arrow UDF, emitting
+a *narrow* feature struct per candidate (never the HTML), so scoring,
+ranking and training all stay JVM-side / in spark.ml on shuffled
+feature rows only.
 """
 
 from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
@@ -517,24 +516,9 @@ DETECT_STRUCT = T.StructType(
 def detect_containers(pages: DataFrame) -> DataFrame:
     """DataFrame op: (doc_id, html) → (doc_id, xpath, css_selector,
     fragmented)."""
-    out_schema = T.StructType(
-        [pages.schema["doc_id"], T.StructField("detected", DETECT_STRUCT)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "detected": [detect_container(h) for h in pdf["html"]],
-                }
-            )
-
-    return pages.select("doc_id", "html").mapInPandas(
-        run, schema=out_schema
-    ).select("doc_id", "detected.*")
+    detect = F.udf(detect_container, DETECT_STRUCT, useArrow=True)
+    return pages.select("doc_id", detect("html").alias("detected")).select(
+        "doc_id", "detected.*")
 
 
 def page_candidates(html: str | None) -> list[dict]:
@@ -548,28 +532,12 @@ def page_candidates(html: str | None) -> list[dict]:
 
 
 def candidate_features(pages: DataFrame) -> DataFrame:
-    """One Arrow pass: (doc_id, html) → exploded candidate feature rows.
-    Output is narrow (xpath + 18 numeric features); HTML never leaves
-    the scan stage."""
-    out_schema = T.StructType(
-        [pages.schema["doc_id"], T.StructField("candidate", CANDIDATE_STRUCT)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for rid, html in zip(pdf["doc_id"], pdf["html"]):
-                for cand in page_candidates(html):
-                    rows.append({"doc_id": rid, "candidate": cand})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return (
-        pages.mapInPandas(run, schema=out_schema)
-        .select("doc_id", "candidate.*")
-    )
+    """(doc_id, html) → one row per candidate: doc_id, xpath and the
+    numeric features. Output is narrow; HTML never leaves the scan
+    stage."""
+    candidates = F.udf(page_candidates, T.ArrayType(CANDIDATE_STRUCT),
+                       useArrow=True)
+    return pages.select("doc_id", F.inline(candidates("html")))
 
 
 def heuristic_score_col() -> Column:

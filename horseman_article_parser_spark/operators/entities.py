@@ -14,7 +14,8 @@ replaced by a deterministic capitalization grammar with broadcast
 gazetteer/org/hint sets — the cleanup semantics, which its own test
 suite actually pins, are preserved verbatim.
 
-Spark surface: one Arrow pass emits (kind, entity) arrays per document;
+Spark surface: `extract_entities` per document behind an Arrow UDF
+emits the (people, places, orgs, topics) arrays;
 dedupe/anti-joins are relational on the exploded rows. Hint and
 gazetteer sets are broadcast (≪ 10 MB).
 """
@@ -22,9 +23,7 @@ gazetteer sets are broadcast (≪ 10 MB).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -684,7 +683,7 @@ def extract_entities(text: str | None, hints: dict | None = None) -> dict:
             add(people, name, seen_p)
             add(topics, name, seen_t)
 
-    # Lowercase-lexicon pass (round 4): the reference's statistical
+    # Lowercase-lexicon pass: the reference's statistical
     # recognizer finds entities in all-lowercase text and capitalizes
     # them (entityParser.test.js:7-18 — 'john doe went to paris. google
     # and microsoft.'); the capitalization grammar above is blind there.
@@ -703,10 +702,10 @@ def extract_entities(text: str | None, hints: dict | None = None) -> dict:
     }
     def _lower_span_exists(name_toks: list[str]) -> bool:
         """True iff the phrase occurs as CONSECUTIVE all-lowercase
-        tokens. Substring-matching the case-folded whole text was wrong
-        (r4 ADVICE): a phrase present only in cased form plus an
-        unrelated lowercase lead token elsewhere would emit a spurious
-        entity the cased grammar already absorbed into a longer span."""
+        tokens. Substring-matching the case-folded whole text would be
+        wrong: a phrase present only in cased form plus an unrelated
+        lowercase lead token elsewhere would emit a spurious entity the
+        cased grammar already absorbed into a longer span."""
         n = len(name_toks)
         for s in range(len(lower_norm) - n + 1):
             if lower_norm[s:s + n] == name_toks and all(
@@ -764,7 +763,7 @@ def extract_entities(text: str | None, hints: dict | None = None) -> dict:
                     continue
         i += 1
 
-    # Context-trigger pass (round 5): role words, reporting verbs,
+    # Context-trigger pass: role words, reporting verbs,
     # organization descriptors, and locative prepositions legitimize
     # adjacent lowercase OUT-OF-LEXICON tokens — the deterministic
     # stand-in for the statistical patterns that let the reference's
@@ -797,7 +796,7 @@ def extract_entities(text: str | None, hints: dict | None = None) -> dict:
         """An ORG_TAIL_WORDS continuation must itself be a lowercase,
         unconsumed surface token — a capitalized 'Robotics' belongs to
         the cased grammar, and a consumed index must not classify
-        twice (r5 review)."""
+        twice."""
         return (
             idx < len(raw_tokens) and idx not in consumed
             and raw_tokens[idx] == raw_tokens[idx].lower()
@@ -924,24 +923,9 @@ ENTITIES_STRUCT = T.StructType(
 
 
 def extract_entities_df(docs: DataFrame) -> DataFrame:
-    """DataFrame op: (doc_id, text) → (doc_id, entities struct), one
-    Arrow pass."""
-    out_schema = T.StructType(
-        [docs.schema["doc_id"], T.StructField("entities", ENTITIES_STRUCT)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "entities": [extract_entities(t) for t in pdf["text"]],
-                }
-            )
-
-    return docs.mapInPandas(run, schema=out_schema)
+    """DataFrame op: (doc_id, text) → (doc_id, entities struct)."""
+    entities = F.udf(extract_entities, ENTITIES_STRUCT, useArrow=True)
+    return docs.select("doc_id", entities("text").alias("entities"))
 
 
 def entities_exploded(docs: DataFrame) -> DataFrame:

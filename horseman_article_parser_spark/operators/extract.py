@@ -1,12 +1,13 @@
-"""Article extraction: HTML → wide nullable struct, one Arrow pass.
+"""Article extraction: HTML → wide nullable struct, per page.
 
 The reference builds its nested `article` object imperatively across
 ~1,400 lines (/root/reference/index.js:123-1554); here the same WHAT is
-restated as ONE vectorized pandas UDF producing a fixed nullable
-StructType (SURVEY §1.3: absent key ⇒ null/empty — the faithful
-columnar encoding of the reference's schemaless output). A single
-JVM↔Python crossing per fetch wave; everything downstream (readability,
-sentiment, keyword joins) is JVM-side column algebra.
+restated as ONE per-page function, `extract_article`, producing a fixed
+nullable StructType (SURVEY §1.3: absent key ⇒ null/empty — the
+faithful columnar encoding of the reference's schemaless output). It
+runs behind an Arrow UDF (`extract_articles`) or inside the crawl's
+fetch kernel; everything downstream (readability, sentiment, keyword
+joins) is JVM-side column algebra.
 
 Semantics parity (behavior, not code):
 - title cascade + suffix-strip  — /root/reference/controllers/titleDetector.js:11-39
@@ -27,10 +28,9 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from urllib.parse import urljoin
 
-import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -552,9 +552,9 @@ def extract_article(
 
     `fields` restricts which article keys are computed (the rest stay
     None) — the kernel-side analogue of column pruning, which Spark
-    cannot see through an opaque mapInPandas (guide §4.1): a caller
-    that only reads `article.links` should not pay for the image
-    caption walk, table parsing and JSON-LD scan of every page."""
+    cannot apply inside a UDF's returned struct: a caller that only
+    reads `article.links` should not pay for the image caption walk,
+    table parsing and JSON-LD scan of every page."""
     empty = {f.name: None for f in ARTICLE_STRUCT.fields}
     if not html:
         return empty
@@ -618,38 +618,12 @@ def extract_article(
 
 
 def extract_articles(
-    fetched: DataFrame,
-    fields: frozenset[str] | None = None,
-    output_cols: list[str] | None = None,
+    fetched: DataFrame, fields: frozenset[str] | None = None
 ) -> DataFrame:
     """DataFrame op: adds an `article` struct column, extracted from the
-    `url` and `html` columns, via one Arrow pass.
-
-    `fields` prunes which article keys the kernel computes (see
-    extract_article). `output_cols` restricts which INPUT columns the
-    kernel ships back to the JVM — without it the page `html` (~KBs per
-    row) makes a pointless Python→JVM round trip just to be dropped by
-    the caller's next select (guide §4.1: only the columns the function
-    needs should cross the boundary — in either direction)."""
-    keep = output_cols if output_cols is not None else [
-        f.name for f in fetched.schema.fields
-    ]
-    by_name = {f.name: f for f in fetched.schema.fields}
-    in_fields = ", ".join(
-        f"`{n}` {by_name[n].dataType.simpleString()}" for n in keep
-    )
-    out_schema = f"{in_fields}, `article` {ARTICLE_STRUCT.simpleString()}"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arts = [
-                extract_article(u, h, fields)
-                for u, h in zip(pdf["url"], pdf["html"])
-            ]
-            out = pdf[keep].copy()
-            out["article"] = arts
-            yield out
-
-    return fetched.mapInPandas(run, schema=out_schema)
+    `url` and `html` columns by `extract_article` behind an Arrow UDF.
+    Only those two columns cross into Python; `fields` prunes which
+    article keys the kernel computes (see extract_article)."""
+    extract = F.udf(lambda u, h: extract_article(u, h, fields),
+                    ARTICLE_STRUCT, useArrow=True)
+    return fetched.withColumn("article", extract("url", "html"))

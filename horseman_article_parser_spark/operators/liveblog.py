@@ -8,18 +8,18 @@ to live-blog-class roots when < 5 found, then amp-live-list candidates
 when < 3; "enough" gate `(≥3 entries ∧ ≥200 body chars) ∨ (≥2 ∧ ≥500)`;
 top-5 emitted.
 
-Spark surface: one Arrow pass per page emitting the structured entry
-array (time, title, body) plus the ok/count/chars rollup — the html
-re-rendering the reference does is presentation, kept as structured
-columns instead (recoverable trivially).
+Spark surface: `build_liveblog_summary` per page behind an Arrow UDF,
+emitting the structured entry array (time, title, body) plus the
+ok/count/chars rollup — the html re-rendering the reference does is
+presentation, kept as structured columns instead (recoverable
+trivially).
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -167,21 +167,6 @@ LIVEBLOG_STRUCT = T.StructType(
 
 
 def liveblog_summaries(pages: DataFrame) -> DataFrame:
-    """DataFrame op: (doc_id, html) → (doc_id, liveblog struct), one
-    Arrow pass."""
-    out_schema = T.StructType(
-        [pages.schema["doc_id"], T.StructField("liveblog", LIVEBLOG_STRUCT)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "liveblog": [build_liveblog_summary(h) for h in pdf["html"]],
-                }
-            )
-
-    return pages.mapInPandas(run, schema=out_schema)
+    """DataFrame op: (doc_id, html) → (doc_id, liveblog struct)."""
+    summary = F.udf(build_liveblog_summary, LIVEBLOG_STRUCT, useArrow=True)
+    return pages.select("doc_id", summary("html").alias("liveblog"))

@@ -105,21 +105,19 @@ def hyperplane_bucket_col(vec: Column, n_planes: int = 8, seed: int = 7,
 
 
 def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
-                    seed_mod: int = 97, exact_means: bool = False) -> DataFrame:
+                    seed_mod: int = 97) -> DataFrame:
     """Lloyd's k-means over DataFrame ops. Init = deterministic sample
     (vec_id ordering); each iteration is one assign (broadcast centroids)
-    + one mean-reduce (posexplode → avg per (cluster, dim)). Centroid
+    + one mean-reduce (posexplode → mean per (cluster, dim)). Centroid
     tables are tiny and always broadcast.
 
-    exact_means=True computes each centroid mean from an INTEGER sum of
-    round(val·10^6) (order-independent, exact) divided back in a pinned
-    expression order, so an independent engine (the DuckDB oracle twin)
-    reproduces the trained centroids bit-for-bit regardless of partial
-    aggregation order. Default off: plain double avg is marginally
-    cheaper and training quality is identical."""
+    Each centroid mean is an INTEGER sum of round(val·10^6)
+    (order-independent, exact) divided back in a pinned expression
+    order, so an independent engine (the DuckDB oracle twin) reproduces
+    the trained centroids bit-for-bit regardless of partial aggregation
+    order."""
     # init: TakeOrdered of n_centroids rows (tiny, deterministic order),
-    # numbered on the driver — no RDD API, no extra jobs (the old path
-    # cost a .first() for dim + an RDD zipWithIndex round-trip)
+    # numbered on the driver — no RDD API and no extra job
     seed_rows = (
         corpus.orderBy(F.col("vec_id") % seed_mod, "vec_id")
         .limit(n_centroids)
@@ -136,14 +134,11 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
             assigned.join(corpus, "vec_id")
             .select("cluster", F.posexplode(F.col("embedding")).alias("d", "val"))
         )
-        if exact_means:
-            mean = (
-                F.sum(F.round(F.col("val").cast("double") * 1_000_000)
-                      .cast("long")).cast("double")
-                / F.lit(1_000_000.0)
-            ) / F.count("*").cast("double")
-        else:
-            mean = F.avg("val")
+        mean = (
+            F.sum(F.round(F.col("val").cast("double") * 1_000_000)
+                  .cast("long")).cast("double")
+            / F.lit(1_000_000.0)
+        ) / F.count("*").cast("double")
         cents = (
             exploded.groupBy("cluster", "d")
             .agg(mean.alias("m"))

@@ -15,9 +15,9 @@ Sentence segmentation is PINNED to the reference's regex fallback
 varies by ICU locale data and is excluded from parity (SURVEY §7.3 X9).
 
 The selection loop is inherently iterative per document, so the Spark
-surface is an Arrow-batched pandas UDF over the text column (one Python
-crossing; documents are independent, so it parallelizes embarrassingly
-across partitions). Inputs are capped upstream at the reference's 20k
+surface is `build_summary` behind an Arrow UDF over the text column
+(documents are independent, so it parallelizes embarrassingly across
+partitions). Inputs are capped upstream at the reference's 20k
 NLP cap (/root/reference/index.js:1202-1211).
 """
 
@@ -26,11 +26,9 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 DEFAULT_MAX_SENTENCES = 5
 
@@ -280,18 +278,9 @@ def summarize(
     meta_col: Column | None = None,
 ) -> DataFrame:
     """DataFrame op: adds a `summary` struct(text, sentences) column over
-    `text`, one Arrow-batched build_summary call per row."""
-
-    @pandas_udf(SUMMARY_STRUCT)
-    def _summarize(
-        text: pd.Series, title: pd.Series, meta: pd.Series
-    ) -> pd.DataFrame:
-        rows = [
-            build_summary(t, ti or "", me or "")
-            for t, ti, me in zip(text, title, meta)
-        ]
-        return pd.DataFrame(rows)
-
+    `text`, one build_summary call per row behind an Arrow UDF."""
+    summary = F.udf(lambda t, ti, me: build_summary(t, ti or "", me or ""),
+                    SUMMARY_STRUCT, useArrow=True)
     title = title_col if title_col is not None else F.lit("")
     meta = meta_col if meta_col is not None else F.lit("")
-    return docs.withColumn("summary", _summarize(F.col("text"), title, meta))
+    return docs.withColumn("summary", summary(F.col("text"), title, meta))

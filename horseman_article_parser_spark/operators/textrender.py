@@ -17,16 +17,16 @@ Behavior-parity reimplementations of the reference's text pipeline
 - html_text       ≈ getHtmlText (:520-529): each line span-wrapped —
   faithful string-op port of the published behavior (pure string ops).
 
-All are pure Python kernels surfaced through one Arrow pass
-(`render_texts`), emitting struct(raw, formatted, html).
+All are pure Python kernels; `render_page` combines them per page and
+`render_texts` runs it behind an Arrow UDF, emitting
+struct(raw, formatted, html).
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -333,33 +333,25 @@ TEXTS_STRUCT = T.StructType(
 )
 
 
+def render_page(html: str | None, title: str | None,
+                strip_boilerplate: bool) -> dict:
+    """struct(raw, formatted, html) of one page. strip_boilerplate runs
+    the F10 CTA/ad/related-node removal (stripNonArticleElements) on
+    the html first, as the reference pipeline does
+    (/root/reference/index.js:1197)."""
+    if strip_boilerplate:
+        html = strip_non_article(html)
+    fmt = formatted_text(html, title)
+    return {"raw": raw_text(html), "formatted": fmt, "html": html_text(fmt)}
+
+
 def render_texts(pages: DataFrame, title_col: str | None = None,
                  strip_boilerplate: bool = False) -> DataFrame:
-    """One Arrow pass over (doc_id, html) → struct(raw, formatted, html)
-    per page.
-
-    strip_boilerplate=True runs the F10 CTA/ad/related-node removal
-    (stripNonArticleElements) on the html before rendering, matching the
-    reference pipeline (/root/reference/index.js:1197). Default off:
-    parity fixtures for the plain renderings pin the unstripped output.
-    """
-    cols = ["doc_id", "html"] + ([title_col] if title_col else [])
-    out_schema = T.StructType(
-        [pages.schema["doc_id"], T.StructField("texts", TEXTS_STRUCT)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            titles = pdf[title_col] if title_col else [None] * len(pdf)
-            rows = []
-            for h, t in zip(pdf["html"], titles):
-                if strip_boilerplate:
-                    h = strip_non_article(h)
-                raw = raw_text(h)
-                fmt = formatted_text(h, t)
-                rows.append({"raw": raw, "formatted": fmt, "html": html_text(fmt)})
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "texts": rows})
-
-    return pages.select(*cols).mapInPandas(run, schema=out_schema)
+    """(doc_id, html[, title_col]) → (doc_id, texts struct) per page,
+    through `render_page`. strip_boilerplate defaults off because the
+    parity fixtures for the plain renderings pin the unstripped
+    output."""
+    render = F.udf(lambda h, t: render_page(h, t, strip_boilerplate),
+                   TEXTS_STRUCT, useArrow=True)
+    title = F.col(title_col) if title_col else F.lit(None).cast("string")
+    return pages.select("doc_id", render("html", title).alias("texts"))

@@ -2,10 +2,11 @@
 
 The defaults mirror what we would ship in spark-defaults.conf on a
 1000-executor cluster: AQE on (runtime re-plan + skew-join splitting),
-Arrow on (every per-row computation in this engine is a vectorized
-pandas UDF — never per-row Python, per BASELINE.json input_hint), and
-bounded Arrow batch sizes so large `bytes` (image) rows never blow up a
-single Arrow record batch.
+Arrow on, and bounded Arrow batch sizes so large `bytes` (image) rows
+never blow up a single Arrow record batch. Every Python computation in
+this engine crosses the JVM boundary as Arrow batches, never pickled
+rows (BASELINE.json input_hint): per-row kernels through
+`F.udf(..., useArrow=True)`, batch kernels through mapInPandas.
 """
 
 from __future__ import annotations
@@ -18,10 +19,6 @@ import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
-
-# Number of shuffle partitions for local testing. On a real cluster this
-# would be ~2-3x total cores (or left to AQE coalescing, which we enable).
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
 
 
 def get_spark(
@@ -45,32 +42,29 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", _DEFAULT_SHUFFLE_PARTITIONS)
-        # --- Arrow: all Python work is vectorized pandas UDFs ---
+        # local-test width; a cluster wants ~2-3x total cores (or AQE
+        # coalescing, enabled above) and sets it through extra_conf
+        .config("spark.sql.shuffle.partitions", "32")
+        # --- Arrow for driver-side pandas conversion too ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # image `bytes` rows can be ~100KB-1MB; cap records per Arrow batch
         # so a batch stays well under executor memory (SURVEY §7.3).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # --- parquet scan sizing ---
-        # Local default 16 MB so multi-row-group test files (~20 MB row
-        # groups) scan with one task per row group instead of one task
-        # for the whole file — a row group is the minimum split unit,
-        # so a 128 MB split swallows a 126 MB/6-row-group file whole
-        # and serializes the scan (guide §6). Production deployments
-        # with 128 MB-1 GB row groups should set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES to 128 MB+ (larger splits cut
+        # 16 MB so multi-row-group test files (~20 MB row groups) scan
+        # with one task per row group instead of one task for the whole
+        # file — a row group is the minimum split unit, so a 128 MB
+        # split swallows a 126 MB/6-row-group file whole and serializes
+        # the scan (guide §6). Deployments with 128 MB-1 GB row groups
+        # should pass 128 MB+ through extra_conf (larger splits cut
         # task-scheduling overhead and the map-task count feeding
-        # shuffles, guide §2.2); the value is env-parameterised, not a
-        # local-only constant baked into the plan.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16777216"),
-        )
+        # shuffles, guide §2.2).
+        .config("spark.sql.files.maxPartitionBytes", "16777216")
         # deterministic session timezone for timestamp parity with DuckDB
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "8g")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -68,6 +68,17 @@ EXPECTATIONS = {
     "minhash_lsh": [
         ("MapInPandas", "per-doc signatures run in the Arrow kernel"),
     ],
+    # extraction: the per-page kernel is an Arrow UDF; a UDF that lost
+    # useArrow=True would plan BatchEvalPython (pickled rows)
+    "extract_title": [
+        ("ArrowEvalPython", "per-page extraction runs as an Arrow UDF"),
+    ],
+    "extract_links": [
+        ("ArrowEvalPython", "per-page extraction runs as an Arrow UDF"),
+    ],
+    "extract_images": [
+        ("ArrowEvalPython", "per-page extraction runs as an Arrow UDF"),
+    ],
     # pricing summary: partial agg + single shuffle
     "pricing_summary": [
         ("HashAggregate", "hash aggregation with map-side partials"),

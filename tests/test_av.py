@@ -97,7 +97,7 @@ def test_sample_frames_with_pixels_roundtrip(spark):
 
 
 def test_av_features_no_binary_in_exchange(spark):
-    """Scale rule: media bytes die inside the mapInPandas stage — no
+    """Scale rule: media bytes die inside the decoding UDF's stage — no
     shuffle exchange may carry the `bytes`/`frame` binary columns."""
     import __spark_entry__ as entry
 
@@ -111,7 +111,7 @@ def test_av_features_no_binary_in_exchange(spark):
 def test_sample_frames_corrupt_payload_marker_row(spark):
     """A corrupt / compressed / truncated video payload must yield one
     marker row (frame_idx=-1, w=h=0) instead of failing the whole scan —
-    the same failure semantics as audio_features (ADVICE r3)."""
+    the same failure semantics as audio_features."""
     from horseman_article_parser_spark.operators.multimodal import sample_frames
 
     good = build_videos_table(spark, 1)

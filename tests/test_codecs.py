@@ -131,8 +131,8 @@ def test_jpeg_decoder_rejects_non_baseline():
 
 def test_jpeg_corrupt_entropy_raises_cleanly():
     """Truncated / garbage entropy data must raise (ValueError /
-    struct.error), which the mapInPandas kernels turn into
-    decode_ok=False rows."""
+    struct.error), which image_features turns into decode_ok=False
+    rows."""
     from horseman_article_parser_spark.codecs.jpeg import encode_jpeg
 
     px, _, _ = synth_pixels(1)
