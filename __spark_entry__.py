@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -42,16 +43,37 @@ from horseman_article_parser_spark.operators import dedup as DD
 from horseman_article_parser_spark.operators import frontier_ops as FO
 from horseman_article_parser_spark.operators import politeness as PO
 from horseman_article_parser_spark.operators import similarity as SIM
+from horseman_article_parser_spark.operators.dedup import N_MINHASH, SIMHASH_BITS
 from horseman_article_parser_spark.operators.extract import extract_articles
+from horseman_article_parser_spark.operators.similarity import (
+    IVF_TRAIN_CENTS,
+    IVF_TRAIN_ITERS,
+    IVF_TRAIN_SEED_MOD,
+)
 from horseman_article_parser_spark.session import _ship_package
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
+# SparkContexts this module has been added to, kept here because asking
+# the context (`sc.listFiles`, a py4j class lookup) takes 13-24 ms a call
+# on a 4-core machine, which every query would pay
+_SHIPPED_TO: weakref.WeakSet = weakref.WeakSet()
+
+
 def _prep(spark: SparkSession) -> SparkSession:
+    """Session setup every query runs first: UTC session time, and the
+    package and this module shipped to executor Python workers, so UDF
+    closures that pickle this module's functions (e.g. `_synth_pages`)
+    unpickle whatever the driver's working directory. Each ships once
+    per SparkContext."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         _ship_package(spark)
+        sc = spark.sparkContext
+        if sc not in _SHIPPED_TO:
+            sc.addPyFile(os.path.abspath(__file__))
+            _SHIPPED_TO.add(sc)
     except Exception:
         pass  # driver already importable (repo cwd); UDFs still resolve
     return spark
@@ -368,8 +390,7 @@ def q_url_transforms(spark, sf_dir):
     fr = fr.withColumn("_du", data_url)
     # staged-projection sanitize: each regexp/base64 intermediate is
     # evaluated once per row (see with_sanitized_data_url docstring)
-    fr = with_sanitized_data_url(fr, "_du", "data_html", "data_url",
-                                 js_enabled=False)
+    fr = with_sanitized_data_url(fr, "_du", "data_html", "data_url")
     # amp_q1/amp_q2 exercise the query-string MERGE branch (the canonical
     # form carries ?q=1, so '&amp=1' / '&output=amp' must append).
     # r6: canonicalize + both amp passes run as ONE fused struct UDF —
@@ -409,7 +430,7 @@ def q_round_robin_interleave(spark, sf_dir):
     fr = _frontier(_prep(spark), sf_dir, fanout=False).withColumn(
         "feed", F.regexp_extract("host", r"^(src\d+)", 1)
     )
-    out = FO.round_robin_interleave(fr, "feed", "seq", count=100)
+    out = FO.round_robin_interleave(fr, "feed", "seq")
     return out.select("feed", "url", "seq", "rr_rank")
 
 
@@ -458,7 +479,7 @@ def q_robots_filter(spark, sf_dir):
             for h, txt in _robots_rows
         ]))
     )
-    robots = PO.parse_robots_txt(robots_files, agent="horseman")
+    robots = PO.parse_robots_txt(robots_files)
     return PO.robots_filter(cand, robots).select("seq", "url", "host")
 
 
@@ -634,10 +655,7 @@ def q_extract_jsonld(spark, sf_dir):
     # no repartition: _load already fanned the scan out
     from horseman_article_parser_spark.operators.extract import extract_articles
 
-    arts = extract_articles(
-        pages,
-        fields=frozenset({"headline", "n_jsonld_articles", "jsonld_articles"}),
-    )
+    arts = extract_articles(pages)
     return arts.select(
         "doc_id",
         F.col("article.headline").alias("headline"),
@@ -1371,7 +1389,7 @@ def q_keywords_cleaned(spark, sf_dir):
     docs2 = docs.select(
         "doc_id", F.concat(F.col("text"), F.lit(probes)).alias("text")
     )
-    return TS.keywords_cleaned_topk(docs2, k=8)
+    return TS.keywords_cleaned_topk(docs2)
 
 
 def q_keywords_topk(spark, sf_dir):
@@ -1385,8 +1403,7 @@ def q_keywords_topk(spark, sf_dir):
     TF top-k needs no cross-row state, so an explode → hash-agg →
     window plan would pay two shuffles for nothing."""
     docs = _load(_prep(spark), sf_dir, "documents")
-    return TS.keywords_phrases_batch(docs, k_terms=10, k_phrases=8,
-                                     lengths=(2, 3))
+    return TS.keywords_phrases_batch(docs)
 
 
 # -- dedup -------------------------------------------------------------------
@@ -1395,9 +1412,6 @@ def q_keywords_topk(spark, sf_dir):
 def q_dedup_exact(spark, sf_dir):
     docs = _load(_prep(spark), sf_dir, "documents")
     return DD.exact_dup_groups(docs)
-
-
-N_MINHASH = 8
 
 
 def q_minhash_lsh(spark, sf_dir):
@@ -1411,18 +1425,14 @@ def q_minhash_lsh(spark, sf_dir):
     arithmetic in one pass (bit-parity pinned in test_dedup), zero
     exchanges beyond the input spread."""
     docs = _load(_prep(spark), sf_dir, "documents")
-    return DD.minhash_lsh_batch(docs, n_hashes=N_MINHASH, bands=4,
-                                rows_per_band=2)
-
-
-SIMHASH_BITS = 16
+    return DD.minhash_lsh_batch(docs)
 
 
 def q_simhash(spark, sf_dir):
     # r6: per-doc fingerprint → one kernel pass (see q_minhash_lsh);
     # bit-parity with the declarative sign-sum plan pinned in test_dedup
     docs = _load(_prep(spark), sf_dir, "documents")
-    return DD.simhash_batch(docs, bits=SIMHASH_BITS)
+    return DD.simhash_batch(docs)
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -1469,27 +1479,23 @@ def q_knn_bruteforce(spark, sf_dir):
 
 def q_embedding_near_dups(spark, sf_dir):
     """Embedding-cosine near-dup: hyperplane-LSH bucket join + exact
-    cosine >= threshold within buckets (0.30 here: the synthetic embeddings are near-orthogonal, max pairwise cosine ~0.51) (dedup for embedding-bearing corpora).
+    cosine >= DD.EMB_NEAR_DUP_COSINE within buckets (dedup for
+    embedding-bearing corpora).
     Double-precision dot products accumulate in array order on both
     engines, so the threshold filter agrees exactly."""
     emb = _load(_prep(spark), sf_dir, "embeddings")
-    out = DD.embedding_near_dups(emb, threshold=0.30, n_planes=ANN_PLANES,
-                                 seed=ANN_SEED)
+    out = DD.embedding_near_dups(emb)
     return out.select(
         "id_a", "id_b",
         F.round(F.col("cosine") * 1_000_000).cast("long").alias("cosine_x1e6"),
     )
 
 
-ANN_PLANES = 8
-ANN_SEED = 7
-
-
 def q_ann_lsh_buckets(spark, sf_dir):
     emb = _load(_prep(spark), sf_dir, "embeddings")
     return emb.select(
         "vec_id",
-        SIM.hyperplane_bucket_col(F.col("embedding"), ANN_PLANES, ANN_SEED, 64).alias("bucket"),
+        SIM.hyperplane_bucket_col(F.col("embedding")).alias("bucket"),
     )
 
 
@@ -1516,9 +1522,6 @@ def q_ivf_topk(spark, sf_dir):
     )
 
 
-IVF_TRAIN_CENTS = 8
-IVF_TRAIN_ITERS = 2
-IVF_TRAIN_SEED_MOD = 97
 IVF_TRAIN_K = 10
 IVF_TRAIN_PROBE = 3
 
@@ -1533,10 +1536,7 @@ def q_ivf_trained_recall(spark, sf_dir):
     pins the quality floor."""
     spark = _prep(spark)
     emb = _load(spark, sf_dir, "embeddings")
-    cents = SIM.train_centroids(
-        emb, n_centroids=IVF_TRAIN_CENTS, n_iters=IVF_TRAIN_ITERS,
-        seed_mod=IVF_TRAIN_SEED_MOD,
-    )
+    cents = SIM.train_centroids(emb)
     queries = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
@@ -1747,9 +1747,9 @@ def q_spellcheck(spark, sf_dir):
         "doc_id",
         F.concat(F.col("text"), rare, ent, typo, F.lit(" recieve")).alias("text"),
     )
-    dictionary = builtin_dictionary(spark, "en")
+    dictionary = builtin_dictionary(spark)
     entities = spark.createDataFrame([("Zzentity",)], "entity string")
-    missed = misspellings(docs2, dictionary, entities, positions=True)
+    missed = misspellings(docs2, dictionary, entities)
     sugg = suggest_corrections(missed, dictionary).select(
         "doc_id", "line", "word_idx", "word", "suggestions"
     )
@@ -2063,7 +2063,7 @@ def q_reranker_train(spark, sf_dir):
     data = [
         ([r[f"v{i}"] for i in range(RERANKER_N_DIMS)], r["label"]) for r in rows
     ]
-    weights = train_gd(data, lr=0.05, epochs=250, l2=0.001)
+    weights = train_gd(data)
     out = [(i, int(round(round(w, 6) * 1_000_000))) for i, w in enumerate(weights["weights"])] + [
         (-1, int(round(round(weights["bias"], 6) * 1_000_000)))
     ]
@@ -2076,7 +2076,7 @@ def q_reranker_train(spark, sf_dir):
 # distinct totals — position decay (s0>s1>...), paragraph-start +0.8,
 # second-sentence +0.3, title-token overlap (s3), meta overlap (s4),
 # digit+factual bonuses (s2), noise penalty (s5). Single paragraph ⇒
-# max_per_para = max_sentences and the greedy cascade reduces to
+# max_per_para = MAX_SENTENCES and the greedy cascade reduces to
 # top-5-by-score re-sorted by position: s5 (score 0.5, noise) drops,
 # so the summary is exactly s0..s4 — an exact-string SQL oracle.
 SUMMARY_S0 = ("The archive ingest completed without any errors across "
@@ -2261,9 +2261,7 @@ def q_windowed_metrics(spark, sf_dir):
         .otherwise(F.lit("dynamic")).alias("source"),
         F.concat(F.lit("parse:"), F.col("event_type")).alias("phase"),
     )
-    out = windowed_host_metrics(events, window_duration="1 hour",
-                                watermark="2 hours",
-                                source_col="source", phase_col="phase")
+    out = windowed_host_metrics(events)
     # Parity rule: floats never reach the driver's hash — scale to BIGINT
     # (round(x*10^4)) on BOTH engine and oracle sides (VERDICT r02 #1).
     return out.select(
@@ -2388,7 +2386,7 @@ def q_image_near_dups(spark, sf_dir):
         F.col("phash").bitwiseXOR(mask).alias("phash"),
     )
     allv = base.unionByName(variants)
-    return phash_near_dup_pairs(allv, max_hamming=6).select(
+    return phash_near_dup_pairs(allv).select(
         "id_a", "id_b", "hamming"
     )
 
@@ -2429,7 +2427,10 @@ def q_image_features(spark, sf_dir):
     TRUE for every row — the decode itself is verified in-query (pixel
     PSNR/pHash recompute), which SQL then pins."""
     from horseman_article_parser_spark.datagen.images import build_images_table
-    from horseman_article_parser_spark.operators.multimodal import image_features
+    from horseman_article_parser_spark.operators.multimodal import (
+        PHASH_MAX_HAMMING,
+        image_features,
+    )
 
     spark = _prep(spark)
     images = build_images_table(spark, n=64)
@@ -2445,7 +2446,7 @@ def q_image_features(spark, sf_dir):
         images.select("image_id", "phash", "caption"), "image_id"
     ).select(
         "image_id", "fmt", "w", "h", "decode_ok",
-        (hamming <= 6).alias("phash_match"),
+        (hamming <= PHASH_MAX_HAMMING).alias("phash_match"),
         "caption",
     )
 
@@ -2481,7 +2482,7 @@ def q_av_features(spark, sf_dir):
         "decode_ok",
     )
     vids = build_videos_table(spark, AV_VIDEO_N)
-    f0 = sample_frames(vids, every_n=1_000_000)  # frame 0 only
+    f0 = sample_frames(vids)  # frame 0 only
     video = f0.join(
         vids.select("video_id", "n_frames", "fps"), "video_id"
     ).select(
@@ -2673,7 +2674,7 @@ SELECT doc_id, {sig} AS simhash FROM sums
 
 
 def _embedding_near_dups_sql() -> str:
-    planes = SIM.hyperplanes(64, ANN_PLANES, ANN_SEED)
+    planes = SIM.hyperplanes()
     bits = []
     for p, plane in enumerate(planes):
         lit = "[" + ", ".join(f"{x!r}" for x in plane) + "]::DOUBLE[]"
@@ -2699,7 +2700,7 @@ FROM pairs WHERE cosine >= 0.30
 
 
 def _ann_lsh_sql() -> str:
-    planes = SIM.hyperplanes(64, ANN_PLANES, ANN_SEED)
+    planes = SIM.hyperplanes()
     bits = []
     for p, plane in enumerate(planes):
         lit = "[" + ", ".join(f"{x!r}" for x in plane) + "]::DOUBLE[]"

@@ -11,9 +11,9 @@ real:
   every decoded frame equals its input bit-exactly.
 - mp4/webm/mkv magics (ftyp / EBML) raise NotImplementedError.
 
-Scale notes: demux happens inside `mapInPandas` — `bytes` enters the
-Python worker once and only sampled frames (or their features) return
-to the JVM, mirroring `codecs.images`.
+Scale notes: demux happens inside an Arrow UDF — `bytes` enters the
+Python worker once and only the sampled frames' features return to
+the JVM, mirroring `codecs.images`.
 """
 
 from __future__ import annotations
@@ -26,6 +26,10 @@ import numpy as np
 _MAGIC = b"HVID"
 _FTYP = b"ftyp"
 _EBML = b"\x1a\x45\xdf\xa3"
+
+# frames sampled per video: every FRAME_STRIDE-th, which at the frame
+# counts a payload holds is frame 0 alone, the one the features hash
+FRAME_STRIDE = 1_000_000
 
 
 def encode_video(frames: list[np.ndarray], fps: int = 30) -> bytes:
@@ -50,8 +54,8 @@ def probe_video(data: bytes) -> tuple[int, int, int, int]:
     return w, h, fps, n
 
 
-def decode_frames(data: bytes, every_n: int = 1) -> list[tuple[int, np.ndarray]]:
-    """Demux + decode every `every_n`-th frame → [(frame_idx, pixels)].
+def decode_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
+    """Demux + decode every FRAME_STRIDE-th frame → [(frame_idx, pixels)].
     Skipped frames are seeked over without inflating them."""
     _check_magic(data)
     w, h, fps, n = struct.unpack("<HHHI", data[4:14])
@@ -59,7 +63,7 @@ def decode_frames(data: bytes, every_n: int = 1) -> list[tuple[int, np.ndarray]]
     out: list[tuple[int, np.ndarray]] = []
     for idx in range(n):
         (size,) = struct.unpack("<I", data[pos : pos + 4])
-        if idx % every_n == 0:
+        if idx % FRAME_STRIDE == 0:
             raw = zlib.decompress(data[pos + 4 : pos + 4 + size])
             out.append(
                 (idx, np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))

@@ -1194,11 +1194,15 @@ def clean_keyword_col(tok: Column) -> Column:
     return F.when(ok, cleaned)
 
 
-def keywords_cleaned_topk(docs: DataFrame, k: int = 10) -> DataFrame:
+# cleaned keywords kept per document
+K_CLEANED = 8
+
+
+def keywords_cleaned_topk(docs: DataFrame) -> DataFrame:
     """N3 with the reference's cleaning cascade: tokens → POS noun gate
     (retext-pos stand-in) → cleanKeyword → dedupe on the normalized
-    cleaned form (keywordSeen, keywordParser.js:33-46) → TF top-k
-    (count desc, keyword asc)."""
+    cleaned form (keywordSeen, keywordParser.js:33-46) → TF top
+    K_CLEANED (count desc, keyword asc)."""
     from pyspark.sql.window import Window
 
     toks = docs.select(
@@ -1214,35 +1218,35 @@ def keywords_cleaned_topk(docs: DataFrame, k: int = 10) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("keyword"))
     return (
         tf.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= K_CLEANED)
         .select("doc_id", "keyword", "tf", "rank")
     )
 
 
-def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
-                           k_phrases: int = 8,
-                           lengths: tuple[int, ...] = (2, 3),
-                           id_col: str = "doc_id",
-                           text_col: str = "text",
-                           stopwords: tuple[str, ...] = STOPWORDS_MINI,
-                           ) -> DataFrame:
+# keywords per document: the top K_TERMS terms and the top K_PHRASES
+# noun phrases of PHRASE_LENGTHS words
+K_TERMS, K_PHRASES = 10, 8
+PHRASE_LENGTHS = (2, 3)
+
+
+def keywords_phrases_batch(docs: DataFrame) -> DataFrame:
     """A9/N3 keywords + keyphrases: ONE Arrow batch kernel per doc row
     instead of explode → (doc, gram) hash-agg → per-doc window —
     per-document TF top-k needs no cross-row state, so shuffles would
     be pure overhead.
 
-    - terms: whitespace tokens (_java_tokens) that are not stopwords,
-      longer than one char and pass the POS noun gate (retext-keywords'
-      noun filter, keywordParser.js:10-28); top `k_terms` by
-      (tf desc, term asc).
-    - phrases: word n-grams of every length in `lengths`, pooled into
-      one ranking (retext-keywords ranks spans of any length together,
+    - terms: whitespace tokens (_java_tokens) that are not stopwords
+      (STOPWORDS_MINI), longer than one char and pass the POS noun gate
+      (retext-keywords' noun filter, keywordParser.js:10-28); top
+      K_TERMS by (tf desc, term asc).
+    - phrases: word 2- and 3-grams (PHRASE_LENGTHS), pooled into one
+      ranking (retext-keywords ranks spans of any length together,
       keywordParser.js:32-77); dropped when the first or last word is a
       stopword, any word fails the gate (adjectives pass, so "economic
       growth" survives while "running quickly" does not) or the phrase
-      is ≤3 chars; docs with fewer tokens than min(lengths) yield none.
-      Top `k_phrases` by (tf desc, phrase asc); score = tf / max_tf per
-      doc, the reference's normalized weight.
+      is ≤3 chars; docs of fewer than two tokens yield none. Top
+      K_PHRASES by (tf desc, phrase asc); score = tf / max_tf per doc,
+      the reference's normalized weight.
 
     The noun gate (first-char Lu | lexicon + ly/ing/ed suffix rules) is
     memoized per distinct surface token across the batch and evaluated
@@ -1251,7 +1255,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
     HALF_UP-on-shortest-repr double rounding via Decimal, so score_x1e9
     equals the oracle's integer.
 
-    Output is already exploded: (id, kind, gram, tf, rank, score_x1e9)
+    Output is already exploded: (doc_id, kind, gram, tf, rank, score_x1e9)
     with kind='term' rows (score_x1e9 null) and kind='phrase' rows.
     """
     import unicodedata
@@ -1264,13 +1268,11 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
     ly_n = frozenset(LY_NOUNS)
     ing_n = frozenset(ING_NOUNS)
     ed_n = frozenset(ED_NOUNS)
-    stop = frozenset(stopwords)
-    lens = tuple(lengths)
-    kt, kp = int(k_terms), int(k_phrases)
+    stop = frozenset(STOPWORDS_MINI)
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, kind string, "
+        f"doc_id {id_field.dataType.simpleString()}, kind string, "
         "gram string, tf long, rank int, score_x1e9 long"
     )
 
@@ -1298,7 +1300,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
 
         for pdf in batches:
             ids, kinds, grams, tfs, ranks, scores = [], [], [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for rid, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = _java_tokens(text if text is not None else "")
                 # kind='term': stopword + length + gate filter, TF,
                 # (tf desc, term asc) top-k
@@ -1307,7 +1309,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                     if t not in stop and len(t) > 1 and gate(t)
                 )
                 for rk, (term, tf) in enumerate(
-                    sorted(cnt.items(), key=lambda it: (-it[1], it[0]))[:kt],
+                    sorted(cnt.items(), key=lambda it: (-it[1], it[0]))[:K_TERMS],
                     start=1,
                 ):
                     ids.append(rid); kinds.append("term"); grams.append(term)
@@ -1315,13 +1317,13 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                 # kind='phrase': all n-grams of each length, edge-
                 # stopword + len>3 + all-words-gated, pooled ranking,
                 # score = round(tf/max_tf, 9)
-                if len(toks) < min(lens):
+                if len(toks) < min(PHRASE_LENGTHS):
                     continue
                 gates = [gate(t) for t in toks]
                 stops = [t in stop for t in toks]
                 pcnt: Counter = Counter()
                 n_toks = len(toks)
-                for ln in lens:
+                for ln in PHRASE_LENGTHS:
                     for i in range(n_toks - ln + 1):
                         if stops[i] or stops[i + ln - 1]:
                             continue
@@ -1334,7 +1336,7 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                     continue
                 max_tf = max(pcnt.values())
                 for rk, (p, tf) in enumerate(
-                    sorted(pcnt.items(), key=lambda it: (-it[1], it[0]))[:kp],
+                    sorted(pcnt.items(), key=lambda it: (-it[1], it[0]))[:K_PHRASES],
                     start=1,
                 ):
                     s9 = float(_round_half_up(tf / max_tf, 9))
@@ -1342,13 +1344,13 @@ def keywords_phrases_batch(docs: DataFrame, k_terms: int = 10,
                     tfs.append(tf); ranks.append(rk)
                     scores.append(int(_round_half_up(s9 * 1_000_000_000, 0)))
             yield pd.DataFrame({
-                id_col: ids, "kind": kinds, "gram": grams,
+                "doc_id": ids, "kind": kinds, "gram": grams,
                 "tf": pd.Series(tfs, dtype="int64"),
                 "rank": pd.Series(ranks, dtype="int32"),
                 "score_x1e9": pd.Series(scores, dtype="object"),
             })
 
-    sel = docs.select(F.col(id_col), F.col(text_col))
+    sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)
 
 

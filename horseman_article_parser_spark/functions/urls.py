@@ -280,13 +280,13 @@ def with_sanitized_data_url(
     url: str,
     html_out: str,
     url_out: str,
-    js_enabled: bool = False,
 ) -> DataFrame:
     """F13 data:URL sanitize (/root/reference/controllers/utils.js:11-28):
     decode the payload of column `url` (base64 or percent-encoded),
-    strip <script> elements when JavaScript is disabled, re-encode as a
-    base64 data:text/html URL. Adds `html_out` (sanitized html) and
-    `url_out` (sanitized url).
+    strip <script> elements, re-encode as a base64 data:text/html URL.
+    The crawler renders with JavaScript disabled, so the reference's
+    keep-scripts branch (JavaScript enabled) has no caller. Adds
+    `html_out` (sanitized html) and `url_out` (sanitized url).
 
     Column algebra (base64/regexp built-ins), so it runs JVM-side and
     renders to an exact DuckDB oracle.
@@ -357,13 +357,9 @@ def with_sanitized_data_url(
         "_sdu_html", F.when(meta.contains(";base64"), b64_html).otherwise(pct)
     )
     html = F.col("_sdu_html")
-    sanitized_core = (
-        html
-        if js_enabled
-        else F.regexp_replace(html, r"(?i)<script[^>]*>[\s\S]*?</script>", "")
-    )
+    sanitized = F.regexp_replace(html, r"(?i)<script[^>]*>[\s\S]*?</script>", "")
     df = df.withColumn(
-        html_out, F.when(html.isNotNull(), sanitized_core).otherwise(F.lit(""))
+        html_out, F.when(html.isNotNull(), sanitized).otherwise(F.lit(""))
     )
     b64 = F.regexp_replace(
         F.base64(F.encode(F.col(html_out), "UTF-8")), r"[\r\n]", ""

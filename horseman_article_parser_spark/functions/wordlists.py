@@ -1137,10 +1137,11 @@ def wordlist(lang: str) -> list[str]:
     return _EXPANDED_CACHE[lang]
 
 
-def builtin_dictionary(spark: SparkSession, lang: str = "en") -> DataFrame:
-    """Single-language dictionary relation (word) — drop-in for
-    `misspellings(docs, dictionary)`."""
-    return spark.createDataFrame([(w,) for w in wordlist(lang)], "word string")
+def builtin_dictionary(spark: SparkSession) -> DataFrame:
+    """The English dictionary relation (word), the reference's en-gb
+    default — drop-in for `misspellings(docs, dictionary)`; other
+    languages go through `builtin_dictionaries`."""
+    return spark.createDataFrame([(w,) for w in wordlist("en")], "word string")
 
 
 def builtin_dictionaries(spark: SparkSession) -> DataFrame:

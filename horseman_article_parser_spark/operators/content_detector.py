@@ -614,17 +614,21 @@ def score_with_weights_col(weights: list[float], bias: float) -> Column:
     return 1.0 / (1.0 + F.exp(-z))
 
 
-def train_gd(rows: list[tuple[list[float], int]], lr: float = 0.05,
-             epochs: int = 250, l2: float = 0.001) -> dict:
+# train-reranker.js's hyperparameters: learning rate, epochs, L2 weight
+GD_LR, GD_EPOCHS, GD_L2 = 0.05, 250, 0.001
+
+
+def train_gd(rows: list[tuple[list[float], int]]) -> dict:
     """Exact reference trainer (train-reranker.js:144-169): full-batch
-    gradient descent. Driver-side; for parity tests and small corpora."""
+    gradient descent at the reference's GD_LR / GD_EPOCHS / GD_L2.
+    Driver-side; for parity tests and small corpora."""
     if not rows:
         return {"weights": [], "bias": 0.0}
     d = len(rows[0][0])
     w = [0.0] * d
     b = 0.0
     n = len(rows)
-    for _ in range(epochs):
+    for _ in range(GD_EPOCHS):
         dw = [0.0] * d
         db = 0.0
         for x, y in rows:
@@ -635,8 +639,8 @@ def train_gd(rows: list[tuple[list[float], int]], lr: float = 0.05,
                 dw[i] += diff * x[i]
             db += diff
         for i in range(d):
-            w[i] -= lr * (dw[i] / n + l2 * w[i])
-        b -= lr * (db / n)
+            w[i] -= GD_LR * (dw[i] / n + GD_L2 * w[i])
+        b -= GD_LR * (db / n)
     return {"weights": w, "bias": b}
 
 

@@ -340,15 +340,20 @@ def simhash_near_pairs(sig: DataFrame, max_hamming: int = 3, bits: int = 32,
 # ----------------------------------------------- embedding near-dup
 
 
-def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
-                        n_planes: int = 8, seed: int = 7,
-                        max_bucket: int = 1000) -> DataFrame:
-    """Near-duplicate vectors by cosine ≥ threshold, LSH-bucketed.
+# cosine floor of a near-duplicate pair: the synthetic embeddings are
+# near-orthogonal (max pairwise cosine ~0.51), so 0.30 finds pairs there
+EMB_NEAR_DUP_COSINE = 0.30
 
-    Random-hyperplane signature (n_planes sign bits, deterministic seeded
-    planes) buckets the vectors; exact cosine verifies within-bucket pairs.
-    High thresholds ⇒ near-dups almost surely agree on all sign bits, so
-    the bucket join finds them without the O(n²) cross join.
+
+def embedding_near_dups(emb: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """Near-duplicate vectors by cosine ≥ EMB_NEAR_DUP_COSINE,
+    LSH-bucketed.
+
+    Random-hyperplane signature (`similarity.hyperplane_bucket_col`:
+    ANN_PLANES sign bits of deterministic seeded planes) buckets the
+    vectors; exact cosine verifies within-bucket pairs. Near-dups
+    almost surely agree on all sign bits, so the bucket join finds them
+    without the O(n²) cross join.
 
     Shuffle discipline (VERDICT r02 #2/#3): fingerprint, bucket and norm
     are all computed scan-side; only (id, fp, bucket, norm) rows enter
@@ -365,7 +370,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
         F.md5(
             F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
         ).alias("_fp"),
-        hyperplane_bucket_col(F.col("embedding"), n_planes=n_planes, seed=seed).alias("bucket"),
+        hyperplane_bucket_col(F.col("embedding")).alias("bucket"),
         l2_norm_col(F.col("embedding")).alias("_norm"),
     )
     # identical vectors → identical (bucket, norm); min-id representative
@@ -394,7 +399,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
             "_ra", "_rb",
             cosine_col(F.col("_va"), F.col("_vb"), F.col("na"), F.col("nb")).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= EMB_NEAR_DUP_COSINE)
     )
     # expand representative pairs back to member pairs
     members = keyed.join(groups.select("_fp", "_rep"), "_fp").select("_rep", "_id")
@@ -446,11 +451,18 @@ def _h32_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
 
 
-def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
-                      rows_per_band: int = 2) -> DataFrame:
-    """minhash_signatures + lsh_band_buckets(carry_signature=True) in
-    one kernel pass: (band, bucket, doc_id, mh0..mh{n-1}) rows, zero
-    shuffles."""
+# MinHash signature width and its LSH banding (N_MINHASH = LSH_BANDS *
+# LSH_ROWS_PER_BAND), and SimHash fingerprint width; the oracle SQL of
+# minhash_lsh and simhash reads the same constants
+N_MINHASH = 8
+LSH_BANDS, LSH_ROWS_PER_BAND = 4, 2
+SIMHASH_BITS = 16
+
+
+def minhash_lsh_batch(docs: DataFrame) -> DataFrame:
+    """minhash_signatures(N_MINHASH) + lsh_band_buckets(LSH_BANDS,
+    LSH_ROWS_PER_BAND, carry_signature=True) in one kernel pass:
+    (band, bucket, doc_id, mh0..mh{N_MINHASH-1}) rows, zero shuffles."""
     from typing import Iterator
 
     import numpy as np
@@ -459,14 +471,13 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
     from ..functions.hashing import MINHASH_P, minhash_params
     from ..functions.textstats import _java_normalize
 
-    assert n_hashes >= bands * rows_per_band
-    params = minhash_params(n_hashes)
+    params = minhash_params(N_MINHASH)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
 
     k, step = DEFAULT_SHINGLE_K, DEFAULT_SHINGLE_STEP
     id_field = docs.schema["doc_id"]
-    mh_cols = [f"mh{j}" for j in range(n_hashes)]
+    mh_cols = [f"mh{j}" for j in range(N_MINHASH)]
     out_schema = (
         "band int, bucket long, "
         f"doc_id {id_field.dataType.simpleString()}, "
@@ -500,37 +511,37 @@ def minhash_lsh_batch(docs: DataFrame, n_hashes: int = 16, bands: int = 4,
             hm = np.asarray(flat, dtype=np.int64) % MINHASH_P
             starts = np.asarray(offsets[:-1], dtype=np.intp)
             # h_j(x) = (a_j * (x mod P) + b_j) mod P, all < 2^52; one
-            # pass per hash keeps temporaries at one row, not n_hashes
-            mins = np.empty((n_hashes, len(pdf)), dtype=np.int64)
-            for j in range(n_hashes):
+            # pass per hash keeps temporaries at one row, not N_MINHASH
+            mins = np.empty((N_MINHASH, len(pdf)), dtype=np.int64)
+            for j in range(N_MINHASH):
                 mins[j] = np.minimum.reduceat(
                     (a_vec[j] * hm + b_vec[j]) % MINHASH_P, starts)
             ids = pdf["doc_id"].to_numpy()
             # band explosion vectorized: rows are doc-major × band
             bucket_keys = [
-                "_".join(str(int(mins[b * rows_per_band + r, d]))
-                         for r in range(rows_per_band))
-                for d in range(len(pdf)) for b in range(bands)
+                "_".join(str(int(mins[b * LSH_ROWS_PER_BAND + r, d]))
+                         for r in range(LSH_ROWS_PER_BAND))
+                for d in range(len(pdf)) for b in range(LSH_BANDS)
             ]
             out = pd.DataFrame({
                 "band": pd.Series(
-                    np.tile(np.arange(bands, dtype=np.int32), len(pdf))),
+                    np.tile(np.arange(LSH_BANDS, dtype=np.int32), len(pdf))),
                 "bucket": pd.Series(
                     [sh_hash(kk) for kk in bucket_keys], dtype="int64"),
-                "doc_id": pd.Series(np.repeat(ids, bands),
+                "doc_id": pd.Series(np.repeat(ids, LSH_BANDS),
                                     dtype=pdf["doc_id"].dtype),
             })
             for j, c in enumerate(mh_cols):
-                out[c] = pd.Series(np.repeat(mins[j], bands), dtype="int64")
+                out[c] = pd.Series(np.repeat(mins[j], LSH_BANDS), dtype="int64")
             yield out
 
     sel = docs.select(F.col("doc_id"), F.col("text"))
     return sel.mapInPandas(kernel, out_schema)
 
 
-def simhash_batch(docs: DataFrame, bits: int = 32) -> DataFrame:
-    """simhash() in one kernel pass: (doc_id, simhash) with the per-bit
-    sign-sums vectorized over a flat token-hash array."""
+def simhash_batch(docs: DataFrame) -> DataFrame:
+    """simhash(bits=SIMHASH_BITS) in one kernel pass: (doc_id, simhash)
+    with the per-bit sign-sums vectorized over a flat token-hash array."""
     from typing import Iterator
 
     import numpy as np
@@ -568,7 +579,7 @@ def simhash_batch(docs: DataFrame, bits: int = 32) -> DataFrame:
             starts = np.asarray(offsets[:-1], dtype=np.intp)
             lens = np.diff(offsets)
             sigs = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(bits):
+            for b in range(SIMHASH_BITS):
                 # sign-sum = 2*(count of 1-bits) - token count; one 1-D
                 # pass per bit keeps temporaries at one row
                 ones = np.add.reduceat((h >> b) & 1, starts)

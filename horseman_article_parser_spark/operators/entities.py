@@ -930,18 +930,19 @@ def extract_entities_df(docs: DataFrame) -> DataFrame:
 
 def entities_exploded(docs: DataFrame) -> DataFrame:
     """(doc_id, kind, pos, entity) rows — the relational surface for
-    dedupe/anti-join compositions (J3/J4 downstream)."""
+    dedupe/anti-join compositions (J3/J4 downstream). The UDF runs once
+    per document: its four name lists become one array of (kind, names)
+    structs, exploded to one row per kind, then per name."""
     ent = extract_entities_df(docs)
-    parts = []
-    for kind in ("people", "places", "orgs", "topics"):
-        parts.append(
-            ent.select(
-                F.col("doc_id"),
-                F.lit(kind).alias("kind"),
-                F.posexplode_outer(F.col(f"entities.{kind}")).alias("pos", "entity"),
-            ).filter(F.col("entity").isNotNull())
+    kinds = F.array(*[
+        F.struct(F.lit(f.name).alias("kind"), F.col(f"entities.{f.name}").alias("names"))
+        for f in ENTITIES_STRUCT.fields
+    ])
+    return (
+        ent.select("doc_id", F.explode(kinds).alias("_k"))
+        .select(
+            "doc_id", F.col("_k.kind").alias("kind"),
+            F.posexplode_outer("_k.names").alias("pos", "entity"),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        .filter(F.col("entity").isNotNull())
+    )

@@ -617,13 +617,19 @@ def extract_article(
     return out
 
 
-def extract_articles(
-    fetched: DataFrame, fields: frozenset[str] | None = None
-) -> DataFrame:
+# the article keys extract_articles computes: the JSON-LD headline and
+# article list, all its caller (the extract_jsonld query) reads
+JSONLD_ARTICLE_FIELDS = frozenset({"headline", "n_jsonld_articles",
+                                   "jsonld_articles"})
+
+
+def extract_articles(fetched: DataFrame) -> DataFrame:
     """DataFrame op: adds an `article` struct column, extracted from the
     `url` and `html` columns by `extract_article` behind an Arrow UDF.
-    Only those two columns cross into Python; `fields` prunes which
-    article keys the kernel computes (see extract_article)."""
-    extract = F.udf(lambda u, h: extract_article(u, h, fields),
+    Only those two columns cross into Python, and the kernel computes
+    only the JSONLD_ARTICLE_FIELDS keys (the rest stay null), so no
+    page pays for the caption walk, table parsing or meta scan nothing
+    reads (see extract_article)."""
+    extract = F.udf(lambda u, h: extract_article(u, h, JSONLD_ARTICLE_FIELDS),
                     ARTICLE_STRUCT, useArrow=True)
     return fetched.withColumn("article", extract("url", "html"))

@@ -118,22 +118,23 @@ def build_wave0(seeds: DataFrame, limit: int, unique_hosts: bool = True) -> Data
     return wave.orderBy("seq")
 
 
-def round_robin_interleave(
-    df: DataFrame, feed_col: str, pos_col: str, count: int | None = None
-) -> DataFrame:
-    """W8: repeated passes taking one URL per feed until `count` — the
-    reference's host-diversity interleave
+# URLs one round-robin interleave takes
+INTERLEAVE_COUNT = 100
+
+
+def round_robin_interleave(df: DataFrame, feed_col: str, pos_col: str) -> DataFrame:
+    """W8: repeated passes taking one URL per feed until INTERLEAVE_COUNT
+    — the reference's host-diversity interleave
     (/root/reference/scripts/fetch-curated-urls.js:261-277).
 
     Exact order reproduction: rank = position within feed, then global
     order (rank, feed, pos). The limit compiles to TakeOrderedAndProject."""
     w = Window.partitionBy(feed_col).orderBy(pos_col)
-    out = df.withColumn("rr_rank", F.row_number().over(w)).orderBy(
-        "rr_rank", feed_col, pos_col
+    return (
+        df.withColumn("rr_rank", F.row_number().over(w))
+        .orderBy("rr_rank", feed_col, pos_col)
+        .limit(INTERLEAVE_COUNT)
     )
-    if count is not None:
-        out = out.limit(count)
-    return out
 
 
 def ordered_zip_with_index(

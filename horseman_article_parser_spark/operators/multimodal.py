@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..codecs.audio import decode_wav
-from ..codecs.images import decode_image, encode_png, phash64
+from ..codecs.images import decode_image, phash64
 from ..codecs.video import decode_frames
 
 IMAGE_STATS_STRUCT = T.StructType(
@@ -82,18 +82,23 @@ def image_features(images: DataFrame) -> DataFrame:
     return images.select(*cols, stats("bytes").alias("s")).select(*cols, "s.*")
 
 
-def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate images by phash Hamming distance — metadata-only
-    plan: reads (image_id, phash), never `bytes`. Same block-permutation
-    equi-join as text SimHash, with the identical-signature collapse and
-    mega-bucket caps (template/solid-color image corpora put millions of
-    identical phashes in one bucket otherwise; see
+# the largest phash Hamming distance of a near-duplicate image pair
+PHASH_MAX_HAMMING = 6
+
+
+def phash_near_dup_pairs(images: DataFrame) -> DataFrame:
+    """Near-duplicate images by phash Hamming distance
+    ≤ PHASH_MAX_HAMMING — metadata-only plan: reads (image_id, phash),
+    never `bytes`. Same block-permutation equi-join as text SimHash,
+    with the identical-signature collapse and mega-bucket caps
+    (template/solid-color image corpora put millions of identical
+    phashes in one bucket otherwise; see
     `operators.dedup.blocked_hamming_pairs`)."""
     from .dedup import blocked_hamming_pairs
 
     sig = images.select(F.col("image_id"), F.col("phash"))
     return blocked_hamming_pairs(
-        sig, "phash", "image_id", 64, 8, max_hamming, 1000
+        sig, "phash", "image_id", 64, 8, PHASH_MAX_HAMMING, 1000
     )
 
 
@@ -122,7 +127,6 @@ FRAME_STRUCT = T.StructType(
         T.StructField("w", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("frame_phash", T.LongType()),
-        T.StructField("frame", T.BinaryType()),
     ]
 )
 
@@ -159,36 +163,29 @@ def audio_features(clips: DataFrame) -> DataFrame:
         "clip_id", "s.*")
 
 
-def frame_samples(data: bytes | None, every_n: int,
-                  with_pixels: bool) -> list[dict]:
-    """Demux one video payload, decode every `every_n`-th frame and
-    return its metadata + pHash (and the PNG-encoded pixels when
-    with_pixels). A corrupt / truncated / compressed-codec payload
-    (mp4/webm stubs raise NotImplementedError, bad HVID raises
-    struct/zlib errors) gives a single marker frame (frame_idx=-1,
-    w=h=0) instead of killing the whole corpus scan."""
+def frame_samples(data: bytes | None) -> list[dict]:
+    """Demux one video payload, decode the frames `decode_frames`
+    samples and return their metadata + pHash. A corrupt / truncated /
+    compressed-codec payload (mp4/webm stubs raise NotImplementedError,
+    bad HVID raises struct/zlib errors) gives a single marker frame
+    (frame_idx=-1, w=h=0) instead of killing the whole corpus scan."""
     try:
-        frames = list(decode_frames(bytes(data), every_n))
+        frames = decode_frames(bytes(data))
     except Exception:
-        return [{"frame_idx": -1, "w": 0, "h": 0, "frame_phash": 0,
-                 "frame": None}]
+        return [{"frame_idx": -1, "w": 0, "h": 0, "frame_phash": 0}]
     return [
         {
             "frame_idx": idx,
             "w": px.shape[1],
             "h": px.shape[0],
             "frame_phash": phash64(px),
-            "frame": encode_png(px) if with_pixels else None,
         }
         for idx, px in frames
     ]
 
 
-def sample_frames(videos: DataFrame, every_n: int = 30,
-                  with_pixels: bool = False) -> DataFrame:
-    """(video_id) plus one row per `frame_samples` frame. with_pixels
-    defaults off so the narrow feature path never ships frame bytes
-    back to the JVM."""
-    frames = F.udf(lambda b: frame_samples(b, every_n, with_pixels),
-                   T.ArrayType(FRAME_STRUCT), useArrow=True)
+def sample_frames(videos: DataFrame) -> DataFrame:
+    """(video_id) plus one row per `frame_samples` frame. Only the
+    narrow features come back: frame pixels never reach the JVM."""
+    frames = F.udf(frame_samples, T.ArrayType(FRAME_STRUCT), useArrow=True)
     return videos.select("video_id", F.inline(frames("bytes")))

@@ -9,7 +9,7 @@ broadcast-joined to candidates; the longest matching prefix wins
 (standard robots longest-match semantics); no matching rule => allowed.
 
 Per-host budget: at most `budget(host)` URLs scheduled per round, where
-budget = wave_seconds*1000 / crawl_delay_ms (the caller's default
+budget = WAVE_SECONDS*1000 / crawl_delay_ms (the caller's default
 budget when no rule gives a delay). Enforced with a TWO-PHASE top-k to
 survive hot-host skew:
 
@@ -78,8 +78,16 @@ def robots_filter(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
     return decided.select(*candidates.columns)
 
 
-def host_budgets(robots: DataFrame | None, wave_seconds: float = 60.0) -> DataFrame | None:
-    """Per-host max URLs per wave from crawl_delay_ms (min across rules)."""
+# the time one wave spans, which a host's crawl delay divides into its
+# per-wave budget
+WAVE_SECONDS = 60.0
+# the user-agent token whose robots.txt group applies to this crawler
+ROBOTS_AGENT = "horseman"
+
+
+def host_budgets(robots: DataFrame | None) -> DataFrame | None:
+    """Per-host max URLs per WAVE_SECONDS wave from crawl_delay_ms (min
+    across rules)."""
     if robots is None:
         return None
     return (
@@ -101,7 +109,7 @@ def host_budgets(robots: DataFrame | None, wave_seconds: float = 60.0) -> DataFr
             .otherwise(
                 F.greatest(
                     F.lit(1),
-                    F.floor(F.lit(wave_seconds * 1000.0) / F.col("_delay_ms")),
+                    F.floor(F.lit(WAVE_SECONDS * 1000.0) / F.col("_delay_ms")),
                 )
             )
             .cast("int")
@@ -136,10 +144,10 @@ def enforce_host_budget(
     return df.drop("_budget", "_salt", "_r1", "_r2")
 
 
-def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman") -> DataFrame:
+def parse_robots_txt(robots_files: DataFrame) -> DataFrame:
     """Parse raw (host, robots_txt) bodies into the rules table
-    (host, rule_type, path_prefix, crawl_delay_ms) — the Arrow-kernel
-    scale path. Robots parsing is per-body-local (lines of one host
+    (host, rule_type, path_prefix, crawl_delay_ms) for ROBOTS_AGENT —
+    the Arrow-kernel scale path. Robots parsing is per-body-local (lines of one host
     never interact with another host's), so the declarative chain's
     shape — explode → two host-keyed windows → three aggregates over a
     shared subtree — paid ~10 shuffle stages and re-ran the source per
@@ -158,7 +166,7 @@ def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman") -> DataFr
 
     import pandas as pd
 
-    agent_l = agent.lower()
+    agent_l = ROBOTS_AGENT.lower()
     _num = _re.compile(r"[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?")
     _ends = _re.compile(r"^[\t ]+|[\t ]+$")
 
@@ -241,7 +249,7 @@ def parse_robots_txt(robots_files: DataFrame, agent: str = "horseman") -> DataFr
     )
 
 
-def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman") -> DataFrame:
+def parse_robots_txt_plan(robots_files: DataFrame) -> DataFrame:
     """Declarative twin of :func:`parse_robots_txt` (the Arrow kernel is
     the default path — see its docstring for why). Kept because the
     window/aggregate chain is the relational reference the kernel is
@@ -251,7 +259,7 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman") -> D
     Semantics (robotstxt.org / RFC 9309 subset):
     - consecutive `User-agent:` lines stack into one group header; the
       group's rules run until the next header
-    - the group whose agents contain `agent` (case-insensitive
+    - the group whose agents contain ROBOTS_AGENT (case-insensitive
       substring-free exact token match) wins over the `*` group; with
       neither, the host has no rules (allowed)
     - `Allow:` / `Disallow:` with empty paths are ignored (an empty
@@ -299,7 +307,7 @@ def parse_robots_txt_plan(robots_files: DataFrame, agent: str = "horseman") -> D
         .agg(F.collect_set(F.lower("value")).alias("agents"))
         .withColumn(
             "match_rank",
-            F.when(F.array_contains("agents", agent.lower()), 0)
+            F.when(F.array_contains("agents", ROBOTS_AGENT.lower()), 0)
             .when(F.array_contains("agents", "*"), 1)
             .otherwise(F.lit(None)),
         )

@@ -80,19 +80,27 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
 # ---------------------------------------------------------------- LSH
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
+# LSH signature: ANN_PLANES random hyperplanes over the corpus's
+# ANN_DIM-dimensional embeddings, drawn from Random(ANN_SEED); the oracle
+# SQL inlines the same planes
+ANN_DIM = 64
+ANN_PLANES = 8
+ANN_SEED = 7
+
+
+def hyperplanes() -> list[list[float]]:
     """Deterministic unit-free random hyperplanes (seeded, reproducible
     across driver and oracle — the literal values are inlined in both)."""
-    rng = random.Random(seed)
+    rng = random.Random(ANN_SEED)
     return [
-        [round(rng.gauss(0.0, 1.0), 6) for _ in range(dim)] for _ in range(n_planes)
+        [round(rng.gauss(0.0, 1.0), 6) for _ in range(ANN_DIM)]
+        for _ in range(ANN_PLANES)
     ]
 
 
-def hyperplane_bucket_col(vec: Column, n_planes: int = 8, seed: int = 7,
-                          dim: int = 64) -> Column:
-    """Sign-pattern bucket id in [0, 2^n_planes): bit p = (vec·plane_p) > 0."""
-    planes = hyperplanes(dim, n_planes, seed)
+def hyperplane_bucket_col(vec: Column) -> Column:
+    """Sign-pattern bucket id in [0, 2^ANN_PLANES): bit p = (vec·plane_p) > 0."""
+    planes = hyperplanes()
     bucket = None
     for p, plane in enumerate(planes):
         arr = F.array(*[F.lit(x) for x in plane])
@@ -104,8 +112,15 @@ def hyperplane_bucket_col(vec: Column, n_planes: int = 8, seed: int = 7,
 # ---------------------------------------------------------------- IVF
 
 
-def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
-                    seed_mod: int = 97) -> DataFrame:
+# trained IVF: IVF_TRAIN_CENTS centroids after IVF_TRAIN_ITERS Lloyd
+# iterations from the first centroids in (vec_id % IVF_TRAIN_SEED_MOD,
+# vec_id) order; the oracle SQL unrolls the same iterations
+IVF_TRAIN_CENTS = 8
+IVF_TRAIN_ITERS = 2
+IVF_TRAIN_SEED_MOD = 97
+
+
+def train_centroids(corpus: DataFrame) -> DataFrame:
     """Lloyd's k-means over DataFrame ops. Init = deterministic sample
     (vec_id ordering); each iteration is one assign (broadcast centroids)
     + one mean-reduce (posexplode → mean per (cluster, dim)). Centroid
@@ -116,11 +131,11 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
     order, so an independent engine (the DuckDB oracle twin) reproduces
     the trained centroids bit-for-bit regardless of partial aggregation
     order."""
-    # init: TakeOrdered of n_centroids rows (tiny, deterministic order),
-    # numbered on the driver — no RDD API and no extra job
+    # init: TakeOrdered of IVF_TRAIN_CENTS rows (tiny, deterministic
+    # order), numbered on the driver — no RDD API and no extra job
     seed_rows = (
-        corpus.orderBy(F.col("vec_id") % seed_mod, "vec_id")
-        .limit(n_centroids)
+        corpus.orderBy(F.col("vec_id") % IVF_TRAIN_SEED_MOD, "vec_id")
+        .limit(IVF_TRAIN_CENTS)
         .select(F.col("embedding").alias("c_vec"))
         .collect()
     )
@@ -128,7 +143,7 @@ def train_centroids(corpus: DataFrame, n_centroids: int = 16, n_iters: int = 5,
         [(i, list(r["c_vec"])) for i, r in enumerate(seed_rows)],
         "cluster int, c_vec array<float>",
     )
-    for _ in range(n_iters):
+    for _ in range(IVF_TRAIN_ITERS):
         assigned = assign_clusters(corpus, cents)
         exploded = (
             assigned.join(corpus, "vec_id")

@@ -24,9 +24,8 @@ the oracle SQL needs no quoting. `word_idx` (token ordinal in line) is
 kept as the join key for suggestions.
 
 Scale shape: tokens explode on (doc, line); char positions are two
-window running-sums sharing ONE doc-keyed exchange (requested only
-with positions=True — dictionary builds keep the shuffle-free path);
-dictionary and entity tables broadcast (≪10 MB).
+window running-sums sharing ONE doc-keyed exchange; dictionary and
+entity tables broadcast (≪10 MB).
 """
 
 from __future__ import annotations
@@ -65,14 +64,13 @@ def normalize_entity_col(s: Column) -> Column:
     return F.lower(F.trim(out))
 
 
-def doc_tokens(docs: DataFrame, positions: bool = False,
-               carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, line, word_idx, word) over `text` after the reference
-    pre-pass; words are stripped of edge punctuation and lowercased for
-    dictionary probing (original kept as `word`).
+def doc_tokens(docs: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, line, word_idx, word, word_lc, col_char, offset_start,
+    offset_end) over `text` after the reference pre-pass; words are
+    stripped of edge punctuation and lowercased for dictionary probing
+    (original kept as `word`).
 
-    With positions=True also emits `col_char` / `offset_start` /
-    `offset_end` (spellCheck.js:29-47 shape). Both are running
+    The positions follow the spellCheck.js:29-47 shape. Both are running
     length-sums over the RAW token sequence — every separator (space
     inside a line, the line break between lines) is exactly one char
     after the masking pre-pass, so one doc-ordered window gives the
@@ -88,21 +86,10 @@ def doc_tokens(docs: DataFrame, positions: bool = False,
         F.posexplode(F.split(mask_urls_col("text"), "\n")).alias("_ln", "_line"),
     )
     arr = F.split(F.col("_line"), " ")
-    if not positions:
-        toks = lines.select(
-            F.col("doc_id"), *carry,
-            (F.col("_ln") + 1).alias("line"),
-            F.posexplode(F.filter(arr, lambda w: w != "")).alias("word_idx", "_raw"),
-        )
-        word = F.regexp_replace(F.col("_raw"), r"^[^A-Za-z]+|[^A-Za-z]+$", "")
-        return toks.select(
-            F.col("doc_id"), *carry, "line", "word_idx",
-            word.alias("word"), F.lower(word).alias("word_lc"),
-        ).filter(F.col("word") != "")
-    # positions path: explode UNFILTERED so empty tokens (a collapsed
-    # leading/trailing space) still advance the char counters; the
-    # filtered token ordinal is _rp minus the leading-empty marker
-    # (interior empties are impossible after the space collapse).
+    # explode UNFILTERED so empty tokens (a collapsed leading/trailing
+    # space) still advance the char counters; the filtered token ordinal
+    # is _rp minus the leading-empty marker (interior empties are
+    # impossible after the space collapse).
     toks = lines.select(
         F.col("doc_id"), *carry,
         (F.col("_ln") + 1).alias("line"),
@@ -139,13 +126,13 @@ def misspellings(
     docs: DataFrame,
     dictionary: DataFrame,
     entities: DataFrame | None = None,
-    positions: bool = False,
 ) -> DataFrame:
-    """N4 + J3: (doc_id, line, word_idx, word[, char positions]) not in
-    `dictionary(word)`, minus words whose normalized/depluralized form
-    is a known entity token in `entities(entity)` (one per-corpus
-    table, where the reference keeps a Set per article)."""
-    toks = doc_tokens(docs, positions=positions)
+    """N4 + J3: (doc_id, line, word_idx, word, col_char, offset_start,
+    offset_end) not in `dictionary(word)`, minus words whose
+    normalized/depluralized form is a known entity token in
+    `entities(entity)` (one per-corpus table, where the reference keeps
+    a Set per article)."""
+    toks = doc_tokens(docs)
     dict_lc = F.broadcast(
         dictionary.select(F.lower("word").alias("word_lc")).distinct()
     )
@@ -180,21 +167,21 @@ def misspellings(
             missed["word_lc"] == ent_tokens["word_key"],
             "left_anti",
         )
-    cols = ["doc_id", "line", "word_idx", "word"]
-    if positions:
-        cols += ["col_char", "offset_start", "offset_end"]
-    return missed.select(*cols)
+    return missed.select("doc_id", "line", "word_idx", "word",
+                         "col_char", "offset_start", "offset_end")
 
 
 # ------------------------------------------------------- N4 suggestions
 # retext-spell returns edit-distance suggestions per misspelling
 # (/root/reference/controllers/spellCheck.js:29-55, `expected`). The
 # deterministic relational form: dictionary words within Levenshtein
-# distance 1, alphabetical, capped. Candidate generation is
-# the symspell deletes-table join (Garbe's public algorithm): keys =
-# word ∪ single-char deletions on BOTH sides; two words at distance ≤ 1
-# always share a key, so the join bounds the search without a cross
-# join — the dict-keys table is a one-time broadcast build.
+# distance 1, alphabetical, capped at MAX_SUGGESTIONS. Candidate
+# generation is the symspell deletes-table join (Garbe's public
+# algorithm): keys = word ∪ single-char deletions on BOTH sides; two
+# words at distance ≤ 1 always share a key, so the join bounds the
+# search without a cross join — the dict-keys table is a one-time
+# broadcast build.
+MAX_SUGGESTIONS = 5
 
 
 def _deletes1_col(word: Column) -> Column:
@@ -255,13 +242,9 @@ def misspellings_multilang(docs: DataFrame, dictionaries: DataFrame) -> DataFram
     return missed.select("doc_id", "lang", "line", "word_idx", "word")
 
 
-def suggest_corrections(
-    missed: DataFrame,
-    dictionary: DataFrame,
-    max_suggestions: int = 5,
-) -> DataFrame:
+def suggest_corrections(missed: DataFrame, dictionary: DataFrame) -> DataFrame:
     """Add a `suggestions` column (dictionary words within Levenshtein
-    distance 1, comma-joined, alphabetical, capped at max_suggestions;
+    distance 1, comma-joined, alphabetical, capped at MAX_SUGGESTIONS;
     '' when none) to a misspellings frame."""
     id_cols = ("doc_id", "line", "word_idx")
     dict_keys = F.broadcast(
@@ -282,7 +265,7 @@ def suggest_corrections(
     agg = cand.groupBy(*id_cols, "word").agg(
         F.array_join(
             F.slice(
-                F.sort_array(F.collect_set("_dw")), 1, max_suggestions
+                F.sort_array(F.collect_set("_dw")), 1, MAX_SUGGESTIONS
             ),
             ",",
         ).alias("suggestions")

@@ -30,7 +30,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
-DEFAULT_MAX_SENTENCES = 5
+# the most sentences one summary keeps
+MAX_SENTENCES = 5
 
 _FACTUAL = [
     re.compile(r"\baccording to\b", re.I),
@@ -128,9 +129,9 @@ def build_summary(
     text: str | None,
     title: str = "",
     meta_description: str = "",
-    max_sentences: int = DEFAULT_MAX_SENTENCES,
 ) -> dict:
-    """Per-document kernel; returns {"text": str, "sentences": [str]}."""
+    """Per-document kernel; returns {"text": str, "sentences": [str]}
+    with at most MAX_SENTENCES sentences."""
     if not text or not isinstance(text, str) or not text.strip():
         return {"text": "", "sentences": []}
     working = text.strip()
@@ -174,10 +175,10 @@ def build_summary(
             score -= 1
         scored.append({**s, "score": score, "index": index})
 
-    max_per_para = max(1, max_sentences // 3)
+    max_per_para = max(1, MAX_SENTENCES // 3)
     if len(paragraphs) <= 2:
-        max_per_para = max_sentences
-    unique_target = min(len(paragraphs), max_sentences)
+        max_per_para = MAX_SENTENCES
+    unique_target = min(len(paragraphs), MAX_SENTENCES)
     # JS Array.sort is stable; ties keep original (index) order
     sorted_ = sorted(scored, key=lambda x: -x["score"])
     selected: list[dict] = []
@@ -231,7 +232,7 @@ def build_summary(
         add(cand)
 
     for cand in sorted_:
-        if len(selected) >= max_sentences:
+        if len(selected) >= MAX_SENTENCES:
             break
         if not cand["text"] or cand["text"] in seen_texts:
             continue
@@ -242,9 +243,9 @@ def build_summary(
         else:
             deferred.append(cand)
 
-    if len(selected) < max_sentences:
+    if len(selected) < MAX_SENTENCES:
         for cand in deferred:
-            if len(selected) >= max_sentences:
+            if len(selected) >= MAX_SENTENCES:
                 break
             if not cand["text"] or cand["text"] in seen_texts:
                 continue
@@ -256,7 +257,7 @@ def build_summary(
         ensure_coverage(n // 3)
         ensure_coverage((n * 2) // 3)
     if not selected:
-        fallback = [s["text"] for s in sentences[: min(max_sentences, n)]]
+        fallback = [s["text"] for s in sentences[: min(MAX_SENTENCES, n)]]
         return {"text": " ".join(fallback).strip(), "sentences": fallback}
 
     ordered = sorted(selected, key=lambda x: x["index"])

@@ -105,54 +105,47 @@ class StreamingSeedIngest:
         )
 
 
-def windowed_host_metrics(
-    events: DataFrame,
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-    source_col: str | None = None,
-    phase_col: str | None = None,
-) -> DataFrame:
-    """T7/T8: per-host fetch counters over `event_time` windows with a
-    watermark bounding late-data state.
+# crawl metrics windows: one hour each, and events up to two hours late
+# still count
+METRICS_WINDOW = "1 hour"
+METRICS_WATERMARK = "2 hours"
 
-    source_col: when given, adds the A2 source-count split — n_amp /
-    n_dynamic totals per group (the reference logs amp vs dynamic fetch
-    totals per run, batch-sample-run.js:376-377).
-    phase_col: when given, adds the T8 progress/lineage surface —
-    `phases` is the ordered distinct set of phase tags seen in the
-    window (the reference emits phase-tagged parse:status progress
-    lines, index.js:136-158) and `last_event` the progress watermark
-    (latest event time). All additions are plain streaming-safe
-    aggregates — no extra shuffle beyond the existing window+host one."""
-    aggs = [
-        F.count("*").alias("scheduled"),
-        F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("err"),
-        F.avg("fetch_ms").alias("avg_ms"),
-    ]
-    extra = []
-    if source_col is not None:
-        aggs += [
-            F.sum(F.when(F.col(source_col) == "amp", 1).otherwise(0))
+
+def windowed_host_metrics(events: DataFrame) -> DataFrame:
+    """T7/T8: per-host fetch counters over METRICS_WINDOW `event_time`
+    windows with a METRICS_WATERMARK watermark bounding late-data state.
+
+    Besides the status and fetch-time counters, every group carries the
+    A2 source-count split and the T8 progress/lineage surface, which is
+    why `events` needs `source` and `phase` columns:
+    - n_amp / n_dynamic: `source` totals (the reference logs amp vs
+      dynamic fetch totals per run, batch-sample-run.js:376-377);
+    - `phases`: the ordered distinct set of `phase` tags seen in the
+      window (the reference emits phase-tagged parse:status progress
+      lines, index.js:136-158), and `last_event` the progress watermark
+      (latest event time).
+    All are plain streaming-safe aggregates — no extra shuffle beyond
+    the window+host one."""
+    return (
+        events.withWatermark("event_time", METRICS_WATERMARK)
+        .groupBy(F.window("event_time", METRICS_WINDOW).alias("win"), "host")
+        .agg(
+            F.count("*").alias("scheduled"),
+            F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
+            F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("err"),
+            F.avg("fetch_ms").alias("avg_ms"),
+            F.sum(F.when(F.col("source") == "amp", 1).otherwise(0))
             .alias("n_amp"),
-            F.sum(F.when(F.col(source_col) != "amp", 1).otherwise(0))
+            F.sum(F.when(F.col("source") != "amp", 1).otherwise(0))
             .alias("n_dynamic"),
-        ]
-        extra += ["n_amp", "n_dynamic"]
-    if phase_col is not None:
-        aggs += [
-            F.array_join(F.sort_array(F.collect_set(F.col(phase_col))), ",")
+            F.array_join(F.sort_array(F.collect_set(F.col("phase"))), ",")
             .alias("phases"),
             F.max(F.col("event_time")).alias("last_event"),
-        ]
-        extra += ["phases", "last_event"]
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window_duration).alias("win"), "host")
-        .agg(*aggs)
+        )
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            "host", "scheduled", "ok", "err", "avg_ms", *extra,
+            "host", "scheduled", "ok", "err", "avg_ms",
+            "n_amp", "n_dynamic", "phases", "last_event",
         )
     )

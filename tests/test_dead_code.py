@@ -9,6 +9,9 @@
 (c) Every defaulted parameter of the package and `__spark_entry__.py`
     is set by some call in the repo, and every `CrawlConfig` field by
     some caller outside the scheduler.
+(d) No defaulted parameter of the package and `__spark_entry__.py` is
+    pinned: one that every call outside the tests passes the same fixed
+    value (or leaves at its default) is a module constant instead.
 """
 
 from __future__ import annotations
@@ -198,3 +201,93 @@ def test_every_crawl_config_field_is_set_outside_the_scheduler(trees, calls):
                     and any(getattr(t, "id", None) in unpacked for t in a.targets)):
                 set_ |= {k.arg for k in a.value.keywords}
     assert fields <= set_, f"CrawlConfig fields no caller sets: {sorted(fields - set_)}"
+
+
+def _is_test(path: Path) -> bool:
+    rel = path.relative_to(ROOT)
+    return (rel.parts[0] == "tests" or path.name == "conftest.py"
+            or rel.parts[0] == "perfbench" and path.name.startswith("test_"))
+
+
+def _fixed(e: ast.expr) -> bool:
+    """A value no caller computes: a literal (a signed number, or a
+    tuple, list, set, dict or frozenset of literals) or an UPPER_CASE
+    module constant, bare or as a module attribute."""
+    if isinstance(e, ast.Constant):
+        return True
+    if isinstance(e, ast.UnaryOp) and isinstance(e.operand, ast.Constant):
+        return True
+    if isinstance(e, (ast.Tuple, ast.List, ast.Set)):
+        return all(map(_fixed, e.elts))
+    if isinstance(e, ast.Dict):
+        return None not in e.keys and all(map(_fixed, e.keys + e.values))
+    if isinstance(e, ast.Call) and getattr(e.func, "id", None) == "frozenset":
+        return not e.keywords and all(map(_fixed, e.args))
+    name = e.id if isinstance(e, ast.Name) else getattr(e, "attr", None)
+    return name is not None and name.isupper()
+
+
+# Parameters that every non-test call pins, kept on purpose, and why.
+PINNED_EXEMPT = {
+    "sim_wave0(unique_hosts)": "the reference scheduler mirrors "
+                               "CrawlConfig; tests replay the engine on it",
+    "sim_crawl(default_host_budget)": "as sim_wave0(unique_hosts)",
+    "sim_crawl(max_depth)": "as sim_wave0(unique_hosts)",
+    "sim_crawl(streamed_seeds)": "as sim_wave0(unique_hosts)",
+    "fetch_page(n_hosts)": "CrawlConfig.n_hosts is to be wired into the "
+                           "crawl's fetch (ROADMAP item 2)",
+    "build_images_table(partitions)": "tests set it low so small inputs "
+                                      "reach the layout large ones have",
+    "embedding_near_dups(max_bucket)": "tests set it low so small inputs "
+                                       "reach the bucket cap",
+    "start(max_files_per_trigger)": "matched by name only (writeStream's "
+                                    "start()); tests ask for 1-file batches",
+}
+
+
+def test_no_defaulted_parameter_is_pinned(trees, calls):
+    """(d) A defaulted parameter of a non-dunder `def` in the package or
+    `__spark_entry__.py` is pinned when the calls of its name outside
+    `tests/`, `perfbench/test_*.py` and `conftest.py` (there must be one)
+    all pass it the same fixed value, by keyword or by position, or all
+    leave it at a fixed default. Only tests could then reach another
+    value: the parameter is a module constant, or a literal at its one
+    use. A call through `*` or `**` unpacking passes an unknown value."""
+    by_name: dict[str, list[ast.Call]] = {}
+    for path, name, c in calls:
+        if not _is_test(path):
+            by_name.setdefault(name, []).append(c)
+    pinned = []
+    for path, tree in trees.items():
+        if PACKAGE not in path.parents and path != ROOT / "__spark_entry__.py":
+            continue
+        for fn, method in _defs(tree):
+            if fn.name.startswith("__") and fn.name.endswith("__"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaults = dict(zip([p.arg for p in pos[len(pos) - len(a.defaults):]],
+                                a.defaults))
+            defaults |= {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                         if d is not None}
+            cs = by_name.get(fn.name, [])
+            for arg, at in _defaulted(fn, method):
+                values = set()
+                for c in cs:
+                    if (any(k.arg is None for k in c.keywords)
+                            or any(isinstance(x, ast.Starred) for x in c.args)):
+                        values.add(None)
+                        continue
+                    kw = [k.value for k in c.keywords if k.arg == arg]
+                    e = (kw[0] if kw else c.args[at]
+                         if at is not None and at < len(c.args) else defaults[arg])
+                    values.add(ast.dump(e) if _fixed(e) else None)
+                if len(values) == 1 and None not in values:
+                    pinned.append(f"{path.relative_to(ROOT)}:{fn.lineno} "
+                                  f"{fn.name}({arg})")
+    keys = {p.split(" ", 1)[1] for p in pinned}
+    assert not set(PINNED_EXEMPT) - keys, (
+        f"exempt but no longer pinned: {sorted(set(PINNED_EXEMPT) - keys)}")
+    pinned = [p for p in pinned if p.split(" ", 1)[1] not in PINNED_EXEMPT]
+    assert not pinned, ("parameters every non-test call pins to one value:\n"
+                        + "\n".join(pinned))

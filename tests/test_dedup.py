@@ -13,6 +13,7 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from horseman_article_parser_spark.operators.dedup import (
+    EMB_NEAR_DUP_COSINE,
     blocked_hamming_pairs,
     embedding_near_dups,
     simhash_near_pairs,
@@ -90,7 +91,7 @@ def test_phash_near_dup_parity_and_dups(spark):
     df = spark.createDataFrame(rows, "image_id string, phash long")
     got = {
         (r.id_a, r.id_b, r.hamming)
-        for r in phash_near_dup_pairs(df, max_hamming=6).collect()
+        for r in phash_near_dup_pairs(df).collect()
     }
     idx = {f"img-{i:03d}": base[i % 3] for i in range(9)}
     want = set()
@@ -120,21 +121,22 @@ def test_embedding_near_dups_collapse_and_parity(spark):
 
     got = {
         (r.id_a, r.id_b)
-        for r in embedding_near_dups(df, threshold=0.9, n_planes=4, seed=7).collect()
+        for r in embedding_near_dups(df).collect()
     }
-    # expected: pairs sharing the hyperplane bucket with cosine >= 0.9
+    # expected: pairs sharing the hyperplane bucket with cosine at or
+    # above the near-dup floor
     buckets = {
         r.vec_id: r.bucket
         for r in df.select(
             "vec_id",
-            hyperplane_bucket_col(F.col("embedding"), n_planes=4, seed=7).alias("bucket"),
+            hyperplane_bucket_col(F.col("embedding")).alias("bucket"),
         ).collect()
     }
     want = set()
     for ia, ib in itertools.combinations(sorted(vecs), 2):
         va, vb = vecs[ia], vecs[ib]
         cos = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
-        if buckets[ia] == buckets[ib] and cos >= 0.9:
+        if buckets[ia] == buckets[ib] and cos >= EMB_NEAR_DUP_COSINE:
             want.add((ia, ib))
     assert got == want
     assert (0, 1) in got and (1, 2) in got and (3, 4) in got
@@ -143,8 +145,7 @@ def test_embedding_near_dups_collapse_and_parity(spark):
     # representative-level cross pair to the near-dup group
     capped = {
         (r.id_a, r.id_b)
-        for r in embedding_near_dups(df, threshold=0.9, n_planes=4, seed=7,
-                                     max_bucket=2).collect()
+        for r in embedding_near_dups(df, max_bucket=2).collect()
     }
     assert (0, 1) not in capped and (1, 2) not in capped
     assert (3, 4) in capped  # group of 2 <= cap
@@ -153,9 +154,7 @@ def test_embedding_near_dups_collapse_and_parity(spark):
 def test_embedding_near_dups_plan_never_shuffles_vectors_on_bucket(spark):
     rows = [(i, [float(i + j) for j in range(8)]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    plan = embedding_near_dups(
-        df, threshold=0.99, n_planes=4, seed=7
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = embedding_near_dups(df)._jdf.queryExecution().executedPlan().toString()
     # the bucket-keyed exchanges must not carry the embedding column;
     # vectors appear only below id-keyed joins (textual heuristic: no
     # 'embedding' reference inside a hashpartitioning on bucket).
@@ -175,6 +174,9 @@ def test_minhash_kernel_matches_declarative(spark):
     values — over testdata docs plus edge fixtures (empty text, short
     text below one shingle, whitespace-only, repeated boilerplate)."""
     from horseman_article_parser_spark.operators.dedup import (
+        LSH_BANDS,
+        LSH_ROWS_PER_BAND,
+        N_MINHASH,
         lsh_band_buckets,
         minhash_lsh_batch,
         minhash_signatures,
@@ -189,9 +191,9 @@ def test_minhash_kernel_matches_declarative(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for d in (edge, docs.select("doc_id", "text")):
         decl = lsh_band_buckets(
-            minhash_signatures(d, n_hashes=8), bands=4, rows_per_band=2,
-            carry_signature=True)
-        kern = minhash_lsh_batch(d, n_hashes=8, bands=4, rows_per_band=2)
+            minhash_signatures(d, n_hashes=N_MINHASH), bands=LSH_BANDS,
+            rows_per_band=LSH_ROWS_PER_BAND, carry_signature=True)
+        kern = minhash_lsh_batch(d)
         a = sorted(map(tuple, decl.collect()))
         b = sorted(map(tuple, kern.collect()))
         assert a == b, next((x, y) for x, y in zip(a, b) if x != y)
@@ -201,6 +203,7 @@ def test_simhash_kernel_matches_declarative(spark):
     """simhash_batch must be BIT-EXACT with the declarative per-bit
     sign-sum plan over testdata plus edge fixtures."""
     from horseman_article_parser_spark.operators.dedup import (
+        SIMHASH_BITS,
         simhash,
         simhash_batch,
     )
@@ -219,6 +222,6 @@ def test_simhash_kernel_matches_declarative(spark):
     ).coalesce(1)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for d in (edge, trailing, docs.select("doc_id", "text")):
-        a = sorted(map(tuple, simhash(d, bits=16).collect()))
-        b = sorted(map(tuple, simhash_batch(d, bits=16).collect()))
+        a = sorted(map(tuple, simhash(d, bits=SIMHASH_BITS).collect()))
+        b = sorted(map(tuple, simhash_batch(d).collect()))
         assert a == b, next((x, y) for x, y in zip(a, b) if x != y)

@@ -111,6 +111,17 @@ def test_entities_exploded_dataframe(spark):
     assert not any(r.doc_id == 1 for r in rows)
 
 
+def test_entities_exploded_runs_the_udf_once(spark):
+    """The four entity kinds come from one UDF evaluation per document:
+    the executed plan has exactly one ArrowEvalPython node."""
+    docs = spark.createDataFrame(
+        [(0, "Mr Trump's visit to Paris pleased Google.")],
+        "doc_id long, text string",
+    )
+    plan = entities_exploded(docs)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_dp_name_run_segmentation():
     """W10 splitLikelyNameRuns (entityParser.js:807-885): a 4+-word run
     with enough first-name signals segments into 2-4-word names via DP."""

@@ -67,8 +67,8 @@ def test_parse_robots_kernel_matches_plan_random(spark):
     )
     key = lambda r: (r.host, r.rule_type, str(r.path_prefix),  # noqa: E731
                      str(r.crawl_delay_ms))
-    got = sorted(parse_robots_txt(files, agent="horseman").collect(), key=key)
-    want = sorted(parse_robots_txt_plan(files, agent="horseman").collect(),
+    got = sorted(parse_robots_txt(files).collect(), key=key)
+    want = sorted(parse_robots_txt_plan(files).collect(),
                   key=key)
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(want) >= 30  # the grammar must actually produce rules

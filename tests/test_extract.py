@@ -169,9 +169,10 @@ def test_extract_articles_dataframe_op(spark):
     by_url = {r["url"]: r for r in out}
     for u, s in specs:
         if s:
-            assert by_url[u]["title"] == s["title"]
-            assert by_url[u]["meta"]["og:type"] == "article"
+            assert by_url[u]["headline"] == s["headline"]
             assert by_url[u]["n_jsonld_articles"] == 1
+            # keys outside JSONLD_ARTICLE_FIELDS are not computed
+            assert by_url[u]["title"] is None and by_url[u]["meta"] is None
 
 
 def test_caps_links_and_images():

@@ -26,6 +26,7 @@ from horseman_article_parser_spark.operators.entities import (
 )
 from horseman_article_parser_spark.operators.extract import (
     ARTICLE_STRUCT,
+    JSONLD_ARTICLE_FIELDS,
     extract_article,
     extract_articles,
 )
@@ -131,7 +132,8 @@ CASES = {
     "extract_articles": (
         "html", "string", [ARTICLE, LIVE],
         lambda df: extract_articles(df.withColumn("url", F.lit(URL))),
-        _col("article"), lambda h: extract_article(URL, h), ARTICLE_STRUCT,
+        _col("article"),
+        lambda h: extract_article(URL, h, JSONLD_ARTICLE_FIELDS), ARTICLE_STRUCT,
         False),
     "summarize": (
         "text", "string", [TEXT], summarize, _col("summary"),
@@ -154,9 +156,8 @@ CASES = {
         False),
     "sample_frames": (
         "bytes", "binary", [_video(), CORRUPT],
-        lambda df: MM.sample_frames(df.withColumnRenamed("doc_id", "video_id"),
-                                    every_n=5),
-        _struct(MM.FRAME_STRUCT), lambda b: MM.frame_samples(b, 5, False),
+        lambda df: MM.sample_frames(df.withColumnRenamed("doc_id", "video_id")),
+        _struct(MM.FRAME_STRUCT), MM.frame_samples,
         MM.FRAME_STRUCT, True),
 }
 

@@ -44,7 +44,7 @@ def test_host_budgets_from_crawl_delay(spark):
         [("h1.x", "disallow", "/x", 30000), ("h2.x", "allow", "/", 500)],
         ["host", "rule_type", "path_prefix", "crawl_delay_ms"],
     )
-    got = {r["host"]: r["_budget"] for r in host_budgets(robots, wave_seconds=60).collect()}
+    got = {r["host"]: r["_budget"] for r in host_budgets(robots).collect()}
     assert got == {"h1.x": 2, "h2.x": 120}
 
 
@@ -58,7 +58,7 @@ def test_host_budgets_zero_delay_is_unbounded(spark):
         [("h1.x", "disallow", "/", 0), ("h2.x", "allow", "/", None)],
         "host string, rule_type string, path_prefix string, crawl_delay_ms int",
     )
-    got = {r["host"]: r["_budget"] for r in host_budgets(robots, wave_seconds=60).collect()}
+    got = {r["host"]: r["_budget"] for r in host_budgets(robots).collect()}
     assert got == {"h1.x": 2147483647, "h2.x": None}
 
 
@@ -156,7 +156,7 @@ def test_parse_robots_txt_groups_and_agent_precedence(spark):
         [("a.example", txt_a), ("b.example", txt_b), ("c.example", txt_c)],
         ["host", "robots_txt"],
     )
-    rows = parse_robots_txt(files, agent="horseman").collect()
+    rows = parse_robots_txt(files).collect()
     by_host = {}
     for r in rows:
         by_host.setdefault(r.host, []).append(r)
@@ -240,7 +240,7 @@ def test_parse_robots_txt_crlf_and_tabs(spark):
         [("crlf.example", txt), ("cr.example", txt_cr)],
         ["host", "robots_txt"],
     )
-    rules = parse_robots_txt(files, agent="horseman")
+    rules = parse_robots_txt(files)
     by_host = {}
     for r in rules.collect():
         by_host.setdefault(r.host, []).append(r)
@@ -297,8 +297,8 @@ def test_parse_robots_kernel_matches_plan(spark):
     files = spark.createDataFrame(corpus, "host string, robots_txt string")
     key = lambda r: (r.host, r.rule_type, str(r.path_prefix),  # noqa: E731
                      str(r.crawl_delay_ms))
-    got = sorted(parse_robots_txt(files, agent="horseman").collect(), key=key)
-    want = sorted(parse_robots_txt_plan(files, agent="horseman").collect(),
+    got = sorted(parse_robots_txt(files).collect(), key=key)
+    want = sorted(parse_robots_txt_plan(files).collect(),
                   key=key)
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(want) > 0

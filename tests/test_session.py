@@ -1,4 +1,5 @@
-"""Session factory: the package ships to executors once per context."""
+"""Session factory: the package and the driver module ship to executors
+once per context."""
 
 import os
 import sys
@@ -21,3 +22,18 @@ def test_ship_package_once_per_context(spark):
     assert len(shipped) == 1
     # the zip lives in this process's own temp dir, removed at exit
     assert os.path.exists(os.path.join(session._zip_dir(), shipped[0]))
+
+
+def test_prep_ships_the_entry_module_once(spark):
+    """`__spark_entry__._prep` adds the module itself to the context's
+    files, once however many queries run it: executors then import it
+    for UDF closures that pickle its functions, whatever the driver's
+    working directory. A `.py` file is an added file, not a Python
+    include (those are archives), so the count is over `listFiles`."""
+    import __spark_entry__ as entry
+
+    entry._prep(spark)
+    entry._prep(spark)
+    shipped = [f for f in spark.sparkContext.listFiles
+               if os.path.basename(f) == "__spark_entry__.py"]
+    assert len(shipped) == 1

@@ -65,6 +65,7 @@ def test_suggestions_distance1_sorted_capped(spark):
     """N4 suggestions (spellCheck.js:29-55): dict words at Levenshtein
     distance <=1, alphabetical, capped, '' when none."""
     from horseman_article_parser_spark.operators.spellcheck import (
+        MAX_SUGGESTIONS,
         misspellings,
         suggest_corrections,
     )
@@ -75,17 +76,18 @@ def test_suggestions_distance1_sorted_capped(spark):
     )
     dictionary = spark.createDataFrame(
         [("the",), ("cat",), ("sat",), ("sta",), ("mat",), ("star",),
-         ("stay",), ("sea",), ("ta",), ("on",)],
+         ("stay",), ("sea",), ("ta",), ("on",), ("spa",), ("stab",)],
         ["word"],
     ).filter(F.col("word") != "sta")
     missed = misspellings(docs, dictionary)
-    out = suggest_corrections(missed, dictionary, max_suggestions=3)
+    out = suggest_corrections(missed, dictionary)
     rows = {r["word"]: r["suggestions"] for r in out.collect()}
-    # sta: distance-1 dict words = sat(swap? no: s-t-a vs s-a-t is 2)...
-    # deletions/insertions/subs: sta->star(ins r)=1, sta->stay(ins y)=1,
-    # sta->ta(del s)=1, sta->sea(sub t->e)=1, sat=2 (excluded).
-    # alphabetical capped at 3: sea,sta? 'sta' not in dict. => sea,star,stay? ta sorts last
-    assert rows["sta"] == "sea,star,stay"
+    # sta: distance-1 dict words: sta->star / stay / stab (insert)=1,
+    # sta->ta (delete s)=1, sta->sea / spa (substitute)=1; sat is 2
+    # (a swap), excluded. Alphabetical, capped at MAX_SUGGESTIONS = 5:
+    # ta sorts last and is cut
+    assert MAX_SUGGESTIONS == 5
+    assert rows["sta"] == "sea,spa,stab,star,stay"
     assert rows["qqqqzz"] == ""
 
 
@@ -100,7 +102,7 @@ def test_char_positions_multiline(spark):
     docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
     rows = {
         r.word: r
-        for r in doc_tokens(docs, positions=True).collect()
+        for r in doc_tokens(docs).collect()
     }
     # python replay over the masked text (no URLs here, mask is identity)
     assert rows["alpha"].col_char == 1 and rows["alpha"].offset_start == 0
@@ -132,7 +134,7 @@ def test_char_positions_skip_masked_urls(spark):
     text = "see https://x.example/page now"
     docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
     masked = docs.select(mask_urls_col("text").alias("m")).first().m
-    rows = {r.word: r for r in doc_tokens(docs, positions=True).collect()}
+    rows = {r.word: r for r in doc_tokens(docs).collect()}
     assert rows["now"].offset_start == masked.index("now")
     assert rows["see"].offset_start == 0
 
@@ -190,7 +192,7 @@ def test_static_dictionary_flags_corpus_frequent_misspelling(spark):
          for i in range(6)],
         ["doc_id", "text"],
     )
-    out = misspellings(docs, builtin_dictionary(spark, "en")).collect()
+    out = misspellings(docs, builtin_dictionary(spark)).collect()
     words = {r.word for r in out}
     assert words == {"recieve"}          # frequent but still flagged
     assert len(out) == 6                 # one per document
@@ -261,7 +263,7 @@ def test_expanded_dictionary_no_false_positives_on_clean_prose(spark):
     docs = spark.createDataFrame(
         list(enumerate(texts)), ["doc_id", "text"]
     )
-    out = misspellings(docs, builtin_dictionary(spark, "en")).collect()
+    out = misspellings(docs, builtin_dictionary(spark)).collect()
     flagged = {r.word.lower().strip(".,") for r in out}
     allowed = {"missspelled", "example.com"}  # intentional typo + a URL token
     false_pos = sorted(flagged - allowed)

@@ -83,14 +83,16 @@ def test_windowed_host_metrics_with_watermark(spark, tmp_path):
     src = tmp_path / "events"
     src.mkdir()
     rows = [
-        ("2026-01-01 00:00:05", "h1.x", 200, 120),
-        ("2026-01-01 00:00:20", "h1.x", 404, 80),
-        ("2026-01-01 00:00:40", "h2.x", 200, 100),
-        ("2026-01-01 00:01:10", "h1.x", 200, 60),
+        ("2026-01-01 00:00:05", "h1.x", 200, 120, "amp", "parse:ok"),
+        ("2026-01-01 00:20:00", "h1.x", 404, 80, "dynamic", "parse:error"),
+        ("2026-01-01 00:40:00", "h2.x", 200, 100, "dynamic", "parse:ok"),
+        ("2026-01-01 01:10:00", "h1.x", 200, 60, "amp", "parse:ok"),
     ]
     df = spark.createDataFrame(
-        rows, "ts string, host string, status int, fetch_ms int"
-    ).select(F.col("ts").cast("timestamp").alias("event_time"), "host", "status", "fetch_ms")
+        rows, "ts string, host string, status int, fetch_ms int, "
+              "source string, phase string"
+    ).select(F.col("ts").cast("timestamp").alias("event_time"), "host",
+             "status", "fetch_ms", "source", "phase")
     df.write.parquet(str(src / "p0"))
 
     stream = spark.readStream.schema(df.schema).parquet(str(src) + "/*")
@@ -105,12 +107,13 @@ def test_windowed_host_metrics_with_watermark(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
     got = {
-        (r.window_start.strftime("%H:%M"), r.host): (r.scheduled, r.ok, r.err)
+        (r.window_start.strftime("%H:%M"), r.host):
+            (r.scheduled, r.ok, r.err, r.n_amp, r.n_dynamic, r.phases)
         for r in spark.sql("SELECT * FROM host_metrics").collect()
     }
-    assert got[("00:00", "h1.x")] == (2, 1, 1)
-    assert got[("00:00", "h2.x")] == (1, 1, 0)
-    assert got[("00:01", "h1.x")] == (1, 1, 0)
+    assert got[("00:00", "h1.x")] == (2, 1, 1, 1, 1, "parse:error,parse:ok")
+    assert got[("00:00", "h2.x")] == (1, 1, 0, 0, 1, "parse:ok")
+    assert got[("01:00", "h1.x")] == (1, 1, 0, 1, 0, "parse:ok")
 
 
 def test_streamed_seeds_carry_full_frontier_schema(spark, tmp_path):
@@ -155,21 +158,24 @@ def test_windowed_metrics_append_mode_drops_late_events(spark, tmp_path):
 
     def write_batch(name, rows):
         df = spark.createDataFrame(
-            rows, "ts string, host string, status int, fetch_ms int"
+            [(*r, "dynamic", "parse:ok") for r in rows],
+            "ts string, host string, status int, fetch_ms int, "
+            "source string, phase string",
         ).select(F.col("ts").cast("timestamp").alias("event_time"),
-                 "host", "status", "fetch_ms")
+                 "host", "status", "fetch_ms", "source", "phase")
         df.write.parquet(str(src / name))
 
-    # batch 1: two events in the 00:00 window, then one far ahead at
-    # 00:10 that advances the watermark (10:00 - 2:00 = 08:00) past the
+    # batch 1: two events in the 00:00 hour window, then one far ahead
+    # at 10:00 that advances the watermark (10:00 - 2h = 08:00) past the
     # 00:00 window's end so it finalizes and emits
     write_batch("p0", [
         ("2026-01-01 00:00:05", "h1.x", 200, 100),
-        ("2026-01-01 00:00:20", "h1.x", 500, 100),
-        ("2026-01-01 00:10:00", "h9.x", 200, 100),
+        ("2026-01-01 00:20:00", "h1.x", 500, 100),
+        ("2026-01-01 10:00:00", "h9.x", 200, 100),
     ])
     stream = spark.readStream.schema(
-        "event_time timestamp, host string, status int, fetch_ms int"
+        "event_time timestamp, host string, status int, fetch_ms int, "
+        "source string, phase string"
     ).parquet(str(src) + "/*")
     agg = windowed_host_metrics(stream)
     q = (
@@ -181,8 +187,8 @@ def test_windowed_metrics_append_mode_drops_late_events(spark, tmp_path):
     )
     q.processAllAvailable()
     # batch 2: a LATE event for the already-finalized 00:00 window —
-    # beyond the 2-minute watermark, it must be dropped
-    write_batch("p1", [("2026-01-01 00:00:30", "h1.x", 200, 100)])
+    # beyond the 2-hour watermark, it must be dropped
+    write_batch("p1", [("2026-01-01 00:30:00", "h1.x", 200, 100)])
     q.processAllAvailable()
     q.stop()
     rows = [

@@ -4,7 +4,11 @@
 
 import pyspark.sql.functions as F
 
-from horseman_article_parser_spark.operators.summary import build_summary, summarize
+from horseman_article_parser_spark.operators.summary import (
+    MAX_SENTENCES,
+    build_summary,
+    summarize,
+)
 
 WINTER_TEXT = "\n".join(
     [
@@ -49,17 +53,21 @@ def test_summary_noise_penalty_and_empty():
     )
     s = build_summary(noisy, title="Council budget approved")
     assert any("2 million" in x for x in s["sentences"])
-    # ranking check without coverage-repair interference (n < 3): the
-    # noise-penalized opener loses to the factual sentence despite its
-    # position bonus
-    two = (
-        "Subscribe to our newsletter today for updates.\n\n"
-        "The council approved a £2 million budget for road repairs, according to the report."
-    )
-    top = build_summary(two, title="Council budget approved", max_sentences=1)
-    assert top["sentences"] == [
-        "The council approved a £2 million budget for road repairs, according to the report."
-    ]
+    # ranking check: six sentences, one paragraph, MAX_SENTENCES = 5
+    # kept. An opener carries the largest position bonus; noise-penalized,
+    # it is the one sentence dropped, while a plain opener stays.
+    body = ("The council met in the old hall to review the road plans. "
+            "Residents asked the council about the state of local bridges. "
+            "Several speakers urged the council to fund more street lighting. "
+            "A long queue formed as the council opened the public session. "
+            "Late in the evening the council closed the session with thanks.")
+    noise = "Subscribe to our newsletter today for updates. "
+    plain = "Residents met at the town hall today for the talks. "
+    assert MAX_SENTENCES == 5
+    top = build_summary(noise + body, title="Council budget approved")
+    assert top["sentences"] == [x + "." for x in body[:-1].split(". ")]
+    top = build_summary(plain + body, title="Council budget approved")
+    assert top["sentences"][0] == plain.strip()
 
 
 def test_summary_single_paragraph_fallback():

@@ -5,29 +5,30 @@ from horseman_article_parser_spark.functions.textstats import (
 )
 
 
-def _grams(spark, rows, kind, **kw):
+def _grams(spark, rows, kind):
     """(doc_id, gram, tf, rank) of the `kind` rows ('term' | 'phrase')
     that keywords_phrases_batch emits for `rows` of (doc_id, text)."""
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = keywords_phrases_batch(docs, **kw).filter(f"kind = '{kind}'")
+    out = keywords_phrases_batch(docs).filter(f"kind = '{kind}'")
     return [(r.doc_id, r.gram, r.tf, r.rank)
             for r in out.orderBy("doc_id", "rank").collect()]
 
 
 def test_keyphrases_short_docs_do_not_crash(spark):
-    # docs with fewer tokens than the gram length must yield zero
-    # phrases, matching the oracle.
+    # docs with fewer tokens than the shortest gram length must yield
+    # zero phrases, matching the oracle; a doc as long as one gram
+    # length yields only that length's grams.
     rows = _grams(
         spark,
         [(1, "solo"), (2, ""), (3, "budget report"), (4, "three word doc")],
-        "phrase", k_phrases=5, lengths=(2,),
+        "phrase",
     )
     by_doc = {}
     for doc_id, phrase, _tf, _rank in rows:
         by_doc.setdefault(doc_id, []).append(phrase)
     assert 1 not in by_doc and 2 not in by_doc
     assert by_doc.get(3) == ["budget report"]
-    assert set(by_doc.get(4, [])) == {"three word", "word doc"}
+    assert set(by_doc.get(4, [])) == {"three word", "word doc", "three word doc"}
 
 
 def test_keywords_pos_gate_drops_verbs_and_adverbs(spark):
@@ -40,14 +41,13 @@ def test_keywords_pos_gate_drops_verbs_and_adverbs(spark):
     text = ("the runner was running quickly past the tower while the "
             "tower meeting heard Paris said nothing about the tower")
     docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    terms = {g for _, g, _, _ in _grams(spark, [(1, text)], "term",
-                                       k_terms=10)}
+    terms = {g for _, g, _, _ in _grams(spark, [(1, text)], "term")}
     assert "tower" in terms and "runner" in terms and "meeting" in terms
     assert "Paris" in terms  # proper-noun bypass
     assert "running" not in terms and "quickly" not in terms
     assert "was" not in terms and "said" not in terms and "heard" not in terms
 
-    cleaned = {r["keyword"] for r in keywords_cleaned_topk(docs, k=10).collect()}
+    cleaned = {r["keyword"] for r in keywords_cleaned_topk(docs).collect()}
     assert "Tower" in cleaned and "Running" not in cleaned
 
 
@@ -56,8 +56,7 @@ def test_keyphrases_pos_gate_keeps_adjective_noun(spark):
     verb/adverb spans ('running quickly')."""
     text = ("economic growth economic growth running quickly "
             "budget meeting budget meeting")
-    phrases = {g for _, g, _, _ in _grams(spark, [(1, text)], "phrase",
-                                         k_phrases=10, lengths=(2,))}
+    phrases = {g for _, g, _, _ in _grams(spark, [(1, text)], "phrase")}
     assert "economic growth" in phrases and "budget meeting" in phrases
     assert "running quickly" not in phrases
 
@@ -72,16 +71,15 @@ def test_keywords_acronym_retention(spark):
     text = ("WWF rapport pollution G7 Paris climat "
             "ECONOMIE ECONOMIE ECONOMIE mesures concretes")
     docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    kws = {r["keyword"] for r in keywords_cleaned_topk(docs, k=10).collect()}
+    kws = {r["keyword"] for r in keywords_cleaned_topk(docs).collect()}
     assert "WWF" in kws and "G7" in kws
     assert "ECONOMIE" not in kws
 
 
 def test_keywords_topk_deterministic_ties(spark):
-    rows = _grams(spark, [(1, "zebra apple zebra apple mango")], "term",
-                  k_terms=2)
+    rows = _grams(spark, [(1, "zebra apple zebra apple mango")], "term")
     assert [(g, tf, rk) for _, g, tf, rk in rows] == [
-        ("apple", 2, 1), ("zebra", 2, 2)]
+        ("apple", 2, 1), ("zebra", 2, 2), ("mango", 1, 3)]
 
 
 def _langid(spark, texts):
@@ -177,8 +175,7 @@ def test_keyphrases_pooled_lengths(spark):
     rank together (keywordParser.js:32-77 spans any length)."""
     text = ("annual budget report annual budget report annual budget "
             "report city council city council")
-    rows = _grams(spark, [(1, text)], "phrase", k_phrases=10,
-                  lengths=(2, 3))
+    rows = _grams(spark, [(1, text)], "phrase")
     got = {g: (tf, rk) for _, g, tf, rk in rows}
     assert "annual budget report" in got  # 3-gram present
     assert "annual budget" in got and "city council" in got

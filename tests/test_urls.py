@@ -73,7 +73,7 @@ def test_skip_and_keep_column_parity(spark):
 
 def test_sanitize_data_url(spark):
     """F13 (utils.js:11-28 / utils.test.js): scripts stripped from
-    base64 data: URLs when JS is disabled, retained when enabled;
+    base64 data: URLs (the crawler renders with JS disabled);
     percent-encoded payloads decode too."""
     import base64
 
@@ -85,11 +85,9 @@ def test_sanitize_data_url(spark):
     du = "data:text/html;base64," + base64.b64encode(sample.encode()).decode()
     pct = "data:text/html,%3Cp%3EHi%3C%2Fp%3E"
     df = spark.createDataFrame([(0, du), (1, pct)], ["i", "u"])
-    df = with_sanitized_data_url(df, "u", "off", "nu", js_enabled=False)
-    df = with_sanitized_data_url(df, "u", "on", "nu_on", js_enabled=True)
+    df = with_sanitized_data_url(df, "u", "off", "nu")
     rows = df.orderBy("i").collect()
     assert rows[0].off == "<html><body><p>Safe</p></body></html>"
-    assert "<script>" in rows[0].on
     assert base64.b64decode(rows[0].nu.split(",")[1]).decode() == rows[0].off
     assert rows[1].off == "<p>Hi</p>"
 
@@ -128,7 +126,7 @@ def test_sanitize_data_url_malformed_payloads_node_parity(spark):
             + base64.b64encode(b"<p>fine</p>").decode())
     payloads = [bad_utf8, not_b64, b64url, mixed, bad_pct, good]
     df = spark.createDataFrame(list(enumerate(payloads)), ["i", "u"])
-    rows = (with_sanitized_data_url(df, "u", "h", "nu", js_enabled=False)
+    rows = (with_sanitized_data_url(df, "u", "h", "nu")
             .orderBy("i").collect())
     for r in rows[:4]:  # base64 rows: lenient decode + U+FFFD, no catch
         payload = r.u.split(",", 1)[1]
